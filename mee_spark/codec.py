@@ -29,9 +29,6 @@ import numpy as np
 from mee_spark.bm25 import tnorm_np
 from mee_spark.config import BLOCK_SIZE
 
-_SHIFTS = np.arange(10, dtype=np.uint64) * np.uint64(7)
-
-
 def varbyte_encode_lens(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Vectorized varbyte -> (uint8 byte stream, per-value byte counts).
 
@@ -70,21 +67,42 @@ def varbyte_encode(values: np.ndarray) -> bytes:
     return out.tobytes()
 
 
-def varbyte_decode(blob: bytes) -> np.ndarray:
-    """Vectorized varbyte decode -> uint64 array."""
-    if not blob:
-        return np.empty(0, dtype=np.uint64)
-    raw = np.frombuffer(blob, dtype=np.uint8)
-    is_last = (raw & 0x80) == 0
-    starts = np.empty(int(is_last.sum()), dtype=np.int64)
+def _varbyte_runs(blobs) -> tuple[np.ndarray, np.ndarray]:
+    """Many varbyte blobs -> (uint64 values of all blobs, values per blob).
+
+    Linear over the concatenated byte stream: a value ends at each byte
+    under 0x80, so value starts come from the terminal-byte positions (no
+    searchsorted), and each continuation byte is folded in with one masked
+    shift per byte position. When every byte is under 0x80 (every value
+    below 128 — most deltas, tfs and many dls) the bytes ARE the values."""
+    blobs = list(blobs)
+    nbytes = np.fromiter(map(len, blobs), dtype=np.int64, count=len(blobs))
+    raw = np.frombuffer(b"".join(blobs), dtype=np.uint8)
+    if raw.size == 0:
+        return np.empty(0, dtype=np.uint64), nbytes
+    if raw.max() < 0x80:
+        return raw.astype(np.uint64), nbytes
+    is_last = raw < 0x80
     ends = np.flatnonzero(is_last)
+    starts = np.empty_like(ends)
     starts[0] = 0
     starts[1:] = ends[:-1] + 1
-    pos_in_group = np.arange(raw.size, dtype=np.int64)
-    group = np.searchsorted(ends, pos_in_group)
-    j = (pos_in_group - starts[group]).astype(np.uint64)
-    contrib = (raw & np.uint8(0x7F)).astype(np.uint64) << (j * np.uint64(7))
-    return np.add.reduceat(contrib, starts)
+    lens = ends - starts + 1
+    vals = (raw[starts] & 0x7F).astype(np.uint64)
+    for j in range(1, int(lens.max())):
+        m = np.flatnonzero(lens > j)
+        vals[m] |= (raw[starts[m] + j] & 0x7F).astype(np.uint64) << np.uint64(7 * j)
+    # values per blob = terminal bytes inside the blob's byte span
+    term_cum = np.zeros(raw.size + 1, dtype=np.int64)
+    np.cumsum(is_last, out=term_cum[1:])
+    bounds = np.zeros(len(blobs) + 1, dtype=np.int64)
+    np.cumsum(nbytes, out=bounds[1:])
+    return vals, np.diff(term_cum[bounds])
+
+
+def varbyte_decode(blob: bytes) -> np.ndarray:
+    """Vectorized varbyte decode -> uint64 array."""
+    return _varbyte_runs([blob])[0]
 
 
 def delta_encode(doc_ids: np.ndarray) -> bytes:
@@ -147,10 +165,30 @@ def encode_postings(
     }
 
 
+def decode_postings_batch(doc_blobs, tf_blobs=None, dl_blobs=None):
+    """Decode many posting runs at once -> (docs, tfs, dls, counts).
+
+    The counterpart of the whole-group encoder in segments.py: every
+    run's blobs are decoded in one pass over the concatenated streams and
+    returned back to back, ``counts[i]`` postings for run ``i``. Doc-id
+    deltas restart at each run (a run's first delta is its absolute doc
+    id), so one cumsum over the whole stream minus the running total
+    before each run recovers every run's doc ids; uint64 wraparound keeps
+    the subtraction exact however large the running total grows.
+    ``tfs``/``dls`` are None when their blobs are not given."""
+    deltas, counts = _varbyte_runs(doc_blobs)
+    cs = np.zeros(len(deltas) + 1, dtype=np.uint64)
+    np.cumsum(deltas, out=cs[1:])
+    run_starts = np.cumsum(counts) - counts
+    docs = (cs[1:] - np.repeat(cs[run_starts], counts)).astype(np.int64)
+    tfs = None if tf_blobs is None else _varbyte_runs(tf_blobs)[0].astype(np.int64)
+    dls = None if dl_blobs is None else _varbyte_runs(dl_blobs)[0].astype(np.int64)
+    return docs, tfs, dls, counts
+
+
 def decode_postings(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Segment row (mapping or object with blob fields) -> (docs, tfs, dls)."""
     get = row.get if hasattr(row, "get") else lambda k: getattr(row, k)
-    docs = delta_decode(bytes(get("doc_ids_blob"))).astype(np.int64)
-    tfs = varbyte_decode(bytes(get("tfs_blob"))).astype(np.int64)
-    dls = varbyte_decode(bytes(get("dls_blob"))).astype(np.int64)
+    docs, tfs, dls, _ = decode_postings_batch(
+        [get("doc_ids_blob")], [get("tfs_blob")], [get("dls_blob")])
     return docs, tfs, dls

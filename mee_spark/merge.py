@@ -2,30 +2,47 @@
 
 mee's incremental path grows state forever (ES absorbs it); our LSM-style
 chain accumulates delta generations + tombstones, and compaction is the
-counterpart of ES's own segment merging: decode every LIVE posting across
+counterpart of ES's own segment merging: keep every LIVE posting across
 the chain, rewrite a single fresh generation, drop tombstones. Queries
 before/after compaction are identical (tested).
 
-Scale shape: segment rows are bounded ((term, docID-range) runs), so the
-decode fan-out is a mapInPandas over bounded rows — no driver data, no
-unbounded group. The re-encode reuses build_segments (same skew caps).
+Scale shape: a segment-row merge. Segment rows are already keyed by
+(bucket, range_id), so the compressed rows of every generation are
+grouped by that key and cogrouped with the range's tombstones
+(replicated to each term bucket, so a task sees at most doc_range_size
+ids; nothing reaches the driver). One Python task per (bucket, range)
+batch-decodes the group's runs, masks dead postings per generation and
+hands the survivors to the writer core every build shares
+(``segments.write_segment``: atomic rename, ``.done`` checkpoints,
+resume skip). Only compressed blobs cross the shuffle, and postings never
+leave the task that decodes them.
 """
 
 from __future__ import annotations
 
 import os
+import time
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mee_spark import manifest as mf
-from mee_spark.build import _docmap_path, live_docmap
-from mee_spark.codec import decode_postings
+from mee_spark.build import _docmap_path, live_docmap, read_tombstones
 from mee_spark.config import IndexConfig
-from mee_spark.segments import build_segments, read_segments
-
+from mee_spark.query_wand import (
+    decode_live,
+    joined_tombstones,
+    tombstones_per_range,
+)
+from mee_spark.segments import (
+    METRICS_SCHEMA,
+    read_segments,
+    sorted_term_codes,
+    write_groups,
+    write_segment,
+)
 
 def decoded_postings(spark: SparkSession, index_dir: str, gens: list[int],
                      range_size: int):
@@ -36,8 +53,6 @@ def decoded_postings(spark: SparkSession, index_dir: str, gens: list[int],
     DataFrame, joined per docID range — never collected to the driver
     (a high-churn chain's tombstone set outgrows driver memory long
     before compaction becomes urgent)."""
-    from mee_spark.query_wand import _dead_ids, tombstones_per_range
-
     segs = read_segments(spark, index_dir, gens)
     tombs = tombstones_per_range(spark, index_dir, gens, range_size)
     if tombs is not None:
@@ -45,21 +60,68 @@ def decoded_postings(spark: SparkSession, index_dir: str, gens: list[int],
 
     def explode(batches):
         for pdf in batches:
-            outs = []
-            for row in pdf.itertuples():
-                docs, tfs, dls = decode_postings(row)
-                dead = _dead_ids(row, int(row.gen))
-                if dead is not None:
-                    keep = ~np.isin(docs, dead)
-                    docs, tfs, dls = docs[keep], tfs[keep], dls[keep]
-                if len(docs):
-                    outs.append(pd.DataFrame(
-                        {"term": row.term, "doc_id": docs, "tf": tfs, "dl": dls}))
-            yield pd.concat(outs) if outs else pd.DataFrame(
-                {"term": pd.Series(dtype="str"), "doc_id": pd.Series(dtype="int64"),
-                 "tf": pd.Series(dtype="int64"), "dl": pd.Series(dtype="int64")})
+            docs, tfs, dls, counts = decode_live(pdf, *joined_tombstones(pdf))
+            yield pd.DataFrame({"term": np.repeat(pdf["term"].to_numpy(), counts),
+                                "doc_id": docs, "tf": tfs, "dl": dls})
 
     return segs.mapInPandas(explode, "term string, doc_id long, tf long, dl long")
+
+
+def _make_compactor(seg_root: str, ckpt_root: str, block_size: int):
+    """Cogroup fn: one (bucket, range)'s segment rows from every generation
+    plus the range's tombstones → that group's compacted file."""
+
+    def compact_group(key: tuple, segs: pd.DataFrame,
+                      tombs: pd.DataFrame) -> pd.DataFrame:
+        t0 = time.monotonic()
+        docs, tfs, dls, counts = decode_live(
+            segs, tombs["doc_id"].to_numpy(np.int64),
+            tombs["tomb_gen"].to_numpy(np.int64))
+        # no live posting (every one dead, or only tombstones reached this
+        # key): write no file, exactly as if no posting had come here
+        if len(docs) == 0:
+            return pd.DataFrame(columns=METRICS_SCHEMA.fieldNames())
+        row_codes, terms = sorted_term_codes(segs["term"])
+        codes = np.repeat(row_codes, counts)
+        # a term whose postings here are all dead leaves the term list,
+        # so every remaining term owns at least one run
+        present = np.zeros(len(terms), dtype=bool)
+        present[codes] = True
+        if not present.all():
+            codes = (np.cumsum(present) - 1)[codes]
+            terms = terms[present]
+        order = np.lexsort((docs, codes))
+        return write_segment(seg_root, ckpt_root, block_size, int(key[0]),
+                             int(key[1]), terms, codes[order], docs[order],
+                             tfs[order], dls[order], t0)
+
+    return compact_group
+
+
+def compact_segments(spark: SparkSession, index_dir: str, gens: list[int],
+                     cfg: IndexConfig, new_gen: int) -> list[dict]:
+    """Merge the chain's segment rows into ``new_gen``'s segment files,
+    one task per (bucket, range); returns per-group metrics."""
+    segs = read_segments(spark, index_dir, gens).select(
+        "bucket", "range_id", "gen", "term",
+        "doc_ids_blob", "tfs_blob", "dls_blob")
+    tombs = read_tombstones(spark, index_dir, gens)
+    if tombs is None:
+        tombs = spark.createDataFrame([], "doc_id long, tomb_gen long")
+    # each range's tombstones go to every term bucket's group of it
+    tombs = tombs.select(
+        F.explode(F.sequence(F.lit(0), F.lit(cfg.num_term_buckets - 1)
+                             .cast("long"))).alias("bucket"),
+        (F.col("doc_id") / F.lit(cfg.doc_range_size)).cast("long").alias("range_id"),
+        F.col("doc_id").cast("long"), F.col("tomb_gen").cast("long"))
+
+    def run(keyed: DataFrame, seg_root: str, ckpt_root: str) -> DataFrame:
+        compactor = _make_compactor(seg_root, ckpt_root, cfg.block_size)
+        return keyed.groupBy("bucket", "range_id").cogroup(
+            tombs.groupBy("bucket", "range_id")).applyInPandas(
+            compactor, METRICS_SCHEMA)
+
+    return write_groups(segs, index_dir, new_gen, resume=True, run=run)
 
 
 def compaction_due(index_dir: str, *, max_chain_len: int = 8,
@@ -122,8 +184,6 @@ def compact(spark: SparkSession, index_dir: str, cfg: IndexConfig,
     ``extra_metrics`` entries are merged into the manifest's metrics
     BEFORE it is persisted (callers like ``maybe_compact`` record their
     trigger decision in the audit trail this way)."""
-    import time
-
     t0 = time.monotonic()
     chain = mf.manifest_chain(index_dir)
     if not chain:
@@ -137,12 +197,11 @@ def compact(spark: SparkSession, index_dir: str, cfg: IndexConfig,
         raise ValueError(
             f"compaction target {new_gen} must exceed the chain's max "
             f"({max(gens)}); generation numbers order last-writer-wins")
-    postings = decoded_postings(spark, index_dir, gens, cfg.doc_range_size)
     os.makedirs(mf.gen_dir(index_dir, new_gen), exist_ok=True)
     # consolidated docmap = live rows only
     live = live_docmap(spark, index_dir, gens)
     live.write.mode("overwrite").parquet(_docmap_path(index_dir, new_gen))
-    part_metrics = build_segments(postings, cfg, index_dir, new_gen, resume=True)
+    part_metrics = compact_segments(spark, index_dir, gens, cfg, new_gen)
     tail = chain[-1]
     wall = time.monotonic() - t0
     m = mf.write_manifest(

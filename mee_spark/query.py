@@ -129,8 +129,8 @@ def bm25_topk_exhaustive(
     # executor mid-query fails the query instead of recomputing. Fine for
     # local[] and static-executor batch; deployments with preemptible
     # executors or dynamic allocation should prefer reliable
-    # checkpointing or cache + unpersist-in-finally (the WAND path's
-    # idiom) at the cost of CacheManager bookkeeping.
+    # checkpointing, or could use cache + unpersist-in-finally (not used
+    # anywhere in this package) at the cost of CacheManager bookkeeping.
     matched = postings.join(
         F.broadcast(qterms.select("term").distinct()), "term"
     ).localCheckpoint(eager=False)

@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 from mee_spark import manifest as mf
 from mee_spark.bm25 import idf_np
 from mee_spark.build import read_tombstones
-from mee_spark.codec import decode_postings
+from mee_spark.codec import decode_postings_batch
 from mee_spark.config import IndexConfig
 from mee_spark.query import explode_query_terms
 from mee_spark.segments import read_segments
@@ -62,17 +62,6 @@ _LOCAL_SCHEMA = "query_id int, k int, doc_id long, score double"
 # the dict path collects one entry per distinct term, which is fine for
 # interactive batches but unbounded for 10^5-query offline batches
 VOCAB_IN_PLAN_THRESHOLD = 2048
-
-
-def _term_buckets(spark: SparkSession, terms: list[str], num_buckets: int) -> list[int]:
-    """Bucket ids for the query terms — same expression as the writer."""
-    if not terms:
-        return []
-    tdf = spark.createDataFrame([(t,) for t in terms], "term string")
-    rows = tdf.select(
-        F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("long").alias("b")
-    ).distinct().collect()
-    return sorted(r["b"] for r in rows)
 
 
 def tombstones_per_range(spark: SparkSession, index_dir: str, gens: list[int],
@@ -99,16 +88,55 @@ def tombstones_per_range(spark: SparkSession, index_dir: str, gens: list[int],
     )
 
 
-def _dead_ids(row, gen: int) -> np.ndarray | None:
-    """doc_ids tombstoned at a gen LATER than ``gen``, from the joined
-    per-range arrays (None/NaN when the range has no tombstones)."""
-    t = getattr(row, "tomb_ids", None)
-    if t is None or isinstance(t, float):  # null from the left join
-        return None
-    ids = np.asarray(t, dtype=np.int64)
-    gens = np.asarray(row.tomb_gens, dtype=np.int64)
-    dead = ids[gens > gen]
-    return dead if len(dead) else None
+def live_mask(docs: np.ndarray, post_gens: np.ndarray,
+              tomb_ids: np.ndarray, tomb_gens: np.ndarray) -> np.ndarray:
+    """True for each posting that no tombstone at a gen LATER than the
+    posting's own kills (a changed doc is tombstoned and re-added in the
+    same gen, so its fresh postings stay live). Duplicate tombstones for
+    one doc are fine: the newest decides."""
+    if len(tomb_ids) == 0 or len(docs) == 0:
+        return np.ones(len(docs), dtype=bool)
+    order = np.lexsort((tomb_gens, tomb_ids))
+    ids, gens = tomb_ids[order], tomb_gens[order]
+    newest = np.append(ids[1:] != ids[:-1], True)
+    ids, gens = ids[newest], gens[newest]
+    idx = np.minimum(np.searchsorted(ids, docs), len(ids) - 1)
+    return ~((ids[idx] == docs) & (gens[idx] > post_gens))
+
+
+def joined_tombstones(rows: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """Flat (ids, gens) of the tombstones that ``tombstones_per_range``'s
+    left join attached to a batch of segment rows — each range's arrays
+    counted once (empty when the join was skipped or matched nothing)."""
+    if "tomb_ids" not in rows.columns:
+        return np.empty(0, np.int64), np.empty(0, np.int64)
+    t = rows.loc[rows["tomb_ids"].notna(), ["range_id", "tomb_ids", "tomb_gens"]]
+    t = t.drop_duplicates(subset=["range_id"])
+    if t.empty:
+        return np.empty(0, np.int64), np.empty(0, np.int64)
+    return (np.concatenate(t["tomb_ids"].to_list()).astype(np.int64),
+            np.concatenate(t["tomb_gens"].to_list()).astype(np.int64))
+
+
+def decode_live(rows: pd.DataFrame, tomb_ids: np.ndarray, tomb_gens: np.ndarray,
+                values: bool = True):
+    """Batch-decode segment rows (with a ``gen`` column) and drop the
+    postings the tombstones kill -> (docs, tfs, dls, live postings per
+    row), rows back to back. ``values=False`` decodes doc ids only (tfs
+    and dls come back None)."""
+    docs, tfs, dls, counts = decode_postings_batch(
+        rows["doc_ids_blob"], rows["tfs_blob"] if values else None,
+        rows["dls_blob"] if values else None)
+    keep = live_mask(docs, np.repeat(rows["gen"].to_numpy(np.int64), counts),
+                     tomb_ids, tomb_gens)
+    if keep.all():
+        return docs, tfs, dls, counts
+    kept = np.zeros(len(keep) + 1, dtype=np.int64)
+    np.cumsum(keep, out=kept[1:])
+    bounds = np.zeros(len(counts) + 1, dtype=np.int64)
+    np.cumsum(counts, out=bounds[1:])
+    return (docs[keep], None if tfs is None else tfs[keep],
+            None if dls is None else dls[keep], np.diff(kept[bounds]))
 
 
 def _make_scorer(df_map: dict | None, n_docs: int, avgdl: float,
@@ -131,23 +159,22 @@ def _make_scorer(df_map: dict | None, n_docs: int, avgdl: float,
     (vocab_in_plan) ship them as the ``df`` / ``_n_terms`` COLUMNS of the
     group itself, so nothing vocabulary-sized ever crosses the driver."""
 
-    def score_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def score_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        # every (term, gen) row decoded in ONE batch, split back per row
+        rows = pdf.drop_duplicates(subset=["term", "gen"])
+        docs, tfs, dls, counts = decode_live(rows, *joined_tombstones(rows))
+        off = np.zeros(len(counts) + 1, dtype=np.int64)
+        np.cumsum(counts, out=off[1:])
         decoded: dict[tuple, tuple | None] = {}
-        for row in pdf.drop_duplicates(subset=["term", "gen"]).itertuples():
-            docs, tfs, dls = decode_postings(row)
-            gen = int(row.gen)
-            dead = _dead_ids(row, gen)
-            if dead is not None:
-                keep = ~np.isin(docs, dead)
-                if not keep.all():
-                    docs, tfs, dls = docs[keep], tfs[keep], dls[keep]
-            if len(docs) == 0:
-                decoded[(row.term, gen)] = None
+        for i, row in enumerate(rows.itertuples()):
+            lo, hi = off[i], off[i + 1]
+            if lo == hi:
+                decoded[(row.term, int(row.gen))] = None
                 continue
             df_val = df_map[row.term] if df_map is not None else row.df
             idf = idf_np(float(df_val), n_docs)
-            decoded[(row.term, gen)] = (
-                docs, tfs, dls, idf,
+            decoded[(row.term, int(row.gen))] = (
+                docs[lo:hi], tfs[lo:hi], dls[lo:hi], idf,
                 np.asarray(row.block_last_doc), np.asarray(row.block_max_tf),
                 np.asarray(row.block_min_dl),
             )
@@ -306,14 +333,8 @@ def bm25_topk_wand(
         # exact live df needs decode (old gens still hold dead postings)
         def live_counts(batches):
             for pdf in batches:
-                counts = []
-                for row in pdf.itertuples():
-                    docs, _, _ = decode_postings(row)
-                    dead = _dead_ids(row, int(row.gen))
-                    n = len(docs) if dead is None else int(
-                        (~np.isin(docs, dead)).sum())
-                    counts.append((row.term, n))
-                yield pd.DataFrame(counts, columns=["term", "live"])
+                counts = decode_live(pdf, *joined_tombstones(pdf), values=False)[3]
+                yield pd.DataFrame({"term": pdf["term"].to_numpy(), "live": counts})
 
         df_agg = (segs.mapInPandas(live_counts, "term string, live long")
                   .groupBy("term").agg(F.sum("live").alias("df")))

@@ -102,6 +102,108 @@ def with_partition_keys(postings: DataFrame, cfg: IndexConfig) -> DataFrame:
     )
 
 
+def sorted_term_codes(terms: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+    """-> (per-row code, sorted distinct terms): ``terms[i] ==
+    uniq[codes[i]]`` and code order is term order.
+
+    Factorize (hash-based, no sort of the full column), then sort only
+    the distinct terms and remap the codes — far cheaper than sorting
+    every row's string."""
+    codes_u, uniq_u = pd.factorize(terms, sort=False)
+    uniq_u = np.asarray(uniq_u, dtype=object)
+    order_u = np.argsort(uniq_u)
+    rank = np.empty(len(order_u), dtype=np.int64)
+    rank[order_u] = np.arange(len(order_u))
+    return rank[codes_u], uniq_u[order_u]
+
+
+def write_segment(seg_root: str, ckpt_root: str, block_size: int,
+                  bucket: int, range_id: int, terms: np.ndarray,
+                  codes: np.ndarray, doc: np.ndarray, tf: np.ndarray,
+                  dl: np.ndarray, t0: float) -> pd.DataFrame:
+    """Encode one (bucket, range) group's postings and write its file.
+
+    The core every build shares — full, incremental and compaction.
+    Postings arrive sorted by (code, doc); ``terms`` is sorted and every
+    term in it has at least one posting (``codes`` indexes it densely).
+    The file lands by atomic rename, then a ``.done`` checkpoint records
+    the group's metrics; returns them as a one-row frame."""
+    # term run boundaries (vectorized)
+    n = len(doc)
+    change = np.flatnonzero(codes[1:] != codes[:-1]) + 1
+    starts = np.concatenate(([0], change)).astype(np.int64)
+    ends = np.concatenate((change, [n])).astype(np.int64)
+    lens = ends - starts
+    # whole-group encode: ONE varbyte pass per column, sliced back
+    # into per-run blobs by byte offset (zero-copy Arrow binary from
+    # the shared stream — guide §4.2). Byte-identical per run to
+    # encode_postings: same delta + varbyte scheme.
+    deltas = np.empty(n, dtype=np.int64)
+    deltas[1:] = doc[1:] - doc[:-1]
+    deltas[starts] = doc[starts]  # absolute docID at each run start
+    doc_stream, doc_nb = varbyte_encode_lens(deltas.astype(np.uint64))
+    tf_stream, tf_nb = varbyte_encode_lens(tf.astype(np.uint64))
+    dl_stream, dl_nb = varbyte_encode_lens(dl.astype(np.uint64))
+    bnd = np.concatenate((starts, [n]))
+
+    def _bin(stream: np.ndarray, nb: np.ndarray) -> pa.Array:
+        off = np.zeros(n + 1, dtype=np.int64)
+        np.cumsum(nb, out=off[1:])
+        off32 = np.ascontiguousarray(off[bnd], dtype=np.int32)
+        return pa.Array.from_buffers(
+            pa.binary(), len(bnd) - 1,
+            [None, pa.py_buffer(off32), pa.py_buffer(stream)])
+
+    # per-run block metadata, all runs in one reduceat pass: block
+    # starts tile each run contiguously, so reduceat segments are
+    # exactly the blocks
+    nblocks = (lens + block_size - 1) // block_size
+    blk_cum = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(nblocks, out=blk_cum[1:])
+    intra = np.arange(int(blk_cum[-1]), dtype=np.int64) - np.repeat(
+        blk_cum[:-1], nblocks)
+    blk_starts = np.repeat(starts, nblocks) + intra * block_size
+    blk_last_idx = np.minimum(blk_starts + block_size - 1,
+                              np.repeat(ends, nblocks) - 1)
+    blk_off32 = np.ascontiguousarray(blk_cum, dtype=np.int32)
+
+    def _lst(vals: np.ndarray) -> pa.Array:
+        return pa.ListArray.from_arrays(blk_off32, pa.array(
+            vals, type=pa.int64()))
+
+    table = pa.Table.from_arrays(
+        [
+            pa.array(terms, type=pa.string()),
+            pa.array(np.full(len(lens), range_id, dtype=np.int64)),
+            pa.array(lens),            # df_local == postings per run
+            pa.array(lens),            # n_postings
+            _bin(doc_stream, doc_nb),
+            _bin(tf_stream, tf_nb),
+            _bin(dl_stream, dl_nb),
+            _lst(doc[blk_last_idx]),
+            _lst(np.maximum.reduceat(tf, blk_starts)),
+            _lst(np.minimum.reduceat(dl, blk_starts)),
+        ],
+        schema=SEGMENT_SCHEMA,
+    )
+    bucket_dir = os.path.join(seg_root, f"bucket={bucket}")
+    os.makedirs(bucket_dir, exist_ok=True)
+    final = os.path.join(bucket_dir, f"range_{range_id}.parquet")
+    tmp = final + f".{uuid.uuid4().hex}.tmp"
+    pq.write_table(table, tmp, compression="zstd")  # rows already term-sorted
+    os.replace(tmp, final)  # idempotent under task retry / speculation
+    wall = time.monotonic() - t0
+    metrics = dict(bucket=bucket, range_id=range_id, n_terms=len(terms),
+                   n_postings=n, wall_sec=wall,
+                   bytes_written=int(os.path.getsize(final)))
+    os.makedirs(ckpt_root, exist_ok=True)
+    ck_tmp = os.path.join(ckpt_root, f".{uuid.uuid4().hex}.tmp")
+    with open(ck_tmp, "w") as f:
+        json.dump(metrics, f)
+    os.replace(ck_tmp, os.path.join(ckpt_root, mf.checkpoint_name(bucket, range_id)))
+    return pd.DataFrame([metrics])[METRICS_SCHEMA.fieldNames()]
+
+
 def _make_writer(seg_root: str, ckpt_root: str, block_size: int):
     """Group fn for applyInPandas: one (bucket, range) group → one file.
 
@@ -115,21 +217,12 @@ def _make_writer(seg_root: str, ckpt_root: str, block_size: int):
     bounded because a (bucket, range) group holds at most
     doc_range_size · avgdl / num_term_buckets token instances."""
 
-    def write_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def write_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         bucket, range_id = int(key[0]), int(key[1])
         t0 = time.monotonic()
         doc = pdf["doc_id"].to_numpy(np.int64)
         dl = pdf["dl"].to_numpy(np.int64)
-        # factorize (hash-based, no sort of the full column), then sort
-        # only the ~vocab/num_buckets distinct terms and remap the codes —
-        # far cheaper than sorting every row's string
-        codes_u, uniq_u = pd.factorize(pdf["term"], sort=False)
-        uniq_u = np.asarray(uniq_u, dtype=object)
-        order_u = np.argsort(uniq_u)
-        rank = np.empty(len(order_u), dtype=np.int64)
-        rank[order_u] = np.arange(len(order_u))
-        codes = rank[codes_u]
-        uniq_terms = uniq_u[order_u]
+        codes, uniq_terms = sorted_term_codes(pdf["term"])
         order = np.lexsort((doc, codes))
         codes, doc, dl = codes[order], doc[order], dl[order]
         if "tf" in pdf.columns:
@@ -142,85 +235,35 @@ def _make_writer(seg_root: str, ckpt_root: str, block_size: int):
             rstarts = np.flatnonzero(newrun)
             tf = np.diff(np.concatenate((rstarts, [len(doc)])))
             codes, doc, dl = codes[rstarts], doc[rstarts], dl[rstarts]
-        # term run boundaries (vectorized)
-        n = len(doc)
-        change = np.flatnonzero(codes[1:] != codes[:-1]) + 1
-        starts = np.concatenate(([0], change)).astype(np.int64)
-        ends = np.concatenate((change, [n])).astype(np.int64)
-        lens = ends - starts
-        # whole-group encode: ONE varbyte pass per column, sliced back
-        # into per-run blobs by byte offset (zero-copy Arrow binary from
-        # the shared stream — guide §4.2). Byte-identical per run to
-        # encode_postings: same delta + varbyte scheme.
-        deltas = np.empty(n, dtype=np.int64)
-        deltas[1:] = doc[1:] - doc[:-1]
-        deltas[starts] = doc[starts]  # absolute docID at each run start
-        doc_stream, doc_nb = varbyte_encode_lens(deltas.astype(np.uint64))
-        tf_stream, tf_nb = varbyte_encode_lens(tf.astype(np.uint64))
-        dl_stream, dl_nb = varbyte_encode_lens(dl.astype(np.uint64))
-        bnd = np.concatenate((starts, [n]))
-
-        def _bin(stream: np.ndarray, nb: np.ndarray) -> pa.Array:
-            off = np.zeros(n + 1, dtype=np.int64)
-            np.cumsum(nb, out=off[1:])
-            off32 = np.ascontiguousarray(off[bnd], dtype=np.int32)
-            return pa.Array.from_buffers(
-                pa.binary(), len(bnd) - 1,
-                [None, pa.py_buffer(off32), pa.py_buffer(stream)])
-
-        # per-run block metadata, all runs in one reduceat pass: block
-        # starts tile each run contiguously, so reduceat segments are
-        # exactly the blocks
-        nblocks = (lens + block_size - 1) // block_size
-        blk_cum = np.zeros(len(lens) + 1, dtype=np.int64)
-        np.cumsum(nblocks, out=blk_cum[1:])
-        intra = np.arange(int(blk_cum[-1]), dtype=np.int64) - np.repeat(
-            blk_cum[:-1], nblocks)
-        blk_starts = np.repeat(starts, nblocks) + intra * block_size
-        blk_last_idx = np.minimum(blk_starts + block_size - 1,
-                                  np.repeat(ends, nblocks) - 1)
-        blk_off32 = np.ascontiguousarray(blk_cum, dtype=np.int32)
-
-        def _lst(vals: np.ndarray) -> pa.Array:
-            return pa.ListArray.from_arrays(blk_off32, pa.array(
-                vals, type=pa.int64()))
-
-        table = pa.Table.from_arrays(
-            [
-                pa.array(uniq_terms, type=pa.string()),
-                pa.array(np.full(len(lens), range_id, dtype=np.int64)),
-                pa.array(lens),            # df_local == postings per run
-                pa.array(lens),            # n_postings
-                _bin(doc_stream, doc_nb),
-                _bin(tf_stream, tf_nb),
-                _bin(dl_stream, dl_nb),
-                _lst(doc[blk_last_idx]),
-                _lst(np.maximum.reduceat(tf, blk_starts)),
-                _lst(np.minimum.reduceat(dl, blk_starts)),
-            ],
-            schema=SEGMENT_SCHEMA,
-        )
-        n_post = int(lens.sum())
-        bucket_dir = os.path.join(seg_root, f"bucket={bucket}")
-        os.makedirs(bucket_dir, exist_ok=True)
-        final = os.path.join(bucket_dir, f"range_{range_id}.parquet")
-        tmp = final + f".{uuid.uuid4().hex}.tmp"
-        pq.write_table(table, tmp, compression="zstd")  # rows already term-sorted
-        os.replace(tmp, final)  # idempotent under task retry / speculation
-        wall = time.monotonic() - t0
-        metrics = dict(bucket=bucket, range_id=range_id, n_terms=len(uniq_terms),
-                       n_postings=int(n_post), wall_sec=wall,
-                       bytes_written=int(os.path.getsize(final)))
-        os.makedirs(ckpt_root, exist_ok=True)
-        ck_tmp = os.path.join(ckpt_root, f".{uuid.uuid4().hex}.tmp")
-        with open(ck_tmp, "w") as f:
-            json.dump(metrics, f)
-        os.replace(ck_tmp, os.path.join(ckpt_root, mf.checkpoint_name(bucket, range_id)))
-        return pd.DataFrame([metrics])[
-            ["bucket", "range_id", "n_terms", "n_postings", "wall_sec", "bytes_written"]
-        ]
+        return write_segment(seg_root, ckpt_root, block_size, bucket, range_id,
+                             uniq_terms, codes, doc, tf, dl, t0)
 
     return write_group
+
+
+def write_groups(keyed: DataFrame, index_dir: str, gen: int, resume: bool,
+                 run) -> list[dict]:
+    """The checkpointed group skeleton shared by every segment build.
+
+    ``keyed`` carries (bucket, range_id); ``run(keyed, seg_root,
+    ckpt_root)`` turns it into the METRICS_SCHEMA frame of the groups it
+    writes. Resume: already-checkpointed (bucket, range) groups are
+    filtered out pre-shuffle, and their recorded metrics are appended, so
+    the result is the full per-group picture either way."""
+    seg_root = mf.segments_dir(index_dir, gen)
+    ckpt_root = mf.checkpoints_dir(index_dir, gen)
+    # a deletion-only delta has zero postings; the dir must still exist
+    os.makedirs(seg_root, exist_ok=True)
+    done = mf.completed_checkpoints(index_dir, gen) if resume else set()
+    if done:
+        done_df = F.broadcast(keyed.sparkSession.createDataFrame(
+            sorted(done), "bucket long, range_id long"))
+        keyed = keyed.join(done_df, ["bucket", "range_id"], "left_anti")
+    fresh = [r.asDict() for r in run(keyed, seg_root, ckpt_root).collect()]
+    for b, r in sorted(done):
+        with open(os.path.join(ckpt_root, mf.checkpoint_name(b, r))) as f:
+            fresh.append(json.load(f))
+    return fresh
 
 
 def build_segments(
@@ -229,30 +272,16 @@ def build_segments(
 ) -> list[dict]:
     """Write compressed segments for gen; returns per-partition metrics.
 
-    ``postings`` carries (term, doc_id, tf, dl). Resume: already-
-    checkpointed (bucket, range) groups are filtered out pre-shuffle.
+    ``postings`` carries (term, doc_id, tf, dl) or raw token instances
+    (term, doc_id, dl); see ``_make_writer``.
     """
-    seg_root = mf.segments_dir(index_dir, gen)
-    ckpt_root = mf.checkpoints_dir(index_dir, gen)
-    # a deletion-only delta has zero postings; the dir must still exist
-    os.makedirs(seg_root, exist_ok=True)
-    keyed = with_partition_keys(postings, cfg)
-    done = mf.completed_checkpoints(index_dir, gen) if resume else set()
-    if done:
-        spark = postings.sparkSession
-        done_df = F.broadcast(
-            spark.createDataFrame(sorted(done), "bucket long, range_id long")
-        )
-        keyed = keyed.join(done_df, ["bucket", "range_id"], "left_anti")
-    writer = _make_writer(seg_root, ckpt_root, cfg.block_size)
-    metrics_df = keyed.groupBy("bucket", "range_id").applyInPandas(writer, METRICS_SCHEMA)
-    fresh = [r.asDict() for r in metrics_df.collect()]
-    # full metrics picture = fresh + previously checkpointed
-    if done:
-        for b, r in sorted(done):
-            with open(os.path.join(ckpt_root, mf.checkpoint_name(b, r))) as f:
-                fresh.append(json.load(f))
-    return fresh
+    def run(keyed: DataFrame, seg_root: str, ckpt_root: str) -> DataFrame:
+        writer = _make_writer(seg_root, ckpt_root, cfg.block_size)
+        return keyed.groupBy("bucket", "range_id").applyInPandas(
+            writer, METRICS_SCHEMA)
+
+    return write_groups(with_partition_keys(postings, cfg), index_dir, gen,
+                        resume, run)
 
 
 def read_segments(spark, index_dir: str, gens: list[int]) -> DataFrame:

@@ -31,10 +31,6 @@ def hash15(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def with_tokens(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    return docs.withColumn("toks", tokenize_col(F.col(text_col)))
-
-
 def token_stats(docs: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, n_distinct, mean_token_len) — token counting."""
     toks = tokenize_col(F.col("text"))
