@@ -10,26 +10,44 @@ tombstone old docID + fresh postings, keeping the docID since ``url``
 (the anchor field, `handlerconfig.py:528-568`) is unchanged; DELETE →
 tombstone only. No full rebuild, readers see the old gen until publish.
 
+The snapshot is diffed ONCE: one job extracts and hashes its text,
+full-outer-joins it against the live docmap and stages only the added,
+changed and deleted rows (``_diff_staging.parquet``). Every later write
+— tombstones, docID assignment, the tokenized delta, docmap, segments —
+reads that small file, so the extraction UDF crosses the Python
+boundary once per refresh whatever the plan shape downstream.
+
 Everything the query engine needs later is durable per gen:
 ``docmap.parquet`` (url, doc_id, dl, text_hash), segment files,
 ``tombstones.parquet``, and a manifest with lineage + per-partition
-throughput metrics.
+throughput metrics. Each file's read schema sits next to its writer
+here, so reads skip Spark's footer-inference job.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import threading
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 
 from mee_spark import manifest as mf
-from mee_spark.config import IndexConfig
+from mee_spark.config import IndexConfig, check_layout, layout_record
 from mee_spark.docmap import assign_doc_ids
-
 from mee_spark.segments import build_segments
-from mee_spark.textprep import extract_text
+from mee_spark.textprep import extract_text, tokenize_col
+
+DOCMAP_SCHEMA = "url string, doc_id long, dl long, text_hash long"
+TOMBSTONES_SCHEMA = "doc_id long"
+DOCS_STAGING_SCHEMA = ("doc_id long, url string, tokens array<string>, "
+                       "dl long, text_hash long")
+# kind: added | changed | deleted (unchanged urls are not staged);
+# deleted rows have null _text/text_hash, added rows null old_*
+DIFF_SCHEMA = ("url string, kind string, old_doc_id long, old_dl long, "
+               "_text string, text_hash long")
 
 
 def _docmap_path(index_dir: str, gen: int) -> str:
@@ -40,13 +58,81 @@ def _tombstones_path(index_dir: str, gen: int) -> str:
     return os.path.join(mf.gen_dir(index_dir, gen), "tombstones.parquet")
 
 
-def _with_text_hash(pages: DataFrame, use_html: bool) -> DataFrame:
-    """Attach extracted text + its hash (the diff key, mee J5
-    `commonhandler.py:164-170`: changed fields detection)."""
+def _hashed_text(pages: DataFrame, use_html: bool) -> DataFrame:
+    """(url, _text, text_hash): extracted text + its hash (the diff key,
+    mee J5 `commonhandler.py:164-170`: changed fields detection)."""
     text_col = extract_text(F.col("html")) if use_html else F.col("text")
-    return pages.withColumn("_text", text_col).withColumn(
-        "text_hash", F.xxhash64(F.col("_text"))
-    )
+    return pages.select("url", text_col.alias("_text")).withColumn(
+        "text_hash", F.xxhash64(F.col("_text")))
+
+
+def _with_tokens(docs: DataFrame) -> DataFrame:
+    """``_text`` -> its ``tokens`` and their count ``dl``."""
+    return (docs.withColumn("tokens", tokenize_col(F.col("_text")))
+            .withColumn("dl", F.size("tokens").cast("long")).drop("_text"))
+
+
+def _stage(plan: DataFrame, path: str, schema: str,
+           *aggs: Column) -> tuple[DataFrame, Row]:
+    """Spill ``plan`` to ``path`` and re-read it; ``aggs`` ride the write
+    via observe() — one job, not two. -> (staged frame, observed values).
+
+    Staging is parquet, not a cache: an in-memory cache of token arrays
+    OOMs long before web scale, while a columnar spill is SPIMI's classic
+    on-disk run (sequential IO, column-pruned by every reader). Snappy,
+    not the session's zstd default (round 7, guide §6): the file is
+    transient, read a few times and deleted on success, the classic
+    cheap-codec trade for intermediates."""
+    obs = Observation()
+    plan.observe(obs, *aggs).write.mode("overwrite").option(
+        "compression", "snappy").parquet(path)
+    return plan.sparkSession.read.schema(schema).parquet(path), obs.get
+
+
+def _concurrent(*writes):
+    """Run ``writes`` as concurrent Spark jobs; returns the last's result.
+
+    All but the last run on daemon threads, the last inline, so a small
+    side write hides inside a big one instead of adding a serial job to
+    the build's Amdahl floor (round 7, guide §2.6). Every thread is
+    joined even on error: a same-gen retry (resume=True flow) must never
+    start while a stale write of the SAME path is still in flight —
+    interleaved writes corrupt the parquet. An error of the inline write
+    propagates; otherwise the first side write's error is re-raised."""
+    errors: list[BaseException] = []
+
+    def guarded(write) -> None:
+        try:
+            write()
+        except BaseException as e:  # surfaced after join()
+            errors.append(e)
+
+    threads = [threading.Thread(target=guarded, args=(w,), daemon=True)
+               for w in writes[:-1]]
+    for t in threads:
+        t.start()
+    try:
+        result = writes[-1]()
+    finally:
+        for t in threads:
+            t.join()
+    if errors:
+        raise errors[0]
+    return result
+
+
+def _write_docmap_and_segments(docs: DataFrame, cfg: IndexConfig,
+                               index_dir: str, gen: int,
+                               resume: bool) -> list[dict]:
+    """Phase shared by both builds: docmap write ∥ segment build, both
+    reading the staged docs. Raw token instances go straight into the
+    (bucket, range) shuffle: the writer aggregates tf itself (see
+    _make_writer) — one posting-sized shuffle, not two (round 7)."""
+    raw = docs.select("doc_id", "dl", F.explode("tokens").alias("term"))
+    return _concurrent(
+        lambda: docs.select("url", "doc_id", "dl", "text_hash").write.mode(
+            "overwrite").parquet(_docmap_path(index_dir, gen)),
+        lambda: build_segments(raw, cfg, index_dir, gen, resume=resume))
 
 
 def build_full_index(
@@ -64,86 +150,25 @@ def build_full_index(
     t0 = time.monotonic()
     if cfg.lang_filter:
         pages = pages.filter(F.col("lang") == cfg.lang_filter)
-    from mee_spark.textprep import tokenize_col
-
     os.makedirs(mf.gen_dir(index_dir, gen), exist_ok=True)
     docmap = assign_doc_ids(pages, cfg.num_doc_partitions)
-    # single extraction pass feeds hash + tokens + doclen. The tokenized
-    # corpus is STAGED TO PARQUET, not cached: an in-memory cache of the
-    # token arrays OOMs long before web scale (it already dies at 300k
-    # docs on a 24g local heap), while a columnar staging file is SPIMI's
-    # classic on-disk run — sequential IO, memory-safe at any corpus size,
-    # and the downstream passes (stats, docmap, postings) column-prune it.
-    text_col = extract_text(F.col("html")) if use_html else F.col("text")
-    docs_plan = (
-        pages.select("url", text_col.alias("_text"))
-        .withColumn("text_hash", F.xxhash64(F.col("_text")))
-        .withColumn("tokens", tokenize_col(F.col("_text")))
-        .withColumn("dl", F.size("tokens").cast("long"))
-        .join(docmap, "url")
-        .select("doc_id", "url", "tokens", "dl", "text_hash")
-    )
+    # single extraction pass feeds hash + tokens + doclen; the corpus
+    # stats ride the staging write
     staging = os.path.join(mf.gen_dir(index_dir, gen), "_docs_staging.parquet")
-    # observe() piggybacks the corpus stats on the staging write — one job
-    # instead of two (every extra action costs serial driver time that
-    # caps scaling efficiency)
-    from pyspark.sql import Observation
-
-    obs = Observation("corpus_stats")
-    # snappy, not the session's zstd default (round 7, guide §6): staging
-    # is a TRANSIENT spill consumed once and deleted at the end of this
-    # build — the cheap-codec/bigger-file trade is the classic one for
-    # intermediates, and the token arrays are what make this file large
-    docs_plan.observe(obs, F.count(F.lit(1)).alias("n"),
-                      F.sum("dl").alias("sum_dl"),
-                      F.max("doc_id").alias("max_id")).write.mode(
-        "overwrite").option("compression", "snappy").parquet(staging)
-    n_docs = int(obs.get["n"])
-    sum_dl = int(obs.get["sum_dl"] or 0)
+    docs, stats = _stage(
+        _with_tokens(_hashed_text(pages, use_html)).join(docmap, "url"),
+        staging, DOCS_STAGING_SCHEMA,
+        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl"),
+        F.max("doc_id").alias("max_id"))
+    n_docs = int(stats["n"])
+    sum_dl = int(stats["sum_dl"] or 0)
     # the NEXT fresh docID, recorded in the manifest so incremental builds
     # can append without re-scanning the live docmap for max(doc_id)
-    max_id = obs.get["max_id"]
+    max_id = stats["max_id"]
     next_doc_id = int(max_id) + 1 if max_id is not None else 0
-    docs = spark.read.parquet(staging)
-
-    # docmap write and segment build are independent reads of the staging
-    # file — run them as CONCURRENT Spark jobs (separate driver thread) so
-    # the small docmap write hides inside the big segment shuffle instead
-    # of adding a serial job to the build's Amdahl floor.
-    import threading
-
-    _docmap_err: list[BaseException] = []
-
-    def _write_docmap() -> None:
-        try:
-            docs.select("url", "doc_id", "dl", "text_hash").write.mode(
-                "overwrite").parquet(_docmap_path(index_dir, gen))
-        except BaseException as e:  # surfaced after join()
-            _docmap_err.append(e)
-
-    dm_thread = threading.Thread(target=_write_docmap, daemon=True)
-    dm_thread.start()
-    try:
-        # raw token instances straight into the (bucket, range) shuffle:
-        # the writer aggregates tf itself (see _make_writer), so the
-        # separate groupBy(term, doc_id).count() exchange the old
-        # build_postings pass paid is gone — one posting-sized shuffle
-        # instead of two (round 7, guide §2.4)
-        raw = docs.select("doc_id", "dl", F.explode("tokens").alias("term"))
-        part_metrics = build_segments(raw, cfg, index_dir, gen, resume=resume)
-    finally:
-        # join even on error: a same-gen retry (resume=True flow) must
-        # never start while a stale daemon write of the SAME docmap path
-        # is still in flight — interleaved writes corrupt the parquet
-        dm_thread.join()
-    if _docmap_err:
-        raise _docmap_err[0]
-    import shutil
-
+    part_metrics = _write_docmap_and_segments(docs, cfg, index_dir, gen, resume)
     shutil.rmtree(staging, ignore_errors=True)
     wall = time.monotonic() - t0
-    from mee_spark.config import layout_record
-
     m = mf.write_manifest(
         index_dir, gen, parent=None, n_docs_live=n_docs, sum_dl_live=sum_dl,
         metrics={
@@ -189,8 +214,6 @@ def build_incremental(
     if parent is None:
         raise ValueError("no published index; run build_full_index first")
     chain = mf.manifest_chain(index_dir, parent)
-    from mee_spark.config import check_layout, layout_record
-
     # layout identity is fixed at first build: a delta gen written with a
     # different doc_range_size/num_term_buckets would bucket tombstones and
     # prune term buckets against the wrong on-disk layout (silent data loss)
@@ -204,22 +227,38 @@ def build_incremental(
             f"generation {gen} must exceed the chain's max ({max_gen}); "
             "last-writer-wins is ordered by generation number")
     prev = live_docmap(spark, index_dir, [m["generation"] for m in chain])
+    gdir = mf.gen_dir(index_dir, gen)
+    os.makedirs(gdir, exist_ok=True)
 
-    hashed = _with_text_hash(new_snapshot, use_html).select(
-        "url", "_text", "text_hash"
-    )
-    diff = hashed.join(prev.select("url", F.col("doc_id").alias("old_doc_id"),
-                                   F.col("dl").alias("old_dl"),
-                                   F.col("text_hash").alias("old_hash")),
-                       "url", "full_outer")
-    added = diff.filter(F.col("old_doc_id").isNull())
-    deleted = diff.filter(F.col("text_hash").isNull())
+    # Five writes in three phases, the snapshot read by the first only:
+    #   diff:    extract + hash + full-outer-join against the live docmap,
+    #            label each url, stage the non-unchanged rows;
+    #   phase 1: tombstones ∥ tokenized delta staging (both read the diff);
+    #   phase 2: docmap ∥ segment build (both read the delta staging).
+    # Corpus stats delta (exact): N' = N + added − deleted; Σdl' likewise,
+    # replacing changed docs' old dl with the new one. The removed-docs
+    # aggregate (changed ∪ deleted = the tombstone rows) rides the diff
+    # write, the delta's rides the staging write.
+    kind = (F.when(F.col("old_doc_id").isNull(), "added")
+            .when(F.col("text_hash").isNull(), "deleted")
+            .when(F.col("text_hash") != F.col("old_hash"), "changed"))
+    diff = _hashed_text(new_snapshot, use_html).join(
+        prev.select("url", F.col("doc_id").alias("old_doc_id"),
+                    F.col("dl").alias("old_dl"),
+                    F.col("text_hash").alias("old_hash")),
+        "url", "full_outer").select(
+        "url", kind.alias("kind"), "old_doc_id", "old_dl", "_text",
+        "text_hash").filter(F.col("kind").isNotNull())
     if partial:
-        deleted = deleted.limit(0)
-    changed = diff.filter(
-        F.col("old_doc_id").isNotNull() & F.col("text_hash").isNotNull()
-        & (F.col("text_hash") != F.col("old_hash"))
-    )
+        diff = diff.filter(F.col("kind") != "deleted")
+    removed = F.col("kind") != "added"
+    diff_path = os.path.join(gdir, "_diff_staging.parquet")
+    staged_diff, rem = _stage(
+        diff, diff_path, DIFF_SCHEMA, F.count_if(removed).alias("n"),
+        F.sum(F.when(removed, F.col("old_dl"))).alias("s"),
+        F.count_if(F.col("kind") == "changed").alias("nc"))
+    n_removed, dl_removed = int(rem["n"]), int(rem["s"] or 0)
+    n_changed = int(rem["nc"])
 
     # next fresh docID comes from the manifest chain — the newest manifest
     # records next_doc_id as of its own build, so no Spark job is spent
@@ -233,111 +272,36 @@ def build_incremental(
     if start_id is None:
         max_id = prev.agg(F.max("doc_id")).collect()[0][0]
         start_id = int(max_id) + 1 if max_id is not None else 0
-    added_ids = assign_doc_ids(added.select(F.col("url")), cfg.num_doc_partitions,
-                               start_id=start_id)
-    from mee_spark.textprep import tokenize_col
-
-    delta_plan = (
-        added.join(added_ids, "url")
-        .select("url", "doc_id", "_text", "text_hash")
-        .unionByName(
-            changed.select("url", F.col("old_doc_id").alias("doc_id"), "_text", "text_hash")
-        )
-        .withColumn("tokens", tokenize_col(F.col("_text")))
-        .withColumn("dl", F.size("tokens").cast("long"))
-        .select("doc_id", "url", "tokens", "dl", "text_hash")
-    )
-    # stage to parquet, not cache — same memory-safety stance as the full
-    # build (the delta of a 10^12-doc corpus is still huge). The delta's
-    # corpus-stats ride the staging write via observe() — one job, not two.
-    from pyspark.sql import Observation
-
-    os.makedirs(mf.gen_dir(index_dir, gen), exist_ok=True)
-    _staging = os.path.join(mf.gen_dir(index_dir, gen), "_docs_staging.parquet")
-
-    # Four writes, two CONCURRENT phases instead of four serial actions
-    # (round 7, guide §2.6 — each removed serial action is driver time on
-    # the incremental path's Amdahl floor):
-    #   phase 1: staging write ∥ tombstones write (independent branches
-    #            of the same diff — tombstones never read staging);
-    #   phase 2: docmap write ∥ segment build (both read the staging
-    #            file, neither reads the other's output).
-    # corpus stats delta (exact): N' = N + added − deleted; Σdl'
-    # likewise, replacing changed docs' old dl with the new one. The
-    # removed-docs aggregate RIDES the tombstones write via observe()
-    # (the tombstone rows ARE the changed∪deleted set); the changed-count
-    # rides along as a flag column.
-    tomb_src = (
-        changed.select(F.col("old_doc_id").alias("doc_id"), "old_dl",
-                       F.lit(1).alias("chg"))
-        .unionByName(deleted.select(F.col("old_doc_id").alias("doc_id"),
-                                    "old_dl", F.lit(0).alias("chg")))
-    )
-    obs_rem = Observation("removed_stats")
-    import threading
-
-    _side_err: list[BaseException] = []
-
-    def _write_tombstones() -> None:
-        try:
-            tomb_src.observe(
-                obs_rem, F.count(F.lit(1)).alias("n"),
-                F.sum("old_dl").alias("s"), F.sum("chg").alias("nc")
-            ).select("doc_id").write.mode("overwrite").parquet(
-                _tombstones_path(index_dir, gen))
-        except BaseException as e:  # surfaced after join()
-            _side_err.append(e)
-
-    ts_thread = threading.Thread(target=_write_tombstones, daemon=True)
-    ts_thread.start()
-    obs = Observation("delta_stats")
-    try:
-        delta_plan.observe(
-            obs, F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s"),
-            F.max("doc_id").alias("m")).write.mode("overwrite").option(
-            "compression", "snappy").parquet(_staging)
-    finally:
-        ts_thread.join()
-    if _side_err:
-        raise _side_err[0]
-    n_delta, dl_delta = int(obs.get["n"]), int(obs.get["s"] or 0)
+    upserts = staged_diff.filter(F.col("kind") != "deleted")
+    added_ids = assign_doc_ids(upserts.filter(F.col("kind") == "added"),
+                               cfg.num_doc_partitions, start_id=start_id)
+    # changed urls keep their docID: no match in added_ids
+    delta_plan = _with_tokens(upserts.join(added_ids, "url", "left").select(
+        F.coalesce("doc_id", "old_doc_id").alias("doc_id"), "url", "_text",
+        "text_hash"))
+    staging = os.path.join(gdir, "_docs_staging.parquet")
+    delta_docs, delta = _concurrent(
+        lambda: staged_diff.filter(removed).select(
+            F.col("old_doc_id").alias("doc_id")).write.mode(
+            "overwrite").parquet(_tombstones_path(index_dir, gen)),
+        lambda: _stage(delta_plan, staging, DOCS_STAGING_SCHEMA,
+                       F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s"),
+                       F.max("doc_id").alias("m")))
+    n_delta, dl_delta = int(delta["n"]), int(delta["s"] or 0)
     # advance the chain's next_doc_id watermark: a delete-only or
     # changed-only delta allocates nothing, so the watermark never moves
     # backwards
-    obs_max = obs.get["m"]
     next_doc_id = max(int(start_id),
-                      int(obs_max) + 1 if obs_max is not None else 0)
-    delta_docs = spark.read.parquet(_staging)
-    n_removed, dl_removed = int(obs_rem.get["n"]), int(obs_rem.get["s"] or 0)
-    n_changed = int(obs_rem.get["nc"] or 0)
+                      int(delta["m"]) + 1 if delta["m"] is not None else 0)
     prev_m = chain[-1]
-    n_live = prev_m["n_docs_live"] + n_delta - n_removed + 0  # changed counted in both
-    # changed docs: removed old (in rem) and re-added (in delta) -> net N includes once
+    # changed docs: removed old (in rem) and re-added (in delta) -> net N
+    # includes them once
+    n_live = prev_m["n_docs_live"] + n_delta - n_removed
     sum_dl_live = prev_m["sum_dl_live"] + dl_delta - dl_removed
-
-    def _write_docmap() -> None:
-        try:
-            delta_docs.select("url", "doc_id", "dl", "text_hash").write.mode(
-                "overwrite").parquet(_docmap_path(index_dir, gen))
-        except BaseException as e:
-            _side_err.append(e)
-
-    dm_thread = threading.Thread(target=_write_docmap, daemon=True)
-    dm_thread.start()
-    try:
-        # raw token instances; the segment writer aggregates tf (round 7 —
-        # same single-shuffle shape as the full build)
-        raw = delta_docs.select("doc_id", "dl", F.explode("tokens").alias("term"))
-        part_metrics = build_segments(raw, cfg, index_dir, gen, resume=resume)
-    finally:
-        # join even on error: a same-gen retry must never overlap a stale
-        # in-flight write of the same docmap path
-        dm_thread.join()
-    if _side_err:
-        raise _side_err[0]
-    import shutil
-
-    shutil.rmtree(_staging, ignore_errors=True)
+    part_metrics = _write_docmap_and_segments(delta_docs, cfg, index_dir, gen,
+                                              resume)
+    for p in (diff_path, staging):
+        shutil.rmtree(p, ignore_errors=True)
     wall = time.monotonic() - t0
     m = mf.write_manifest(
         index_dir, gen, parent=parent, n_docs_live=n_live, sum_dl_live=sum_dl_live,
@@ -365,7 +329,8 @@ def live_docmap(spark: SparkSession, index_dir: str, gens: list[int]) -> DataFra
     parts = []
     for g in gens:
         parts.append(
-            spark.read.parquet(_docmap_path(index_dir, g)).withColumn("gen", F.lit(g))
+            spark.read.schema(DOCMAP_SCHEMA).parquet(_docmap_path(index_dir, g))
+            .withColumn("gen", F.lit(g))
         )
     all_docs = parts[0]
     for p in parts[1:]:
@@ -391,7 +356,8 @@ def read_tombstones(spark: SparkSession, index_dir: str, gens: list[int]) -> Dat
     for g in gens:
         p = _tombstones_path(index_dir, g)
         if os.path.isdir(p):
-            parts.append(spark.read.parquet(p).withColumn("tomb_gen", F.lit(g)))
+            parts.append(spark.read.schema(TOMBSTONES_SCHEMA).parquet(p)
+                         .withColumn("tomb_gen", F.lit(g)))
     if not parts:
         return None
     out = parts[0]

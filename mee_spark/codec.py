@@ -61,12 +61,6 @@ def varbyte_encode_lens(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return out, nbytes
 
 
-def varbyte_encode(values: np.ndarray) -> bytes:
-    """Vectorized varbyte (LEB128-style: 7 data bits, MSB=continuation)."""
-    out, _ = varbyte_encode_lens(values)
-    return out.tobytes()
-
-
 def _varbyte_runs(blobs) -> tuple[np.ndarray, np.ndarray]:
     """Many varbyte blobs -> (uint64 values of all blobs, values per blob).
 
@@ -105,22 +99,6 @@ def varbyte_decode(blob: bytes) -> np.ndarray:
     return _varbyte_runs([blob])[0]
 
 
-def delta_encode(doc_ids: np.ndarray) -> bytes:
-    """Strictly-ascending doc_ids -> varbyte(first-differences)."""
-    d = np.ascontiguousarray(doc_ids, dtype=np.uint64)
-    if d.size == 0:
-        return b""
-    deltas = np.empty_like(d)
-    deltas[0] = d[0]
-    np.subtract(d[1:], d[:-1], out=deltas[1:])
-    return varbyte_encode(deltas)
-
-
-def delta_decode(blob: bytes) -> np.ndarray:
-    deltas = varbyte_decode(blob)
-    return np.cumsum(deltas, dtype=np.uint64)
-
-
 def block_metadata(
     doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
     block_size: int = BLOCK_SIZE,
@@ -146,23 +124,6 @@ def block_ub(max_tf: np.ndarray, min_dl: np.ndarray, avgdl: float,
     if b is not None:
         kwargs["b"] = b
     return tnorm_np(np.asarray(max_tf), np.asarray(min_dl), avgdl, **kwargs)
-
-
-def encode_postings(
-    doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
-    block_size: int = BLOCK_SIZE,
-) -> dict:
-    """Full segment-row payload for one (term, range) posting run."""
-    last, max_tf, min_dl = block_metadata(doc_ids, tfs, dls, block_size)
-    return {
-        "doc_ids_blob": delta_encode(doc_ids),
-        "tfs_blob": varbyte_encode(np.asarray(tfs, dtype=np.uint64)),
-        "dls_blob": varbyte_encode(np.asarray(dls, dtype=np.uint64)),
-        "block_last_doc": last.tolist(),
-        "block_max_tf": max_tf.tolist(),
-        "block_min_dl": min_dl.tolist(),
-        "n_postings": int(len(doc_ids)),
-    }
 
 
 def decode_postings_batch(doc_blobs, tf_blobs=None, dl_blobs=None):

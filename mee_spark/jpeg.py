@@ -183,6 +183,11 @@ def _decode_block(br: _BitReader, dc_tbl: dict, ac_tbl: dict,
     return coef, pred
 
 
+def _need(seg: bytes, n: int, what: str) -> None:
+    if len(seg) < n:
+        raise ValueError(f"short JPEG {what} segment")
+
+
 def decode_jpeg(payload: bytes) -> np.ndarray:
     """Baseline JFIF -> HxWx3 uint8 (grayscale replicated to RGB)."""
     if not payload.startswith(b"\xFF\xD8"):
@@ -212,15 +217,19 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
         (seglen,) = struct.unpack(">H", payload[pos + 2:pos + 4])
         if seglen < 2:  # length includes its own 2 bytes (T.81 B.1.1.4)
             raise ValueError("bad JPEG segment length")
-        seg = payload[pos + 4:pos + 2 + seglen]
         if pos + 2 + seglen > len(payload):
             raise ValueError("truncated JPEG segment")
+        seg = payload[pos + 4:pos + 2 + seglen]
+        # every marker's minimum length is checked before its fields are
+        # read, so a short or empty segment is a ValueError, never a
+        # struct.error/IndexError from a slice that came back too short
         if marker == 0xDB:  # DQT
             i = 0
             while i < len(seg):
                 pq, tq = seg[i] >> 4, seg[i] & 0x0F
                 if pq != 0:
                     raise NotImplementedError("16-bit quant tables")
+                _need(seg, i + 65, "DQT")
                 tbl = np.zeros(64, dtype=np.int64)
                 tbl[ZIGZAG] = np.frombuffer(seg[i + 1:i + 65], dtype=np.uint8)
                 quant[tq] = tbl.reshape(8, 8)
@@ -228,14 +237,18 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
         elif marker == 0xC4:  # DHT
             i = 0
             while i < len(seg):
+                _need(seg, i + 17, "DHT")
                 tc, th = seg[i] >> 4, seg[i] & 0x0F
                 bits = list(seg[i + 1:i + 17])
                 n = sum(bits)
+                _need(seg, i + 17 + n, "DHT")
                 vals = list(seg[i + 17:i + 17 + n])
                 huff[(tc, th)] = _huff_decode_table(bits, vals)
                 i += 17 + n
         elif marker in (0xC0, 0xC1):  # SOF0 baseline / SOF1 ext. sequential
+            _need(seg, 6, "SOF")
             prec, h, w, nc = struct.unpack(">BHHB", seg[:6])
+            _need(seg, 6 + 3 * nc, "SOF")
             if prec != 8:
                 raise NotImplementedError(f"{prec}-bit JPEG (8-bit only)")
             comps = []
@@ -250,11 +263,16 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 "progressive/arithmetic/hierarchical JPEG not supported "
                 "(baseline sequential only)")
         elif marker == 0xDD:  # DRI
-            (restart_interval,) = struct.unpack(">H", seg[:2])
+            if len(seg) != 2:
+                raise ValueError("bad JPEG DRI segment length")
+            (restart_interval,) = struct.unpack(">H", seg)
         elif marker == 0xDA:  # SOS — entropy data follows the segment
             if frame is None:
                 raise ValueError("JPEG SOS before SOF")
+            _need(seg, 1, "SOS")
             ns = seg[0]
+            # component specs, then Ss, Se and Ah/Al
+            _need(seg, 1 + 2 * ns + 3, "SOS")
             scan = {}
             for c in range(ns):
                 cid, tabs = seg[1 + 2 * c], seg[2 + 2 * c]

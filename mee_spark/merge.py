@@ -29,7 +29,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mee_spark import manifest as mf
-from mee_spark.build import _docmap_path, live_docmap, read_tombstones
+from mee_spark.build import (
+    _concurrent,
+    _docmap_path,
+    live_docmap,
+    read_tombstones,
+)
 from mee_spark.config import IndexConfig
 from mee_spark.query_wand import (
     decode_live,
@@ -198,10 +203,13 @@ def compact(spark: SparkSession, index_dir: str, cfg: IndexConfig,
             f"compaction target {new_gen} must exceed the chain's max "
             f"({max(gens)}); generation numbers order last-writer-wins")
     os.makedirs(mf.gen_dir(index_dir, new_gen), exist_ok=True)
-    # consolidated docmap = live rows only
+    # consolidated docmap = live rows only, written while the segment
+    # merge runs (neither reads the other's output)
     live = live_docmap(spark, index_dir, gens)
-    live.write.mode("overwrite").parquet(_docmap_path(index_dir, new_gen))
-    part_metrics = compact_segments(spark, index_dir, gens, cfg, new_gen)
+    part_metrics = _concurrent(
+        lambda: live.write.mode("overwrite").parquet(
+            _docmap_path(index_dir, new_gen)),
+        lambda: compact_segments(spark, index_dir, gens, cfg, new_gen))
     tail = chain[-1]
     wall = time.monotonic() - t0
     m = mf.write_manifest(

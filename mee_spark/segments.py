@@ -136,8 +136,8 @@ def write_segment(seg_root: str, ckpt_root: str, block_size: int,
     lens = ends - starts
     # whole-group encode: ONE varbyte pass per column, sliced back
     # into per-run blobs by byte offset (zero-copy Arrow binary from
-    # the shared stream — guide §4.2). Byte-identical per run to
-    # encode_postings: same delta + varbyte scheme.
+    # the shared stream — guide §4.2). Byte-identical per run to a
+    # per-run delta + varbyte encode of the same postings.
     deltas = np.empty(n, dtype=np.int64)
     deltas[1:] = doc[1:] - doc[:-1]
     deltas[starts] = doc[starts]  # absolute docID at each run start

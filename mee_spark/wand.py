@@ -265,16 +265,3 @@ def conjunctive_topk_vec(cursors: list[TermCursor], k: int, n_terms: int,
         sums = np.round(sums, round_to)
     top = np.lexsort((uniq, -sums))[:k]
     return [(int(uniq[i]), float(sums[i])) for i in top]
-
-
-def exhaustive_topk_np(cursors: list[TermCursor], k: int) -> list[tuple[int, float]]:
-    """Brute-force union scoring over the same cursors (safety reference)."""
-    cursors = sorted([c for c in cursors if c.n > 0], key=lambda c: c.term)
-    if not cursors:
-        return []
-    scores: dict[int, float] = {}
-    for c in cursors:
-        for d, s in zip(c.docs.tolist(), c.scores.tolist()):
-            scores[d] = scores.get(d, 0.0) + s
-    ranked = sorted(scores.items(), key=lambda x: (-x[1], x[0]))
-    return ranked[:k]

@@ -10,10 +10,12 @@ from mee_spark.codec import (
     block_metadata,
     block_ub,
     decode_postings,
+    varbyte_decode,
+)
+from reference_helpers import (
     delta_decode,
     delta_encode,
     encode_postings,
-    varbyte_decode,
     varbyte_encode,
 )
 

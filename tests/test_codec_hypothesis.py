@@ -10,10 +10,12 @@ from hypothesis import strategies as st
 from mee_spark.codec import (
     decode_postings,
     decode_postings_batch,
+    varbyte_decode,
+)
+from reference_helpers import (
     delta_decode,
     delta_encode,
     encode_postings,
-    varbyte_decode,
     varbyte_encode,
 )
 

@@ -507,6 +507,45 @@ def test_jpeg_bad_segment_length_rejected():
             decode_jpeg(broken)
 
 
+@pytest.mark.parametrize("marker,body", [
+    (0xC0, b""),                            # empty SOF
+    (0xC0, b"\x08\x00\x08\x00\x08\x03"),      # SOF: 3 components, no specs
+    (0xDD, b""),                            # empty DRI
+    (0xDD, b"\x00\x02\x00"),                 # DRI longer than 4
+    (0xDB, b"\x00" + bytes(10)),             # DQT table cut short
+    (0xC4, b"\x00" + bytes(5)),              # DHT counts cut short
+    (0xC4, b"\x00\x03" + bytes(15)),          # DHT values cut short
+])
+def test_jpeg_short_marker_segments_rejected(marker, body):
+    """Each marker's minimum length is checked before its fields are
+    unpacked: an empty or short segment is a ValueError, not a
+    struct.error or IndexError from a slice that came back short."""
+    import struct
+
+    from mee_spark.jpeg import decode_jpeg
+
+    seg = struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
+    with pytest.raises(ValueError, match="JPEG"):
+        decode_jpeg(b"\xFF\xD8" + seg + b"\xFF\xD9")
+
+
+def test_jpeg_short_sos_rejected():
+    """An SOS whose component list runs past its segment is rejected
+    before the component specs are read."""
+    import struct
+
+    import numpy as np
+
+    from mee_spark.jpeg import decode_jpeg, encode_jpeg
+
+    good = encode_jpeg(np.full((8, 8, 3), 77, dtype=np.uint8))
+    idx = good.find(b"\xFF\xDA")
+    for body in (b"", b"\x03\x01\x00"):
+        sos = struct.pack(">BBH", 0xFF, 0xDA, len(body) + 2) + body
+        with pytest.raises(ValueError, match="SOS"):
+            decode_jpeg(good[:idx] + sos)
+
+
 def test_video_frame_sample_fake_null_duration(spark):
     """A NULL duration_ms arrives in pandas as NaN (truthy!) — the fake
     path must fall back to the payload-parsed duration instead of

@@ -4,10 +4,21 @@ between an incremental chain and a fresh full build."""
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
+import uuid
+
 import pytest
 
 from mee_spark import manifest as mf
-from mee_spark.build import build_full_index, build_incremental, live_docmap
+from mee_spark.build import (
+    build_full_index,
+    build_incremental,
+    live_docmap,
+    read_tombstones,
+)
 from mee_spark.config import IndexConfig
 from mee_spark.fixtures import PAGES_SCHEMA, gen_queries, gen_snapshots_pandas
 from mee_spark.query_wand import bm25_topk_wand
@@ -16,6 +27,7 @@ CFG = IndexConfig(num_doc_partitions=4, num_term_buckets=8,
                   doc_range_size=64, block_size=16)
 N_BASE = 200
 N_QUERIES = 30
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -189,3 +201,196 @@ def test_vocab_in_plan_with_tombstones(spark, snaps, tmp_path_factory):
     key = lambda r: (r["query_id"], r["rank"])
     assert sorted([tuple(r) for r in a], key=lambda t: (t[0], t[1])) == \
            sorted([tuple(r) for r in b], key=lambda t: (t[0], t[1]))
+
+
+def test_identical_snapshot_is_an_empty_delta(spark, snaps, tmp_path_factory):
+    """Re-submitting the published snapshot changes nothing: the delta
+    generation has no added, changed or deleted docs, and the live
+    corpus stats and docID watermark stay where they were."""
+    d = str(tmp_path_factory.mktemp("same"))
+    m1 = build_full_index(spark, snaps[1], CFG, d, gen=1)
+    m2 = build_incremental(spark, snaps[1], CFG, d, gen=2)
+    assert (m2["metrics"]["docs_added"], m2["metrics"]["docs_changed"],
+            m2["metrics"]["docs_deleted"]) == (0, 0, 0)
+    assert m2["n_docs_live"] == m1["n_docs_live"]
+    assert m2["sum_dl_live"] == m1["sum_dl_live"]
+    assert m2["next_doc_id"] == m1["next_doc_id"]
+    assert spark.read.parquet(f"{d}/gen=2/tombstones.parquet").count() == 0
+    assert live_docmap(spark, d, [1, 2]).count() == m1["n_docs_live"]
+
+
+def test_partial_batch_tombstones_only_changed(spark, snaps, tmp_path_factory):
+    """``partial=True`` (an upsert batch, not a snapshot): urls missing
+    from the batch are not tombstoned, only changed docs are, and no
+    transient staging file outlives a successful build."""
+    d = str(tmp_path_factory.mktemp("partial"))
+    build_full_index(spark, snaps[2], CFG, d, gen=1)
+    m2 = build_incremental(spark, snaps[3], CFG, d, gen=2, partial=True)
+    assert m2["metrics"]["docs_deleted"] == 0
+    tombs = spark.read.parquet(f"{d}/gen=2/tombstones.parquet").count()
+    assert tombs == m2["metrics"]["docs_changed"]
+    missing = set(snaps[2].select("url").toPandas()["url"]) - set(
+        snaps[3].select("url").toPandas()["url"])
+    live = {r["url"] for r in live_docmap(spark, d, [1, 2]).collect()}
+    assert missing and missing <= live
+    for g in (1, 2):
+        left = set(os.listdir(mf.gen_dir(d, g)))
+        assert not left & {"_diff_staging.parquet", "_docs_staging.parquet"}
+
+
+def test_chain_reads_submit_no_spark_job(spark, snaps, tmp_path_factory):
+    """The docmap and tombstone reads carry their schemas, so building
+    the ``live_docmap``/``read_tombstones`` frames of a chain submits no
+    Spark job (a schema-less parquet read runs a footer-inference job per
+    generation)."""
+    d = str(tmp_path_factory.mktemp("noinfer"))
+    build_full_index(spark, snaps[1], CFG, d, gen=1)
+    build_incremental(spark, snaps[2], CFG, d, gen=2)
+    build_incremental(spark, snaps[3], CFG, d, gen=3)
+    sc = spark.sparkContext
+    group = f"chain-reads-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "live_docmap + read_tombstones plan building")
+    try:
+        live_docmap(spark, d, [1, 2, 3])
+        read_tombstones(spark, d, [1, 2, 3])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+_RESUME_SCRIPT = r"""
+import glob, json, os, sys, tempfile
+sys.path.insert(0, sys.argv[1])
+import pyarrow.parquet as pq
+from pyspark.sql import SparkSession
+import mee_spark.segments as seg
+from mee_spark.build import build_full_index, build_incremental
+from mee_spark.config import IndexConfig
+from mee_spark.fixtures import PAGES_SCHEMA, gen_snapshots_pandas
+
+orig = seg._make_writer
+
+def failing(seg_root, ckpt_root, block_size):
+    inner = orig(seg_root, ckpt_root, block_size)
+    def wrap(key, pdf):
+        # odd buckets die; groups of other tasks may finish and checkpoint
+        if int(key[0]) % 2 == 1:
+            raise RuntimeError("injected segment writer failure")
+        return inner(key, pdf)
+    return wrap
+
+# local[2]: one attempt per task, so the injected failure fails the build
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.sql.shuffle.partitions", "8")
+         .config("spark.ui.enabled", "false").getOrCreate())
+spark.sparkContext.setLogLevel("OFF")
+cfg = IndexConfig(num_doc_partitions=4, num_term_buckets=4,
+                  doc_range_size=64, block_size=16)
+snaps = {g: spark.createDataFrame(p, PAGES_SCHEMA)
+         for g, p in gen_snapshots_pandas(200).items()}
+
+def build(fail):
+    d = tempfile.mkdtemp(prefix="ix_")
+    build_full_index(spark, snaps[1], cfg, d, gen=1)
+    failed = False
+    if fail:
+        seg._make_writer = failing
+        try:
+            build_incremental(spark, snaps[2], cfg, d, gen=2)
+        except Exception:
+            failed = True
+        seg._make_writer = orig
+    m = build_incremental(spark, snaps[2], cfg, d, gen=2, resume=True)
+    return d, m, failed
+
+def table(path, keys):
+    return pq.read_table(path).sort_by([(k, "ascending") for k in keys])
+
+def tables(d):
+    g = os.path.join(d, "gen=2")
+    out = {"docmap": table(os.path.join(g, "docmap.parquet"), ["url"]),
+           "tombstones": table(os.path.join(g, "tombstones.parquet"), ["doc_id"])}
+    for f in glob.glob(os.path.join(g, "segments", "bucket=*", "*.parquet")):
+        out[os.path.relpath(f, g)] = table(f, ["term"])
+    return out
+
+def counts(m):
+    keys = ("docs_added", "docs_changed", "docs_deleted")
+    return [m["n_docs_live"], m["sum_dl_live"], m["next_doc_id"]] + [
+        m["metrics"][k] for k in keys]
+
+d_fail, m_fail, failed = build(True)
+d_clean, m_clean, _ = build(False)
+a, b = tables(d_fail), tables(d_clean)
+print(json.dumps({
+    "failed_first": failed,
+    "files": sorted(a),
+    "equal": sorted(a) == sorted(b) and all(a[k].equals(b[k]) for k in a),
+    "counts": [counts(m_fail), counts(m_clean)],
+    "leftover": sorted(glob.glob(os.path.join(d_fail, "gen=2", "_*staging*")))}))
+spark.stop()
+"""
+
+
+def test_resume_after_segment_failure_equals_clean_build():
+    """A delta build whose segment writer fails, rerun with
+    ``resume=True`` into the same generation, leaves the docmap,
+    tombstones, segment files and manifest counts of a clean build: the
+    rerun overwrites the leftover diff and staging files and keeps the
+    checkpointed groups."""
+    out = subprocess.run(
+        [sys.executable, "-c", _RESUME_SCRIPT, REPO],
+        capture_output=True, text=True, timeout=600,
+        env=os.environ | {"PYTHONPATH": REPO})
+    assert out.returncode == 0, out.stderr[-3000:]
+    rec = json.loads([ln for ln in out.stdout.splitlines()
+                      if ln.startswith("{")][-1])
+    assert rec["failed_first"], "the injected failure did not fail the build"
+    assert {"docmap", "tombstones"} < set(rec["files"])
+    assert len(rec["files"]) > 2, "no segment files written"
+    assert rec["equal"]
+    assert rec["counts"][0] == rec["counts"][1]
+    assert rec["leftover"] == []
+
+
+def test_concurrent_surfaces_side_error_after_inline_write():
+    """``_concurrent``: a failing side write raises its own exception,
+    and only once the inline write has finished; an inline failure still
+    waits for every side write (a same-gen retry must never overlap a
+    stale write of the same path)."""
+    import threading
+    import time
+
+    from mee_spark.build import _concurrent
+
+    class SideError(Exception):
+        pass
+
+    def side_fails():
+        raise SideError("side")
+
+    inline_done = threading.Event()
+
+    def inline_slow():
+        time.sleep(0.3)
+        inline_done.set()
+        return "inline"
+
+    with pytest.raises(SideError):
+        _concurrent(side_fails, inline_slow)
+    assert inline_done.is_set()
+
+    side_done = threading.Event()
+
+    def side_slow():
+        time.sleep(0.3)
+        side_done.set()
+
+    def inline_fails():
+        raise ValueError("inline")
+
+    with pytest.raises(ValueError, match="inline"):
+        _concurrent(side_slow, inline_fails)
+    assert side_done.is_set()
+    assert _concurrent(lambda: None, lambda: 7) == 7

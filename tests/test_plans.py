@@ -113,3 +113,35 @@ def test_winnow_fingerprints_shuffle_free(spark):
     assert "Exchange" not in plan, "winnow grew a shuffle"
     assert spark.conf.get(
         "spark.sql.subexpressionElimination.enabled", "true") == "true"
+
+
+def test_incremental_build_extracts_text_once(spark, tmp_path, monkeypatch):
+    """The snapshot diff is staged once: across every parquet write of
+    one ``build_incremental(use_html=True)`` the extraction UDF appears in
+    exactly one plan, once (the diff write). Every later write reads the
+    staged diff, so none of them re-extracts the snapshot's html."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from mee_spark.build import build_full_index, build_incremental
+    from mee_spark.config import IndexConfig
+    from mee_spark.fixtures import PAGES_SCHEMA, gen_snapshots_pandas
+
+    cfg = IndexConfig(num_doc_partitions=4, num_term_buckets=8,
+                      doc_range_size=64, block_size=16)
+    snaps = {g: spark.createDataFrame(pdf, PAGES_SCHEMA)
+             for g, pdf in gen_snapshots_pandas(100).items()}
+    d = str(tmp_path / "ix")
+    build_full_index(spark, snaps[1], cfg, d, gen=1)
+
+    plans: list[str] = []
+    write_parquet = DataFrameWriter.parquet
+
+    def capture(self, path, *args, **kwargs):
+        plans.append(plan_of(self._df))
+        return write_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    build_incremental(spark, snaps[2], cfg, d, gen=2, use_html=True)
+    monkeypatch.undo()
+    per_write = [p.count("ArrowEvalPython") for p in plans]
+    assert sum(per_write) == 1, per_write

@@ -9,10 +9,10 @@ from mee_spark.bm25 import idf_np
 from mee_spark.codec import block_metadata
 from mee_spark.wand import (
     TermCursor,
-    exhaustive_topk_np,
     exhaustive_topk_vec,
     wand_topk,
 )
+from reference_helpers import exhaustive_topk_np
 
 
 def make_cursor(term, rng, n_docs, df, avgdl):

@@ -10,7 +10,8 @@ import numpy as np
 
 from mee_spark.bm25 import idf_np
 from mee_spark.codec import block_metadata
-from mee_spark.wand import TermCursor, exhaustive_topk_np, wand_topk
+from mee_spark.wand import TermCursor, wand_topk
+from reference_helpers import exhaustive_topk_np
 
 
 def make_cursor(term, rng, n_docs, df, avgdl, block_size=64):
