@@ -53,18 +53,23 @@ def cfg_from_args(args) -> IndexConfig:
 def cmd_build(args) -> None:
     from mee_spark.build import build_full_index, build_incremental
     from mee_spark import manifest as mf
+    from mee_spark.sources import read_pages
 
     spark = make_session("mee-build", args.partitions)
-    pages = spark.read.parquet(args.pages)
+    pages = read_pages(spark, args.pages, snapshot_id=args.snapshot_id,
+                       start_snapshot_id=args.start_snapshot_id)
     cfg = cfg_from_args(args)
     if not mf.acquire_lock(args.index):
         sys.exit("another writer holds the index lock (_LOCK)")
     try:
         if args.incremental:
             gen = (mf.current_gen(args.index) or 0) + 1
+            # an append range is an upsert batch, not a snapshot: urls
+            # missing from it are not deletions
             m = build_incremental(spark, pages, cfg, args.index, gen=gen,
                                   use_html=not args.text_only,
-                                  lineage={"source": args.pages})
+                                  lineage={"source": args.pages},
+                                  partial=args.start_snapshot_id is not None)
         else:
             m = build_full_index(spark, pages, cfg, args.index, gen=args.gen,
                                  use_html=not args.text_only,
@@ -164,7 +169,12 @@ def main(argv: list[str] | None = None) -> None:
         sp.add_argument("--range-size", type=int, default=1 << 20)
 
     b = sub.add_parser("build"); common(b)
-    b.add_argument("--pages", required=True)
+    b.add_argument("--pages", required=True,
+                   help="Parquet path, or an Iceberg table name")
+    b.add_argument("--snapshot-id", type=int, default=None,
+                   help="Iceberg only: read this snapshot")
+    b.add_argument("--start-snapshot-id", type=int, default=None,
+                   help="Iceberg only: read the appends after this snapshot")
     b.add_argument("--gen", type=int, default=1)
     b.add_argument("--incremental", action="store_true")
     b.add_argument("--text-only", action="store_true",

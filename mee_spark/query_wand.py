@@ -14,8 +14,10 @@ designed for 10^12 docs / 1000 executors:
    (computed once per build); per-term global df is a tiny aggregate
    over the matched rows only, broadcast into the scorers.
 3. **Distributed scoring** — matched segment rows join the broadcast
-   query set, then ``groupBy(query_id, range_id).applyInPandas``: each
-   task runs block-max WAND over ONE docID range of one query. A head
+   query set, then ``groupBy(range_id, _qshard).applyInPandas``: each
+   group scores ONE docID range for one shard of the query batch
+   (``_qshard = query_id mod 8``), decoding each (term, gen) row once for
+   every query of the shard and running block-max WAND per query. A head
    term's 10^12-posting list is never gathered anywhere — each range
    holds ≤ doc_range_size of it, scored independently with a local
    top-k heap.
@@ -137,6 +139,33 @@ def decode_live(rows: pd.DataFrame, tomb_ids: np.ndarray, tomb_gens: np.ndarray,
     np.cumsum(counts, out=bounds[1:])
     return (docs[keep], None if tfs is None else tfs[keep],
             None if dls is None else dls[keep], np.diff(kept[bounds]))
+
+
+def live_df(segs: DataFrame) -> DataFrame:
+    """(term, df) — each term's live document frequency over segment rows
+    left-joined with ``tombstones_per_range`` (old gens still hold dead
+    postings, so the df needs a doc-id decode).
+
+    The decode reads only the columns it needs, and a ``range_id``
+    repartition sits in front of it, so it runs one Python task per
+    AQE-coalesced partition (sized by bytes) rather than one per segment
+    file split. Each Python task carries a fixed worker set-up cost
+    (about 0.15 CPU-s on a 4-vCPU host) whatever its body does; on a
+    two-generation chain over a 2k-doc index the pass runs one task
+    instead of six. The price is one more Spark job and one exchange of
+    the query terms' doc-id blobs. A range's rows stay together, and a
+    head term's rows spread over ranges."""
+
+    def live_counts(batches):
+        for pdf in batches:
+            counts = decode_live(pdf, *joined_tombstones(pdf), values=False)[3]
+            yield pd.DataFrame({"term": pdf["term"].to_numpy(), "live": counts})
+
+    return (segs.select("range_id", "term", "gen", "doc_ids_blob",
+                        "tomb_ids", "tomb_gens")
+            .repartition("range_id")
+            .mapInPandas(live_counts, "term string, live long")
+            .groupBy("term").agg(F.sum("live").alias("df")))
 
 
 def _make_scorer(df_map: dict | None, n_docs: int, avgdl: float,
@@ -312,32 +341,17 @@ def bm25_topk_wand(
             F.col("bucket").isin(buckets) & F.col("term").isin(terms))
 
     # Tombstones join in per docID range so every consumer sees them.
-    # ROUND 7: the pruned scan is no longer cached and the candidate set
-    # no longer eagerly checkpointed — every pass is lazy. The df
-    # aggregation and the scoring join each evaluate the pruned scan
-    # once; on the no-tombstone path (fresh or compacted index — the
-    # steady state) the df pass is a metadata aggregate over (term,
-    # df_local) only, so Parquet column pruning makes it nearly free and
-    # the blob columns are read exactly once, by the scoring job. On a
-    # tombstone chain the df pass must decode blobs, so the pruned scan
-    # is read twice — bounded work (query terms only, and the
-    # compaction policy caps chain length/tombstone ratio), measured
-    # flat vs the old cache+checkpoint shape even on the 2-gen
-    # lifecycle chain, while dropping two materialization passes from
-    # every call and keeping the CacheManager trivially empty.
+    # Every pass is lazy: the df aggregation and the scoring join each
+    # evaluate the pruned scan once (no cache, no checkpoint). Without
+    # tombstones (a fresh or compacted index, the steady state) the df
+    # pass is a metadata aggregate over (term, df_local), so Parquet
+    # column pruning makes it nearly free and the blobs are read once, by
+    # the scoring job. On a tombstone chain the df pass must decode
+    # doc-id blobs; see ``live_df`` for its shape.
     tombs = tombstones_per_range(spark, index_dir, gens, cfg.doc_range_size)
     if tombs is not None:
         segs = segs.join(tombs, "range_id", "left")
-
-    if tombs is not None:
-        # exact live df needs decode (old gens still hold dead postings)
-        def live_counts(batches):
-            for pdf in batches:
-                counts = decode_live(pdf, *joined_tombstones(pdf), values=False)[3]
-                yield pd.DataFrame({"term": pdf["term"].to_numpy(), "live": counts})
-
-        df_agg = (segs.mapInPandas(live_counts, "term string, live long")
-                  .groupBy("term").agg(F.sum("live").alias("df")))
+        df_agg = live_df(segs)
     else:
         df_agg = segs.groupBy("term").agg(F.sum("df_local").alias("df"))
     if vocab_in_plan:

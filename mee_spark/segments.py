@@ -292,7 +292,10 @@ def read_segments(spark, index_dir: str, gens: list[int]) -> DataFrame:
     """
     import glob
 
-    full_schema = SEGMENT_READ_SCHEMA.add(StructField("bucket", LongType()))
+    # StructType.add appends in place: build a new schema, or every call
+    # would grow the module-level one by a field
+    full_schema = StructType(SEGMENT_READ_SCHEMA.fields
+                             + [StructField("bucket", LongType())])
     dfs = []
     for g in gens:
         root = mf.segments_dir(index_dir, g)
@@ -307,7 +310,8 @@ def read_segments(spark, index_dir: str, gens: list[int]) -> DataFrame:
         )
         dfs.append(df)
     if not dfs:
-        return spark.createDataFrame([], full_schema.add(StructField("gen", LongType())))
+        return spark.createDataFrame(
+            [], StructType(full_schema.fields + [StructField("gen", LongType())]))
     out = dfs[0]
     for df in dfs[1:]:
         out = out.unionByName(df)

@@ -6,6 +6,12 @@ import pytest
 from pyspark.sql import SparkSession
 
 
+def pytest_configure(config):
+    # a label only: slow tests run with the rest of the suite
+    config.addinivalue_line(
+        "markers", "slow: long-running soak test (still runs by default)")
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = (

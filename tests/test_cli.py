@@ -67,3 +67,59 @@ def test_cli_package(tmp_path, capsys):
     main(["package", "--out", out])
     names = zipfile.ZipFile(out).namelist()
     assert "mee_spark/wand.py" in names and "mee_spark/cli.py" in names
+
+
+def test_cli_build_reads_pages_through_sources(spark, corpus, tmp_path,
+                                               capsys, monkeypatch):
+    """``build --pages <parquet path>`` reads the corpus through
+    ``sources.read_pages``, the one reader for Parquet and Iceberg."""
+    from mee_spark import sources
+
+    seen = []
+    real = sources.read_pages
+
+    def spy(spark_, source, **kw):
+        seen.append((source, kw))
+        return real(spark_, source, **kw)
+
+    monkeypatch.setattr(sources, "read_pages", spy)
+    idx = str(tmp_path / "idx3")
+    main(_args(["build", "--pages", corpus, "--gen", "1"], idx))
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["generation"] == 1
+    assert seen == [(corpus, {"snapshot_id": None, "start_snapshot_id": None})]
+    assert mf.read_manifest(idx, 1)["n_docs_live"] == spark.read.parquet(corpus).count()
+
+
+@pytest.mark.parametrize("opt", ["--snapshot-id", "--start-snapshot-id"])
+def test_cli_build_rejects_snapshot_options_for_parquet(spark, corpus, tmp_path, opt):
+    """Snapshot options need an Iceberg table; a Parquet path refuses
+    them before the index lock is taken or anything is written."""
+    idx = str(tmp_path / "idx4")
+    with pytest.raises(ValueError, match="Iceberg"):
+        main(_args(["build", "--pages", corpus, opt, "7"], idx))
+    assert mf.current_gen(idx) is None
+    assert mf.acquire_lock(idx)
+    mf.release_lock(idx)
+
+
+def test_cli_append_range_is_an_upsert_batch(spark, corpus, tmp_path,
+                                             capsys, monkeypatch):
+    """``--incremental --start-snapshot-id`` reads only the appends after
+    a snapshot, so urls missing from them must not be tombstoned. The
+    Iceberg read is stood in for by a reader returning a slice of the
+    corpus."""
+    from mee_spark import sources
+    from mee_spark.build import live_docmap
+
+    idx = str(tmp_path / "idx5")
+    main(_args(["build", "--pages", corpus, "--gen", "1"], idx))
+    capsys.readouterr()
+    pages = spark.read.parquet(corpus)
+    appended = pages.orderBy("url").limit(10)
+    monkeypatch.setattr(sources, "read_pages", lambda *a, **kw: appended)
+    main(_args(["build", "--pages", "db.pages", "--incremental",
+                "--start-snapshot-id", "3"], idx))
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["generation"] == 2 and out["docs_deleted"] == 0
+    assert live_docmap(spark, idx, [1, 2]).count() == pages.count()

@@ -10,7 +10,9 @@ import subprocess
 import sys
 import uuid
 
+import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from mee_spark import manifest as mf
 from mee_spark.build import (
@@ -20,8 +22,17 @@ from mee_spark.build import (
     read_tombstones,
 )
 from mee_spark.config import IndexConfig
-from mee_spark.fixtures import PAGES_SCHEMA, gen_queries, gen_snapshots_pandas
+from mee_spark.fixtures import (
+    PAGES_SCHEMA,
+    QUERIES_SCHEMA,
+    gen_pages_for_indices,
+    gen_queries,
+    gen_queries_pandas,
+    gen_snapshots_pandas,
+)
+from mee_spark.oracle import OracleIndex
 from mee_spark.query_wand import bm25_topk_wand
+from mee_spark.segments import read_segments
 
 CFG = IndexConfig(num_doc_partitions=4, num_term_buckets=8,
                   doc_range_size=64, block_size=16)
@@ -189,18 +200,57 @@ def test_docid_watermark_from_manifest(spark, snaps, tmp_path_factory):
     assert not (ids1 & fresh_ids2)
 
 
-def test_vocab_in_plan_with_tombstones(spark, snaps, tmp_path_factory):
-    """Plan-mode vocabulary transport must agree with the dict path on a
-    chain that exercises the live-df decode (tombstones present)."""
+def _text_snapshot(spark, state: dict[str, str]):
+    return spark.createDataFrame(sorted(state.items()), "url string, text string")
+
+
+def test_vocab_in_plan_with_tombstones(spark, tmp_path_factory):
+    """On a 3-generation chain the in-plan vocabulary path, the dict path
+    and ``OracleIndex`` over the live docs agree. One url changes in gen
+    2 and again in gen 3, another is deleted in gen 3, and two query
+    terms have postings only in tombstoned docs, so the live-df decode
+    must mask superseded and deleted postings alike."""
+    base = gen_pages_for_indices(range(N_BASE))
+    state = dict(zip(base["url"], base["text"]))
+    changed, deleted = sorted(state)[3], sorted(state)[10]
+    original = state[changed]
+    state[deleted] += " onlydead w000002"
     d = str(tmp_path_factory.mktemp("vplan"))
-    build_full_index(spark, snaps[2], CFG, d, gen=1)
-    build_incremental(spark, snaps[3], CFG, d, gen=2)
-    queries = gen_queries(spark, N_QUERIES)
+    build_full_index(spark, _text_snapshot(spark, state), CFG, d, gen=1,
+                     use_html=False)
+    state[changed] = original + " ghostterm w000000"
+    build_incremental(spark, _text_snapshot(spark, state), CFG, d, gen=2,
+                      use_html=False)
+    state[changed] = original + " edit3 w000001"
+    del state[deleted]
+    build_incremental(spark, _text_snapshot(spark, state), CFG, d, gen=3,
+                      use_html=False)
+    segs = read_segments(spark, d, [1, 2, 3])
+    assert segs.filter(F.col("term").isin("ghostterm", "onlydead")).count() == 2
+
+    extra = ["ghostterm", "onlydead", "ghostterm w000000", "onlydead w000002",
+             "edit3 w000001 w000000"]
+    qpdf = pd.concat([gen_queries_pandas(N_QUERIES), pd.DataFrame(
+        {"query_id": range(N_QUERIES, N_QUERIES + len(extra)),
+         "query_text": extra, "k": 10})], ignore_index=True)
+    queries = spark.createDataFrame(qpdf, QUERIES_SCHEMA)
     a = bm25_topk_wand(spark, d, queries, CFG, vocab_in_plan=False).collect()
     b = bm25_topk_wand(spark, d, queries, CFG, vocab_in_plan=True).collect()
-    key = lambda r: (r["query_id"], r["rank"])
-    assert sorted([tuple(r) for r in a], key=lambda t: (t[0], t[1])) == \
-           sorted([tuple(r) for r in b], key=lambda t: (t[0], t[1]))
+    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+
+    url_to_id = {r["url"]: r["doc_id"] for r in live_docmap(spark, d, [1, 2, 3]).collect()}
+    assert set(url_to_id) == set(state)
+    oracle = OracleIndex.build([(url_to_id[u], t) for u, t in state.items()])
+    got: dict[int, list] = {}
+    for r in sorted(a, key=lambda r: (r["query_id"], r["rank"])):
+        got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
+    for q in qpdf.itertuples():
+        want = sorted(((doc, round(s, 6)) for doc, s in oracle.score_all(q.query_text).items()),
+                      key=lambda x: (-x[1], x[0]))[:q.k]
+        have = got.get(q.query_id, [])
+        assert [doc for doc, _ in have] == [doc for doc, _ in want], q.query_text
+        assert all(abs(x - y) < 1.5e-6 for (_, x), (_, y) in zip(have, want)), q.query_text
+    assert not got.get(N_QUERIES) and not got.get(N_QUERIES + 1)
 
 
 def test_identical_snapshot_is_an_empty_delta(spark, snaps, tmp_path_factory):

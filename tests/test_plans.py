@@ -98,6 +98,19 @@ def test_segment_scan_prunes_term_and_bucket(spark, tmp_path):
     assert "PushedFilters" in plan and "term" in plan.split("PushedFilters")[1][:200]
 
 
+def test_read_segments_keeps_the_shared_read_schema(spark, tmp_path):
+    """Each ``read_segments`` call builds its own scan schema; appending
+    the partition column to the module-level schema in place grew it by
+    one field per call in a long-lived query process."""
+    from mee_spark.segments import SEGMENT_READ_SCHEMA, read_segments
+
+    n_fields = len(SEGMENT_READ_SCHEMA.fields)
+    for _ in range(3):
+        cols = read_segments(spark, str(tmp_path / "none"), [1]).columns
+    assert len(SEGMENT_READ_SCHEMA.fields) == n_fields
+    assert cols == SEGMENT_READ_SCHEMA.fieldNames() + ["bucket", "gen"]
+
+
 def test_winnow_fingerprints_shuffle_free(spark):
     """Round-7 plan pin: winnowing computes the per-doc sliding-min and
     per-doc dedup in array land — the operator must stay a map-side
@@ -145,3 +158,40 @@ def test_incremental_build_extracts_text_once(spark, tmp_path, monkeypatch):
     monkeypatch.undo()
     per_write = [p.count("ArrowEvalPython") for p in plans]
     assert sum(per_write) == 1, per_write
+
+
+def test_live_df_pass_repartitions_by_range(spark, tmp_path):
+    """On a tombstone chain the live-df decode must read a coalescible
+    ``range_id`` exchange, not the segment scan: reading the scan runs
+    one Python task per segment file split, each with a fixed worker
+    set-up cost. The exchange carries only the columns the decode reads,
+    so the scan never reads the tf/dl blobs or the block metadata."""
+    from mee_spark.build import build_full_index, build_incremental
+    from mee_spark.config import IndexConfig
+    from mee_spark.fixtures import PAGES_SCHEMA, gen_snapshots_pandas
+    from mee_spark.query_wand import live_df, tombstones_per_range
+    from mee_spark.segments import read_segments
+
+    cfg = IndexConfig(num_doc_partitions=4, num_term_buckets=8,
+                      doc_range_size=64, block_size=16)
+    snaps = gen_snapshots_pandas(100)
+    d = str(tmp_path / "ix")
+    build_full_index(spark, spark.createDataFrame(snaps[1], PAGES_SCHEMA), cfg, d, gen=1)
+    build_incremental(spark, spark.createDataFrame(snaps[3], PAGES_SCHEMA), cfg, d, gen=2)
+    segs = read_segments(spark, d, [1, 2]).join(
+        tombstones_per_range(spark, d, [1, 2], cfg.doc_range_size), "range_id", "left")
+    df_agg = live_df(segs)
+    lines = plan_of(df_agg).splitlines()
+    at = [i for i, line in enumerate(lines) if "MapInPandas" in line]
+    assert len(at) == 1, lines
+    child = lines[at[0] + 1]
+    assert "Exchange hashpartitioning(range_id" in child, child
+    assert "REPARTITION_BY_COL" in child, child
+    scans = [line for line in lines if "FileScan parquet" in line
+             and "doc_ids_blob" in line]
+    assert scans, lines
+    for scan in scans:
+        read_schema = scan.split("ReadSchema:")[1]
+        for col in ("tfs_blob", "dls_blob", "block_last_doc", "block_max_tf",
+                    "block_min_dl", "df_local", "n_postings"):
+            assert col not in read_schema, (col, scan)
