@@ -4,15 +4,27 @@ The read path mee never had (reads were Elasticsearch's job; mee only
 wrote, `modules/handlers/v1/commonhandler.py:68-83`). Execution shape,
 designed for 10^12 docs / 1000 executors:
 
-1. **Partition pruning** — the query-term set (tiny) is hashed to its
-   term buckets with the same ``xxhash64`` Spark expression used at
-   write time; the segment scan filters ``bucket IN (...)`` (directory
+1. **Vocabulary on the driver** — one bounded collect returns each
+   query's tokens and their term buckets, computed by the build's own
+   JVM expressions (``tokenize_col``, ``pmod(xxhash64)``), so they match
+   the index by construction. On a local query relation (the interactive
+   case) Spark folds this into the relation and runs no job. The driver
+   deduplicates (query_id, k, term), derives the bucket list and the
+   per-query term counts, and ships the query terms back as a local
+   relation. The segment scan filters ``bucket IN (...)`` (directory
    pruning via the partition column) AND ``term IN (...)`` (Parquet
    row-group pruning — rows are term-sorted within files). Only the
    postings of the queried terms are ever read.
-2. **Corpus stats broadcast** — N/avgdl come from the manifest chain
-   (computed once per build); per-term global df is a tiny aggregate
-   over the matched rows only, broadcast into the scorers.
+2. **Corpus stats** — N/avgdl come from the manifest chain (computed
+   once per build). Per-term global df: on a tombstone-free chain (a
+   full or compacted generation) every posting is live, so df is the
+   sum of the matched rows' ``df_local``, read with pyarrow on the
+   driver (``segments.term_df``) — no Spark job, and a query with no
+   indexed term is answered without one. On a tombstone chain df needs
+   a doc-id decode in Spark (``live_df``). Either way it reaches the
+   scorers as a broadcast dict.
+   Batches past ``VOCAB_IN_PLAN_THRESHOLD`` keep all of this in the
+   plan instead (see ``bm25_topk_wand``).
 3. **Distributed scoring** — matched segment rows join the broadcast
    query set, then ``groupBy(range_id, _qshard).applyInPandas``: each
    group scores ONE docID range for one shard of the query batch
@@ -38,10 +50,13 @@ its own range's slice (≤ doc_range_size ids by construction).
 
 from __future__ import annotations
 
+from collections import Counter
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from mee_spark import manifest as mf
 from mee_spark.bm25 import idf_np
@@ -49,7 +64,8 @@ from mee_spark.build import read_tombstones
 from mee_spark.codec import decode_postings_batch
 from mee_spark.config import IndexConfig
 from mee_spark.query import explode_query_terms
-from mee_spark.segments import read_segments
+from mee_spark.segments import read_segments, term_df
+from mee_spark.textprep import tokenize_col
 from mee_spark.wand import (
     TermCursor,
     conjunctive_topk_vec,
@@ -61,9 +77,39 @@ _LOCAL_SCHEMA = "query_id int, k int, doc_id long, score double"
 
 # query batches past this size keep their vocabulary IN THE PLAN (df and
 # per-query term counts joined in as columns) instead of driver dicts:
-# the dict path collects one entry per distinct term, which is fine for
-# interactive batches but unbounded for 10^5-query offline batches
+# the dict path collects every query's tokens to the driver, which is
+# fine for interactive batches but unbounded for 10^5-query offline ones
 VOCAB_IN_PLAN_THRESHOLD = 2048
+
+
+def query_vocab(queries: DataFrame, num_term_buckets: int,
+                limit: int | None = None) -> list:
+    """Driver rows of (query_id, k, terms, buckets): each query's tokens
+    and their term buckets, at most ``limit`` queries.
+
+    Tokens and buckets come from the build's own JVM expressions
+    (``tokenize_col``, ``pmod(xxhash64(term), num_term_buckets)``), so they
+    match the index by construction. On a local query relation (a frame
+    created from pandas with Arrow on) Spark folds the projection into the
+    relation and answers the collect with no job."""
+    probe = (queries.select("query_id", "k",
+                            tokenize_col(F.col("query_text")).alias("terms"))
+             .where(F.col("terms").isNotNull())  # a null text has no terms
+             .withColumn("buckets", F.transform("terms", lambda t: F.pmod(
+                 F.xxhash64(t), F.lit(num_term_buckets)).cast("long"))))
+    if limit is not None:
+        probe = probe.limit(limit)
+    return probe.collect()
+
+
+def _empty_result(queries: DataFrame) -> DataFrame:
+    """The result schema with no rows. ``limit(0)`` folds to an empty
+    local relation, so collecting it submits no job (an empty
+    ``createDataFrame`` runs one)."""
+    return queries.limit(0).select(
+        *(F.lit(None).cast(t).alias(c) for c, t in (
+            ("query_id", "int"), ("rank", "long"), ("doc_id", "long"),
+            ("score", "double"))))
 
 
 def tombstones_per_range(spark: SparkSession, index_dir: str, gens: list[int],
@@ -207,7 +253,9 @@ def _make_scorer(df_map: dict | None, n_docs: int, avgdl: float,
                 np.asarray(row.block_last_doc), np.asarray(row.block_max_tf),
                 np.asarray(row.block_min_dl),
             )
-        out = []
+        # output accumulates as flat columns: one frame per group, not
+        # one per (query, range)
+        out_q, out_k, out_doc, out_score = [], [], [], []
         qcols = ["query_id", "k", "term", "gen"]
         if conjunctive and n_terms_map is None:
             qcols.append("_n_terms")
@@ -242,16 +290,14 @@ def _make_scorer(df_map: dict | None, n_docs: int, avgdl: float,
             else:
                 top = wand_topk(cursors, k, use_block_max=use_block_max,
                                 round_to=round_to)
-            if top:
-                out.append(pd.DataFrame(
-                    {"query_id": int(qid), "k": k,
-                     "doc_id": [d for d, _ in top], "score": [s for _, s in top]}))
-        if not out:
-            return pd.DataFrame({"query_id": pd.Series(dtype="int32"),
-                                 "k": pd.Series(dtype="int32"),
-                                 "doc_id": pd.Series(dtype="int64"),
-                                 "score": pd.Series(dtype="float64")})
-        return pd.concat(out, ignore_index=True)
+            out_q += [qid] * len(top)
+            out_k += [k] * len(top)
+            out_doc += [d for d, _ in top]
+            out_score += [sc for _, sc in top]
+        return pd.DataFrame({"query_id": np.asarray(out_q, dtype=np.int32),
+                             "k": np.asarray(out_k, dtype=np.int32),
+                             "doc_id": np.asarray(out_doc, dtype=np.int64),
+                             "score": np.asarray(out_score, dtype=np.float64)})
 
     return score_group
 
@@ -278,8 +324,9 @@ def bm25_topk_wand(
     vocabulary in the plan — per-term df and per-query term counts are
     joined in as columns, term pruning is a broadcast semi-join, and the
     only driver-side collect is the bucket-id list (bounded by
-    cfg.num_term_buckets regardless of batch size). None = auto by a
-    bounded LIMIT-probe against VOCAB_IN_PLAN_THRESHOLD."""
+    cfg.num_term_buckets regardless of batch size). False = the driver
+    plans from the whole batch's vocabulary. None = auto: the bounded
+    vocabulary probe decides against VOCAB_IN_PLAN_THRESHOLD."""
     chain = mf.manifest_chain(index_dir, gen)
     if not chain:
         raise ValueError(f"no published index at {index_dir}")
@@ -294,28 +341,28 @@ def bm25_topk_wand(
     n_docs = chain[-1]["n_docs_live"]
     avgdl = chain[-1]["avgdl"]
 
-    qterms = explode_query_terms(queries)  # (query_id, k, term)
-    if vocab_in_plan is None:
-        # bounded probe: LIMIT caps the action's cost at threshold+1 rows
-        # however large the batch is. collect(), not count(): a local
-        # query relation (the common interactive case) answers a
-        # limit-collect straight from the driver with NO Spark job, while
-        # count() always schedules one (round 7 — each trivial action is
-        # ~0.3 s of serial driver time per query call)
-        vocab_in_plan = (len(queries.select("query_id")
-                             .limit(VOCAB_IN_PLAN_THRESHOLD + 1)
-                             .collect()) > VOCAB_IN_PLAN_THRESHOLD)
+    tombs = tombstones_per_range(spark, index_dir, gens, cfg.doc_range_size)
+    if not vocab_in_plan:
+        # the vocabulary probe: one collect of each query's tokens and term
+        # buckets. Auto mode bounds it by LIMIT (threshold+1 rows however
+        # large the batch); a forced dict path takes the whole batch, never
+        # a truncated one. A local query relation answers it with no job
+        rows = query_vocab(queries, cfg.num_term_buckets,
+                           VOCAB_IN_PLAN_THRESHOLD + 1 if vocab_in_plan is None
+                           else None)
+        vocab_in_plan = (vocab_in_plan is None
+                         and len(rows) > VOCAB_IN_PLAN_THRESHOLD)
 
     if vocab_in_plan:
         # the only driver-side list is the bucket ids — bounded by
         # cfg.num_term_buckets no matter how large the vocabulary is
+        qterms = explode_query_terms(queries)  # (query_id, k, term)
         vocab = qterms.select("term").distinct()
         buckets = sorted(r["b"] for r in vocab.select(
             F.pmod(F.xxhash64("term"), F.lit(cfg.num_term_buckets))
             .cast("long").alias("b")).distinct().collect())
         if not buckets:
-            return spark.createDataFrame(
-                [], "query_id int, rank long, doc_id long, score double")
+            return _empty_result(queries)
         # term pruning by broadcast semi-join instead of a 10^5-literal
         # isin: the scan still prunes whole bucket directories; within a
         # bucket the join filters (a giant IN list would bloat the plan
@@ -323,58 +370,57 @@ def bm25_topk_wand(
         segs = read_segments(spark, index_dir, gens).filter(
             F.col("bucket").isin(buckets)).join(
             F.broadcast(vocab), "term", "semi")
-    else:
-        # ONE collect carries both the distinct terms and their bucket
-        # ids (the bucket hash is a column of the same tiny relation) —
-        # the old shape spent a second full action re-hashing the terms
-        # (round 7: two trivial actions → one)
-        rows = (qterms.select("term").distinct()
-                .select("term",
-                        F.pmod(F.xxhash64("term"), F.lit(cfg.num_term_buckets))
-                        .cast("long").alias("_b")).collect())
-        terms = [r["term"] for r in rows]
-        if not terms:
-            return spark.createDataFrame(
-                [], "query_id int, rank long, doc_id long, score double")
-        buckets = sorted({r["_b"] for r in rows})
-        segs = read_segments(spark, index_dir, gens).filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(terms))
-
-    # Tombstones join in per docID range so every consumer sees them.
-    # Every pass is lazy: the df aggregation and the scoring join each
-    # evaluate the pruned scan once (no cache, no checkpoint). Without
-    # tombstones (a fresh or compacted index, the steady state) the df
-    # pass is a metadata aggregate over (term, df_local), so Parquet
-    # column pruning makes it nearly free and the blobs are read once, by
-    # the scoring job. On a tombstone chain the df pass must decode
-    # doc-id blobs; see ``live_df`` for its shape.
-    tombs = tombstones_per_range(spark, index_dir, gens, cfg.doc_range_size)
-    if tombs is not None:
-        segs = segs.join(tombs, "range_id", "left")
-        df_agg = live_df(segs)
-    else:
-        df_agg = segs.groupBy("term").agg(F.sum("df_local").alias("df"))
-    if vocab_in_plan:
         # df stays a COLUMN: the per-term aggregate (query vocabulary
         # only — tiny next to the index) broadcast-joins back onto the
-        # cached pruned scan; nothing vocabulary-sized reaches the driver
-        df_map = None
-        segs_q = segs.join(F.broadcast(df_agg), "term")
-    else:
-        df_map = {r["term"]: int(r["df"]) for r in df_agg.collect()}
-        segs_q = segs
-
-    qt = qterms
-    n_terms_map = None
-    if conjunctive:
-        if vocab_in_plan:
-            qt = qterms.join(
-                qterms.groupBy("query_id").agg(
-                    F.count("*").alias("_n_terms")), "query_id")
+        # pruned scan; nothing vocabulary-sized reaches the driver. On a
+        # tombstone chain old gens still hold dead postings, so the df
+        # needs a doc-id decode (see ``live_df``); otherwise it is a
+        # metadata aggregate over (term, df_local)
+        if tombs is not None:
+            segs = segs.join(tombs, "range_id", "left")
+            df_agg = live_df(segs)
         else:
-            n_terms_map = {int(r["query_id"]): int(r["n"]) for r in
-                           qterms.groupBy("query_id").agg(
-                               F.count("*").alias("n")).collect()}
+            df_agg = segs.groupBy("term").agg(F.sum("df_local").alias("df"))
+        segs = segs.join(F.broadcast(df_agg), "term")
+        df_map = n_terms_map = None
+        qt = qterms
+        if conjunctive:
+            qt = qterms.join(qterms.groupBy("query_id").agg(
+                F.count("*").alias("_n_terms")), "query_id")
+    else:
+        # the driver plans the rest from the probe rows: distinct
+        # (query_id, k, term), each term's bucket, per-query term counts
+        qrows = list(dict.fromkeys(
+            (r["query_id"], r["k"], t) for r in rows for t in r["terms"]))
+        bucket_of = {t: b for r in rows for t, b in zip(r["terms"], r["buckets"])}
+        n_terms_map = Counter(int(q) for q, _, _ in qrows) if conjunctive else None
+        terms = sorted(bucket_of)
+        if tombs is None:
+            # every posting is live, so df is the sum of the rows'
+            # df_local: a pyarrow read of the pruned files, and a query
+            # with no indexed term is answered without a job
+            df_map = term_df(index_dir, gens, terms, sorted(set(bucket_of.values())))
+            terms = sorted(df_map)
+        if not terms:
+            return _empty_result(queries)
+        segs = read_segments(spark, index_dir, gens).filter(
+            F.col("bucket").isin(sorted({bucket_of[t] for t in terms}))
+            & F.col("term").isin(terms))
+        if tombs is not None:
+            # tombstones join per docID range, so the df pass and the
+            # scorers see them; they never reach the driver
+            segs = segs.join(tombs, "range_id", "left")
+            df_map = {r["term"]: int(r["df"]) for r in live_df(segs).collect()}
+            if not df_map:
+                return _empty_result(queries)
+        # the query terms ship as a local relation: no job to build or
+        # deduplicate them. Terms without segment rows can't match the
+        # join, so they are left out (conjunctive counts still see them)
+        qt = spark.createDataFrame(
+            pd.DataFrame([q for q in qrows if q[2] in df_map],
+                         columns=["query_id", "k", "term"]),
+            StructType([queries.schema["query_id"], queries.schema["k"],
+                        StructField("term", StringType())]))
 
     # parallelism = ranges x query-shards: sharding the query batch keeps
     # big batches parallel even over few ranges, while queries within a
@@ -384,7 +430,7 @@ def bm25_topk_wand(
     # serial driver time on the query-latency floor)
     n_qshards = 8
     joined = (
-        segs_q.join(F.broadcast(qt), "term")
+        segs.join(F.broadcast(qt), "term")
         .withColumn("_qshard", F.pmod(F.col("query_id"), F.lit(n_qshards)))
     )
     scorer = _make_scorer(df_map, n_docs, avgdl, cfg.k1, cfg.b,

@@ -26,6 +26,7 @@ the write and the shuffle of already-durable groups.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
@@ -34,6 +35,8 @@ import uuid
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -189,7 +192,9 @@ def write_segment(seg_root: str, ckpt_root: str, block_size: int,
     bucket_dir = os.path.join(seg_root, f"bucket={bucket}")
     os.makedirs(bucket_dir, exist_ok=True)
     final = os.path.join(bucket_dir, f"range_{range_id}.parquet")
-    tmp = final + f".{uuid.uuid4().hex}.tmp"
+    # hidden name: Spark's file index skips dot-files, so a torn temp
+    # file left by a killed task never reaches a scan of this bucket
+    tmp = os.path.join(bucket_dir, f".range_{range_id}.{uuid.uuid4().hex}.tmp")
     pq.write_table(table, tmp, compression="zstd")  # rows already term-sorted
     os.replace(tmp, final)  # idempotent under task retry / speculation
     wall = time.monotonic() - t0
@@ -290,8 +295,6 @@ def read_segments(spark, index_dir: str, gens: list[int]) -> DataFrame:
     Reads with explicit schema + bucket partition discovery; the caller
     filters (bucket, term) so Parquet gets partition + row-group pruning.
     """
-    import glob
-
     # StructType.add appends in place: build a new schema, or every call
     # would grow the module-level one by a field
     full_schema = StructType(SEGMENT_READ_SCHEMA.fields
@@ -316,3 +319,24 @@ def read_segments(spark, index_dir: str, gens: list[int]) -> DataFrame:
     for df in dfs[1:]:
         out = out.unionByName(df)
     return out
+
+
+def term_df(index_dir: str, gens: list[int], terms: list[str],
+            buckets: list[int]) -> dict[str, int]:
+    """{term: summed ``df_local``} over the gens' ``bucket=<b>`` files, read
+    on the driver with pyarrow — no Spark job.
+
+    The segment-row form of ``read_segments(...).groupBy("term")
+    .agg(sum("df_local"))`` for the given terms: only the (term, df_local)
+    columns are read, and the ``term IN`` filter prunes row groups of the
+    term-sorted files. It counts every posting, dead or not, so it is the
+    document frequency only where no tombstone masks any (a full or
+    compacted generation). Terms with no row are absent."""
+    files = [f for g in gens for b in buckets for f in sorted(glob.glob(
+        os.path.join(mf.segments_dir(index_dir, g), f"bucket={b}", "*.parquet")))]
+    if not files or not terms:
+        return {}
+    table = ds.dataset(files, schema=SEGMENT_SCHEMA, format="parquet").to_table(
+        columns=["term", "df_local"], filter=pc.field("term").isin(terms))
+    sums = table.group_by("term").aggregate([("df_local", "sum")])
+    return dict(zip(sums["term"].to_pylist(), sums["df_local_sum"].to_pylist()))

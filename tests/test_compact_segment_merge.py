@@ -17,12 +17,14 @@ import json
 import os
 import subprocess
 import sys
+import types
 import warnings
 
 import numpy as np
 import pyarrow.parquet as pq
 import pytest
 
+import mee_spark.segments as seg
 from mee_spark import manifest as mf
 from mee_spark.build import _docmap_path, build_full_index, build_incremental, live_docmap
 from mee_spark.codec import decode_postings_batch
@@ -180,6 +182,7 @@ sys.path.insert(0, sys.argv[1])
 import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 import mee_spark.merge as merge
+import mee_spark.segments as seg
 from mee_spark import manifest as mf
 from mee_spark.build import build_full_index, build_incremental
 from mee_spark.config import IndexConfig
@@ -238,7 +241,8 @@ fa, fb = files(10), files(11)
 equal = fa == fb and all(
     pq.read_table(os.path.join(mf.segments_dir(d, 10), f)).equals(
         pq.read_table(os.path.join(mf.segments_dir(d, 11), f))) for f in fa)
-leftovers = glob.glob(os.path.join(mf.segments_dir(d, 11), "bucket=*", "*.tmp"))
+leftovers = glob.glob(os.path.join(mf.segments_dir(d, 11), "bucket=*", "*.tmp"),
+                      include_hidden=True)
 print(json.dumps({"injected": len(os.listdir(marker_dir)), "files": len(fa),
                   "equal": equal, "tmp_left": len(leftovers)}))
 spark.stop()
@@ -259,3 +263,46 @@ def test_compaction_survives_injected_task_deaths():
     assert rec["files"] > 0
     assert rec["equal"], "retried compaction differs from a clean one"
     assert rec["tmp_left"] == 0
+
+
+def test_torn_segment_temp_file_is_not_read(spark, tmp_path, monkeypatch):
+    """A segment writer killed mid-write leaves its truncated temp file
+    beside the bucket's segment files. The temp name is hidden, so a
+    query and a compaction of that bucket never read it."""
+    d = str(tmp_path / "ix")
+    base = gen_pages_for_indices(range(150))
+    state = dict(zip(base["url"], base["text"]))
+
+    def snap():
+        return spark.createDataFrame(sorted(state.items()), "url string, text string")
+
+    build_full_index(spark, snap(), CFG, d, gen=1, use_html=False)
+    for u in sorted(state)[::7]:
+        state[u] += " edited w000001"
+    build_incremental(spark, snap(), CFG, d, gen=2, use_html=False)
+    queries = gen_queries(spark, 20)
+    want = sorted(map(tuple, bm25_topk_wand(spark, d, queries, CFG).collect()))
+
+    def torn_write(table, where, **kw):
+        pq.write_table(table, where, **kw)
+        with open(where, "r+b") as f:
+            f.truncate(os.path.getsize(where) // 2)
+        raise OSError("writer killed mid-write")
+
+    bucket, name = _segment_files(d, 1)[0].split(os.sep)
+    bucket, range_id = int(bucket.split("=")[1]), int(name[6:].split(".")[0])
+    monkeypatch.setattr(seg, "pq", types.SimpleNamespace(write_table=torn_write))
+    with pytest.raises(OSError, match="mid-write"):
+        seg.write_segment(mf.segments_dir(d, 1), str(tmp_path / "ckpt"),
+                          CFG.block_size, bucket, range_id,
+                          np.array(["alpha"], dtype=object), np.zeros(1, np.int64),
+                          np.array([range_id * CFG.doc_range_size]),
+                          np.ones(1, np.int64), np.ones(1, np.int64), 0.0)
+    monkeypatch.undo()
+    bucket_dir = os.path.join(mf.segments_dir(d, 1), f"bucket={bucket}")
+    assert glob.glob(os.path.join(bucket_dir, "*.tmp"), include_hidden=True)
+
+    assert sorted(map(tuple, bm25_topk_wand(spark, d, queries, CFG).collect())) == want
+    compact(spark, d, CFG, new_gen=3)
+    assert mf.current_gen(d) == 3
+    assert sorted(map(tuple, bm25_topk_wand(spark, d, queries, CFG).collect())) == want

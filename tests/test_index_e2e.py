@@ -4,7 +4,9 @@ resume-from-checkpoint; incremental ≡ full (SURVEY.md §5.2 items 3-6)."""
 from __future__ import annotations
 
 import os
+import uuid
 
+import pandas as pd
 import pytest
 
 from mee_spark import manifest as mf
@@ -13,6 +15,7 @@ from mee_spark.config import IndexConfig
 from mee_spark.docmap import corpus_stats
 from mee_spark.fixtures import (
     PAGES_SCHEMA,
+    QUERIES_SCHEMA,
     gen_pages,
     gen_queries,
     gen_queries_pandas,
@@ -20,8 +23,8 @@ from mee_spark.fixtures import (
 )
 from mee_spark.oracle import OracleIndex
 from mee_spark.query import bm25_topk_exhaustive
-from mee_spark.query_wand import bm25_topk_wand
-from mee_spark.textprep import extract_text_bytes
+from mee_spark.query_wand import bm25_topk_wand, query_vocab
+from mee_spark.textprep import extract_text_bytes, py_tokenize
 
 N_DOCS = 250
 N_QUERIES = 40
@@ -58,14 +61,31 @@ def test_manifest_published(built):
     assert len(done) == len(m["metrics"]["partitions"])
 
 
-def test_wand_matches_oracle(built, spark):
-    """Rank identity (docIDs AND scores) vs the pure-Python oracle."""
+def _oracle(built, spark) -> OracleIndex:
     pages_rows = built["pages"].select("url", "html").collect()
     docmap = live_docmap(spark, built["index_dir"], [1])
     url_to_id = {r["url"]: r["doc_id"] for r in docmap.collect()}
-    oracle = OracleIndex.build(
+    return OracleIndex.build(
         [(url_to_id[r["url"]], extract_text_bytes(bytes(r["html"]))) for r in pages_rows]
     )
+
+
+def _jobs(spark, fn):
+    """-> (fn(), ids of the Spark jobs it submitted)."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs per call")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_wand_matches_oracle(built, spark):
+    """Rank identity (docIDs AND scores) vs the pure-Python oracle."""
+    oracle = _oracle(built, spark)
     res = collect_ranked(
         bm25_topk_wand(spark, built["index_dir"], built["queries"], CFG, round_digits=None)
     )
@@ -124,19 +144,87 @@ def test_resume_from_checkpoint(built, spark, tmp_path):
     assert collect_ranked(res)  # non-empty and consistent
 
 
-def test_vocab_in_plan_matches_dict_path(built, spark):
+EDGE_QUERIES = [
+    "w000001 w000001 w000002",       # a repeated term
+    "W000001, w000003!! (W000002)",  # mixed case and punctuation
+    "Café Ünïcode w000004 ÿ",        # non-ASCII text
+    "!!! ... ---",                   # tokenizes to nothing
+    "zzq1oov zzq2oov",               # every term out of vocabulary
+]
+
+
+def _oracle_topk(oracle: OracleIndex, text: str, k: int, conjunctive: bool):
+    scores = oracle.score_all(text)
+    if conjunctive:
+        terms = set(py_tokenize(text))
+        scores = {d: s for d, s in scores.items()
+                  if all(d in oracle.postings.get(t, {}) for t in terms)}
+    return sorted(scores.items(), key=lambda x: (-x[1], x[0]))[:k]
+
+
+def test_vocab_in_plan_matches_dict_path(built, spark, monkeypatch):
     """Large-batch mode (df + per-query term counts as plan columns, term
     pruning by broadcast semi-join, bucket list as the only driver
-    collect) must be result-identical to the small-batch dict path, in
-    both disjunctive and conjunctive modes."""
-    for conj in (False, True):
-        dict_res = collect_ranked(bm25_topk_wand(
-            spark, built["index_dir"], built["queries"], CFG,
-            conjunctive=conj, vocab_in_plan=False))
-        plan_res = collect_ranked(bm25_topk_wand(
-            spark, built["index_dir"], built["queries"], CFG,
-            conjunctive=conj, vocab_in_plan=True))
-        assert dict_res == plan_res, f"conjunctive={conj}"
+    collect), the small-batch driver-vocabulary path and the oracle agree
+    in both disjunctive and conjunctive modes, on the fixture batch plus
+    edge queries. A dict path forced on a batch past the threshold plans
+    from the whole batch, not the bounded probe."""
+    import mee_spark.query_wand as qw
+
+    qpdf = pd.concat([gen_queries_pandas(N_QUERIES), pd.DataFrame(
+        {"query_id": range(N_QUERIES, N_QUERIES + len(EDGE_QUERIES)),
+         "query_text": EDGE_QUERIES, "k": 10})], ignore_index=True)
+    queries = spark.createDataFrame(qpdf, QUERIES_SCHEMA)
+    oracle = _oracle(built, spark)
+
+    def run(conj, vocab_in_plan):
+        return collect_ranked(bm25_topk_wand(
+            spark, built["index_dir"], queries, CFG, round_digits=None,
+            conjunctive=conj, vocab_in_plan=vocab_in_plan))
+
+    dict_res = {conj: run(conj, False) for conj in (False, True)}
+    for conj, res in dict_res.items():
+        assert res == run(conj, True), f"conjunctive={conj}"
+        for q in qpdf.itertuples():
+            want = _oracle_topk(oracle, q.query_text, q.k, conj)
+            have = res.get(q.query_id, [])
+            assert [d for _, d, _ in have] == [d for d, _ in want], (conj, q.query_text)
+            for (_, _, s_have), (_, s_want) in zip(have, want):
+                assert s_have == pytest.approx(s_want, abs=1e-9)
+    for text in ("w000001 w000001 w000002", "Café Ünïcode w000004 ÿ"):
+        assert dict_res[False][qpdf.query_id[qpdf.query_text == text].iloc[0]]
+    for qid in (N_QUERIES + 3, N_QUERIES + 4):
+        assert qid not in dict_res[False] and qid not in dict_res[True]
+
+    monkeypatch.setattr(qw, "VOCAB_IN_PLAN_THRESHOLD", 3)
+    for conj, res in dict_res.items():
+        assert run(conj, False) == res, f"forced dict path, conjunctive={conj}"
+
+
+def test_single_query_jobs_per_call(built, spark):
+    """On a fresh single-generation index the driver plans a query: the
+    vocabulary probe of a pandas-created query frame, the df lookup and
+    building the plan submit no Spark job, and the collect submits at
+    most four (the scoring plan). An all-OOV or empty batch is answered
+    without any job."""
+    qpdf = gen_queries_pandas(100)
+    one = qpdf[qpdf["query_text"].str.split().str.len() == 3].iloc[[0]]
+    single = spark.createDataFrame(one, QUERIES_SCHEMA)
+    rows, jobs = _jobs(spark, lambda: query_vocab(single, CFG.num_term_buckets, 10))
+    assert len(rows) == 1 and len(rows[0]["terms"]) == 3 and jobs == []
+    plan, jobs = _jobs(spark, lambda: bm25_topk_wand(
+        spark, built["index_dir"], single, CFG))
+    assert jobs == []
+    res, jobs = _jobs(spark, plan.collect)
+    assert res and len(jobs) <= 4, jobs
+
+    oov = spark.createDataFrame(pd.DataFrame(
+        {"query_id": [0, 1], "query_text": ["zzq1oov zzq2oov", "!!!"], "k": 10}),
+        QUERIES_SCHEMA)
+    for batch in (oov, single.limit(0)):
+        res, jobs = _jobs(spark, lambda: bm25_topk_wand(
+            spark, built["index_dir"], batch, CFG).collect())
+        assert res == [] and jobs == []
 
 
 def test_vocab_in_plan_auto_dispatch(built, spark, monkeypatch):
