@@ -13,7 +13,9 @@ Cluster usage (the north-rule deployment shape):
 
 Locally the same scripts run on local[N]. The SparkSession is taken
 from the environment (spark-submit provides master/executors); only
-app-level confs (AQE, shuffle partitions) are set here.
+app-level SQL confs are set here: ``session.recommended_conf`` for the
+session's cores, AQE skew joins, and Arrow (so a query frame created
+from pandas is a local relation).
 """
 
 from __future__ import annotations
@@ -27,22 +29,24 @@ import zipfile
 from pyspark.sql import SparkSession
 
 from mee_spark.config import IndexConfig
+from mee_spark.session import recommended_conf
 
 
 def make_session(app: str, shuffle_partitions: int | None = None) -> SparkSession:
-    b = (SparkSession.builder.appName(app)
-         .config("spark.sql.adaptive.enabled", "true")
-         .config("spark.sql.adaptive.skewJoin.enabled", "true"))
-    if shuffle_partitions:
-        b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    b = SparkSession.builder.appName(app)
     if not os.environ.get("SPARK_ENV_LOADED") and "spark.master" not in os.environ:
         b = b.master(os.environ.get("MEE_SPARK_MASTER", "local[*]"))
-    return b.getOrCreate()
+    spark = b.getOrCreate()
+    conf = recommended_conf(spark.sparkContext.defaultParallelism, shuffle_partitions) | {
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true"}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    return spark
 
 
 def cfg_from_args(args) -> IndexConfig:
     return IndexConfig(
-        index_dir=args.index,
         num_doc_partitions=args.partitions,
         num_term_buckets=args.buckets,
         doc_range_size=args.range_size,
@@ -80,13 +84,18 @@ def cmd_build(args) -> None:
 
 
 def cmd_query(args) -> None:
+    import pandas as pd
+
     from mee_spark.query_wand import bm25_topk_wand
 
     spark = make_session("mee-query", args.partitions)
+    # a pandas frame (Arrow on) is a local relation, so the vocabulary
+    # probe runs no job; the <= k result rows are ranked on the driver
     queries = spark.createDataFrame(
-        [(0, args.query, args.k)], "query_id int, query_text string, k int")
+        pd.DataFrame({"query_id": [0], "query_text": [args.query], "k": [args.k]}),
+        "query_id int, query_text string, k int")
     res = bm25_topk_wand(spark, args.index, queries, cfg_from_args(args))
-    for r in res.orderBy("rank").collect():
+    for r in sorted(res.collect(), key=lambda r: r["rank"]):
         print(json.dumps({"rank": r["rank"], "doc_id": r["doc_id"], "score": r["score"]}))
 
 

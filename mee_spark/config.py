@@ -8,7 +8,7 @@ dataclass of paths and tuning knobs.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 # BM25 parameters (north star: k1=1.2, b=0.75).
 K1: float = 1.2
@@ -25,7 +25,7 @@ TOKEN_SPLIT_PATTERN: str = "[^0-9a-z]+"
 
 @dataclass
 class IndexConfig:
-    """Tuning knobs for an index build.
+    """Settings shared by index builds, compaction and queries.
 
     Designed for the 10^12-doc scale point:
       * ``doc_range_size`` — docIDs are dense; postings are grouped by
@@ -39,24 +39,26 @@ class IndexConfig:
       * ``num_term_buckets`` — segment files are laid out by
         ``bucket = xxhash64(term) % num_term_buckets`` so a query touching
         q terms reads only the matching buckets (partition pruning).
-      * ``head_term_df_threshold`` / ``salt_buckets`` — terms whose df
-        exceeds the threshold get a salted two-stage aggregation when
-        computing term statistics, so no single reducer sees a whole
-        head-term posting stream.
+        Both are layout fields (``LAYOUT_FIELDS``), fixed at build time.
+      * ``num_doc_partitions`` — range partitions of the docID rank pass.
+      * ``salt_buckets`` — ``postings.term_df`` sums each term's df in two
+        stages over this many salt buckets, so no single reducer sees a
+        whole head-term posting stream.
+      * ``k1`` / ``b`` — BM25 parameters; ``block_size`` — postings per
+        block-max block; ``wand_min_postings`` — a (query, range) with
+        fewer postings is scored exhaustively instead of by WAND.
+      * ``lang_filter`` — index only pages whose ``lang`` equals it.
     """
 
-    index_dir: str = ""
     k1: float = K1
     b: float = B
     block_size: int = BLOCK_SIZE
     doc_range_size: int = 1 << 20
     num_term_buckets: int = 32
     num_doc_partitions: int = 32
-    head_term_df_threshold: int = 1 << 16
     salt_buckets: int = 16
     wand_min_postings: int = 1 << 16
     lang_filter: str | None = None
-    extra_spark_conf: dict = field(default_factory=dict)
 
 
 # On-disk layout identity. ``doc_range_size`` defines which range a

@@ -33,8 +33,7 @@ from mee_spark.textprep import extract_text, tokenize_col
 
 
 def assign_doc_ids(pages: DataFrame, num_partitions: int = 32,
-                   start_id: int = 0,
-                   materialize_path: str | None = None) -> DataFrame:
+                   start_id: int = 0) -> DataFrame:
     """Return (url, doc_id) with doc_id = start_id + dense rank of url.
 
     Fully distributed AND fully lazy: exactly ONE shuffle (the range
@@ -131,14 +130,10 @@ def assign_doc_ids(pages: DataFrame, num_partitions: int = 32,
         (F.coalesce(F.sum("_cnt").over(w), F.lit(0)) + F.lit(start_id))
         .cast("long").alias("_offset"),
     )
-    out = (
+    return (
         local.join(F.broadcast(offsets), "_pid")
         .select("url", (F.col("_offset") + F.col("_idx")).cast("long").alias("doc_id"))
     )
-    if materialize_path is not None:
-        out.write.mode("overwrite").parquet(materialize_path)
-        return pages.sparkSession.read.parquet(materialize_path)
-    return out
 
 
 def build_docs(pages: DataFrame, cfg: IndexConfig,

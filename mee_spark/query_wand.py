@@ -23,8 +23,6 @@ designed for 10^12 docs / 1000 executors:
    indexed term is answered without one. On a tombstone chain df needs
    a doc-id decode in Spark (``live_df``). Either way it reaches the
    scorers as a broadcast dict.
-   Batches past ``VOCAB_IN_PLAN_THRESHOLD`` keep all of this in the
-   plan instead (see ``bm25_topk_wand``).
 3. **Distributed scoring** — matched segment rows join the broadcast
    query set, then ``groupBy(range_id, _qshard).applyInPandas``: each
    group scores ONE docID range for one shard of the query batch
@@ -63,7 +61,6 @@ from mee_spark.bm25 import idf_np
 from mee_spark.build import read_tombstones
 from mee_spark.codec import decode_postings_batch
 from mee_spark.config import IndexConfig
-from mee_spark.query import explode_query_terms
 from mee_spark.segments import read_segments, term_df
 from mee_spark.textprep import tokenize_col
 from mee_spark.wand import (
@@ -75,31 +72,22 @@ from mee_spark.wand import (
 
 _LOCAL_SCHEMA = "query_id int, k int, doc_id long, score double"
 
-# query batches past this size keep their vocabulary IN THE PLAN (df and
-# per-query term counts joined in as columns) instead of driver dicts:
-# the dict path collects every query's tokens to the driver, which is
-# fine for interactive batches but unbounded for 10^5-query offline ones
-VOCAB_IN_PLAN_THRESHOLD = 2048
 
-
-def query_vocab(queries: DataFrame, num_term_buckets: int,
-                limit: int | None = None) -> list:
+def query_vocab(queries: DataFrame, num_term_buckets: int) -> list:
     """Driver rows of (query_id, k, terms, buckets): each query's tokens
-    and their term buckets, at most ``limit`` queries.
+    and their term buckets.
 
     Tokens and buckets come from the build's own JVM expressions
     (``tokenize_col``, ``pmod(xxhash64(term), num_term_buckets)``), so they
     match the index by construction. On a local query relation (a frame
     created from pandas with Arrow on) Spark folds the projection into the
     relation and answers the collect with no job."""
-    probe = (queries.select("query_id", "k",
-                            tokenize_col(F.col("query_text")).alias("terms"))
-             .where(F.col("terms").isNotNull())  # a null text has no terms
-             .withColumn("buckets", F.transform("terms", lambda t: F.pmod(
-                 F.xxhash64(t), F.lit(num_term_buckets)).cast("long"))))
-    if limit is not None:
-        probe = probe.limit(limit)
-    return probe.collect()
+    return (queries.select("query_id", "k",
+                           tokenize_col(F.col("query_text")).alias("terms"))
+            .where(F.col("terms").isNotNull())  # a null text has no terms
+            .withColumn("buckets", F.transform("terms", lambda t: F.pmod(
+                F.xxhash64(t), F.lit(num_term_buckets)).cast("long")))
+            .collect())
 
 
 def _empty_result(queries: DataFrame) -> DataFrame:
@@ -214,8 +202,8 @@ def live_df(segs: DataFrame) -> DataFrame:
             .groupBy("term").agg(F.sum("live").alias("df")))
 
 
-def _make_scorer(df_map: dict | None, n_docs: int, avgdl: float,
-                 k1: float, b: float, use_block_max: bool,
+def _make_scorer(df_map: dict, n_docs: int, avgdl: float,
+                 k1: float, b: float,
                  wand_min_postings: int = 1 << 16,
                  round_to: int | None = None,
                  n_terms_map: dict | None = None,
@@ -229,10 +217,9 @@ def _make_scorer(df_map: dict | None, n_docs: int, avgdl: float,
     TermCursor traversal state is per-query, so cursors are rebuilt
     cheaply from the shared decoded arrays.
 
-    Vocabulary transport is dual-mode: small batches pass df/n_terms as
-    broadcast driver dicts (``df_map``/``n_terms_map``); large batches
-    (vocab_in_plan) ship them as the ``df`` / ``_n_terms`` COLUMNS of the
-    group itself, so nothing vocabulary-sized ever crosses the driver."""
+    Each term's df (``df_map``) and, in conjunctive mode, each query's
+    term count (``n_terms_map``) are driver dicts that travel in the
+    scorer's closure."""
 
     def score_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         # every (term, gen) row decoded in ONE batch, split back per row
@@ -246,8 +233,7 @@ def _make_scorer(df_map: dict | None, n_docs: int, avgdl: float,
             if lo == hi:
                 decoded[(row.term, int(row.gen))] = None
                 continue
-            df_val = df_map[row.term] if df_map is not None else row.df
-            idf = idf_np(float(df_val), n_docs)
+            idf = idf_np(float(df_map[row.term]), n_docs)
             decoded[(row.term, int(row.gen))] = (
                 docs[lo:hi], tfs[lo:hi], dls[lo:hi], idf,
                 np.asarray(row.block_last_doc), np.asarray(row.block_max_tf),
@@ -256,10 +242,7 @@ def _make_scorer(df_map: dict | None, n_docs: int, avgdl: float,
         # output accumulates as flat columns: one frame per group, not
         # one per (query, range)
         out_q, out_k, out_doc, out_score = [], [], [], []
-        qcols = ["query_id", "k", "term", "gen"]
-        if conjunctive and n_terms_map is None:
-            qcols.append("_n_terms")
-        qmeta = pdf[qcols]
+        qmeta = pdf[["query_id", "k", "term", "gen"]]
         for qid, sub in qmeta.groupby("query_id", sort=True):
             k = int(sub["k"].iloc[0])
             cursors = []
@@ -282,14 +265,12 @@ def _make_scorer(df_map: dict | None, n_docs: int, avgdl: float,
             # only docs matched by every query term (see
             # wand.conjunctive_topk_vec).
             if conjunctive:
-                n_terms = (n_terms_map[int(qid)] if n_terms_map is not None
-                           else int(sub["_n_terms"].iloc[0]))
-                top = conjunctive_topk_vec(cursors, k, n_terms, round_to)
+                top = conjunctive_topk_vec(cursors, k, n_terms_map[int(qid)],
+                                           round_to)
             elif sum(c.n for c in cursors) < wand_min_postings:
                 top = exhaustive_topk_vec(cursors, k, round_to=round_to)
             else:
-                top = wand_topk(cursors, k, use_block_max=use_block_max,
-                                round_to=round_to)
+                top = wand_topk(cursors, k, round_to=round_to)
             out_q += [qid] * len(top)
             out_k += [k] * len(top)
             out_doc += [d for d, _ in top]
@@ -309,9 +290,7 @@ def bm25_topk_wand(
     cfg: IndexConfig,
     gen: int | None = None,
     round_digits: int | None = 6,
-    use_block_max: bool = True,
     conjunctive: bool = False,
-    vocab_in_plan: bool | None = None,
 ) -> DataFrame:
     """-> (query_id, rank, doc_id, score): per-query top-k over the
     published index (or ``gen``'s chain). ``queries`` needs
@@ -320,13 +299,9 @@ def bm25_topk_wand(
     a doc's postings, so the intersection is evaluated per range with no
     extra movement).
 
-    ``vocab_in_plan``: for very large query batches (10^4+), keep the
-    vocabulary in the plan — per-term df and per-query term counts are
-    joined in as columns, term pruning is a broadcast semi-join, and the
-    only driver-side collect is the bucket-id list (bounded by
-    cfg.num_term_buckets regardless of batch size). False = the driver
-    plans from the whole batch's vocabulary. None = auto: the bounded
-    vocabulary probe decides against VOCAB_IN_PLAN_THRESHOLD."""
+    The driver plans the batch from its whole vocabulary (one collect of
+    every query's tokens), so it holds O(batch) query terms; the index
+    side stays distributed."""
     chain = mf.manifest_chain(index_dir, gen)
     if not chain:
         raise ValueError(f"no published index at {index_dir}")
@@ -342,85 +317,42 @@ def bm25_topk_wand(
     avgdl = chain[-1]["avgdl"]
 
     tombs = tombstones_per_range(spark, index_dir, gens, cfg.doc_range_size)
-    if not vocab_in_plan:
-        # the vocabulary probe: one collect of each query's tokens and term
-        # buckets. Auto mode bounds it by LIMIT (threshold+1 rows however
-        # large the batch); a forced dict path takes the whole batch, never
-        # a truncated one. A local query relation answers it with no job
-        rows = query_vocab(queries, cfg.num_term_buckets,
-                           VOCAB_IN_PLAN_THRESHOLD + 1 if vocab_in_plan is None
-                           else None)
-        vocab_in_plan = (vocab_in_plan is None
-                         and len(rows) > VOCAB_IN_PLAN_THRESHOLD)
-
-    if vocab_in_plan:
-        # the only driver-side list is the bucket ids — bounded by
-        # cfg.num_term_buckets no matter how large the vocabulary is
-        qterms = explode_query_terms(queries)  # (query_id, k, term)
-        vocab = qterms.select("term").distinct()
-        buckets = sorted(r["b"] for r in vocab.select(
-            F.pmod(F.xxhash64("term"), F.lit(cfg.num_term_buckets))
-            .cast("long").alias("b")).distinct().collect())
-        if not buckets:
+    # the vocabulary probe: one collect of each query's tokens and term
+    # buckets (a local query relation answers it with no job); the driver
+    # plans the rest from it: distinct (query_id, k, term), each term's
+    # bucket, per-query term counts
+    rows = query_vocab(queries, cfg.num_term_buckets)
+    qrows = list(dict.fromkeys(
+        (r["query_id"], r["k"], t) for r in rows for t in r["terms"]))
+    bucket_of = {t: b for r in rows for t, b in zip(r["terms"], r["buckets"])}
+    n_terms_map = Counter(int(q) for q, _, _ in qrows) if conjunctive else None
+    terms = sorted(bucket_of)
+    if tombs is None:
+        # every posting is live, so df is the sum of the rows'
+        # df_local: a pyarrow read of the pruned files, and a query
+        # with no indexed term is answered without a job
+        df_map = term_df(index_dir, gens, terms, sorted(set(bucket_of.values())))
+        terms = sorted(df_map)
+    if not terms:
+        return _empty_result(queries)
+    segs = read_segments(spark, index_dir, gens).filter(
+        F.col("bucket").isin(sorted({bucket_of[t] for t in terms}))
+        & F.col("term").isin(terms))
+    if tombs is not None:
+        # tombstones join per docID range, so the df pass and the
+        # scorers see them; they never reach the driver
+        segs = segs.join(tombs, "range_id", "left")
+        df_map = {r["term"]: int(r["df"]) for r in live_df(segs).collect()}
+        if not df_map:
             return _empty_result(queries)
-        # term pruning by broadcast semi-join instead of a 10^5-literal
-        # isin: the scan still prunes whole bucket directories; within a
-        # bucket the join filters (a giant IN list would bloat the plan
-        # and push poorly anyway)
-        segs = read_segments(spark, index_dir, gens).filter(
-            F.col("bucket").isin(buckets)).join(
-            F.broadcast(vocab), "term", "semi")
-        # df stays a COLUMN: the per-term aggregate (query vocabulary
-        # only — tiny next to the index) broadcast-joins back onto the
-        # pruned scan; nothing vocabulary-sized reaches the driver. On a
-        # tombstone chain old gens still hold dead postings, so the df
-        # needs a doc-id decode (see ``live_df``); otherwise it is a
-        # metadata aggregate over (term, df_local)
-        if tombs is not None:
-            segs = segs.join(tombs, "range_id", "left")
-            df_agg = live_df(segs)
-        else:
-            df_agg = segs.groupBy("term").agg(F.sum("df_local").alias("df"))
-        segs = segs.join(F.broadcast(df_agg), "term")
-        df_map = n_terms_map = None
-        qt = qterms
-        if conjunctive:
-            qt = qterms.join(qterms.groupBy("query_id").agg(
-                F.count("*").alias("_n_terms")), "query_id")
-    else:
-        # the driver plans the rest from the probe rows: distinct
-        # (query_id, k, term), each term's bucket, per-query term counts
-        qrows = list(dict.fromkeys(
-            (r["query_id"], r["k"], t) for r in rows for t in r["terms"]))
-        bucket_of = {t: b for r in rows for t, b in zip(r["terms"], r["buckets"])}
-        n_terms_map = Counter(int(q) for q, _, _ in qrows) if conjunctive else None
-        terms = sorted(bucket_of)
-        if tombs is None:
-            # every posting is live, so df is the sum of the rows'
-            # df_local: a pyarrow read of the pruned files, and a query
-            # with no indexed term is answered without a job
-            df_map = term_df(index_dir, gens, terms, sorted(set(bucket_of.values())))
-            terms = sorted(df_map)
-        if not terms:
-            return _empty_result(queries)
-        segs = read_segments(spark, index_dir, gens).filter(
-            F.col("bucket").isin(sorted({bucket_of[t] for t in terms}))
-            & F.col("term").isin(terms))
-        if tombs is not None:
-            # tombstones join per docID range, so the df pass and the
-            # scorers see them; they never reach the driver
-            segs = segs.join(tombs, "range_id", "left")
-            df_map = {r["term"]: int(r["df"]) for r in live_df(segs).collect()}
-            if not df_map:
-                return _empty_result(queries)
-        # the query terms ship as a local relation: no job to build or
-        # deduplicate them. Terms without segment rows can't match the
-        # join, so they are left out (conjunctive counts still see them)
-        qt = spark.createDataFrame(
-            pd.DataFrame([q for q in qrows if q[2] in df_map],
-                         columns=["query_id", "k", "term"]),
-            StructType([queries.schema["query_id"], queries.schema["k"],
-                        StructField("term", StringType())]))
+    # the query terms ship as a local relation: no job to build or
+    # deduplicate them. Terms without segment rows can't match the
+    # join, so they are left out (conjunctive counts still see them)
+    qt = spark.createDataFrame(
+        pd.DataFrame([q for q in qrows if q[2] in df_map],
+                     columns=["query_id", "k", "term"]),
+        StructType([queries.schema["query_id"], queries.schema["k"],
+                    StructField("term", StringType())]))
 
     # parallelism = ranges x query-shards: sharding the query batch keeps
     # big batches parallel even over few ranges, while queries within a
@@ -434,7 +366,7 @@ def bm25_topk_wand(
         .withColumn("_qshard", F.pmod(F.col("query_id"), F.lit(n_qshards)))
     )
     scorer = _make_scorer(df_map, n_docs, avgdl, cfg.k1, cfg.b,
-                          use_block_max, cfg.wand_min_postings,
+                          cfg.wand_min_postings,
                           round_to=round_digits, n_terms_map=n_terms_map,
                           conjunctive=conjunctive)
     local = joined.groupBy("range_id", "_qshard").applyInPandas(scorer, _LOCAL_SCHEMA)

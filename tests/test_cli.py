@@ -15,6 +15,8 @@ import pytest
 from mee_spark import manifest as mf
 from mee_spark.cli import cmd_package, main
 from mee_spark.fixtures import gen_pages
+from mee_spark.session import recommended_conf
+from test_index_e2e import _jobs
 
 
 @pytest.fixture(scope="module")
@@ -22,6 +24,18 @@ def corpus(spark, tmp_path_factory):
     p = str(tmp_path_factory.mktemp("clicorpus") / "pages")
     gen_pages(spark, 300, num_partitions=4).write.mode("overwrite").parquet(p)
     return p
+
+
+@pytest.fixture(autouse=True)
+def _restore_session_conf(spark):
+    """``make_session`` tunes the session it gets, here the shared test
+    session: put its SQL confs back for the tests that follow."""
+    keys = [*recommended_conf(1), "spark.sql.adaptive.skewJoin.enabled",
+            "spark.sql.execution.arrow.pyspark.enabled"]
+    saved = {k: spark.conf.get(k) for k in keys}
+    yield
+    for k, v in saved.items():
+        spark.conf.set(k, v)
 
 
 def _args(extra, index):
@@ -52,6 +66,21 @@ def test_cli_lifecycle(spark, corpus, tmp_path, capsys):
     main(_args(["clean"], idx))
     removed = json.loads(capsys.readouterr().out.strip().splitlines()[-1])["removed"]
     assert sorted(removed) == [1, 2]
+
+
+def test_cli_query_jobs(spark, corpus, tmp_path, capsys):
+    """``query`` on a single-generation index runs no job beyond
+    ``bm25_topk_wand``'s scoring plan (at most four): the query frame is
+    a local relation, so the vocabulary probe runs none, and the result
+    rows are ranked on the driver."""
+    idx = str(tmp_path / "idxq")
+    main(_args(["build", "--pages", corpus, "--gen", "1"], idx))
+    capsys.readouterr()
+    _, jobs = _jobs(spark, lambda: main(_args(
+        ["query", "--query", "w000000 w000123 w000007", "--k", "5"], idx)))
+    lines = [json.loads(x) for x in capsys.readouterr().out.strip().splitlines()]
+    assert lines and [l["rank"] for l in lines] == list(range(1, len(lines) + 1))
+    assert len(jobs) <= 4, jobs
 
 
 def test_cli_lock_guard(spark, corpus, tmp_path, capsys):

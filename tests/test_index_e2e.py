@@ -162,29 +162,21 @@ def _oracle_topk(oracle: OracleIndex, text: str, k: int, conjunctive: bool):
     return sorted(scores.items(), key=lambda x: (-x[1], x[0]))[:k]
 
 
-def test_vocab_in_plan_matches_dict_path(built, spark, monkeypatch):
-    """Large-batch mode (df + per-query term counts as plan columns, term
-    pruning by broadcast semi-join, bucket list as the only driver
-    collect), the small-batch driver-vocabulary path and the oracle agree
-    in both disjunctive and conjunctive modes, on the fixture batch plus
-    edge queries. A dict path forced on a batch past the threshold plans
-    from the whole batch, not the bounded probe."""
-    import mee_spark.query_wand as qw
-
+def test_wand_matches_oracle_with_edge_queries(built, spark):
+    """The driver planner and the oracle agree, docIDs and unrounded
+    scores, in both disjunctive and conjunctive modes, on the fixture
+    batch plus edge queries (repeated terms, non-ASCII text, a text with
+    no tokens, an all-OOV query)."""
     qpdf = pd.concat([gen_queries_pandas(N_QUERIES), pd.DataFrame(
         {"query_id": range(N_QUERIES, N_QUERIES + len(EDGE_QUERIES)),
          "query_text": EDGE_QUERIES, "k": 10})], ignore_index=True)
     queries = spark.createDataFrame(qpdf, QUERIES_SCHEMA)
     oracle = _oracle(built, spark)
 
-    def run(conj, vocab_in_plan):
-        return collect_ranked(bm25_topk_wand(
-            spark, built["index_dir"], queries, CFG, round_digits=None,
-            conjunctive=conj, vocab_in_plan=vocab_in_plan))
-
-    dict_res = {conj: run(conj, False) for conj in (False, True)}
-    for conj, res in dict_res.items():
-        assert res == run(conj, True), f"conjunctive={conj}"
+    results = {conj: collect_ranked(bm25_topk_wand(
+        spark, built["index_dir"], queries, CFG, round_digits=None,
+        conjunctive=conj)) for conj in (False, True)}
+    for conj, res in results.items():
         for q in qpdf.itertuples():
             want = _oracle_topk(oracle, q.query_text, q.k, conj)
             have = res.get(q.query_id, [])
@@ -192,13 +184,25 @@ def test_vocab_in_plan_matches_dict_path(built, spark, monkeypatch):
             for (_, _, s_have), (_, s_want) in zip(have, want):
                 assert s_have == pytest.approx(s_want, abs=1e-9)
     for text in ("w000001 w000001 w000002", "Café Ünïcode w000004 ÿ"):
-        assert dict_res[False][qpdf.query_id[qpdf.query_text == text].iloc[0]]
+        assert results[False][qpdf.query_id[qpdf.query_text == text].iloc[0]]
     for qid in (N_QUERIES + 3, N_QUERIES + 4):
-        assert qid not in dict_res[False] and qid not in dict_res[True]
+        assert qid not in results[False] and qid not in results[True]
 
-    monkeypatch.setattr(qw, "VOCAB_IN_PLAN_THRESHOLD", 3)
-    for conj, res in dict_res.items():
-        assert run(conj, False) == res, f"forced dict path, conjunctive={conj}"
+
+def test_batch_past_2048_queries(built, spark):
+    """A 2,100-query batch (the fixture pool repeated under fresh ids,
+    created from pandas) gives every query the same rows as the
+    100-query batch: the driver plans a batch of any size."""
+    pool = gen_queries_pandas(100)  # query ids 0..99
+    small = collect_ranked(bm25_topk_wand(
+        spark, built["index_dir"], spark.createDataFrame(pool, QUERIES_SCHEMA), CFG))
+    big_pdf = pd.concat([pool] * 21, ignore_index=True)
+    big_pdf["query_id"] = range(len(big_pdf))
+    big = collect_ranked(bm25_topk_wand(
+        spark, built["index_dir"], spark.createDataFrame(big_pdf, QUERIES_SCHEMA), CFG))
+    assert len(big_pdf) == 2100 and small
+    for qid in big_pdf["query_id"]:
+        assert big.get(qid) == small.get(qid % len(pool)), qid
 
 
 def test_single_query_jobs_per_call(built, spark):
@@ -210,7 +214,7 @@ def test_single_query_jobs_per_call(built, spark):
     qpdf = gen_queries_pandas(100)
     one = qpdf[qpdf["query_text"].str.split().str.len() == 3].iloc[[0]]
     single = spark.createDataFrame(one, QUERIES_SCHEMA)
-    rows, jobs = _jobs(spark, lambda: query_vocab(single, CFG.num_term_buckets, 10))
+    rows, jobs = _jobs(spark, lambda: query_vocab(single, CFG.num_term_buckets))
     assert len(rows) == 1 and len(rows[0]["terms"]) == 3 and jobs == []
     plan, jobs = _jobs(spark, lambda: bm25_topk_wand(
         spark, built["index_dir"], single, CFG))
@@ -225,16 +229,3 @@ def test_single_query_jobs_per_call(built, spark):
         res, jobs = _jobs(spark, lambda: bm25_topk_wand(
             spark, built["index_dir"], batch, CFG).collect())
         assert res == [] and jobs == []
-
-
-def test_vocab_in_plan_auto_dispatch(built, spark, monkeypatch):
-    """The auto probe (bounded LIMIT count) flips to plan mode past the
-    threshold; results stay identical either way."""
-    import mee_spark.query_wand as qw
-
-    baseline = collect_ranked(bm25_topk_wand(
-        spark, built["index_dir"], built["queries"], CFG, vocab_in_plan=False))
-    monkeypatch.setattr(qw, "VOCAB_IN_PLAN_THRESHOLD", 5)
-    auto = collect_ranked(bm25_topk_wand(
-        spark, built["index_dir"], built["queries"], CFG))
-    assert auto == baseline
