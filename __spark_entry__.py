@@ -256,17 +256,17 @@ def q_fulltext_bm25_topk(spark, sf_dir):
 
     return bm25_topk_exhaustive(
         _postings_with_stats(_docs(spark, sf_dir)), _queries_df(spark),
-        F.col("_n_docs"), F.col("_avgdl"), k=None, round_digits=6,
+        F.col("_n_docs"), F.col("_avgdl"), round_digits=6,
     )
 
 
 def q_fulltext_bm25_conjunctive(spark, sf_dir):
     """AND semantics: only docs containing every query term rank."""
-    from mee_spark.query import bm25_topk_conjunctive
+    from mee_spark.query import bm25_topk_exhaustive
 
-    return bm25_topk_conjunctive(
+    return bm25_topk_exhaustive(
         _postings_with_stats(_docs(spark, sf_dir)), _queries_df(spark),
-        F.col("_n_docs"), F.col("_avgdl"), k=None, round_digits=6,
+        F.col("_n_docs"), F.col("_avgdl"), round_digits=6, conjunctive=True,
     )
 
 
@@ -389,7 +389,7 @@ def q_fulltext_topk_snippets(spark, sf_dir):
     stats = docs.agg(F.count("*").alias("n"), F.avg("dl").alias("a")).collect()[0]
     res = bm25_topk_exhaustive(
         build_postings(docs), _queries_df(spark),
-        int(stats["n"]), float(stats["a"]), k=None, round_digits=6,
+        int(stats["n"]), float(stats["a"]), round_digits=6,
     ).localCheckpoint(eager=False)
     hit_docs = docs.join(
         F.broadcast(res.select("doc_id").distinct()), "doc_id")

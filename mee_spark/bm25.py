@@ -7,8 +7,11 @@ score(q, d) = Σ_{t ∈ q∩d} idf(t) · tnorm(tf, dl)
 k1=1.2, b=0.75 per the north star. All math in float64. The same two
 functions exist as Spark Column expressions (JVM, whole-stage codegen),
 numpy (segment/WAND path), and plain Python (oracle) — rank-identity
-between paths is a tested invariant, with ties broken (score desc,
-doc_id asc) for determinism.
+between paths is a tested invariant.
+
+``ranked`` is the single home of the tie-break rule: every Spark BM25
+engine ranks its scored rows through it, by (rounded score desc, doc_id
+asc). The numpy kernels select their local top-k by the same key.
 
 Note tnorm is df-independent: block-max metadata stores max tnorm per
 block, and idf is applied at query time from *current* global df — so
@@ -20,7 +23,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from mee_spark.config import B, K1
@@ -60,3 +63,26 @@ def idf_py(df: int, n_docs: int) -> float:
 def tnorm_py(tf: int, dl: int, avgdl: float,
              k1: float = K1, b: float = B) -> float:
     return tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+
+
+def ranked(scored: DataFrame, round_digits: int | None, limit: Column | int,
+           key: str = "query_id") -> DataFrame:
+    """(key, doc_id, score, ...) -> (key, rank, doc_id, score): rank ≤
+    ``limit`` per ``key``, ordered by (score desc, doc_id asc).
+
+    With ``round_digits`` set, both the ranking key and the returned
+    score are rounded to that many digits: the engines sum float terms in
+    different orders, so only the rounded score is comparable across
+    them, and the doc_id tie-break makes the order deterministic.
+    ``limit`` is a constant or a per-row Column (the queries' ``k``)."""
+    score = (F.round(F.col("score"), round_digits)
+             if round_digits is not None else F.col("score"))
+    w = Window.partitionBy(key).orderBy(score.desc(), F.col("doc_id").asc())
+    lim = limit if isinstance(limit, Column) else F.lit(limit)
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= lim)
+        .select(F.col(key).cast("int").alias(key), "rank",
+                F.col("doc_id").cast("long").alias("doc_id"),
+                score.alias("score"))
+    )

@@ -26,8 +26,6 @@ from __future__ import annotations
 
 import numpy as np
 
-from mee_spark.bm25 import tnorm_np
-from mee_spark.config import BLOCK_SIZE
 
 def varbyte_encode_lens(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Vectorized varbyte -> (uint8 byte stream, per-value byte counts).
@@ -92,38 +90,6 @@ def _varbyte_runs(blobs) -> tuple[np.ndarray, np.ndarray]:
     bounds = np.zeros(len(blobs) + 1, dtype=np.int64)
     np.cumsum(nbytes, out=bounds[1:])
     return vals, np.diff(term_cum[bounds])
-
-
-def varbyte_decode(blob: bytes) -> np.ndarray:
-    """Vectorized varbyte decode -> uint64 array."""
-    return _varbyte_runs([blob])[0]
-
-
-def block_metadata(
-    doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
-    block_size: int = BLOCK_SIZE,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """-> (block_last_doc int64[], block_max_tf int64[], block_min_dl int64[])."""
-    n = len(doc_ids)
-    n_blocks = (n + block_size - 1) // block_size
-    last = np.asarray(doc_ids, dtype=np.int64)[
-        np.minimum(np.arange(1, n_blocks + 1) * block_size - 1, n - 1)
-    ]
-    starts = np.arange(n_blocks) * block_size
-    max_tf = np.maximum.reduceat(np.asarray(tfs, dtype=np.int64), starts)
-    min_dl = np.minimum.reduceat(np.asarray(dls, dtype=np.int64), starts)
-    return last, max_tf, min_dl
-
-
-def block_ub(max_tf: np.ndarray, min_dl: np.ndarray, avgdl: float,
-             k1: float | None = None, b: float | None = None) -> np.ndarray:
-    """Per-block tnorm upper bound under the CURRENT corpus avgdl."""
-    kwargs = {}
-    if k1 is not None:
-        kwargs["k1"] = k1
-    if b is not None:
-        kwargs["b"] = b
-    return tnorm_np(np.asarray(max_tf), np.asarray(min_dl), avgdl, **kwargs)
 
 
 def decode_postings_batch(doc_blobs, tf_blobs=None, dl_blobs=None):

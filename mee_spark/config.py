@@ -41,9 +41,6 @@ class IndexConfig:
         q terms reads only the matching buckets (partition pruning).
         Both are layout fields (``LAYOUT_FIELDS``), fixed at build time.
       * ``num_doc_partitions`` — range partitions of the docID rank pass.
-      * ``salt_buckets`` — ``postings.term_df`` sums each term's df in two
-        stages over this many salt buckets, so no single reducer sees a
-        whole head-term posting stream.
       * ``k1`` / ``b`` — BM25 parameters; ``block_size`` — postings per
         block-max block; ``wand_min_postings`` — a (query, range) with
         fewer postings is scored exhaustively instead of by WAND.
@@ -56,7 +53,6 @@ class IndexConfig:
     doc_range_size: int = 1 << 20
     num_term_buckets: int = 32
     num_doc_partitions: int = 32
-    salt_buckets: int = 16
     wand_min_postings: int = 1 << 16
     lang_filter: str | None = None
 

@@ -1,4 +1,4 @@
-"""Deterministic docID assignment + document stats.
+"""Deterministic docID assignment.
 
 docID contract (FIXTURES.md §4): ``doc_id`` = dense rank of ``url`` in
 ascending lexicographic order within the indexed generation — stable,
@@ -27,9 +27,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from mee_spark.config import IndexConfig
-from mee_spark.textprep import extract_text, tokenize_col
 
 
 def assign_doc_ids(pages: DataFrame, num_partitions: int = 32,
@@ -134,48 +131,3 @@ def assign_doc_ids(pages: DataFrame, num_partitions: int = 32,
         local.join(F.broadcast(offsets), "_pid")
         .select("url", (F.col("_offset") + F.col("_idx")).cast("long").alias("doc_id"))
     )
-
-
-def build_docs(pages: DataFrame, cfg: IndexConfig,
-               docmap: DataFrame | None = None,
-               use_html: bool = True) -> DataFrame:
-    """pages -> (doc_id, url, tokens, dl).
-
-    Extraction is the vectorized Arrow UDF (byte-identical per url);
-    tokenization stays JVM-side. When ``use_html`` is False the ``text``
-    column is trusted directly (e.g. for corpora without html).
-
-    When ``docmap`` is None, the assignment is pinned with a LAZY
-    localCheckpoint: assign_doc_ids has evaluate-once semantics (its
-    offsets and ranks are two evaluations of one mapInPandas plan, kept
-    consistent by exchange reuse), but this public convenience path makes
-    no promise about how many actions the caller runs — without the pin,
-    a second action over a non-deterministic source could observe
-    duplicate or skipped doc_ids with no error. The builders bypass this
-    (they stage the assignment to parquet inside their one staging job);
-    callers who need maximal job fusion should pass a ``docmap`` they
-    materialized themselves.
-    """
-    if cfg.lang_filter:
-        pages = pages.filter(F.col("lang") == cfg.lang_filter)
-    if docmap is None:
-        docmap = assign_doc_ids(pages, cfg.num_doc_partitions).localCheckpoint(
-            eager=False)
-    text_col = extract_text(F.col("html")) if use_html else F.col("text")
-    docs = (
-        pages.select("url", text_col.alias("_text"))
-        .withColumn("tokens", tokenize_col(F.col("_text")))
-        .withColumn("dl", F.size("tokens").cast("long"))
-        .drop("_text")
-        .join(docmap, "url")
-    )
-    return docs.select("doc_id", "url", "tokens", "dl")
-
-
-def corpus_stats(docs: DataFrame) -> dict:
-    """(N, avgdl) — computed once per build, broadcast to scorers
-    (north star: corpus stats computed once and broadcast)."""
-    row = docs.agg(
-        F.count("*").alias("n"), F.avg("dl").alias("avgdl")
-    ).collect()[0]
-    return {"N": int(row["n"]), "avgdl": float(row["avgdl"] or 0.0)}

@@ -19,7 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mee_spark.config import IndexConfig
+# Salt buckets of ``term_df``'s first aggregation stage.
+SALT_BUCKETS: int = 16
 
 
 def build_postings(docs: DataFrame) -> DataFrame:
@@ -37,20 +38,19 @@ def build_postings(docs: DataFrame) -> DataFrame:
     )
 
 
-def term_df(postings: DataFrame, cfg: IndexConfig | None = None) -> DataFrame:
+def term_df(postings: DataFrame) -> DataFrame:
     """Document frequency per term: (term, df).
 
     Skew-aware two-stage (salted) aggregation per the north star: head
     terms ("the"-class, present in >30% of docs) would otherwise funnel
     their whole posting stream through one reducer. Stage 1 aggregates
     (term, salt) partial counts — salt derived from doc_id so it is
-    deterministic; stage 2 sums the ≤salt_buckets partials per term.
+    deterministic; stage 2 sums the ≤SALT_BUCKETS partials per term.
     Map-side combine already bounds stage 1; the salt bounds the reduce.
     """
-    salt_buckets = cfg.salt_buckets if cfg else 16
     return (
         postings
-        .withColumn("_salt", (F.col("doc_id") % salt_buckets).cast("int"))
+        .withColumn("_salt", (F.col("doc_id") % SALT_BUCKETS).cast("int"))
         .groupBy("term", "_salt").agg(F.count("*").alias("_partial"))
         .groupBy("term").agg(F.sum("_partial").alias("df"))
     )

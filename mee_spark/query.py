@@ -1,19 +1,23 @@
-"""Query engines.
+"""Query engines over an uncompressed postings DataFrame.
 
-Two paths, required to be rank-identical (tested):
+One exhaustive BM25 plan serves every read here. ``_bm25_topk``
+broadcast-joins a set of distinct (query_id, k, term) rows into the
+postings (the posting side never moves for the probe), computes df for
+the query terms only, scores with JVM expressions inside whole-stage
+codegen, and ranks with ``bm25.ranked``. AND semantics is a mode of that
+plan, not a second plan: ``conjunctive=True`` keeps only the (query, doc)
+pairs matched by every query term. ``bm25_topk_exhaustive`` (match and
+AND), ``bm25_topk_fuzzy`` (the expanded term set), ``bm25_topk_boolean``
+(AND plus exclusion) and ``bm25_search_after`` all run it;
+``more_like_this`` shares its scoring and its ranking.
 
-* ``bm25_topk_exhaustive`` — pure DataFrame plan over an uncompressed
-  postings DataFrame. Broadcast-joins the (tiny) query-term set into the
-  postings (the posting side never moves for the probe), computes df for
-  the query terms only, scores with JVM expressions inside whole-stage
-  codegen, and takes per-query top-k with a window. This is the
-  oracle-comparable declarative formulation and the correctness anchor.
+This is the oracle-comparable declarative formulation and the
+correctness anchor. ``query_wand`` is the production path over
+compressed segments with block-max pruning; the two are required to be
+rank-identical (tested).
 
-* ``wand`` (see wand.py / segments.py) — the production path over
-  compressed segments with block-max pruning.
-
-Scale shape of the exhaustive plan: postings ⨝ broadcast(query terms) is
-a broadcast hash join (no shuffle of the index); the groupBy
+Scale shape of the plan: postings ⨝ broadcast(query terms) is a
+broadcast hash join (no shuffle of the index); the groupBy
 (query_id, doc_id) shuffles only *matched* postings; the final window
 partitions by query_id — fine for realistic query batches. The summation
 order inside the sum() aggregate is engine-chosen, which is why scores
@@ -26,98 +30,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from mee_spark.bm25 import idf_col, tnorm_col
-from mee_spark.config import B, K1
+from mee_spark.bm25 import idf_col, ranked, tnorm_col
 from mee_spark.textprep import tokenize_col
 
 
 def explode_query_terms(queries: DataFrame) -> DataFrame:
-    """(query_id, query_text[, k]) -> distinct (query_id, term[, k])."""
-    cols = ["query_id"] + (["k"] if "k" in queries.columns else [])
+    """(query_id, query_text, k) -> distinct (query_id, k, term)."""
     return (
-        queries.select(*cols, F.explode(tokenize_col(F.col("query_text"))).alias("term"))
+        queries.select("query_id", "k",
+                       F.explode(tokenize_col(F.col("query_text"))).alias("term"))
         .distinct()
     )
 
 
-def bm25_topk_conjunctive(
+def _bm25_topk(
     postings: DataFrame,
-    queries: DataFrame,
+    qterms: DataFrame,
     n_docs: int,
     avgdl: float,
-    k: int | None = 10,
-    k1: float = K1,
-    b: float = B,
-    round_digits: int | None = 6,
+    round_digits: int | None,
+    conjunctive: bool = False,
 ) -> DataFrame:
-    """AND-semantics BM25 top-k: only docs containing EVERY query term
-    rank (posting-list intersection as a user query — mee's ES reads are
-    conjunctive by default). Same scoring as the exhaustive path; the
-    intersection is the matched-term count filter, so a query with an
-    out-of-vocabulary term matches nothing by construction.
-
-    Scale shape: identical to the exhaustive plan (postings never move;
-    the per-(query, doc) aggregate carries one extra count) — the filter
-    discards rows post-aggregation, no new shuffle."""
-    qterms = explode_query_terms(queries)
-    n_terms = qterms.groupBy("query_id").agg(F.count("*").alias("_n_terms"))
-    matched = postings.join(F.broadcast(qterms.select("term").distinct()), "term")
-    dfreq = matched.groupBy("term").agg(F.count("*").alias("df"))
-    contrib = (
-        matched
-        .join(F.broadcast(dfreq), "term")
-        .join(F.broadcast(qterms), "term")
-        .withColumn(
-            "_contrib",
-            idf_col(F.col("df").cast("double"), n_docs)
-            * tnorm_col(F.col("tf").cast("double"), F.col("dl").cast("double"), avgdl, k1, b),
-        )
-    )
-    group_cols = ["query_id", "doc_id"] + (["k"] if k is None else [])
-    scored = (
-        contrib.groupBy(*group_cols)
-        # postings are unique per (term, doc) and qterms are distinct, so
-        # count(*) IS the matched-term count
-        .agg(F.sum("_contrib").alias("score"), F.count("*").alias("_matched"))
-        .join(F.broadcast(n_terms), "query_id")
-        .filter(F.col("_matched") == F.col("_n_terms"))
-    )
-    score_key = (
-        F.round(F.col("score"), round_digits) if round_digits is not None else F.col("score")
-    )
-    w = Window.partitionBy("query_id").orderBy(score_key.desc(), F.col("doc_id").asc())
-    ranked = scored.withColumn("rank", F.row_number().over(w).cast("long"))
-    limit = F.col("k") if k is None else F.lit(k)
-    out_score = score_key.alias("score") if round_digits is not None else F.col("score")
-    return (
-        ranked.filter(F.col("rank") <= limit)
-        .select(
-            F.col("query_id").cast("int").alias("query_id"),
-            "rank",
-            F.col("doc_id").cast("long").alias("doc_id"),
-            out_score,
-        )
-    )
-
-
-def bm25_topk_exhaustive(
-    postings: DataFrame,
-    queries: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    k: int | None = 10,
-    k1: float = K1,
-    b: float = B,
-    round_digits: int | None = 6,
-) -> DataFrame:
-    """-> (query_id, rank, doc_id, score), rank ≤ k per query.
-
-    ``postings`` must carry (term, doc_id, tf, dl). If ``k`` is None the
-    per-query ``k`` column of ``queries`` is used. Corpus stats (N,
-    avgdl) are plain broadcast scalars, computed once upstream.
-    """
-    qterms = explode_query_terms(queries)
-    # df for the query terms only — a tiny aggregate keyed by matched terms.
+    """Distinct (query_id, k, term) rows -> (query_id, rank, doc_id,
+    score), rank ≤ k per query; ``conjunctive`` keeps only the docs that
+    contain every query term."""
     # matched is consumed twice (df pass + scoring pass); pin it with a
     # lazy localCheckpoint (the repo's idiom — dedup.py, similarity.py)
     # so the upstream chain runs once AND the pinned blocks are released
@@ -134,6 +70,7 @@ def bm25_topk_exhaustive(
     matched = postings.join(
         F.broadcast(qterms.select("term").distinct()), "term"
     ).localCheckpoint(eager=False)
+    # df for the query terms only — a tiny aggregate keyed by matched terms
     dfreq = matched.groupBy("term").agg(F.count("*").alias("df"))
     contrib = (
         matched
@@ -142,27 +79,41 @@ def bm25_topk_exhaustive(
         .withColumn(
             "_contrib",
             idf_col(F.col("df").cast("double"), n_docs)
-            * tnorm_col(F.col("tf").cast("double"), F.col("dl").cast("double"), avgdl, k1, b),
+            * tnorm_col(F.col("tf").cast("double"), F.col("dl").cast("double"), avgdl),
         )
     )
-    group_cols = ["query_id", "doc_id"] + (["k"] if k is None else [])
-    scored = contrib.groupBy(*group_cols).agg(F.sum("_contrib").alias("score"))
-    score_key = (
-        F.round(F.col("score"), round_digits) if round_digits is not None else F.col("score")
-    )
-    w = Window.partitionBy("query_id").orderBy(score_key.desc(), F.col("doc_id").asc())
-    ranked = scored.withColumn("rank", F.row_number().over(w).cast("long"))
-    limit = F.col("k") if k is None else F.lit(k)
-    out_score = score_key.alias("score") if round_digits is not None else F.col("score")
-    return (
-        ranked.filter(F.col("rank") <= limit)
-        .select(
-            F.col("query_id").cast("int").alias("query_id"),
-            "rank",
-            F.col("doc_id").cast("long").alias("doc_id"),
-            out_score,
-        )
-    )
+    # postings are unique per (term, doc) and qterms are distinct, so
+    # count(*) IS the matched-term count (pruned from the plan when unused)
+    scored = contrib.groupBy("query_id", "doc_id", "k").agg(
+        F.sum("_contrib").alias("score"), F.count("*").alias("_matched"))
+    if conjunctive:
+        # the filter discards rows after the aggregate: no new shuffle
+        n_terms = qterms.groupBy("query_id").agg(F.count("*").alias("_n_terms"))
+        scored = (scored.join(F.broadcast(n_terms), "query_id")
+                  .filter(F.col("_matched") == F.col("_n_terms")))
+    return ranked(scored, round_digits, F.col("k"))
+
+
+def bm25_topk_exhaustive(
+    postings: DataFrame,
+    queries: DataFrame,
+    n_docs: int,
+    avgdl: float,
+    round_digits: int | None = 6,
+    conjunctive: bool = False,
+) -> DataFrame:
+    """-> (query_id, rank, doc_id, score), rank ≤ k per query.
+
+    ``postings`` must carry (term, doc_id, tf, dl) and ``queries``
+    (query_id, query_text, k). Corpus stats (N, avgdl) are broadcast
+    scalars or in-plan Columns (see ``bm25.idf_col``), computed once
+    upstream. ``conjunctive``: AND semantics — only docs containing EVERY
+    query term rank (posting-list intersection as a user query; mee's ES
+    reads are conjunctive by default), so a query with an
+    out-of-vocabulary term matches nothing.
+    """
+    return _bm25_topk(postings, explode_query_terms(queries), n_docs, avgdl,
+                      round_digits, conjunctive)
 
 
 def more_like_this(
@@ -172,17 +123,16 @@ def more_like_this(
     avgdl: float,
     m: int = 5,
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
     round_digits: int = 6,
 ) -> DataFrame:
     """ES more-like-this: seed docs → representative terms → BM25 rank.
 
     ``seeds`` is (seed_id, doc_id). For each seed the top-``m`` terms by
     tf·idf (rounded key, term-asc tie-break — deterministic across
-    engines) become the query, scored with the same exhaustive BM25 plan
-    as ``bm25_topk_exhaustive``; the seed doc itself is excluded from
-    its own result. Returns (seed_id, rank, doc_id, score), rank ≤ k.
+    engines) become the query, scored with the same BM25 sum and ranked
+    with the same ``bm25.ranked`` window as ``bm25_topk_exhaustive``; the
+    seed doc itself is excluded from its own result. Returns (seed_id,
+    rank, doc_id, score), rank ≤ k.
 
     Scale shape: the seed join, the selected-term set, and the df
     aggregate over seed terms are all broadcast-sized (≤ seeds × dl
@@ -195,7 +145,7 @@ def more_like_this(
     """
     sd = F.broadcast(seeds.select("seed_id", F.col("doc_id").alias("_seed_doc")))
     # all terms of the seed docs, with their in-seed tf — tiny; pinned
-    # (lazy localCheckpoint, GC-released — see bm25_topk_exhaustive)
+    # (lazy localCheckpoint, GC-released — see _bm25_topk)
     # because it seeds both the tf-idf selection and the candidate set
     sterm = (postings.join(sd, postings["doc_id"] == sd["_seed_doc"])
              .select("seed_id", "term", "tf").localCheckpoint(eager=False))
@@ -221,20 +171,12 @@ def more_like_this(
         "_c",
         idf_col(F.col("df").cast("double"), n_docs)
         * tnorm_col(F.col("tf").cast("double"), F.col("dl").cast("double"),
-                    avgdl, k1, b))
+                    avgdl))
     scored = (contrib.groupBy("seed_id", "doc_id")
               .agg(F.sum("_c").alias("score"))
               .join(sd, "seed_id")
               .where(F.col("doc_id") != F.col("_seed_doc")))
-    score_key = F.round(F.col("score"), round_digits)
-    w = Window.partitionBy("seed_id").orderBy(score_key.desc(), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select(F.col("seed_id").cast("int").alias("seed_id"), "rank",
-                F.col("doc_id").cast("long").alias("doc_id"),
-                score_key.alias("score"))
-    )
+    return ranked(scored, round_digits, k, key="seed_id")
 
 
 def bm25_topk_boolean(
@@ -242,8 +184,6 @@ def bm25_topk_boolean(
     queries: DataFrame,
     n_docs: int,
     avgdl: float,
-    k1: float = K1,
-    b: float = B,
     round_digits: int | None = 6,
 ) -> DataFrame:
     """ES bool query: ``must`` terms (AND semantics, scored) with
@@ -266,29 +206,18 @@ def bm25_topk_boolean(
     # promoted when an excluded doc above it drops out
     must = queries.select(
         "query_id", "query_text", F.lit(2**31 - 1).alias("k"))
-    res = bm25_topk_conjunctive(
-        postings, must, n_docs, avgdl, k=None,
-        k1=k1, b=b, round_digits=None)
+    res = bm25_topk_exhaustive(postings, must, n_docs, avgdl,
+                               round_digits=None, conjunctive=True)
     not_terms = (
         queries.select(
             "query_id", F.explode(tokenize_col(F.col("not_text"))).alias("term"))
         .distinct())
     excluded = (postings.join(F.broadcast(not_terms), "term")
                 .select("query_id", "doc_id").distinct())
-    kept = res.join(excluded, ["query_id", "doc_id"], "left_anti")
+    kept = (res.join(excluded, ["query_id", "doc_id"], "left_anti")
+            .join(F.broadcast(queries.select("query_id", "k")), "query_id"))
     # ranks must be dense AFTER exclusion — recompute on the survivors
-    score_key = (F.round(F.col("score"), round_digits)
-                 if round_digits is not None else F.col("score"))
-    w = Window.partitionBy("query_id").orderBy(score_key.desc(), F.col("doc_id").asc())
-    kq = queries.select("query_id", F.col("k").alias("_k"))
-    out_score = (score_key.alias("score")
-                 if round_digits is not None else F.col("score"))
-    return (
-        kept.withColumn("rank", F.row_number().over(w).cast("long"))
-        .join(F.broadcast(kq), "query_id")
-        .filter(F.col("rank") <= F.col("_k"))
-        .select("query_id", "rank", "doc_id", out_score)
-    )
+    return ranked(kept, round_digits, F.col("k"))
 
 
 def fuzzy_expand_terms(
@@ -297,8 +226,8 @@ def fuzzy_expand_terms(
     max_dist: int = 1,
 ) -> DataFrame:
     """Expand query terms to all index-dictionary terms within edit
-    distance ``max_dist`` (ES ``fuzziness``): (query_id[, k], term) →
-    distinct (query_id[, k], term) over matching dictionary entries.
+    distance ``max_dist`` (ES ``fuzziness``): (query_id, k, term) →
+    distinct (query_id, k, term) over matching dictionary entries.
 
     Scale shape: the dictionary is ``postings``' distinct term set —
     the one relation a term-level scan like this is FOR (ES walks the
@@ -318,10 +247,8 @@ def fuzzy_expand_terms(
         F.broadcast(q),
         (F.abs(F.length("term") - F.length("_q_term")) <= max_dist)
         & (F.levenshtein("term", "_q_term") <= max_dist))
-    out_cols = [F.col("_q_query_id").alias("query_id"), "term"]
-    if "_q_k" in cand.columns:
-        out_cols.insert(1, F.col("_q_k").alias("k"))
-    return cand.select(*out_cols).distinct()
+    return cand.select(F.col("_q_query_id").alias("query_id"),
+                       F.col("_q_k").alias("k"), "term").distinct()
 
 
 def _del1_keys_expr(col: str) -> str:
@@ -372,10 +299,8 @@ def fuzzy_expand_terms_symspell(
           .distinct())
     cand = (dict_keys.join(F.broadcast(qk), "_key")
             .filter(F.levenshtein("term", "_q_term") <= 1))
-    out_cols = [F.col("_q_query_id").alias("query_id"), "term"]
-    if "_q_k" in cand.columns:
-        out_cols.insert(1, F.col("_q_k").alias("k"))
-    return cand.select(*out_cols).distinct()
+    return cand.select(F.col("_q_query_id").alias("query_id"),
+                       F.col("_q_k").alias("k"), "term").distinct()
 
 
 def bm25_topk_fuzzy(
@@ -384,53 +309,18 @@ def bm25_topk_fuzzy(
     n_docs: int,
     avgdl: float,
     max_dist: int = 1,
-    k1: float = K1,
-    b: float = B,
     round_digits: int | None = 6,
 ) -> DataFrame:
     """Typo-tolerant BM25: expand each query term through the index
     dictionary within ``max_dist`` edits, then score the expanded
-    (deduplicated) term set with the standard exhaustive plan. A query
-    whose terms match nothing in the dictionary returns no rows.
-    Expansion uses the symspell deletion-key join at ``max_dist=1``
+    (deduplicated) term set with the exhaustive plan. A query whose
+    terms match nothing in the dictionary returns no rows. Expansion
+    uses the symspell deletion-key join at ``max_dist=1``
     (output-identical to the dictionary scan; see
     ``fuzzy_expand_terms_symspell``)."""
-    qterms = explode_query_terms(queries)  # (query_id, k, term)
-    expanded = fuzzy_expand_terms_symspell(postings, qterms, max_dist)
-    # feed the expanded set through the exhaustive scorer by rebuilding
-    # a queries-like relation: one row per (query_id, term) with k.
-    # matched is consumed twice (df pass + scoring pass) — pin it so
-    # the upstream postings chain runs once (same reason and same
-    # GC-released localCheckpoint idiom as the exhaustive path)
-    matched = postings.join(
-        F.broadcast(expanded.select("term").distinct()), "term"
-    ).localCheckpoint(eager=False)
-    dfreq = matched.groupBy("term").agg(F.count("*").alias("df"))
-    contrib = (
-        matched
-        .join(F.broadcast(dfreq), "term")
-        .join(F.broadcast(expanded), "term")
-        .withColumn(
-            "_contrib",
-            idf_col(F.col("df").cast("double"), n_docs)
-            * tnorm_col(F.col("tf").cast("double"),
-                        F.col("dl").cast("double"), avgdl, k1, b),
-        )
-    )
-    scored = contrib.groupBy("query_id", "k", "doc_id").agg(
-        F.sum("_contrib").alias("score"))
-    score_key = (F.round(F.col("score"), round_digits)
-                 if round_digits is not None else F.col("score"))
-    w = Window.partitionBy("query_id").orderBy(score_key.desc(),
-                                               F.col("doc_id").asc())
-    out_score = (score_key.alias("score")
-                 if round_digits is not None else F.col("score"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= F.col("k"))
-        .select(F.col("query_id").cast("int").alias("query_id"), "rank",
-                F.col("doc_id").cast("long").alias("doc_id"), out_score)
-    )
+    expanded = fuzzy_expand_terms_symspell(
+        postings, explode_query_terms(queries), max_dist)
+    return _bm25_topk(postings, expanded, n_docs, avgdl, round_digits)
 
 
 def bm25_search_after(
@@ -440,8 +330,6 @@ def bm25_search_after(
     avgdl: float,
     after_rank: int,
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
     round_digits: int = 6,
 ) -> DataFrame:
     """ES ``search_after`` keyset pagination: return the page of ``k``
@@ -462,8 +350,7 @@ def bm25_search_after(
     scored = bm25_topk_exhaustive(
         postings, queries.select("query_id", "query_text",
                                  F.lit(2**31 - 1).alias("k")),
-        n_docs, avgdl, k=None, k1=k1, b=b,
-        round_digits=round_digits).localCheckpoint(eager=False)
+        n_docs, avgdl, round_digits=round_digits).localCheckpoint(eager=False)
     cursor = (scored.where(F.col("rank") == after_rank)
               .select("query_id", F.col("score").alias("_c_score"),
                       F.col("doc_id").alias("_c_doc")))
@@ -471,10 +358,5 @@ def bm25_search_after(
             .where((F.col("score") < F.col("_c_score"))
                    | ((F.col("score") == F.col("_c_score"))
                       & (F.col("doc_id") > F.col("_c_doc")))))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                               F.asc("doc_id"))
-    return (
-        page.withColumn("page_rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("page_rank") <= k)
-        .select("query_id", "page_rank", "doc_id", "score")
-    )
+    # the page's scores are already rounded: rank them as they are
+    return ranked(page, None, k).withColumnRenamed("rank", "page_rank")

@@ -32,8 +32,8 @@ designed for 10^12 docs / 1000 executors:
    holds ≤ doc_range_size of it, scored independently with a local
    top-k heap.
 4. **Global top-k** — union of per-range top-k candidates (≤ k·ranges
-   rows, tiny) through a window rank. Ties break (score desc, doc_id
-   asc) for determinism.
+   rows, tiny) through ``bm25.ranked``'s window, the exhaustive plan's
+   own rank step: ties break (score desc, doc_id asc).
 
 Generations: rows from every gen in the manifest chain are unioned;
 tombstones (docs deleted/re-indexed in later gens) are masked out at
@@ -52,23 +52,18 @@ from collections import Counter
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from mee_spark import manifest as mf
-from mee_spark.bm25 import idf_np
+from mee_spark.bm25 import idf_np, ranked
 from mee_spark.build import read_tombstones
 from mee_spark.codec import decode_postings_batch
 from mee_spark.config import IndexConfig
 from mee_spark.segments import read_segments, term_df
 from mee_spark.textprep import tokenize_col
-from mee_spark.wand import (
-    TermCursor,
-    conjunctive_topk_vec,
-    exhaustive_topk_vec,
-    wand_topk,
-)
+from mee_spark.wand import TermCursor, exhaustive_topk_vec, wand_topk
 
 _LOCAL_SCHEMA = "query_id int, k int, doc_id long, score double"
 
@@ -206,8 +201,7 @@ def _make_scorer(df_map: dict, n_docs: int, avgdl: float,
                  k1: float, b: float,
                  wand_min_postings: int = 1 << 16,
                  round_to: int | None = None,
-                 n_terms_map: dict | None = None,
-                 conjunctive: bool = False):
+                 n_terms_map: dict | None = None):
     """Scorer for one docID range, ALL queries at once.
 
     Grouping by range (not (query, range)) turns q·ranges tiny Arrow
@@ -217,9 +211,9 @@ def _make_scorer(df_map: dict, n_docs: int, avgdl: float,
     TermCursor traversal state is per-query, so cursors are rebuilt
     cheaply from the shared decoded arrays.
 
-    Each term's df (``df_map``) and, in conjunctive mode, each query's
-    term count (``n_terms_map``) are driver dicts that travel in the
-    scorer's closure."""
+    Each term's df (``df_map``) and, in conjunctive (AND) mode, each
+    query's term count (``n_terms_map``; None otherwise) are driver dicts
+    that travel in the scorer's closure."""
 
     def score_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         # every (term, gen) row decoded in ONE batch, split back per row
@@ -261,14 +255,13 @@ def _make_scorer(df_map: dict, n_docs: int, avgdl: float,
             # wand.exhaustive_topk_vec docstring). Local selection uses the
             # SAME rounded key as the global window rank — a doc dropped by
             # an unrounded local heap could round-tie a kept doc and win
-            # the doc_id tie-break globally. Conjunctive (AND) mode keeps
-            # only docs matched by every query term (see
-            # wand.conjunctive_topk_vec).
-            if conjunctive:
-                top = conjunctive_topk_vec(cursors, k, n_terms_map[int(qid)],
-                                           round_to)
-            elif sum(c.n for c in cursors) < wand_min_postings:
-                top = exhaustive_topk_vec(cursors, k, round_to=round_to)
+            # the doc_id tie-break globally. AND mode always takes the
+            # vectorized kernel, which keeps only docs matched by all
+            # ``n_terms`` query terms.
+            n_terms = None if n_terms_map is None else n_terms_map[int(qid)]
+            if n_terms is not None or sum(c.n for c in cursors) < wand_min_postings:
+                top = exhaustive_topk_vec(cursors, k, round_to=round_to,
+                                          n_terms=n_terms)
             else:
                 top = wand_topk(cursors, k, round_to=round_to)
             out_q += [qid] * len(top)
@@ -367,21 +360,9 @@ def bm25_topk_wand(
     )
     scorer = _make_scorer(df_map, n_docs, avgdl, cfg.k1, cfg.b,
                           cfg.wand_min_postings,
-                          round_to=round_digits, n_terms_map=n_terms_map,
-                          conjunctive=conjunctive)
+                          round_to=round_digits, n_terms_map=n_terms_map)
     local = joined.groupBy("range_id", "_qshard").applyInPandas(scorer, _LOCAL_SCHEMA)
 
     # scores leave the scorer already rounded (the kernels select by the
-    # rounded key); F.round here is an identity re-statement that keeps
-    # the output contract explicit for the unrounded path too
-    score_key = (
-        F.round(F.col("score"), round_digits) if round_digits is not None else F.col("score")
-    )
-    w = Window.partitionBy("query_id").orderBy(score_key.desc(), F.col("doc_id").asc())
-    out_score = score_key.alias("score") if round_digits is not None else F.col("score")
-    return (
-        local.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= F.col("k"))
-        .select(F.col("query_id").cast("int").alias("query_id"), "rank",
-                F.col("doc_id").cast("long").alias("doc_id"), out_score)
-    )
+    # rounded key); ranked's rounding is an identity re-statement there
+    return ranked(local, round_digits, F.col("k"))

@@ -22,7 +22,7 @@ import heapq
 
 import numpy as np
 
-from mee_spark.bm25 import idf_np, tnorm_np
+from mee_spark.bm25 import tnorm_np
 from mee_spark.config import B, K1
 
 
@@ -204,8 +204,9 @@ def wand_topk(cursors: list[TermCursor], k: int,
 
 
 def exhaustive_topk_vec(cursors: list[TermCursor], k: int,
-                        round_to: int | None = None) -> list[tuple[int, float]]:
-    """Fully-vectorized exhaustive union scoring — identical results to
+                        round_to: int | None = None,
+                        n_terms: int | None = None) -> list[tuple[int, float]]:
+    """Fully-vectorized exhaustive scoring — identical results to
     wand_topk (same float summation order: terms accumulate per doc in
     lexicographic cursor order via the stable sort).
 
@@ -213,9 +214,21 @@ def exhaustive_topk_vec(cursors: list[TermCursor], k: int,
     list, and below ~10^5 postings a numpy pass (~50M ops/s) beats the
     Python pointer-walk of WAND even when WAND skips 90% of docs. The
     scorer picks per (query, range): vectorized under the threshold,
-    block-max WAND above it (where skipping dominates)."""
+    block-max WAND above it (where skipping dominates).
+
+    ``n_terms``: AND semantics — only docs contributing from ALL
+    ``n_terms`` query terms rank. docID-range partitioning co-locates
+    every posting of a doc in one range, and each doc appears at most
+    once per term after tombstone masking (changed docs' old-gen postings
+    are dead), so the per-doc contribution COUNT of the union pass IS the
+    matched-term count. A range where a query term has no cursor is
+    skipped before the sort (a cursor per (term, gen) carries the gen
+    after a NUL in its term key, so terms are counted without it).
+    (A galloping/WAND-AND skipper is the known upgrade for huge ranges;
+    selectivity of the intersection keeps this pass cheap.)"""
     cursors = sorted([c for c in cursors if c.n > 0], key=lambda c: c.term)
-    if not cursors or k <= 0:
+    if not cursors or k <= 0 or (n_terms is not None and len(
+            {c.term.split("\x00")[0] for c in cursors}) < n_terms):
         return []
     all_docs = np.concatenate([c.docs for c in cursors])
     all_scores = np.concatenate([c.scores for c in cursors])
@@ -225,43 +238,10 @@ def exhaustive_topk_vec(cursors: list[TermCursor], k: int,
     starts = np.flatnonzero(np.concatenate(([True], d[1:] != d[:-1])))
     sums = np.add.reduceat(s, starts)
     uniq = d[starts]
+    if n_terms is not None:
+        keep = np.diff(np.append(starts, len(d))) == n_terms
+        uniq, sums = uniq[keep], sums[keep]
     if round_to is not None:  # select by the final (rounded) ranking key
         sums = np.round(sums, round_to)
     top = np.lexsort((uniq, -sums))[:k]  # (score desc, doc_id asc)
-    return [(int(uniq[i]), float(sums[i])) for i in top]
-
-
-def conjunctive_topk_vec(cursors: list[TermCursor], k: int, n_terms: int,
-                         round_to: int | None = None) -> list[tuple[int, float]]:
-    """AND-semantics top-k over decoded cursors: only docs contributing
-    from ALL ``n_terms`` query terms rank. Because docID-range
-    partitioning co-locates every posting of a doc in one range, and each
-    doc appears at most once per term after tombstone masking (changed
-    docs' old-gen postings are dead), the per-doc contribution COUNT from
-    the stable-sorted accumulation IS the matched-term count — the
-    intersection falls out of the same vectorized pass the union scoring
-    uses. (A galloping/WAND-AND skipper is the known upgrade for huge
-    ranges; selectivity of the intersection keeps this pass cheap.)"""
-    cursors = sorted([c for c in cursors if c.n > 0], key=lambda c: c.term)
-    if not cursors or k <= 0:
-        return []
-    # terms present in this range (a cursor per (term, gen)): if any query
-    # term is absent here, no doc in this range can match them all
-    present = {c.term.split("\x00")[0] for c in cursors}
-    if len(present) < n_terms:
-        return []
-    all_docs = np.concatenate([c.docs for c in cursors])
-    all_scores = np.concatenate([c.scores for c in cursors])
-    order = np.argsort(all_docs, kind="stable")
-    d = all_docs[order]
-    s = all_scores[order]
-    starts = np.flatnonzero(np.concatenate(([True], d[1:] != d[:-1])))
-    counts = np.diff(np.concatenate((starts, [len(d)])))
-    sums = np.add.reduceat(s, starts)
-    uniq = d[starts]
-    keep = counts == n_terms
-    uniq, sums = uniq[keep], sums[keep]
-    if round_to is not None:
-        sums = np.round(sums, round_to)
-    top = np.lexsort((uniq, -sums))[:k]
     return [(int(uniq[i]), float(sums[i])) for i in top]

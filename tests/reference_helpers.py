@@ -3,15 +3,22 @@
 The package encodes a whole (bucket, range) group at once
 (``segments.write_segment``) and scores with the vectorized exhaustive
 kernel or WAND; these one-run-at-a-time encoders and the brute-force
-scorer are the slow, obviously-correct counterparts. Only tests use them.
+scorer are the slow, obviously-correct counterparts. The Spark helpers
+at the end build a docs/postings relation straight from pages, without
+an index. Only tests use them.
 """
 
 from __future__ import annotations
 
 import numpy as np
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-from mee_spark.codec import block_metadata, varbyte_decode, varbyte_encode_lens
-from mee_spark.config import BLOCK_SIZE
+from mee_spark.bm25 import tnorm_np
+from mee_spark.codec import _varbyte_runs, varbyte_encode_lens
+from mee_spark.config import BLOCK_SIZE, IndexConfig
+from mee_spark.docmap import assign_doc_ids
+from mee_spark.textprep import extract_text, tokenize_col
 from mee_spark.wand import TermCursor
 
 
@@ -19,6 +26,11 @@ def varbyte_encode(values: np.ndarray) -> bytes:
     """Vectorized varbyte (LEB128-style: 7 data bits, MSB=continuation)."""
     out, _ = varbyte_encode_lens(values)
     return out.tobytes()
+
+
+def varbyte_decode(blob: bytes) -> np.ndarray:
+    """Vectorized varbyte decode -> uint64 array."""
+    return _varbyte_runs([blob])[0]
 
 
 def delta_encode(doc_ids: np.ndarray) -> bytes:
@@ -35,6 +47,27 @@ def delta_encode(doc_ids: np.ndarray) -> bytes:
 def delta_decode(blob: bytes) -> np.ndarray:
     deltas = varbyte_decode(blob)
     return np.cumsum(deltas, dtype=np.uint64)
+
+
+def block_metadata(
+    doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
+    block_size: int = BLOCK_SIZE,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """-> (block_last_doc int64[], block_max_tf int64[], block_min_dl int64[])."""
+    n = len(doc_ids)
+    n_blocks = (n + block_size - 1) // block_size
+    last = np.asarray(doc_ids, dtype=np.int64)[
+        np.minimum(np.arange(1, n_blocks + 1) * block_size - 1, n - 1)
+    ]
+    starts = np.arange(n_blocks) * block_size
+    max_tf = np.maximum.reduceat(np.asarray(tfs, dtype=np.int64), starts)
+    min_dl = np.minimum.reduceat(np.asarray(dls, dtype=np.int64), starts)
+    return last, max_tf, min_dl
+
+
+def block_ub(max_tf: np.ndarray, min_dl: np.ndarray, avgdl: float) -> np.ndarray:
+    """Per-block tnorm upper bound under the CURRENT corpus avgdl."""
+    return tnorm_np(np.asarray(max_tf), np.asarray(min_dl), avgdl)
 
 
 def encode_postings(
@@ -65,3 +98,36 @@ def exhaustive_topk_np(cursors: list[TermCursor], k: int) -> list[tuple[int, flo
             scores[d] = scores.get(d, 0.0) + s
     ranked = sorted(scores.items(), key=lambda x: (-x[1], x[0]))
     return ranked[:k]
+
+
+def build_docs(pages: DataFrame, cfg: IndexConfig,
+               docmap: DataFrame | None = None,
+               use_html: bool = True) -> DataFrame:
+    """pages -> (doc_id, url, tokens, dl), with the builders' doc ids,
+    text extraction and tokenizer.
+
+    When ``docmap`` is None, the assignment is pinned with a LAZY
+    localCheckpoint: assign_doc_ids has evaluate-once semantics, and a
+    test may run several actions over the result."""
+    if cfg.lang_filter:
+        pages = pages.filter(F.col("lang") == cfg.lang_filter)
+    if docmap is None:
+        docmap = assign_doc_ids(pages, cfg.num_doc_partitions).localCheckpoint(
+            eager=False)
+    text_col = extract_text(F.col("html")) if use_html else F.col("text")
+    docs = (
+        pages.select("url", text_col.alias("_text"))
+        .withColumn("tokens", tokenize_col(F.col("_text")))
+        .withColumn("dl", F.size("tokens").cast("long"))
+        .drop("_text")
+        .join(docmap, "url")
+    )
+    return docs.select("doc_id", "url", "tokens", "dl")
+
+
+def corpus_stats(docs: DataFrame) -> dict:
+    """(N, avgdl) of a docs relation."""
+    row = docs.agg(
+        F.count("*").alias("n"), F.avg("dl").alias("avgdl")
+    ).collect()[0]
+    return {"N": int(row["n"]), "avgdl": float(row["avgdl"] or 0.0)}

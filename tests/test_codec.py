@@ -6,16 +6,14 @@ import numpy as np
 import pytest
 
 from mee_spark.bm25 import tnorm_np
-from mee_spark.codec import (
+from mee_spark.codec import decode_postings
+from reference_helpers import (
     block_metadata,
     block_ub,
-    decode_postings,
-    varbyte_decode,
-)
-from reference_helpers import (
     delta_decode,
     delta_encode,
     encode_postings,
+    varbyte_decode,
     varbyte_encode,
 )
 

@@ -7,15 +7,12 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from mee_spark.codec import (
-    decode_postings,
-    decode_postings_batch,
-    varbyte_decode,
-)
+from mee_spark.codec import decode_postings, decode_postings_batch
 from reference_helpers import (
     delta_decode,
     delta_encode,
     encode_postings,
+    varbyte_decode,
     varbyte_encode,
 )
 

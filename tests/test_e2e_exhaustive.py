@@ -10,12 +10,13 @@ import hashlib
 import pytest
 
 from mee_spark.config import IndexConfig
-from mee_spark.docmap import assign_doc_ids, build_docs, corpus_stats
+from mee_spark.docmap import assign_doc_ids
 from mee_spark.fixtures import gen_pages, gen_pages_pandas, gen_queries_pandas
 from mee_spark.oracle import OracleIndex
 from mee_spark.postings import build_postings, term_df
 from mee_spark.query import bm25_topk_exhaustive
-from mee_spark.textprep import extract_text_bytes, py_tokenize
+from mee_spark.textprep import extract_text_bytes
+from reference_helpers import build_docs, corpus_stats
 
 N_DOCS = 300
 N_QUERIES = 30
@@ -81,8 +82,7 @@ def test_postings_match_oracle(corpus):
 
 
 def test_term_df_salted_agg(corpus):
-    cfg = IndexConfig()
-    got = {r["term"]: r["df"] for r in term_df(corpus["postings"], cfg).collect()}
+    got = {r["term"]: r["df"] for r in term_df(corpus["postings"]).collect()}
     want = {t: len(p) for t, p in corpus["oracle"].postings.items()}
     assert got == want
 
@@ -92,7 +92,7 @@ def test_bm25_rank_identical_to_oracle(corpus, spark):
     queries = spark.createDataFrame(queries_pd)
     res = bm25_topk_exhaustive(
         corpus["postings"], queries, corpus["stats"]["N"], corpus["stats"]["avgdl"],
-        k=None, round_digits=None,
+        round_digits=None,
     ).collect()
     got: dict[int, list] = {}
     for r in sorted(res, key=lambda r: (r["query_id"], r["rank"])):

@@ -10,21 +10,15 @@ import pandas as pd
 import pytest
 
 from mee_spark import manifest as mf
-from mee_spark.build import build_full_index, build_incremental, live_docmap
+from mee_spark.build import build_full_index, live_docmap
 from mee_spark.config import IndexConfig
-from mee_spark.docmap import corpus_stats
-from mee_spark.fixtures import (
-    PAGES_SCHEMA,
-    QUERIES_SCHEMA,
-    gen_pages,
-    gen_queries,
-    gen_queries_pandas,
-    gen_snapshots_pandas,
-)
+from mee_spark.fixtures import QUERIES_SCHEMA, gen_pages, gen_queries, gen_queries_pandas
 from mee_spark.oracle import OracleIndex
+from mee_spark.postings import build_postings
 from mee_spark.query import bm25_topk_exhaustive
 from mee_spark.query_wand import bm25_topk_wand, query_vocab
 from mee_spark.textprep import extract_text_bytes, py_tokenize
+from reference_helpers import build_docs, corpus_stats
 
 N_DOCS = 250
 N_QUERIES = 40
@@ -38,7 +32,11 @@ def built(spark, tmp_path_factory):
     pages = gen_pages(spark, N_DOCS, num_partitions=4)
     manifest = build_full_index(spark, pages, CFG, index_dir, gen=1)
     queries = gen_queries(spark, N_QUERIES)
-    return dict(index_dir=index_dir, manifest=manifest, queries=queries, pages=pages)
+    # the same corpus as an uncompressed postings relation, for the
+    # exhaustive DataFrame engine
+    docs = build_docs(pages, CFG)
+    return dict(index_dir=index_dir, manifest=manifest, queries=queries, pages=pages,
+                postings=build_postings(docs), stats=corpus_stats(docs))
 
 
 def collect_ranked(df):
@@ -99,14 +97,9 @@ def test_wand_matches_oracle(built, spark):
 
 def test_wand_equals_exhaustive_spark(built, spark):
     """Block-max pruning is loss-free vs the declarative DataFrame path."""
-    from mee_spark.docmap import build_docs
-    from mee_spark.postings import build_postings
-
-    docs = build_docs(built["pages"], CFG)
-    stats = corpus_stats(docs)
-    postings = build_postings(docs)
+    stats = built["stats"]
     exh = collect_ranked(bm25_topk_exhaustive(
-        postings, built["queries"], stats["N"], stats["avgdl"], k=None, round_digits=6))
+        built["postings"], built["queries"], stats["N"], stats["avgdl"], round_digits=6))
     wnd = collect_ranked(bm25_topk_wand(
         spark, built["index_dir"], built["queries"], CFG, round_digits=6))
     assert exh == wnd
@@ -163,30 +156,44 @@ def _oracle_topk(oracle: OracleIndex, text: str, k: int, conjunctive: bool):
 
 
 def test_wand_matches_oracle_with_edge_queries(built, spark):
-    """The driver planner and the oracle agree, docIDs and unrounded
-    scores, in both disjunctive and conjunctive modes, on the fixture
-    batch plus edge queries (repeated terms, non-ASCII text, a text with
-    no tokens, an all-OOV query)."""
-    qpdf = pd.concat([gen_queries_pandas(N_QUERIES), pd.DataFrame(
-        {"query_id": range(N_QUERIES, N_QUERIES + len(EDGE_QUERIES)),
+    """Both engines (the driver-planned WAND path over the index and the
+    exhaustive DataFrame plan over the fixture's postings) agree with the
+    oracle, docIDs and unrounded scores, in both disjunctive and
+    conjunctive modes, on the 100-query fixture pool plus edge queries
+    (repeated terms, non-ASCII text, a text with no tokens, an all-OOV
+    query). The whole pool is used because its first 40 queries have one
+    term each, where AND is OR; some later ones rank differently under
+    AND, so an engine that drops its AND filter fails here."""
+    n_pool = 100
+    qpdf = pd.concat([gen_queries_pandas(n_pool), pd.DataFrame(
+        {"query_id": range(n_pool, n_pool + len(EDGE_QUERIES)),
          "query_text": EDGE_QUERIES, "k": 10})], ignore_index=True)
     queries = spark.createDataFrame(qpdf, QUERIES_SCHEMA)
     oracle = _oracle(built, spark)
+    want = {conj: {q.query_id: _oracle_topk(oracle, q.query_text, q.k, conj)
+                   for q in qpdf.itertuples()} for conj in (False, True)}
+    assert any(want[True][qid] != want[False][qid] for qid in range(n_pool))
 
-    results = {conj: collect_ranked(bm25_topk_wand(
-        spark, built["index_dir"], queries, CFG, round_digits=None,
-        conjunctive=conj)) for conj in (False, True)}
-    for conj, res in results.items():
+    stats = built["stats"]
+    results = {}
+    for conj in (False, True):
+        results["wand", conj] = collect_ranked(bm25_topk_wand(
+            spark, built["index_dir"], queries, CFG, round_digits=None,
+            conjunctive=conj))
+        results["exhaustive", conj] = collect_ranked(bm25_topk_exhaustive(
+            built["postings"], queries, stats["N"], stats["avgdl"],
+            round_digits=None, conjunctive=conj))
+    for (engine, conj), res in results.items():
         for q in qpdf.itertuples():
-            want = _oracle_topk(oracle, q.query_text, q.k, conj)
             have = res.get(q.query_id, [])
-            assert [d for _, d, _ in have] == [d for d, _ in want], (conj, q.query_text)
-            for (_, _, s_have), (_, s_want) in zip(have, want):
+            assert [d for _, d, _ in have] == [d for d, _ in want[conj][q.query_id]], (
+                engine, conj, q.query_text)
+            for (_, _, s_have), (_, s_want) in zip(have, want[conj][q.query_id]):
                 assert s_have == pytest.approx(s_want, abs=1e-9)
     for text in ("w000001 w000001 w000002", "Café Ünïcode w000004 ÿ"):
-        assert results[False][qpdf.query_id[qpdf.query_text == text].iloc[0]]
-    for qid in (N_QUERIES + 3, N_QUERIES + 4):
-        assert qid not in results[False] and qid not in results[True]
+        assert results["wand", False][qpdf.query_id[qpdf.query_text == text].iloc[0]]
+    for qid in (n_pool + 3, n_pool + 4):
+        assert all(qid not in res for res in results.values())
 
 
 def test_batch_past_2048_queries(built, spark):

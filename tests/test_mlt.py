@@ -75,7 +75,7 @@ def test_bool_excluded_doc_promotes_lower_ranks(spark):
 
 
 def test_bool_empty_not_text_is_plain_conjunctive(spark):
-    from mee_spark.query import bm25_topk_boolean, bm25_topk_conjunctive
+    from mee_spark.query import bm25_topk_boolean, bm25_topk_exhaustive
 
     docs = _docs(spark, [(1, "a b c"), (2, "a b"), (3, "a x y")])
     p = build_postings(docs)
@@ -87,7 +87,8 @@ def test_bool_empty_not_text_is_plain_conjunctive(spark):
     got = sorted((r.rank, r.doc_id, r.score)
                  for r in bm25_topk_boolean(p, bq, 3, 2.67).collect())
     want = sorted((r.rank, r.doc_id, r.score)
-                  for r in bm25_topk_conjunctive(p, cq, 3, 2.67, k=None).collect())
+                  for r in bm25_topk_exhaustive(p, cq, 3, 2.67,
+                                                conjunctive=True).collect())
     assert got == want
 
 
@@ -165,7 +166,7 @@ def test_search_after_page_continues_full_ranking(spark):
     queries = spark.createDataFrame(
         [(0, "q")], "query_id int, query_text string")
     full = bm25_topk_exhaustive(
-        p, queries.withColumn("k", F.lit(100)), 11, 12.0, k=None)
+        p, queries.withColumn("k", F.lit(100)), 11, 12.0)
     page = bm25_search_after(p, queries, 11, 12.0, after_rank=3, k=4)
     want = [(r.rank - 3, r.doc_id, r.score)
             for r in full.collect() if 4 <= r.rank <= 7]

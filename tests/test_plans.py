@@ -61,14 +61,14 @@ def test_column_pruning_in_scan(spark):
 
 
 def test_query_paths_leave_no_cache_entries(spark):
-    """The pinned intermediates in the exhaustive/MLT/fuzzy/search_after
-    paths must use GC-released localCheckpoint, never bare .cache():
-    CacheManager entries persist until an explicit unpersist, so a
-    long-lived query service would accumulate executor storage with
-    every call (VERDICT r5 #4). The WAND path's cache is exempt — it
-    unpersists in a finally, which this assertion also verifies."""
+    """The pinned intermediates in the exhaustive (OR and AND), bool,
+    MLT, fuzzy and search_after paths must use GC-released
+    localCheckpoint, never bare .cache(): CacheManager entries persist
+    until an explicit unpersist, so a long-lived query service would
+    accumulate executor storage with every call (VERDICT r5 #4)."""
     spark.catalog.clearCache()
-    for name in ("fulltext_bm25_topk", "fulltext_fuzzy",
+    for name in ("fulltext_bm25_topk", "fulltext_bm25_conjunctive",
+                 "fulltext_bool", "fulltext_fuzzy",
                  "fulltext_more_like_this", "fulltext_search_after",
                  "fulltext_bm25_wand"):
         em.queries()[name](spark, SF_DIR).count()

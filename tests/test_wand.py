@@ -6,13 +6,8 @@ import numpy as np
 import pytest
 
 from mee_spark.bm25 import idf_np
-from mee_spark.codec import block_metadata
-from mee_spark.wand import (
-    TermCursor,
-    exhaustive_topk_vec,
-    wand_topk,
-)
-from reference_helpers import exhaustive_topk_np
+from mee_spark.wand import TermCursor, exhaustive_topk_vec, wand_topk
+from reference_helpers import block_metadata, exhaustive_topk_np
 
 
 def make_cursor(term, rng, n_docs, df, avgdl):
@@ -39,6 +34,17 @@ def test_wand_equals_exhaustive(seed, k):
         cursors.append(make_cursor(f"t{t:02d}", rng, n_docs, df, avgdl))
     # exhaustive_topk_np does not move cursor pointers, so compute it first
     want = exhaustive_topk_np(cursors, k)
+    # AND mode of the vectorized kernel (no pointer moves either) ≡ the
+    # brute-force union ranking restricted to docs in every posting list
+    in_all = set.intersection(*(set(c.docs.tolist()) for c in cursors))
+    want_and = [(d, s) for d, s in exhaustive_topk_np(cursors, n_docs)
+                if d in in_all][:k]
+    got_and = exhaustive_topk_vec(cursors, k, n_terms=n_terms)
+    assert [d for d, _ in got_and] == [d for d, _ in want_and], f"seed={seed} k={k}"
+    for (_, gs), (_, ws) in zip(got_and, want_and):
+        assert gs == pytest.approx(ws, abs=1e-12)
+    # one more query term with no cursor here: no doc can match them all
+    assert exhaustive_topk_vec(cursors, k, n_terms=n_terms + 1) == []
     got = wand_topk(cursors, k)
     assert [d for d, _ in got] == [d for d, _ in want], f"seed={seed} k={k}"
     for (_, gs), (_, ws) in zip(got, want):

@@ -9,9 +9,8 @@ from __future__ import annotations
 import numpy as np
 
 from mee_spark.bm25 import idf_np
-from mee_spark.codec import block_metadata
 from mee_spark.wand import TermCursor, wand_topk
-from reference_helpers import exhaustive_topk_np
+from reference_helpers import block_metadata, exhaustive_topk_np
 
 
 def make_cursor(term, rng, n_docs, df, avgdl, block_size=64):
