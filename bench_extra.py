@@ -5,7 +5,7 @@ directly comparable with the driver's methodology, but runs each phase
 in isolation so a single change can be re-measured in minutes:
 
   python bench_extra.py queries [name ...]   # warm pass + timed pass at sf0.1, local[32]
-  python bench_extra.py plans  [name ...]    # write .explain("formatted") to plans/r07/
+  python bench_extra.py plans  [name ...]    # write .explain("formatted") to plans/local/
   python bench_extra.py build  [cores] [docs] [reps]  # fresh-JVM-style build timing
   python bench_extra.py qbatch [docs]        # 100-query WAND batch on a persisted index
 
@@ -77,8 +77,10 @@ def run_plans(names: list[str], suffix: str = "before") -> None:
     spark = _session(bench.CPUS)
     qs = em.queries()
     names = names or bench.TIMED_QUERIES
+    # plans/local/ is gitignored: a capture never overwrites the
+    # committed plans/r07/ snapshots
     plan_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                            "plans", "r07")
+                            "plans", "local")
     os.makedirs(plan_dir, exist_ok=True)
     for name in names:
         try:

@@ -35,7 +35,7 @@ from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 
 from mee_spark import manifest as mf
-from mee_spark.config import IndexConfig, check_layout, layout_record
+from mee_spark.config import IndexConfig, layout_record
 from mee_spark.docmap import assign_doc_ids
 from mee_spark.segments import build_segments
 from mee_spark.textprep import extract_text, tokenize_col
@@ -200,7 +200,8 @@ def build_incremental(
 
     Added urls get fresh docIDs (appended past the current max); changed
     urls keep their docID (anchor unchanged) but are tombstoned+re-added;
-    missing urls are tombstoned. Merged at query time — no rebuild.
+    missing urls are tombstoned. Merged at query time — no rebuild. The
+    layout comes from the published chain, not ``cfg``.
 
     ``partial=True`` treats the input as an upsert batch rather than a
     full snapshot: urls absent from it are NOT deletions (mee's event
@@ -210,22 +211,9 @@ def build_incremental(
     t0 = time.monotonic()
     if cfg.lang_filter:
         new_snapshot = new_snapshot.filter(F.col("lang") == cfg.lang_filter)
-    parent = mf.current_gen(index_dir)
-    if parent is None:
-        raise ValueError("no published index; run build_full_index first")
-    chain = mf.manifest_chain(index_dir, parent)
-    # layout identity is fixed at first build: a delta gen written with a
-    # different doc_range_size/num_term_buckets would bucket tombstones and
-    # prune term buckets against the wrong on-disk layout (silent data loss)
-    check_layout(cfg, chain)
-    # last-writer-wins masks compare GENERATION NUMBERS (a tombstone at
-    # gen t kills postings of gens < t); a new gen numbered at or below
-    # the chain's max would silently corrupt liveness
-    max_gen = max(m["generation"] for m in chain)
-    if gen <= max_gen:
-        raise ValueError(
-            f"generation {gen} must exceed the chain's max ({max_gen}); "
-            "last-writer-wins is ordered by generation number")
+    # the layout (range size, term buckets) is the chain's, not the caller's
+    chain, cfg = mf.open_chain(index_dir, cfg, new_gen=gen)
+    parent = chain[-1]["generation"]
     prev = live_docmap(spark, index_dir, [m["generation"] for m in chain])
     gdir = mf.gen_dir(index_dir, gen)
     os.makedirs(gdir, exist_ok=True)

@@ -6,7 +6,7 @@ Cluster usage (the north-rule deployment shape):
     python -m mee_spark.cli package --out mee_spark.zip
 
     spark-submit --py-files mee_spark.zip build_index.py \\
-        --pages s3://bucket/pages/ --index s3://bucket/index/ --gen 1
+        --pages s3://bucket/pages/ --index s3://bucket/index/
 
     spark-submit --py-files mee_spark.zip query_index.py \\
         --index s3://bucket/index/ --query "spark query engine" --k 10
@@ -28,6 +28,7 @@ import zipfile
 
 from pyspark.sql import SparkSession
 
+from mee_spark import manifest as mf
 from mee_spark.config import IndexConfig
 from mee_spark.session import recommended_conf
 
@@ -45,29 +46,24 @@ def make_session(app: str, shuffle_partitions: int | None = None) -> SparkSessio
     return spark
 
 
-def cfg_from_args(args) -> IndexConfig:
-    return IndexConfig(
-        num_doc_partitions=args.partitions,
-        num_term_buckets=args.buckets,
-        doc_range_size=args.range_size,
-        lang_filter=getattr(args, "lang", None),
-    )
-
-
 def cmd_build(args) -> None:
     from mee_spark.build import build_full_index, build_incremental
-    from mee_spark import manifest as mf
     from mee_spark.sources import read_pages
 
     spark = make_session("mee-build", args.partitions)
     pages = read_pages(spark, args.pages, snapshot_id=args.snapshot_id,
                        start_snapshot_id=args.start_snapshot_id)
-    cfg = cfg_from_args(args)
-    if not mf.acquire_lock(args.index):
-        sys.exit("another writer holds the index lock (_LOCK)")
-    try:
+    # the layout flags set a full build's layout only; an incremental
+    # build takes it from the index
+    cfg = IndexConfig(num_doc_partitions=args.partitions,
+                      num_term_buckets=args.buckets,
+                      doc_range_size=args.range_size, lang_filter=args.lang)
+    with mf.writer_lock(args.index):
+        # never the published generation: readers hold its files, and
+        # its .done checkpoints would keep the old corpus's segments
+        gen = args.gen if args.gen is not None else (
+            mf.current_gen(args.index) or 0) + 1
         if args.incremental:
-            gen = (mf.current_gen(args.index) or 0) + 1
             # an append range is an upsert batch, not a snapshot: urls
             # missing from it are not deletions
             m = build_incremental(spark, pages, cfg, args.index, gen=gen,
@@ -75,11 +71,9 @@ def cmd_build(args) -> None:
                                   lineage={"source": args.pages},
                                   partial=args.start_snapshot_id is not None)
         else:
-            m = build_full_index(spark, pages, cfg, args.index, gen=args.gen,
+            m = build_full_index(spark, pages, cfg, args.index, gen=gen,
                                  use_html=not args.text_only,
                                  lineage={"source": args.pages})
-    finally:
-        mf.release_lock(args.index)
     print(json.dumps(m["metrics"] | {"generation": m["generation"]}))
 
 
@@ -94,13 +88,12 @@ def cmd_query(args) -> None:
     queries = spark.createDataFrame(
         pd.DataFrame({"query_id": [0], "query_text": [args.query], "k": [args.k]}),
         "query_id int, query_text string, k int")
-    res = bm25_topk_wand(spark, args.index, queries, cfg_from_args(args))
+    res = bm25_topk_wand(spark, args.index, queries, IndexConfig())
     for r in sorted(res.collect(), key=lambda r: r["rank"]):
         print(json.dumps({"rank": r["rank"], "doc_id": r["doc_id"], "score": r["score"]}))
 
 
 def cmd_compact(args) -> None:
-    from mee_spark import manifest as mf
     from mee_spark.merge import compact, compaction_due, maybe_compact
 
     if args.if_needed:
@@ -113,14 +106,10 @@ def cmd_compact(args) -> None:
             print(json.dumps({"compacted": False} | decision))
             return
         spark = make_session("mee-compact", args.partitions)
-        if not mf.acquire_lock(args.index):
-            sys.exit("another writer holds the index lock (_LOCK)")
-        try:
-            m = maybe_compact(spark, args.index, cfg_from_args(args),
+        with mf.writer_lock(args.index):
+            m = maybe_compact(spark, args.index, IndexConfig(),
                               max_chain_len=args.max_chain,
                               max_tombstone_ratio=args.max_tombstone_ratio)
-        finally:
-            mf.release_lock(args.index)
         if m is None:  # raced: another maintainer compacted between probes
             print(json.dumps({"compacted": False} | decision))
             return
@@ -128,26 +117,18 @@ def cmd_compact(args) -> None:
                          | {"generation": m["generation"]}))
         return
     spark = make_session("mee-compact", args.partitions)
-    if not mf.acquire_lock(args.index):
-        sys.exit("another writer holds the index lock (_LOCK)")
-    try:
+    with mf.writer_lock(args.index):
         gen = (mf.current_gen(args.index) or 0) + 1
-        m = compact(spark, args.index, cfg_from_args(args), new_gen=gen)
-    finally:
-        mf.release_lock(args.index)
+        m = compact(spark, args.index, IndexConfig(), new_gen=gen)
     print(json.dumps(m["metrics"] | {"generation": m["generation"]}))
 
 
 def cmd_reset(args) -> None:
-    from mee_spark import manifest as mf
-
     mf.reset_incomplete(args.index, args.gen)
     print(json.dumps({"reset": args.gen}))
 
 
 def cmd_clean(args) -> None:
-    from mee_spark import manifest as mf
-
     print(json.dumps({"removed": mf.gc_orphans(args.index, ttl_sec=args.ttl)}))
 
 
@@ -166,57 +147,71 @@ def cmd_package(args) -> None:
     print(json.dumps({"wrote": args.out}))
 
 
-def main(argv: list[str] | None = None) -> None:
+def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="mee_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
 
-    def common(sp, needs_index=True):
-        if needs_index:
-            sp.add_argument("--index", required=True)
-        sp.add_argument("--partitions", type=int, default=128)
-        sp.add_argument("--buckets", type=int, default=32)
-        sp.add_argument("--range-size", type=int, default=1 << 20)
+    def command(name, fn, partitions_help=None):
+        sp = sub.add_parser(name)
+        sp.add_argument("--index", required=True)
+        if partitions_help:
+            sp.add_argument("--partitions", type=int, default=128,
+                            help=partitions_help)
+        sp.set_defaults(fn=fn)
+        return sp
 
-    b = sub.add_parser("build"); common(b)
+    b = command("build", cmd_build, "shuffle partitions, and the "
+                "partitions of the docID rank pass")
+    b.add_argument("--buckets", type=int, default=32,
+                   help="term buckets of a full build; --incremental "
+                        "takes them from the index")
+    b.add_argument("--range-size", type=int, default=1 << 20,
+                   help="docID range size of a full build; --incremental "
+                        "takes it from the index")
     b.add_argument("--pages", required=True,
                    help="Parquet path, or an Iceberg table name")
     b.add_argument("--snapshot-id", type=int, default=None,
                    help="Iceberg only: read this snapshot")
     b.add_argument("--start-snapshot-id", type=int, default=None,
                    help="Iceberg only: read the appends after this snapshot")
-    b.add_argument("--gen", type=int, default=1)
-    b.add_argument("--incremental", action="store_true")
+    b.add_argument("--gen", type=int, default=None,
+                   help="generation to write (default: the published "
+                        "generation + 1, or 1 on an empty index)")
+    b.add_argument("--incremental", action="store_true",
+                   help="diff --pages against the published index into a "
+                        "new generation, in the index's layout")
     b.add_argument("--text-only", action="store_true",
                    help="corpus has no html column; index the text column")
     b.add_argument("--lang", default=None)
-    b.set_defaults(fn=cmd_build)
 
-    q = sub.add_parser("query"); common(q)
+    q = command("query", cmd_query, "shuffle partitions")
     q.add_argument("--query", required=True)
     q.add_argument("--k", type=int, default=10)
-    q.set_defaults(fn=cmd_query)
 
-    c = sub.add_parser("compact"); common(c)
+    c = command("compact", cmd_compact, "shuffle partitions")
     c.add_argument("--if-needed", action="store_true",
                    help="compact only when the manifest-driven policy "
                         "fires (chain length / tombstone ratio)")
     c.add_argument("--max-chain", type=int, default=8)
     c.add_argument("--max-tombstone-ratio", type=float, default=0.2)
-    c.set_defaults(fn=cmd_compact)
 
-    r = sub.add_parser("reset"); common(r)
+    r = command("reset", cmd_reset)
     r.add_argument("--gen", type=int, required=True)
-    r.set_defaults(fn=cmd_reset)
 
-    g = sub.add_parser("clean"); common(g)
+    g = command("clean", cmd_clean)
     g.add_argument("--ttl", type=float, default=0.0)
-    g.set_defaults(fn=cmd_clean)
 
     z = sub.add_parser("package"); z.add_argument("--out", default="mee_spark.zip")
     z.set_defaults(fn=cmd_package)
+    return p
 
-    args = p.parse_args(argv)
-    args.fn(args)
+
+def main(argv: list[str] | None = None) -> None:
+    args = build_parser().parse_args(argv)
+    try:
+        args.fn(args)
+    except mf.LockHeld as e:
+        sys.exit(str(e))
 
 
 if __name__ == "__main__":

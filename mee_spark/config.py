@@ -39,10 +39,14 @@ class IndexConfig:
       * ``num_term_buckets`` — segment files are laid out by
         ``bucket = xxhash64(term) % num_term_buckets`` so a query touching
         q terms reads only the matching buckets (partition pruning).
-        Both are layout fields (``LAYOUT_FIELDS``), fixed at build time.
+        Both are layout fields (``LAYOUT_FIELDS``), read by a full build
+        only: later generations, compaction and queries take them from
+        the chain's manifest (``manifest.open_chain``), so a caller's
+        values there are ignored.
       * ``num_doc_partitions`` — range partitions of the docID rank pass.
       * ``k1`` / ``b`` — BM25 parameters; ``block_size`` — postings per
-        block-max block; ``wand_min_postings`` — a (query, range) with
+        block-max block, per generation (each segment row carries its
+        own block metadata); ``wand_min_postings`` — a (query, range) with
         fewer postings is scored exhaustively instead of by WAND.
       * ``lang_filter`` — index only pages whose ``lang`` equals it.
     """
@@ -59,33 +63,12 @@ class IndexConfig:
 
 # On-disk layout identity. ``doc_range_size`` defines which range a
 # tombstoned docID masks; ``num_term_buckets`` defines which bucket
-# directory a term's postings live in. A reader/compactor/incremental
-# writer using different values than build time would silently mask the
-# wrong ranges (resurrecting deleted docs) or prune the wrong buckets —
-# so these are persisted in every manifest and checked on reuse.
+# directory a term's postings live in. A full build records them in its
+# manifest, every later generation copies that record, and
+# ``manifest.open_chain`` hands them back to each reader and writer.
 LAYOUT_FIELDS = ("doc_range_size", "num_term_buckets")
 
 
 def layout_record(cfg: IndexConfig) -> dict:
     """The layout-identity fields persisted into each gen's manifest."""
     return {f: getattr(cfg, f) for f in LAYOUT_FIELDS}
-
-
-def check_layout(cfg: IndexConfig, chain: list[dict]) -> None:
-    """Raise if ``cfg`` disagrees with any recorded layout in ``chain``.
-
-    Manifests written before layout persistence carry no ``config`` key;
-    those are skipped (best-effort on legacy indexes, strict otherwise).
-    """
-    for m in chain:
-        rec = m.get("config")
-        if not rec:
-            continue
-        bad = {f: (rec[f], getattr(cfg, f))
-               for f in LAYOUT_FIELDS if f in rec and rec[f] != getattr(cfg, f)}
-        if bad:
-            detail = ", ".join(
-                f"{f}: built with {b}, caller passed {c}" for f, (b, c) in bad.items())
-            raise ValueError(
-                f"IndexConfig mismatch vs gen {m['generation']} manifest — {detail}. "
-                f"Layout fields are fixed at build time; pass the recorded values.")

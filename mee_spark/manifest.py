@@ -19,10 +19,14 @@ consistent store or conditional puts).
 
 from __future__ import annotations
 
+import contextlib
+import dataclasses
 import json
 import os
 import shutil
 import time
+
+from mee_spark.config import IndexConfig
 
 
 def _manifest_dir(index_dir: str) -> str:
@@ -108,23 +112,48 @@ def manifest_chain(index_dir: str, gen: int | None = None) -> list[dict]:
     return chain
 
 
-def acquire_lock(index_dir: str) -> bool:
-    """Single-writer guard (mee's Redlock, `utils/redisclient.py:19-41`)."""
+def open_chain(index_dir: str, cfg: IndexConfig, gen: int | None = None,
+               new_gen: int | None = None) -> tuple[list[dict], IndexConfig]:
+    """-> (manifests root→``gen`` (default: published), ``cfg`` with the
+    chain root's recorded layout). After the first full build the chain
+    is the one source of the layout: tombstones mask
+    ``doc_id // doc_range_size`` ranges and terms live in
+    ``hash % num_term_buckets`` directories. ``new_gen``, a generation
+    about to be written, must exceed every generation in the chain:
+    last-writer-wins masks compare generation numbers."""
+    chain = manifest_chain(index_dir, gen)
+    if not chain:
+        raise ValueError(f"no published index at {index_dir}")
+    max_gen = max(m["generation"] for m in chain)
+    if new_gen is not None and new_gen <= max_gen:
+        raise ValueError(
+            f"generation {new_gen} must exceed the chain's max ({max_gen}); "
+            "last-writer-wins is ordered by generation number")
+    return chain, dataclasses.replace(cfg, **chain[0]["config"])
+
+
+class LockHeld(RuntimeError):
+    """Another writer holds the index's ``_LOCK``."""
+
+
+@contextlib.contextmanager
+def writer_lock(index_dir: str):
+    """Single-writer guard for the block (mee's Redlock,
+    `utils/redisclient.py:19-41`): an O_EXCL-created ``_LOCK`` file.
+    Raises ``LockHeld`` at once, without waiting, if it exists."""
     os.makedirs(index_dir, exist_ok=True)
+    lock = os.path.join(index_dir, "_LOCK")
     try:
-        fd = os.open(os.path.join(index_dir, "_LOCK"), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        os.write(fd, str(os.getpid()).encode())
-        os.close(fd)
-        return True
+        fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
     except FileExistsError:
-        return False
-
-
-def release_lock(index_dir: str) -> None:
+        raise LockHeld("another writer holds the index lock (_LOCK)") from None
+    os.write(fd, str(os.getpid()).encode())
+    os.close(fd)
     try:
-        os.remove(os.path.join(index_dir, "_LOCK"))
-    except FileNotFoundError:
-        pass
+        yield
+    finally:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(lock)
 
 
 def completed_checkpoints(index_dir: str, gen: int) -> set[tuple[int, int]]:

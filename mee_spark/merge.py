@@ -35,7 +35,7 @@ from mee_spark.build import (
     live_docmap,
     read_tombstones,
 )
-from mee_spark.config import IndexConfig
+from mee_spark.config import IndexConfig, layout_record
 from mee_spark.query_wand import (
     decode_live,
     joined_tombstones,
@@ -184,24 +184,15 @@ def maybe_compact(spark: SparkSession, index_dir: str, cfg: IndexConfig, *,
 def compact(spark: SparkSession, index_dir: str, cfg: IndexConfig,
             new_gen: int, publish: bool = True,
             extra_metrics: dict | None = None) -> dict:
-    """Rewrite the whole published chain as single generation ``new_gen``.
+    """Rewrite the whole published chain as single generation ``new_gen``,
+    in the chain's layout (``cfg``'s layout fields are not read).
 
     ``extra_metrics`` entries are merged into the manifest's metrics
     BEFORE it is persisted (callers like ``maybe_compact`` record their
     trigger decision in the audit trail this way)."""
     t0 = time.monotonic()
-    chain = mf.manifest_chain(index_dir)
-    if not chain:
-        raise ValueError("nothing to compact")
-    from mee_spark.config import check_layout, layout_record
-
-    check_layout(cfg, chain)  # same footgun as the query path: range_id
-    # bucketing of tombstones must use the build-time doc_range_size
+    chain, cfg = mf.open_chain(index_dir, cfg, new_gen=new_gen)
     gens = [m["generation"] for m in chain]
-    if new_gen <= max(gens):
-        raise ValueError(
-            f"compaction target {new_gen} must exceed the chain's max "
-            f"({max(gens)}); generation numbers order last-writer-wins")
     os.makedirs(mf.gen_dir(index_dir, new_gen), exist_ok=True)
     # consolidated docmap = live rows only, written while the segment
     # merge runs (neither reads the other's output)

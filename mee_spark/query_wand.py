@@ -295,16 +295,9 @@ def bm25_topk_wand(
     The driver plans the batch from its whole vocabulary (one collect of
     every query's tokens), so it holds O(batch) query terms; the index
     side stays distributed."""
-    chain = mf.manifest_chain(index_dir, gen)
-    if not chain:
-        raise ValueError(f"no published index at {index_dir}")
-    from mee_spark.config import check_layout
-
-    # tombstone masking buckets by range_id = doc_id // cfg.doc_range_size
-    # and bucket pruning hashes mod cfg.num_term_buckets — both must be the
-    # BUILD-TIME values (persisted in the manifest) or deleted docs silently
-    # resurrect / live buckets are silently skipped
-    check_layout(cfg, chain)
+    # tombstones mask doc_id // doc_range_size ranges and terms prune to
+    # hash % num_term_buckets directories: both come from the chain
+    chain, cfg = mf.open_chain(index_dir, cfg, gen)
     gens = [m["generation"] for m in chain]
     n_docs = chain[-1]["n_docs_live"]
     avgdl = chain[-1]["avgdl"]

@@ -19,7 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from mee_spark.build import build_incremental
+from mee_spark import manifest as mf
+from mee_spark.build import build_full_index, build_incremental
 from mee_spark.config import IndexConfig
 from mee_spark.fixtures import PAGES_SCHEMA
 
@@ -116,20 +117,21 @@ def incremental_index_stream(
     ``source``: any streaming DataFrame of page rows (e.g. from
     ``page_stream_source``) — defaults to the file backend over
     ``source_dir``. The indexing plan is identical for every backend."""
-    from mee_spark import manifest as mf
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        cur = mf.current_gen(index_dir)
-        if cur is not None:
-            # partial=True: a micro-batch is an upsert set, not a snapshot
-            build_incremental(spark, batch_df, cfg, index_dir, gen=cur + 1,
-                              partial=True, lineage={"stream_batch": batch_id})
-        else:
-            from mee_spark.build import build_full_index
-            build_full_index(spark, batch_df, cfg, index_dir, gen=1,
-                             lineage={"stream_batch": batch_id})
+        # a concurrent writer would pick the same next generation
+        with mf.writer_lock(index_dir):
+            cur = mf.current_gen(index_dir)
+            if cur is not None:
+                # partial=True: a micro-batch is an upsert set, not a snapshot
+                build_incremental(spark, batch_df, cfg, index_dir, gen=cur + 1,
+                                  partial=True,
+                                  lineage={"stream_batch": batch_id})
+            else:
+                build_full_index(spark, batch_df, cfg, index_dir, gen=1,
+                                 lineage={"stream_batch": batch_id})
 
     stream = source if source is not None else read_page_stream(spark, source_dir)
     writer = (

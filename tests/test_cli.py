@@ -38,9 +38,18 @@ def _restore_session_conf(spark):
         spark.conf.set(k, v)
 
 
+LAYOUT = {"doc_range_size": 128, "num_term_buckets": 4}
+
+
 def _args(extra, index):
-    return extra + ["--index", index, "--partitions", "8",
-                    "--buckets", "4", "--range-size", "128"]
+    """``extra`` on ``index``. Only a full build is given a layout; every
+    other command reads it from the index."""
+    args = extra + ["--index", index]
+    if extra[0] in ("build", "query", "compact"):
+        args += ["--partitions", "8"]
+    if extra[0] == "build" and "--incremental" not in extra:
+        args += ["--buckets", "4", "--range-size", "128"]
+    return args
 
 
 def test_cli_lifecycle(spark, corpus, tmp_path, capsys):
@@ -63,6 +72,10 @@ def test_cli_lifecycle(spark, corpus, tmp_path, capsys):
     main(_args(["compact"], idx))
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["generation"] == 3
+    # the later generations keep the full build's layout
+    assert [mf.read_manifest(idx, g)["config"] for g in (1, 2, 3)] == [LAYOUT] * 3
+    main(_args(["query", "--query", "w000000 w000123", "--k", "5"], idx))
+    assert [json.loads(x) for x in capsys.readouterr().out.strip().splitlines()] == lines
     main(_args(["clean"], idx))
     removed = json.loads(capsys.readouterr().out.strip().splitlines()[-1])["removed"]
     assert sorted(removed) == [1, 2]
@@ -83,12 +96,35 @@ def test_cli_query_jobs(spark, corpus, tmp_path, capsys):
     assert len(jobs) <= 4, jobs
 
 
+def test_cli_rebuild_writes_the_next_generation(spark, tmp_path, capsys):
+    """A second ``build`` without ``--gen`` writes and publishes the next
+    generation. Rebuilding the published one in place would overwrite
+    the docmap under its readers and keep the old corpus's checkpointed
+    segments, so a term only the new corpus has would not be found."""
+    idx = str(tmp_path / "idx6")
+    for name, text in (("a", "alphaonly common"), ("b", "bravoonly common")):
+        pages = str(tmp_path / name)
+        spark.createDataFrame(
+            [(f"https://{name}.example/{i}", f"{text} t{i}") for i in range(20)],
+            "url string, text string").write.parquet(pages)
+        main(_args(["build", "--pages", pages, "--text-only"], idx))
+    capsys.readouterr()
+    assert mf.current_gen(idx) == 2
+    for term, hits in (("bravoonly", 10), ("alphaonly", 0)):
+        main(_args(["query", "--query", term], idx))
+        assert len(capsys.readouterr().out.strip().splitlines()) == hits, term
+
+
 def test_cli_lock_guard(spark, corpus, tmp_path, capsys):
     idx = str(tmp_path / "idx2")
-    assert mf.acquire_lock(idx)
-    with pytest.raises(SystemExit):
-        main(_args(["build", "--pages", corpus, "--gen", "1"], idx))
-    mf.release_lock(idx)
+    with mf.writer_lock(idx):
+        with pytest.raises(SystemExit, match="another writer holds"):
+            main(_args(["build", "--pages", corpus, "--gen", "1"], idx))
+        with pytest.raises(mf.LockHeld):
+            with mf.writer_lock(idx):
+                pass
+    with mf.writer_lock(idx):  # released on exit, even after a refusal
+        pass
 
 
 def test_cli_package(tmp_path, capsys):
@@ -128,8 +164,8 @@ def test_cli_build_rejects_snapshot_options_for_parquet(spark, corpus, tmp_path,
     with pytest.raises(ValueError, match="Iceberg"):
         main(_args(["build", "--pages", corpus, opt, "7"], idx))
     assert mf.current_gen(idx) is None
-    assert mf.acquire_lock(idx)
-    mf.release_lock(idx)
+    with mf.writer_lock(idx):  # the lock was never taken
+        pass
 
 
 def test_cli_append_range_is_an_upsert_batch(spark, corpus, tmp_path,

@@ -19,7 +19,7 @@ from mee_spark.textprep import extract_text_bytes
 from reference_helpers import build_docs, corpus_stats
 
 N_DOCS = 300
-N_QUERIES = 30
+N_QUERIES = 100  # the whole pool: its first 40 queries have one term each
 
 
 @pytest.fixture(scope="module")

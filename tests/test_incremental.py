@@ -4,6 +4,7 @@ between an incremental chain and a fresh full build."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import subprocess
@@ -11,6 +12,7 @@ import sys
 import uuid
 
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -97,36 +99,52 @@ def test_incremental_equals_full(spark, snaps, tmp_path_factory):
                 assert by_score_full[s] == by_score_inc[s], f"q{qid} tie group {s}"
 
 
-def test_layout_mismatch_rejected(spark, snaps, tmp_path_factory):
-    """ADVICE r2 (query_wand.py:220): doc_range_size buckets the tombstone
-    mask; a query/compaction/delta-build using a different value than build
-    time would silently resurrect deleted docs. The layout is persisted in
-    the manifest and every reuse path must refuse a mismatched cfg."""
+def _gen_tables(d, gen):
+    """``gen``'s docmap, tombstone and segment files, rows sorted by key."""
+    g = mf.gen_dir(d, gen)
+    out = {"docmap": pq.read_table(os.path.join(g, "docmap.parquet")).sort_by("url")}
+    if os.path.isdir(os.path.join(g, "tombstones.parquet")):
+        out["tombstones"] = pq.read_table(
+            os.path.join(g, "tombstones.parquet")).sort_by("doc_id")
+    for f in glob.glob(os.path.join(g, "segments", "bucket=*", "*.parquet")):
+        out[os.path.relpath(f, g)] = pq.read_table(f).sort_by("term")
+    return out
+
+
+def test_layout_read_from_manifest(spark, snaps, tmp_path_factory):
+    """The chain root's manifest is the one source of the layout. A cfg
+    with other ``doc_range_size`` and ``num_term_buckets`` values queries,
+    extends and compacts an index built with ``CFG`` exactly as ``CFG``
+    does, and every new manifest records ``CFG``'s layout."""
     import dataclasses
 
+    from mee_spark.config import layout_record
     from mee_spark.merge import compact
 
-    d = str(tmp_path_factory.mktemp("layout"))
-    build_full_index(spark, snaps[1], CFG, d, gen=1)
-    assert mf.read_manifest(d, 1)["config"] == {
-        "doc_range_size": CFG.doc_range_size,
-        "num_term_buckets": CFG.num_term_buckets,
-    }
-    bad_range = dataclasses.replace(CFG, doc_range_size=CFG.doc_range_size * 2)
-    bad_buckets = dataclasses.replace(CFG, num_term_buckets=CFG.num_term_buckets * 2)
-    queries = gen_queries(spark, 3)
-    with pytest.raises(ValueError, match="doc_range_size"):
-        bm25_topk_wand(spark, d, queries, bad_range)
-    with pytest.raises(ValueError, match="num_term_buckets"):
-        bm25_topk_wand(spark, d, queries, bad_buckets)
-    with pytest.raises(ValueError, match="doc_range_size"):
-        build_incremental(spark, snaps[2], bad_range, d, gen=2)
-    with pytest.raises(ValueError, match="doc_range_size"):
-        compact(spark, d, bad_range, new_gen=9)
-    # the recorded layout still works, and the delta gen records it too
-    build_incremental(spark, snaps[2], CFG, d, gen=2)
-    assert mf.read_manifest(d, 2)["config"]["doc_range_size"] == CFG.doc_range_size
-    assert bm25_topk_wand(spark, d, queries, CFG).count() >= 0
+    other = dataclasses.replace(CFG, doc_range_size=CFG.doc_range_size * 2,
+                                num_term_buckets=CFG.num_term_buckets * 2)
+    queries = gen_queries(spark, 100)
+
+    def rows(d, cfg):
+        return sorted(tuple(r) for r in bm25_topk_wand(spark, d, queries, cfg).collect())
+
+    tables = {}
+    for cfg in (CFG, other):
+        d = str(tmp_path_factory.mktemp("layout"))
+        build_full_index(spark, snaps[1], CFG, d, gen=1)
+        build_incremental(spark, snaps[2], cfg, d, gen=2)
+        assert rows(d, other) == rows(d, CFG)  # a tombstone chain
+        compact(spark, d, cfg, new_gen=3)
+        assert rows(d, other) == rows(d, CFG)  # a single generation
+        for g in (1, 2, 3):
+            assert mf.read_manifest(d, g)["config"] == layout_record(CFG)
+        tables[cfg.doc_range_size] = {g: _gen_tables(d, g) for g in (2, 3)}
+    want, got = tables[CFG.doc_range_size], tables[other.doc_range_size]
+    for g in (2, 3):
+        assert sorted(got[g]) == sorted(want[g])
+        assert len(want[g]) > 2, "no segment files written"
+        for name, table in want[g].items():
+            assert got[g][name].equals(table), (g, name)
 
 
 def test_incremental_unchanged_docs_not_reindexed(spark, snaps, tmp_path_factory):

@@ -21,7 +21,7 @@ from mee_spark.textprep import extract_text_bytes, py_tokenize
 from reference_helpers import build_docs, corpus_stats
 
 N_DOCS = 250
-N_QUERIES = 40
+N_QUERIES = 100  # the whole pool: its first 40 queries have one term each
 CFG = IndexConfig(num_doc_partitions=4, num_term_buckets=8,
                   doc_range_size=64, block_size=16)
 

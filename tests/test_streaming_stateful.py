@@ -98,6 +98,30 @@ def test_incremental_without_full_raises(spark, tmp_path):
         build_incremental(spark, pages, CFG, str(tmp_path / "nope"), gen=2)
 
 
+def test_stream_batch_refused_while_lock_held(spark, tmp_path):
+    """A micro-batch takes the index's single-writer lock: while another
+    writer (a compaction, a CLI build) holds it, the batch fails and
+    writes no generation."""
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    from mee_spark.build import build_full_index
+    from mee_spark.streaming import incremental_index_stream
+
+    d, src = str(tmp_path / "ix"), str(tmp_path / "src")
+    pages = gen_pages_pandas(40)
+    build_full_index(spark, spark.createDataFrame(pages[:20], PAGES_SCHEMA),
+                     CFG, d, gen=1)
+    spark.createDataFrame(pages[20:], PAGES_SCHEMA).coalesce(1).write.parquet(src)
+    with mf.writer_lock(d):
+        q = incremental_index_stream(spark, src, d, CFG, str(tmp_path / "ckpt"))
+        with pytest.raises(StreamingQueryException, match="index lock"):
+            q.awaitTermination(120)
+    assert mf.current_gen(d) == 1
+    assert not os.path.exists(mf.gen_dir(d, 2))
+
+
 def test_reset_published_gen_refuses(spark, tmp_path):
     from mee_spark.build import build_full_index
 
