@@ -31,6 +31,9 @@ import shutil
 import threading
 import time
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,6 +45,7 @@ from mee_spark.textprep import extract_text, tokenize_col
 
 DOCMAP_SCHEMA = "url string, doc_id long, dl long, text_hash long"
 TOMBSTONES_SCHEMA = "doc_id long"
+TOMBSTONES_ARROW_SCHEMA = pa.schema([("doc_id", pa.int64())])
 DOCS_STAGING_SCHEMA = ("doc_id long, url string, tokens array<string>, "
                        "dl long, text_hash long")
 # kind: added | changed | deleted (unchanged urls are not staged);
@@ -146,8 +150,17 @@ def build_full_index(
     lineage: dict | None = None,
     publish: bool = True,
 ) -> dict:
-    """Full rebuild into ``gen``; atomic publish on success. Returns manifest."""
+    """Full rebuild into ``gen``; atomic publish on success. Returns manifest.
+
+    ``gen`` must exceed the published generation: rebuilding a published
+    generation in place would overwrite its docmap under its readers, and
+    a resumed build would keep the old corpus's checkpointed segments.
+    Rerunning an unpublished (failed) generation is allowed."""
     t0 = time.monotonic()
+    cur = mf.current_gen(index_dir)
+    if cur is not None and gen <= cur:
+        raise ValueError(
+            f"generation {gen} must exceed the published generation ({cur})")
     if cfg.lang_filter:
         pages = pages.filter(F.col("lang") == cfg.lang_filter)
     os.makedirs(mf.gen_dir(index_dir, gen), exist_ok=True)
@@ -352,3 +365,21 @@ def read_tombstones(spark: SparkSession, index_dir: str, gens: list[int]) -> Dat
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
+
+
+def read_tombstone_arrays(index_dir: str,
+                          gens: list[int]) -> tuple[np.ndarray, np.ndarray]:
+    """The chain's tombstones as (doc ids, tomb gens) int64 arrays, read
+    on the driver with pyarrow — no Spark job. The driver form of
+    ``read_tombstones``, for chains whose tombstones fit in its memory."""
+    ids, tomb_gens = [], []
+    for g in gens:
+        p = _tombstones_path(index_dir, g)
+        if os.path.isdir(p):
+            col = ds.dataset(p, schema=TOMBSTONES_ARROW_SCHEMA,
+                             format="parquet").to_table()["doc_id"]
+            ids.append(col.to_numpy())
+            tomb_gens.append(np.full(len(col), g, dtype=np.int64))
+    if not ids:
+        return np.empty(0, np.int64), np.empty(0, np.int64)
+    return np.concatenate(ids), np.concatenate(tomb_gens)

@@ -112,6 +112,16 @@ def manifest_chain(index_dir: str, gen: int | None = None) -> list[dict]:
     return chain
 
 
+def tombstone_count(chain: list[dict]) -> int:
+    """Tombstones the chain's generations wrote. ``build_incremental``,
+    their only writer, records each generation's deleted and changed docs
+    (a changed doc is tombstoned and re-added); other generations record
+    neither."""
+    return sum(int(m.get("metrics", {}).get("docs_deleted", 0))
+               + int(m.get("metrics", {}).get("docs_changed", 0))
+               for m in chain)
+
+
 def open_chain(index_dir: str, cfg: IndexConfig, gen: int | None = None,
                new_gen: int | None = None) -> tuple[list[dict], IndexConfig]:
     """-> (manifests root→``gen`` (default: published), ``cfg`` with the

@@ -36,13 +36,10 @@ from mee_spark.build import (
     read_tombstones,
 )
 from mee_spark.config import IndexConfig, layout_record
-from mee_spark.query_wand import (
-    decode_live,
-    joined_tombstones,
-    tombstones_per_range,
-)
+from mee_spark.query_wand import joined_tombstones, tombstones_per_range
 from mee_spark.segments import (
     METRICS_SCHEMA,
+    decode_live,
     read_segments,
     sorted_term_codes,
     write_groups,
@@ -146,10 +143,7 @@ def compaction_due(index_dir: str, *, max_chain_len: int = 8,
     the read path actually masks. A compaction manifest has parent=None,
     so the counters reset naturally after each compaction."""
     chain = mf.manifest_chain(index_dir)
-    n_tombs = sum(
-        int(m["metrics"].get("docs_changed", 0))
-        + int(m["metrics"].get("docs_deleted", 0))
-        for m in chain if m.get("metrics", {}).get("kind") == "incremental")
+    n_tombs = mf.tombstone_count(chain)
     n_live = int(chain[-1]["n_docs_live"]) if chain else 0
     ratio = (n_tombs / n_live) if n_live else (1.0 if n_tombs else 0.0)
     reasons = []

@@ -16,13 +16,15 @@ designed for 10^12 docs / 1000 executors:
    row-group pruning — rows are term-sorted within files). Only the
    postings of the queried terms are ever read.
 2. **Corpus stats** — N/avgdl come from the manifest chain (computed
-   once per build). Per-term global df: on a tombstone-free chain (a
-   full or compacted generation) every posting is live, so df is the
-   sum of the matched rows' ``df_local``, read with pyarrow on the
-   driver (``segments.term_df``) — no Spark job, and a query with no
-   indexed term is answered without one. On a tombstone chain df needs
-   a doc-id decode in Spark (``live_df``). Either way it reaches the
-   scorers as a broadcast dict.
+   once per build). Per-term global df is read on the driver with
+   pyarrow (``segments.term_df``) on every chain below the gate (below):
+   on a tombstone-free chain (a full or compacted generation) df is the
+   sum of the matched rows' ``df_local``; on a tombstone chain the rows
+   of tombstoned docID ranges are decoded (doc ids only) and count their
+   live postings. No Spark job either way, and a query with no live
+   indexed term is answered without one. Above the gate df needs a
+   doc-id decode in Spark (``live_df``). It reaches the scorers as a
+   dict in their closure.
 3. **Distributed scoring** — matched segment rows join the broadcast
    query set, then ``groupBy(range_id, _qshard).applyInPandas``: each
    group scores ONE docID range for one shard of the query batch
@@ -38,12 +40,21 @@ designed for 10^12 docs / 1000 executors:
 Generations: rows from every gen in the manifest chain are unioned;
 tombstones (docs deleted/re-indexed in later gens) are masked out at
 decode time — last-writer-wins, mee's incremental-sync semantics
-(`services/syncservice.py:64-93`). Tombstones stay a DataFrame end to
-end: they are grouped per docID range and JOINED onto the segment rows
-(AQE broadcasts when small, shuffles when not), never collected to the
-driver — a high-churn 10^12-doc index accumulates tombstones far past
-driver memory between compactions, and each scorer task only ever sees
-its own range's slice (≤ doc_range_size ids by construction).
+(`services/syncservice.py:64-93`). Tombstones are grouped per docID
+range and JOINED onto the segment rows, so each scorer task only ever
+sees its own range's slice (≤ doc_range_size ids by construction). A
+chain whose manifests record no tombstone plans like a single
+generation. Otherwise a gate on driver memory decides where they come
+from (``_driver_plan``, no Spark job): the manifests' tombstone count,
+then the postings of the term-filtered rows the driver would decode.
+Below it the driver reads them with pyarrow and ships the per-range
+arrays as a broadcast local relation (``tombstone_relation``), so a
+small chain's query runs the same scoring jobs as a single
+generation's. Above it they stay a DataFrame end to end
+(``tombstones_per_range``, a group-by the join consumes, and the
+``live_df`` pass): a high-churn 10^12-doc index accumulates tombstones
+far past driver memory between compactions, and its head terms' dead
+postings are too many to decode in one process.
 """
 
 from __future__ import annotations
@@ -52,20 +63,36 @@ from collections import Counter
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from mee_spark import manifest as mf
 from mee_spark.bm25 import idf_np, ranked
-from mee_spark.build import read_tombstones
-from mee_spark.codec import decode_postings_batch
+from mee_spark.build import read_tombstone_arrays, read_tombstones
 from mee_spark.config import IndexConfig
-from mee_spark.segments import read_segments, term_df
+from mee_spark.segments import decode_live, read_segments, term_df
 from mee_spark.textprep import tokenize_col
 from mee_spark.wand import TermCursor, exhaustive_topk_vec, wand_topk
 
 _LOCAL_SCHEMA = "query_id int, k int, doc_id long, score double"
+
+# The gate of the driver tombstone plan (see ``_driver_plan``); above
+# either limit the chain takes the distributed plan. The gate bounds driver
+# memory only: on chains of 20k-300k docs with 6k-1.27M tombstones and up
+# to 4M postings to decode (4 vCPU, local[4]) the driver plan took less
+# CPU and less wall than the distributed one on every query measured,
+# above both limits too.
+# Each tombstone raised the driver's peak by about 85 bytes (read, sorted
+# copy, the relation) and the relation's broadcast by about 26 bytes
+# (32 MiB at 1.27M), a broadcast every executor keeps whole: 2^20 keep
+# them near 90 MB and 32 MiB.
+DRIVER_MAX_TOMBSTONES = 1 << 20
+# Each posting decoded on the driver raised its peak by 35-50 bytes (doc-id
+# blobs, decoded ids, the live mask) and took about 1.4 CPU-us: 2^22 keep
+# the decode near 0.2 GB and 6 CPU-s, on top of the tombstone-free df read.
+DRIVER_MAX_DECODE_POSTINGS = 1 << 22
 
 
 def query_vocab(queries: DataFrame, num_term_buckets: int) -> list:
@@ -119,26 +146,44 @@ def tombstones_per_range(spark: SparkSession, index_dir: str, gens: list[int],
     )
 
 
-def live_mask(docs: np.ndarray, post_gens: np.ndarray,
-              tomb_ids: np.ndarray, tomb_gens: np.ndarray) -> np.ndarray:
-    """True for each posting that no tombstone at a gen LATER than the
-    posting's own kills (a changed doc is tombstoned and re-added in the
-    same gen, so its fresh postings stay live). Duplicate tombstones for
-    one doc are fine: the newest decides."""
-    if len(tomb_ids) == 0 or len(docs) == 0:
-        return np.ones(len(docs), dtype=bool)
+def tombstone_relation(spark: SparkSession, tomb_ids: np.ndarray,
+                       tomb_gens: np.ndarray, range_size: int) -> DataFrame:
+    """``tombstones_per_range``'s rows, sorted the same way, built on the
+    driver from the chain's tombstone arrays: a local relation, so
+    building and broadcasting it runs no job. It is created from an Arrow
+    table, which builds with the session's Arrow conversion on or off and
+    never turns an id into a Python object."""
     order = np.lexsort((tomb_gens, tomb_ids))
     ids, gens = tomb_ids[order], tomb_gens[order]
-    newest = np.append(ids[1:] != ids[:-1], True)
-    ids, gens = ids[newest], gens[newest]
-    idx = np.minimum(np.searchsorted(ids, docs), len(ids) - 1)
-    return ~((ids[idx] == docs) & (gens[idx] > post_gens))
+    ranges, starts = np.unique(ids // range_size, return_index=True)
+    offsets = pa.array(np.append(starts, len(ids)).astype(np.int32))
+    return spark.createDataFrame(pa.table({
+        "range_id": pa.array(ranges),
+        "tomb_ids": pa.ListArray.from_arrays(offsets, pa.array(ids)),
+        "tomb_gens": pa.ListArray.from_arrays(offsets, pa.array(gens)),
+    }), "range_id long, tomb_ids array<long>, tomb_gens array<long>")
+
+
+def _driver_plan(n_tombs: int, index_dir: str, gens: list[int],
+                 terms: list[str], buckets: list[int], range_size: int):
+    """(tombstone arrays, live df) of a tombstone chain small enough to
+    plan on the driver, read with pyarrow (no Spark job); None above the
+    gate. ``n_tombs``, the manifests' count, is checked before anything
+    is read; the decode budget is checked on the term-filtered rows,
+    before their doc-id blobs are read."""
+    if n_tombs > DRIVER_MAX_TOMBSTONES:
+        return None
+    tombstones = read_tombstone_arrays(index_dir, gens)
+    df_map = term_df(index_dir, gens, terms, buckets, tombstones, range_size,
+                     max_decode=DRIVER_MAX_DECODE_POSTINGS)
+    return None if df_map is None else (tombstones, df_map)
 
 
 def joined_tombstones(rows: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
-    """Flat (ids, gens) of the tombstones that ``tombstones_per_range``'s
-    left join attached to a batch of segment rows — each range's arrays
-    counted once (empty when the join was skipped or matched nothing)."""
+    """Flat (ids, gens) of the tombstones that the per-range left join
+    (``tombstones_per_range`` or ``tombstone_relation``) attached to a
+    batch of segment rows — each range's arrays counted once (empty when
+    the join was skipped or matched nothing)."""
     if "tomb_ids" not in rows.columns:
         return np.empty(0, np.int64), np.empty(0, np.int64)
     t = rows.loc[rows["tomb_ids"].notna(), ["range_id", "tomb_ids", "tomb_gens"]]
@@ -147,27 +192,6 @@ def joined_tombstones(rows: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
         return np.empty(0, np.int64), np.empty(0, np.int64)
     return (np.concatenate(t["tomb_ids"].to_list()).astype(np.int64),
             np.concatenate(t["tomb_gens"].to_list()).astype(np.int64))
-
-
-def decode_live(rows: pd.DataFrame, tomb_ids: np.ndarray, tomb_gens: np.ndarray,
-                values: bool = True):
-    """Batch-decode segment rows (with a ``gen`` column) and drop the
-    postings the tombstones kill -> (docs, tfs, dls, live postings per
-    row), rows back to back. ``values=False`` decodes doc ids only (tfs
-    and dls come back None)."""
-    docs, tfs, dls, counts = decode_postings_batch(
-        rows["doc_ids_blob"], rows["tfs_blob"] if values else None,
-        rows["dls_blob"] if values else None)
-    keep = live_mask(docs, np.repeat(rows["gen"].to_numpy(np.int64), counts),
-                     tomb_ids, tomb_gens)
-    if keep.all():
-        return docs, tfs, dls, counts
-    kept = np.zeros(len(keep) + 1, dtype=np.int64)
-    np.cumsum(keep, out=kept[1:])
-    bounds = np.zeros(len(counts) + 1, dtype=np.int64)
-    np.cumsum(counts, out=bounds[1:])
-    return (docs[keep], None if tfs is None else tfs[keep],
-            None if dls is None else dls[keep], np.diff(kept[bounds]))
 
 
 def live_df(segs: DataFrame) -> DataFrame:
@@ -302,7 +326,6 @@ def bm25_topk_wand(
     n_docs = chain[-1]["n_docs_live"]
     avgdl = chain[-1]["avgdl"]
 
-    tombs = tombstones_per_range(spark, index_dir, gens, cfg.doc_range_size)
     # the vocabulary probe: one collect of each query's tokens and term
     # buckets (a local query relation answers it with no job); the driver
     # plans the rest from it: distinct (query_id, k, term), each term's
@@ -313,12 +336,25 @@ def bm25_topk_wand(
     bucket_of = {t: b for r in rows for t, b in zip(r["terms"], r["buckets"])}
     n_terms_map = Counter(int(q) for q, _, _ in qrows) if conjunctive else None
     terms = sorted(bucket_of)
-    if tombs is None:
+    buckets = sorted(set(bucket_of.values()))
+    n_tombs = mf.tombstone_count(chain)
+    tombs = df_map = None
+    if n_tombs == 0:
         # every posting is live, so df is the sum of the rows'
-        # df_local: a pyarrow read of the pruned files, and a query
-        # with no indexed term is answered without a job
-        df_map = term_df(index_dir, gens, terms, sorted(set(bucket_of.values())))
-        terms = sorted(df_map)
+        # df_local: a pyarrow read of the pruned files
+        df_map = term_df(index_dir, gens, terms, buckets)
+    elif (small := _driver_plan(n_tombs, index_dir, gens, terms, buckets,
+                                cfg.doc_range_size)) is not None:
+        # small chain: tombstones and live df come from pyarrow reads,
+        # and the tombstones ship to the scorers as a local relation
+        (tomb_ids, tomb_gens), df_map = small
+        tombs = F.broadcast(tombstone_relation(
+            spark, tomb_ids, tomb_gens, cfg.doc_range_size))
+    else:
+        tombs = tombstones_per_range(spark, index_dir, gens, cfg.doc_range_size)
+    if df_map is not None:
+        # a query with no live indexed term is answered without a job
+        terms = sorted(t for t, n in df_map.items() if n > 0)
     if not terms:
         return _empty_result(queries)
     segs = read_segments(spark, index_dir, gens).filter(
@@ -326,8 +362,9 @@ def bm25_topk_wand(
         & F.col("term").isin(terms))
     if tombs is not None:
         # tombstones join per docID range, so the df pass and the
-        # scorers see them; they never reach the driver
+        # scorers see exactly their range's tombstones
         segs = segs.join(tombs, "range_id", "left")
+    if df_map is None:
         df_map = {r["term"]: int(r["df"]) for r in live_df(segs).collect()}
         if not df_map:
             return _empty_result(queries)

@@ -51,7 +51,7 @@ from pyspark.sql.types import (
 )
 
 from mee_spark import manifest as mf
-from mee_spark.codec import varbyte_encode_lens
+from mee_spark.codec import decode_postings_batch, varbyte_encode_lens
 from mee_spark.config import IndexConfig
 
 SEGMENT_SCHEMA = pa.schema(
@@ -321,22 +321,99 @@ def read_segments(spark, index_dir: str, gens: list[int]) -> DataFrame:
     return out
 
 
-def term_df(index_dir: str, gens: list[int], terms: list[str],
-            buckets: list[int]) -> dict[str, int]:
-    """{term: summed ``df_local``} over the gens' ``bucket=<b>`` files, read
-    on the driver with pyarrow — no Spark job.
+def live_mask(docs: np.ndarray, post_gens: np.ndarray,
+              tomb_ids: np.ndarray, tomb_gens: np.ndarray) -> np.ndarray:
+    """True for each posting that no tombstone at a gen LATER than the
+    posting's own kills (a changed doc is tombstoned and re-added in the
+    same gen, so its fresh postings stay live). Duplicate tombstones for
+    one doc are fine: the newest decides."""
+    if len(tomb_ids) == 0 or len(docs) == 0:
+        return np.ones(len(docs), dtype=bool)
+    order = np.lexsort((tomb_gens, tomb_ids))
+    ids, gens = tomb_ids[order], tomb_gens[order]
+    newest = np.append(ids[1:] != ids[:-1], True)
+    ids, gens = ids[newest], gens[newest]
+    idx = np.minimum(np.searchsorted(ids, docs), len(ids) - 1)
+    return ~((ids[idx] == docs) & (gens[idx] > post_gens))
 
-    The segment-row form of ``read_segments(...).groupBy("term")
-    .agg(sum("df_local"))`` for the given terms: only the (term, df_local)
-    columns are read, and the ``term IN`` filter prunes row groups of the
-    term-sorted files. It counts every posting, dead or not, so it is the
-    document frequency only where no tombstone masks any (a full or
-    compacted generation). Terms with no row are absent."""
-    files = [f for g in gens for b in buckets for f in sorted(glob.glob(
-        os.path.join(mf.segments_dir(index_dir, g), f"bucket={b}", "*.parquet")))]
-    if not files or not terms:
+
+def decode_live(rows: pd.DataFrame, tomb_ids: np.ndarray, tomb_gens: np.ndarray,
+                values: bool = True):
+    """Batch-decode segment rows (with a ``gen`` column) and drop the
+    postings the tombstones kill -> (docs, tfs, dls, live postings per
+    row), rows back to back. ``values=False`` decodes doc ids only (tfs
+    and dls come back None)."""
+    docs, tfs, dls, counts = decode_postings_batch(
+        rows["doc_ids_blob"], rows["tfs_blob"] if values else None,
+        rows["dls_blob"] if values else None)
+    keep = live_mask(docs, np.repeat(rows["gen"].to_numpy(np.int64), counts),
+                     tomb_ids, tomb_gens)
+    if keep.all():
+        return docs, tfs, dls, counts
+    kept = np.zeros(len(keep) + 1, dtype=np.int64)
+    np.cumsum(keep, out=kept[1:])
+    bounds = np.zeros(len(counts) + 1, dtype=np.int64)
+    np.cumsum(counts, out=bounds[1:])
+    return (docs[keep], None if tfs is None else tfs[keep],
+            None if dls is None else dls[keep], np.diff(kept[bounds]))
+
+
+def term_df(index_dir: str, gens: list[int], terms: list[str],
+            buckets: list[int],
+            tombstones: tuple[np.ndarray, np.ndarray] | None = None,
+            range_size: int = 0,
+            max_decode: int | None = None) -> dict[str, int] | None:
+    """{term: live document frequency} over the gens' ``bucket=<b>``
+    files, read on the driver with pyarrow — no Spark job.
+
+    The driver form of ``query_wand.live_df`` for the given terms: the
+    ``term IN`` filter prunes row groups of the term-sorted files, and
+    without ``tombstones`` (a full or compacted chain) df is the sum of
+    the rows' ``df_local``. ``tombstones`` are the chain's (doc ids,
+    gens), with ``range_size`` the chain's ``doc_range_size``: a row whose
+    docID range holds no tombstone still counts its ``df_local``; the
+    doc-id blobs of the other rows are read in a second pass, decoded,
+    and count their live postings. Doc ids are global, so one
+    ``live_mask`` over all the tombstones is exact. When those rows hold
+    more than ``max_decode`` postings, nothing is decoded and the result
+    is None. A term whose postings are all dead maps to 0; terms with no
+    row are absent."""
+
+    def read(columns: list[str], where) -> pa.Table | None:
+        parts = []
+        for g in gens:
+            files = [f for b in buckets for f in sorted(glob.glob(os.path.join(
+                mf.segments_dir(index_dir, g), f"bucket={b}", "*.parquet")))]
+            if files:
+                t = ds.dataset(files, schema=SEGMENT_SCHEMA, format="parquet"
+                               ).to_table(columns=columns, filter=where)
+                parts.append(t.append_column("gen", pa.array(
+                    np.full(t.num_rows, g, dtype=np.int64))))
+        return pa.concat_tables(parts) if parts else None
+
+    if not terms:
         return {}
-    table = ds.dataset(files, schema=SEGMENT_SCHEMA, format="parquet").to_table(
-        columns=["term", "df_local"], filter=pc.field("term").isin(terms))
+    in_terms = pc.field("term").isin(terms)
+    table = read(["term", "df_local"]
+                 + (["range_id"] if tombstones is not None else []), in_terms)
+    if table is None:
+        return {}
+    if tombstones is not None:
+        tomb_ids, tomb_gens = tombstones
+        range_ids = table["range_id"].to_numpy()
+        hit = np.isin(range_ids, np.unique(tomb_ids // range_size))
+        to_decode = table["df_local"].to_numpy()[hit].sum()
+        if max_decode is not None and to_decode > max_decode:
+            return None
+        if hit.any():
+            blobs = read(["term", "doc_ids_blob"], in_terms & pc.field(
+                "range_id").isin(np.unique(range_ids[hit])))
+            live = decode_live(blobs.select(["gen", "doc_ids_blob"]).to_pandas(),
+                               tomb_ids, tomb_gens, values=False)[3]
+            rest = table.filter(pa.array(~hit))
+            table = pa.table({
+                "term": pa.chunked_array(rest["term"].chunks + blobs["term"].chunks,
+                                         rest["term"].type),
+                "df_local": np.concatenate([rest["df_local"].to_numpy(), live])})
     sums = table.group_by("term").aggregate([("df_local", "sum")])
     return dict(zip(sums["term"].to_pylist(), sums["df_local_sum"].to_pylist()))

@@ -10,10 +10,15 @@ generations, and docmap liveness across all of it.
 
 from __future__ import annotations
 
+import glob
+import os
+from pathlib import Path
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from mee_spark import manifest as mf
 from mee_spark.build import build_full_index, build_incremental, live_docmap
 from mee_spark.config import IndexConfig
 from mee_spark.fixtures import gen_pages_for_indices, gen_queries
@@ -114,6 +119,24 @@ def test_generation_ordering_guards(spark, tmp_path_factory):
         build_incremental(spark, snap, CFG, d, gen=5, use_html=False)
     with pytest.raises(ValueError, match="must exceed"):
         compact(spark, d, CFG, new_gen=3)
+    # a full build into the published generation (or below it) is refused
+    # before any write: its docmap and segment files stay byte-identical
+    before = _gen_files(d, 5)
+    other = _snapshot_df(spark, {"c": "delta epsilon"})
+    for gen in (5, 1):
+        with pytest.raises(ValueError, match="must exceed"):
+            build_full_index(spark, other, CFG, d, gen=gen, use_html=False)
+    assert _gen_files(d, 5) == before
+    assert not os.path.exists(mf.gen_dir(d, 1))
+
+
+def _gen_files(d: str, gen: int) -> dict[str, bytes]:
+    """Every file of ``gen``'s docmap and segments, by path."""
+    g = mf.gen_dir(d, gen)
+    files = glob.glob(os.path.join(g, "docmap.parquet", "*")) + glob.glob(
+        os.path.join(g, "segments", "bucket=*", "*.parquet"))
+    assert any("docmap" in f for f in files) and any("segments" in f for f in files)
+    return {f: Path(f).read_bytes() for f in files}
 
 
 # ------------------------------------------------- auto-compaction policy

@@ -11,6 +11,7 @@ import subprocess
 import sys
 import uuid
 
+import numpy as np
 import pandas as pd
 import pyarrow.parquet as pq
 import pytest
@@ -222,12 +223,12 @@ def _text_snapshot(spark, state: dict[str, str]):
     return spark.createDataFrame(sorted(state.items()), "url string, text string")
 
 
-def test_tombstone_chain_matches_oracle(spark, tmp_path_factory):
-    """On a 3-generation chain WAND top-k equals ``OracleIndex`` over the
-    live docs. One url changes in gen 2 and again in gen 3, another is
-    deleted in gen 3, and two query terms have postings only in
-    tombstoned docs, so the live-df decode must mask superseded and
-    deleted postings alike."""
+@pytest.fixture(scope="module")
+def dead_chain(spark, tmp_path_factory):
+    """-> (index dir, live url -> text): a 4-generation chain. One url
+    changes in gen 2 and again in gen 3, gen 4 only deletes another, and
+    two terms (``ghostterm``, ``onlydead``) have postings only in
+    tombstoned docs."""
     base = gen_pages_for_indices(range(N_BASE))
     state = dict(zip(base["url"], base["text"]))
     changed, deleted = sorted(state)[3], sorted(state)[10]
@@ -240,10 +241,32 @@ def test_tombstone_chain_matches_oracle(spark, tmp_path_factory):
     build_incremental(spark, _text_snapshot(spark, state), CFG, d, gen=2,
                       use_html=False)
     state[changed] = original + " edit3 w000001"
-    del state[deleted]
     build_incremental(spark, _text_snapshot(spark, state), CFG, d, gen=3,
                       use_html=False)
-    segs = read_segments(spark, d, [1, 2, 3])
+    del state[deleted]
+    m4 = build_incremental(spark, _text_snapshot(spark, state), CFG, d, gen=4,
+                           use_html=False)
+    assert (m4["metrics"]["docs_added"], m4["metrics"]["docs_changed"],
+            m4["metrics"]["docs_deleted"]) == (0, 0, 1)
+    return d, state
+
+
+def _driver_plan(monkeypatch, on: bool) -> None:
+    """Force the driver tombstone plan on (no limit) or off (no chain
+    qualifies)."""
+    from mee_spark import query_wand
+
+    limit = 1 << 62 if on else -1
+    monkeypatch.setattr(query_wand, "DRIVER_MAX_TOMBSTONES", limit)
+    monkeypatch.setattr(query_wand, "DRIVER_MAX_DECODE_POSTINGS", limit)
+
+
+def test_tombstone_chain_matches_oracle(spark, dead_chain, monkeypatch):
+    """On a 4-generation chain WAND top-k equals ``OracleIndex`` over the
+    live docs, on both sides of the driver-plan gate: the live df must
+    mask superseded and deleted postings alike."""
+    d, state = dead_chain
+    segs = read_segments(spark, d, [1, 2, 3, 4])
     assert segs.filter(F.col("term").isin("ghostterm", "onlydead")).count() == 2
 
     extra = ["ghostterm", "onlydead", "ghostterm w000000", "onlydead w000002",
@@ -252,21 +275,92 @@ def test_tombstone_chain_matches_oracle(spark, tmp_path_factory):
         {"query_id": range(N_QUERIES, N_QUERIES + len(extra)),
          "query_text": extra, "k": 10})], ignore_index=True)
     queries = spark.createDataFrame(qpdf, QUERIES_SCHEMA)
-    a = bm25_topk_wand(spark, d, queries, CFG).collect()
-
-    url_to_id = {r["url"]: r["doc_id"] for r in live_docmap(spark, d, [1, 2, 3]).collect()}
+    url_to_id = {r["url"]: r["doc_id"] for r in live_docmap(spark, d, [1, 2, 3, 4]).collect()}
     assert set(url_to_id) == set(state)
     oracle = OracleIndex.build([(url_to_id[u], t) for u, t in state.items()])
-    got: dict[int, list] = {}
-    for r in sorted(a, key=lambda r: (r["query_id"], r["rank"])):
-        got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
-    for q in qpdf.itertuples():
-        want = sorted(((doc, round(s, 6)) for doc, s in oracle.score_all(q.query_text).items()),
-                      key=lambda x: (-x[1], x[0]))[:q.k]
-        have = got.get(q.query_id, [])
-        assert [doc for doc, _ in have] == [doc for doc, _ in want], q.query_text
-        assert all(abs(x - y) < 1.5e-6 for (_, x), (_, y) in zip(have, want)), q.query_text
-    assert not got.get(N_QUERIES) and not got.get(N_QUERIES + 1)
+    for on in (True, False):
+        with monkeypatch.context() as m:
+            _driver_plan(m, on)
+            a = bm25_topk_wand(spark, d, queries, CFG).collect()
+        got: dict[int, list] = {}
+        for r in sorted(a, key=lambda r: (r["query_id"], r["rank"])):
+            got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
+        for q in qpdf.itertuples():
+            want = sorted(((doc, round(s, 6)) for doc, s in oracle.score_all(q.query_text).items()),
+                          key=lambda x: (-x[1], x[0]))[:q.k]
+            have = got.get(q.query_id, [])
+            assert [doc for doc, _ in have] == [doc for doc, _ in want], (on, q.query_text)
+            assert all(abs(x - y) < 1.5e-6 for (_, x), (_, y) in zip(have, want)), (on, q.query_text)
+        assert not got.get(N_QUERIES) and not got.get(N_QUERIES + 1), on
+
+
+def test_driver_df_matches_live_df(spark, dead_chain):
+    """The driver's live df (``segments.term_df`` with the chain's
+    tombstones) equals the distributed ``live_df`` pass term by term,
+    over every indexed term, and both equal the live docs' df: a term
+    whose postings are all dead counts 0."""
+    from collections import Counter
+
+    import pyarrow.dataset as ds
+
+    from mee_spark.build import read_tombstone_arrays
+    from mee_spark.query_wand import live_df, tombstones_per_range
+    from mee_spark.segments import term_df
+    from mee_spark.textprep import py_tokenize
+
+    d, state = dead_chain
+    gens, buckets = [1, 2, 3, 4], list(range(CFG.num_term_buckets))
+    terms = sorted(set(ds.dataset(_segment_files(d, gens), format="parquet")
+                       .to_table(columns=["term"])["term"].to_pylist()))
+    driver = term_df(d, gens, terms, buckets, read_tombstone_arrays(d, gens),
+                     CFG.doc_range_size)
+    segs = read_segments(spark, d, gens).join(
+        tombstones_per_range(spark, d, gens, CFG.doc_range_size), "range_id", "left")
+    spark_df = {r["term"]: r["df"] for r in live_df(segs).collect()}
+    assert driver == spark_df
+    assert driver["ghostterm"] == driver["onlydead"] == 0
+    live = Counter(t for text in state.values() for t in set(py_tokenize(text)))
+    assert {t: n for t, n in driver.items() if n} == dict(live)
+
+
+def _segment_files(index_dir: str, gens: list[int]) -> list[str]:
+    return sorted(f for g in gens for f in glob.glob(
+        os.path.join(mf.segments_dir(index_dir, g), "bucket=*", "*.parquet")))
+
+
+def test_driver_plan_gate(dead_chain, monkeypatch):
+    """Either limit alone sends a chain to the distributed plan: the
+    tombstone count the manifests record, and the postings of the
+    term-filtered rows in tombstoned docID ranges (the rows the driver
+    would decode), counted before any doc-id blob is read."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    from mee_spark import query_wand
+    from mee_spark.build import read_tombstone_arrays
+
+    d, _ = dead_chain
+    gens, buckets = [1, 2, 3, 4], list(range(CFG.num_term_buckets))
+    chain = mf.manifest_chain(d)
+    terms = ["ghostterm", "w000000", "w000001"]
+    tomb_ids, _ = read_tombstone_arrays(d, gens)
+    assert mf.tombstone_count(chain) == len(tomb_ids) > 0
+    rows = ds.dataset(_segment_files(d, gens), format="parquet").to_table(
+        columns=["range_id", "df_local"], filter=pc.field("term").isin(terms))
+    dead = np.isin(rows["range_id"].to_numpy(), tomb_ids // CFG.doc_range_size)
+    to_decode = int(rows["df_local"].to_numpy()[dead].sum())
+    assert 0 < to_decode < int(rows["df_local"].to_numpy().sum())
+
+    def plan(tombs: int, postings: int):
+        monkeypatch.setattr(query_wand, "DRIVER_MAX_TOMBSTONES", tombs)
+        monkeypatch.setattr(query_wand, "DRIVER_MAX_DECODE_POSTINGS", postings)
+        return query_wand._driver_plan(mf.tombstone_count(chain), d, gens,
+                                       terms, buckets, CFG.doc_range_size)
+
+    (ids, _), df_map = plan(len(tomb_ids), to_decode)
+    assert len(ids) == len(tomb_ids) and df_map["ghostterm"] == 0
+    assert plan(len(tomb_ids) - 1, to_decode) is None
+    assert plan(len(tomb_ids), to_decode - 1) is None
 
 
 def test_identical_snapshot_is_an_empty_delta(spark, snaps, tmp_path_factory):

@@ -113,16 +113,19 @@ def test_wand_equals_exhaustive_spark(built, spark):
 
 
 def test_resume_from_checkpoint(built, spark, tmp_path):
-    """Kill-after-checkpoint simulation (SURVEY §5.2 item 6): deleting one
-    segment file + its checkpoint and rebuilding reproduces the identical
-    index; completed partitions are skipped (their files untouched)."""
+    """Kill-after-checkpoint simulation (SURVEY §5.2 item 6): a generation
+    whose build lost one segment file + its checkpoint before publish,
+    rebuilt with ``resume=True``, reproduces the identical index;
+    completed partitions are skipped (their files untouched)."""
     import glob
 
-    index_dir = built["index_dir"]
+    index_dir = str(tmp_path / "ix")
+    build_full_index(spark, built["pages"], CFG, index_dir, gen=1, publish=False)
     seg_files = sorted(glob.glob(os.path.join(mf.segments_dir(index_dir, 1), "*", "*.parquet")))
     victim = seg_files[0]
     bucket = int(victim.split("bucket=")[1].split("/")[0])
     range_id = int(os.path.basename(victim).split("_")[1].split(".")[0])
+    victim_bytes = open(victim, "rb").read()
     os.remove(victim)
     os.remove(os.path.join(mf.checkpoints_dir(index_dir, 1),
                            mf.checkpoint_name(bucket, range_id)))
@@ -131,10 +134,11 @@ def test_resume_from_checkpoint(built, spark, tmp_path):
 
     build_full_index(spark, built["pages"], CFG, index_dir, gen=1, resume=True)
     # victim restored, survivors not rewritten
-    assert os.path.exists(victim)
+    assert open(victim, "rb").read() == victim_bytes
     assert {f: os.path.getmtime(f) for f in survivors} == mtimes_before
     res = bm25_topk_wand(spark, index_dir, built["queries"], CFG)
-    assert collect_ranked(res)  # non-empty and consistent
+    assert collect_ranked(res) == collect_ranked(
+        bm25_topk_wand(spark, built["index_dir"], built["queries"], CFG))
 
 
 EDGE_QUERIES = [
@@ -212,12 +216,13 @@ def test_batch_past_2048_queries(built, spark):
         assert big.get(qid) == small.get(qid % len(pool)), qid
 
 
-def test_single_query_jobs_per_call(built, spark):
+def test_single_query_jobs_per_call(built, spark, tmp_path):
     """On a fresh single-generation index the driver plans a query: the
     vocabulary probe of a pandas-created query frame, the df lookup and
     building the plan submit no Spark job, and the collect submits at
     most four (the scoring plan). An all-OOV or empty batch is answered
-    without any job."""
+    without any job. A small tombstone chain is planned on the driver
+    too, and its collect submits at most five."""
     qpdf = gen_queries_pandas(100)
     one = qpdf[qpdf["query_text"].str.split().str.len() == 3].iloc[[0]]
     single = spark.createDataFrame(one, QUERIES_SCHEMA)
@@ -236,3 +241,19 @@ def test_single_query_jobs_per_call(built, spark):
         res, jobs = _jobs(spark, lambda: bm25_topk_wand(
             spark, built["index_dir"], batch, CFG).collect())
         assert res == [] and jobs == []
+
+    # a two-generation tombstone chain below the driver-plan gate: reading
+    # the tombstones, the live df and building the plan submit no job, and
+    # the collect submits at most five
+    from mee_spark.build import build_incremental
+    from mee_spark.fixtures import PAGES_SCHEMA, gen_snapshots_pandas
+
+    snaps = gen_snapshots_pandas(100)
+    d = str(tmp_path / "ix")
+    build_full_index(spark, spark.createDataFrame(snaps[1], PAGES_SCHEMA), CFG, d, gen=1)
+    m = build_incremental(spark, spark.createDataFrame(snaps[2], PAGES_SCHEMA), CFG, d, gen=2)
+    assert m["metrics"]["docs_changed"] + m["metrics"]["docs_deleted"] > 0
+    plan, jobs = _jobs(spark, lambda: bm25_topk_wand(spark, d, single, CFG))
+    assert jobs == []
+    res, jobs = _jobs(spark, plan.collect)
+    assert res and len(jobs) <= 5, jobs

@@ -11,7 +11,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from mee_spark.query_wand import joined_tombstones, live_mask
+from mee_spark.query_wand import joined_tombstones
+from mee_spark.segments import live_mask
 
 
 def _mask(docs, post_gens, tomb_ids, tomb_gens):

@@ -8,6 +8,8 @@ and zero row-at-a-time Python (BatchEvalPython) anywhere.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 import __spark_entry__ as em
@@ -195,3 +197,92 @@ def test_live_df_pass_repartitions_by_range(spark, tmp_path):
         for col in ("tfs_blob", "dls_blob", "block_last_doc", "block_max_tf",
                     "block_min_dl", "df_local", "n_postings"):
             assert col not in read_schema, (col, scan)
+
+
+def _chain_query_plans(spark, tmp_path, monkeypatch) -> dict[bool, list[str]]:
+    """{driver plan forced on/off: the executed plans of a one-query
+    ``bm25_topk_wand`` call on a two-generation tombstone chain, as
+    lines}: every frame the call collects while planning, then the frame
+    it returns."""
+    from mee_spark import query_wand
+    from mee_spark.build import build_full_index, build_incremental
+    from mee_spark.config import IndexConfig
+    from mee_spark.fixtures import (
+        PAGES_SCHEMA,
+        QUERIES_SCHEMA,
+        gen_queries_pandas,
+        gen_snapshots_pandas,
+    )
+
+    cfg = IndexConfig(num_doc_partitions=4, num_term_buckets=8,
+                      doc_range_size=64, block_size=16)
+    snaps = gen_snapshots_pandas(100)
+    d = str(tmp_path / "ix")
+    build_full_index(spark, spark.createDataFrame(snaps[1], PAGES_SCHEMA), cfg, d, gen=1)
+    build_incremental(spark, spark.createDataFrame(snaps[3], PAGES_SCHEMA), cfg, d, gen=2)
+    qdf = spark.createDataFrame(gen_queries_pandas(100).iloc[[60]], QUERIES_SCHEMA)
+    collect = type(qdf).collect
+    out = {}
+    for driver in (True, False):
+        plans: list[str] = []
+
+        def capture(self):
+            plans.append(plan_of(self))
+            return collect(self)
+
+        with monkeypatch.context() as m:
+            limit = 1 << 62 if driver else -1
+            m.setattr(query_wand, "DRIVER_MAX_TOMBSTONES", limit)
+            m.setattr(query_wand, "DRIVER_MAX_DECODE_POSTINGS", limit)
+            m.setattr(type(qdf), "collect", capture)
+            plans.append(plan_of(query_wand.bm25_topk_wand(spark, d, qdf, cfg)))
+        out[driver] = "\n".join(plans).splitlines()
+    return out
+
+
+def test_small_chain_plans_tombstones_on_the_driver(spark, tmp_path, monkeypatch):
+    """Below the gate a chain query runs neither distributed tombstone
+    pass: no ``live_df`` decode (MapInPandas) and no ``range_id``
+    group-by of the tombstones. Its tombstones come from a broadcast
+    local relation. Above the gate both passes are back."""
+    range_groupby = re.compile(r"Exchange hashpartitioning\(range_id#\d+L?, \d+\)")
+    plans = _chain_query_plans(spark, tmp_path, monkeypatch)
+    lines = plans[True]
+    assert not [ln for ln in lines if "MapInPandas" in ln], lines
+    assert not [ln for ln in lines if range_groupby.search(ln)], lines
+    at = [i for i, ln in enumerate(lines) if "LocalTableScan [range_id" in ln]
+    assert len(at) == 1, lines
+    assert "BroadcastExchange" in lines[at[0] - 1], lines
+
+    lines = plans[False]
+    assert [ln for ln in lines if "MapInPandas" in ln], lines
+    assert [ln for ln in lines if range_groupby.search(ln)], lines
+    assert not [ln for ln in lines if "LocalTableScan [range_id" in ln], lines
+
+
+def test_add_only_chain_plans_no_tombstones(spark, tmp_path):
+    """An add-only incremental generation writes no tombstone (its
+    manifest records no deleted or changed doc), so a query on its chain
+    plans like a single generation's: no tombstone side at all."""
+    from mee_spark import manifest as mf
+    from mee_spark.build import build_full_index, build_incremental
+    from mee_spark.config import IndexConfig
+    from mee_spark.fixtures import (
+        PAGES_SCHEMA,
+        QUERIES_SCHEMA,
+        gen_queries_pandas,
+        gen_snapshots_pandas,
+    )
+    from mee_spark.query_wand import bm25_topk_wand
+
+    cfg = IndexConfig(num_doc_partitions=4, num_term_buckets=8,
+                      doc_range_size=64, block_size=16)
+    pages = gen_snapshots_pandas(100)[1]
+    d = str(tmp_path / "ix")
+    build_full_index(spark, spark.createDataFrame(pages.iloc[:80], PAGES_SCHEMA), cfg, d, gen=1)
+    m = build_incremental(spark, spark.createDataFrame(pages, PAGES_SCHEMA), cfg, d, gen=2)
+    assert m["metrics"]["docs_added"] == 20
+    assert mf.tombstone_count(mf.manifest_chain(d)) == 0
+    qdf = spark.createDataFrame(gen_queries_pandas(100).iloc[[60]], QUERIES_SCHEMA)
+    plan = plan_of(bm25_topk_wand(spark, d, qdf, cfg))
+    assert "tomb_ids" not in plan and "MapInPandas" not in plan, plan
