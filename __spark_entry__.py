@@ -16,8 +16,12 @@ the driver compares row-count + schema + order-insensitive value hash.
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
 from collections.abc import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -75,8 +79,23 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _queries_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(BM25_QUERIES, QUERIES_SCHEMA)
+def _queries_df(spark: SparkSession, queries: list = BM25_QUERIES) -> DataFrame:
+    """The (query_id, query_text, k) rows as a local relation built from
+    an Arrow table (a list becomes an RDD scan), so the WAND vocabulary
+    probe of a registered query runs no Spark job."""
+    qid, text, k = zip(*queries)
+    return spark.createDataFrame(pa.table({
+        "query_id": pa.array(qid, pa.int32()), "query_text": text,
+        "k": pa.array(k, pa.int32())}), QUERIES_SCHEMA)
+
+
+def _temp_index(prefix: str) -> str:
+    """A fresh index directory in the system temp dir, removed when the
+    interpreter exits: the frames built on it read it lazily, so it must
+    outlive the call that builds it."""
+    index_dir = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, index_dir, ignore_errors=True)
+    return index_dir
 
 
 # ------------------------------------------------------------- fulltext
@@ -109,8 +128,6 @@ def q_fulltext_bm25_wand(spark, sf_dir):
     segments from the documents table, answer with block-max WAND, map
     docIDs back through the docmap. Same SQL oracle as the exhaustive
     path — segments+codec+WAND must reproduce textbook BM25 exactly."""
-    import tempfile
-
     from mee_spark.build import build_full_index, live_docmap
     from mee_spark.config import IndexConfig
     from mee_spark.query_wand import bm25_topk_wand
@@ -121,7 +138,7 @@ def q_fulltext_bm25_wand(spark, sf_dir):
     # so the engine's dense-rank docIDs coincide with the table's ids
     pages_like = _read(spark, sf_dir, "documents").select(
         F.format_string("%012d", F.col("doc_id")).alias("url"), "text")
-    index_dir = tempfile.mkdtemp(prefix="mee_wand_ix_")
+    index_dir = _temp_index("mee_wand_ix_")
     build_full_index(spark, pages_like, cfg, index_dir, gen=1, use_html=False)
     res = bm25_topk_wand(spark, index_dir, _queries_df(spark), cfg, round_digits=6)
     docmap = live_docmap(spark, index_dir, [1]).select(
@@ -145,8 +162,6 @@ LIFECYCLE_QUERIES = BM25_QUERIES + [(8, "lifecycle marker fresh page", 10)]
 def _build_lifecycle_index(spark, sf_dir):
     """Full build of snapshot-1 + snapshot-diff incremental build of
     snapshot-2 (edit rules above) into a temp index; -> (index_dir, cfg)."""
-    import tempfile
-
     from mee_spark.build import build_full_index, build_incremental
     from mee_spark.config import IndexConfig
 
@@ -166,7 +181,7 @@ def _build_lifecycle_index(spark, sf_dir):
         F.concat(F.col("text"), F.lit(_LC_FRESH)).alias("text"))
     snap2 = edited.unionByName(added)
 
-    index_dir = tempfile.mkdtemp(prefix="mee_lifecycle_ix_")
+    index_dir = _temp_index("mee_lifecycle_ix_")
     build_full_index(spark, snap1, cfg, index_dir, gen=1, use_html=False)
     build_incremental(spark, snap2, cfg, index_dir, gen=2, use_html=False)
     return index_dir, cfg
@@ -176,8 +191,8 @@ def _lifecycle_query(spark, index_dir, cfg, gens):
     from mee_spark.build import live_docmap
     from mee_spark.query_wand import bm25_topk_wand
 
-    qdf = spark.createDataFrame(LIFECYCLE_QUERIES, QUERIES_SCHEMA)
-    res = bm25_topk_wand(spark, index_dir, qdf, cfg, round_digits=6)
+    res = bm25_topk_wand(spark, index_dir, _queries_df(spark, LIFECYCLE_QUERIES),
+                         cfg, round_digits=6)
     docmap = live_docmap(spark, index_dir, gens).select(
         F.col("doc_id").alias("_engine_id"),
         F.col("url").cast("long").alias("orig_doc_id"))
@@ -216,8 +231,6 @@ def q_fulltext_wand_conjunctive(spark, sf_dir):
     """AND semantics on the PRODUCTION (segment/WAND) path: build real
     segments, rank only docs containing every query term — the posting
     intersection evaluated per docID range inside the Arrow scorer."""
-    import tempfile
-
     from mee_spark.build import build_full_index, live_docmap
     from mee_spark.config import IndexConfig
     from mee_spark.query_wand import bm25_topk_wand
@@ -226,7 +239,7 @@ def q_fulltext_wand_conjunctive(spark, sf_dir):
                       doc_range_size=256, block_size=64)
     pages_like = _read(spark, sf_dir, "documents").select(
         F.format_string("%012d", F.col("doc_id")).alias("url"), "text")
-    index_dir = tempfile.mkdtemp(prefix="mee_wandc_ix_")
+    index_dir = _temp_index("mee_wandc_ix_")
     build_full_index(spark, pages_like, cfg, index_dir, gen=1, use_html=False)
     res = bm25_topk_wand(spark, index_dir, _queries_df(spark), cfg,
                          round_digits=6, conjunctive=True)

@@ -11,7 +11,8 @@ between paths is a tested invariant.
 
 ``ranked`` is the single home of the tie-break rule: every Spark BM25
 engine ranks its scored rows through it, by (rounded score desc, doc_id
-asc). The numpy kernels select their local top-k by the same key.
+asc). The numpy kernels select their local top-k by the same key, and
+``ranked_np`` ranks rows scored on the driver by it.
 
 Note tnorm is df-independent: block-max metadata stores max tnorm per
 block, and idf is applied at query time from *current* global df — so
@@ -86,3 +87,24 @@ def ranked(scored: DataFrame, round_digits: int | None, limit: Column | int,
                 F.col("doc_id").cast("long").alias("doc_id"),
                 score.alias("score"))
     )
+
+
+def ranked_np(key: np.ndarray, doc_id: np.ndarray, score: np.ndarray,
+              limit: np.ndarray | int, round_digits: int | None
+              ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """numpy twin of ``ranked`` for rows already on the driver -> (key,
+    rank, doc_id, score) arrays, sorted by key then rank: rank ≤ ``limit``
+    per key, by (score desc, doc_id asc), the score rounded like the
+    kernels round it (``np.round``; on their already-rounded scores
+    ``F.round`` is an identity too). ``limit`` is a constant or one value
+    per row (the queries' ``k``)."""
+    if round_digits is not None:
+        score = np.round(score, round_digits)
+    order = np.lexsort((doc_id, -score, key))
+    key, doc_id, score = key[order], doc_id[order], score[order]
+    limit = np.broadcast_to(limit, len(order))[order]
+    starts = np.flatnonzero(np.append(True, key[1:] != key[:-1]))
+    rank = np.arange(1, len(key) + 1) - np.repeat(
+        starts, np.diff(np.append(starts, len(key))))
+    keep = rank <= limit
+    return key[keep], rank[keep], doc_id[keep], score[keep]

@@ -314,8 +314,7 @@ def build_incremental(
             "partitions": part_metrics,
         },
         lineage=lineage or {},
-        extra={"has_tombstones": True, "config": layout_record(cfg),
-               "next_doc_id": next_doc_id},
+        extra={"config": layout_record(cfg), "next_doc_id": next_doc_id},
     )
     if publish:
         mf.publish(index_dir, gen)

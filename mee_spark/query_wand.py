@@ -25,17 +25,26 @@ designed for 10^12 docs / 1000 executors:
    indexed term is answered without one. Above the gate df needs a
    doc-id decode in Spark (``live_df``). It reaches the scorers as a
    dict in their closure.
-3. **Distributed scoring** — matched segment rows join the broadcast
-   query set, then ``groupBy(range_id, _qshard).applyInPandas``: each
-   group scores ONE docID range for one shard of the query batch
-   (``_qshard = query_id mod 8``), decoding each (term, gen) row once for
-   every query of the shard and running block-max WAND per query. A head
-   term's 10^12-posting list is never gathered anywhere — each range
-   holds ≤ doc_range_size of it, scored independently with a local
-   top-k heap.
-4. **Global top-k** — union of per-range top-k candidates (≤ k·ranges
-   rows, tiny) through ``bm25.ranked``'s window, the exhaustive plan's
-   own rank step: ties break (score desc, doc_id asc).
+3. **Scoring** — matched segment rows join the query set, and the
+   scorer (``_make_scorer``) runs once per docID range over a shard of
+   the batch, decoding each (term, gen) row once for every query of the
+   shard and running block-max WAND per query. Where it runs is one gate
+   (``DRIVER_MAX_SCORE_POSTINGS``), checked on the summed ``df_local`` of
+   the term-filtered rows that step 2 read, before any blob is read:
+   below it the driver reads those rows with pyarrow and scores every
+   range itself, over the whole batch (``driver_scored``), with no
+   Spark job — a Spark call's fixed job, stage and Python-worker cost
+   is most of a small batch's CPU. Above it (or when df needed ``live_df``) the rows join the
+   broadcast query set, then ``groupBy(range_id, _qshard)
+   .applyInPandas``, one group per range and shard of the batch
+   (``_qshard = query_id mod 8``). A head term's 10^12-posting list is
+   never gathered anywhere — each range holds ≤ doc_range_size of it,
+   scored independently with a local top-k heap.
+4. **Global top-k** — the union of per-range top-k candidates (≤ k·ranges
+   rows, tiny) is ranked by (score desc, doc_id asc): in Spark by
+   ``bm25.ranked``'s window, the exhaustive plan's own rank step; on the
+   driver by its numpy twin ``bm25.ranked_np``, whose rows come back as a
+   local relation (collecting it runs no job).
 
 Generations: rows from every gen in the manifest chain are unioned;
 tombstones (docs deleted/re-indexed in later gens) are masked out at
@@ -47,10 +56,11 @@ chain whose manifests record no tombstone plans like a single
 generation. Otherwise a gate on driver memory decides where they come
 from (``_driver_plan``, no Spark job): the manifests' tombstone count,
 then the postings of the term-filtered rows the driver would decode.
-Below it the driver reads them with pyarrow and ships the per-range
-arrays as a broadcast local relation (``tombstone_relation``), so a
-small chain's query runs the same scoring jobs as a single
-generation's. Above it they stay a DataFrame end to end
+Below it the driver reads them with pyarrow and attaches the per-range
+arrays to the segment rows (``tombstone_table``): in the driver scoring
+plan directly, in Spark as a broadcast local relation
+(``tombstone_relation``), so a small chain's query runs the same scoring
+as a single generation's. Above it they stay a DataFrame end to end
 (``tombstones_per_range``, a group-by the join consumes, and the
 ``live_df`` pass): a high-churn 10^12-doc index accumulates tombstones
 far past driver memory between compactions, and its head terms' dead
@@ -64,19 +74,24 @@ from collections import Counter
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from mee_spark import manifest as mf
-from mee_spark.bm25 import idf_np, ranked
+from mee_spark.bm25 import idf_np, ranked, ranked_np
 from mee_spark.build import read_tombstone_arrays, read_tombstones
 from mee_spark.config import IndexConfig
-from mee_spark.segments import decode_live, read_segments, term_df
+from mee_spark.segments import decode_live, read_rows, read_segments, term_df
 from mee_spark.textprep import tokenize_col
 from mee_spark.wand import TermCursor, exhaustive_topk_vec, wand_topk
 
 _LOCAL_SCHEMA = "query_id int, k int, doc_id long, score double"
+_RESULT_SCHEMA = "query_id int, rank long, doc_id long, score double"
+# the segment columns the scorer reads
+_SCORE_COLUMNS = ["term", "range_id", "doc_ids_blob", "tfs_blob", "dls_blob",
+                  "block_last_doc", "block_max_tf", "block_min_dl"]
 
 # The gate of the driver tombstone plan (see ``_driver_plan``); above
 # either limit the chain takes the distributed plan. The gate bounds driver
@@ -93,6 +108,19 @@ DRIVER_MAX_TOMBSTONES = 1 << 20
 # blobs, decoded ids, the live mask) and took about 1.4 CPU-us: 2^22 keep
 # the decode near 0.2 GB and 6 CPU-s, on top of the tombstone-free df read.
 DRIVER_MAX_DECODE_POSTINGS = 1 << 22
+# The gate of the driver scoring plan (see ``driver_scored``): a batch whose
+# term-filtered rows hold at most this many postings (dead ones included,
+# summed over every gen) is scored on the driver. Each path forced in turn
+# on single-generation indexes of 3k-300k docs (2048-doc ranges, 16
+# buckets; local[4], 4 vCPU), with queries of 1-12 terms and 100-query
+# batches (7 to 7.6M postings): the driver took 54-86% less CPU and 15-85%
+# less wall on every point, the largest too (7.6M postings: 14.1 vs 39.2
+# CPU-s, 9.8 vs 11.5 s wall), so the gate bounds driver memory and the
+# driver's one core. Scoring raised the driver's peak by 11-40 bytes per
+# posting (blobs, the joined frame, one range's decode at a time) and took
+# 1.0-2.4 CPU-us each: 2^22, the driver decode budget above, keep a batch
+# near 0.17 GB and 4-10 CPU-s on the driver.
+DRIVER_MAX_SCORE_POSTINGS = 1 << 22
 
 
 def query_vocab(queries: DataFrame, num_term_buckets: int) -> list:
@@ -146,37 +174,46 @@ def tombstones_per_range(spark: SparkSession, index_dir: str, gens: list[int],
     )
 
 
-def tombstone_relation(spark: SparkSession, tomb_ids: np.ndarray,
-                       tomb_gens: np.ndarray, range_size: int) -> DataFrame:
+def tombstone_table(tomb_ids: np.ndarray, tomb_gens: np.ndarray,
+                    range_size: int) -> pa.Table:
     """``tombstones_per_range``'s rows, sorted the same way, built on the
-    driver from the chain's tombstone arrays: a local relation, so
-    building and broadcasting it runs no job. It is created from an Arrow
-    table, which builds with the session's Arrow conversion on or off and
-    never turns an id into a Python object."""
+    driver from the chain's tombstone arrays as an Arrow table: one row
+    per tombstoned docID range, no Python int per id."""
     order = np.lexsort((tomb_gens, tomb_ids))
     ids, gens = tomb_ids[order], tomb_gens[order]
     ranges, starts = np.unique(ids // range_size, return_index=True)
     offsets = pa.array(np.append(starts, len(ids)).astype(np.int32))
-    return spark.createDataFrame(pa.table({
+    return pa.table({
         "range_id": pa.array(ranges),
         "tomb_ids": pa.ListArray.from_arrays(offsets, pa.array(ids)),
         "tomb_gens": pa.ListArray.from_arrays(offsets, pa.array(gens)),
-    }), "range_id long, tomb_ids array<long>, tomb_gens array<long>")
+    })
+
+
+def tombstone_relation(spark: SparkSession, tomb_ids: np.ndarray,
+                       tomb_gens: np.ndarray, range_size: int) -> DataFrame:
+    """``tombstone_table`` as a local relation, so building and
+    broadcasting it runs no job. An Arrow table builds with the session's
+    Arrow conversion on or off."""
+    return spark.createDataFrame(
+        tombstone_table(tomb_ids, tomb_gens, range_size),
+        "range_id long, tomb_ids array<long>, tomb_gens array<long>")
 
 
 def _driver_plan(n_tombs: int, index_dir: str, gens: list[int],
                  terms: list[str], buckets: list[int], range_size: int):
-    """(tombstone arrays, live df) of a tombstone chain small enough to
-    plan on the driver, read with pyarrow (no Spark job); None above the
-    gate. ``n_tombs``, the manifests' count, is checked before anything
-    is read; the decode budget is checked on the term-filtered rows,
-    before their doc-id blobs are read."""
+    """(tombstone arrays, live df, postings) of a tombstone chain small
+    enough to plan on the driver, read with pyarrow (no Spark job; see
+    ``segments.term_df``); None above the gate. ``n_tombs``, the
+    manifests' count, is checked before anything is read; the decode
+    budget is checked on the term-filtered rows, before their doc-id
+    blobs are read."""
     if n_tombs > DRIVER_MAX_TOMBSTONES:
         return None
     tombstones = read_tombstone_arrays(index_dir, gens)
-    df_map = term_df(index_dir, gens, terms, buckets, tombstones, range_size,
-                     max_decode=DRIVER_MAX_DECODE_POSTINGS)
-    return None if df_map is None else (tombstones, df_map)
+    df = term_df(index_dir, gens, terms, buckets, tombstones, range_size,
+                 max_decode=DRIVER_MAX_DECODE_POSTINGS)
+    return None if df is None else (tombstones, *df)
 
 
 def joined_tombstones(rows: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
@@ -300,6 +337,41 @@ def _make_scorer(df_map: dict, n_docs: int, avgdl: float,
     return score_group
 
 
+def driver_scored(spark: SparkSession, index_dir: str, gens: list[int],
+                  buckets: list[int], qrows: list[tuple], terms: list[str],
+                  tombstones: tuple[np.ndarray, np.ndarray] | None,
+                  range_size: int, score_group, round_digits: int | None
+                  ) -> DataFrame:
+    """Steps 3-4 on the driver, for a batch whose postings fit
+    ``DRIVER_MAX_SCORE_POSTINGS``: the same rows, scorer and rank as the
+    distributed plan, with no Spark job.
+
+    The matched segment rows are read once with pyarrow and joined with
+    the query terms ``qrows`` (query_id, k, term) and, left, each range's
+    tombstones (``tombstone_table``, as the distributed plan joins
+    them). ``score_group`` (``_make_scorer``) then scores each docID range
+    once, for every query, and ``ranked_np`` ranks the union. The rows
+    come back as a local relation built from an Arrow table: collecting
+    it runs no job."""
+    segs = read_rows(index_dir, gens, buckets, _SCORE_COLUMNS,
+                     pc.field("term").isin(terms)).to_pandas()
+    joined = segs.merge(pd.DataFrame(qrows, columns=["query_id", "k", "term"]),
+                        on="term")
+    if tombstones is not None:
+        joined = joined.merge(
+            tombstone_table(*tombstones, range_size).to_pandas(),
+            on="range_id", how="left")
+    local = pd.concat([score_group((rid,), pdf)
+                       for rid, pdf in joined.groupby("range_id", sort=False)],
+                      ignore_index=True)
+    q, rank, doc, score = ranked_np(
+        local["query_id"].to_numpy(), local["doc_id"].to_numpy(),
+        local["score"].to_numpy(), local["k"].to_numpy(), round_digits)
+    return spark.createDataFrame(pa.table({
+        "query_id": q, "rank": rank, "doc_id": doc, "score": score}),
+        _RESULT_SCHEMA)
+
+
 def bm25_topk_wand(
     spark: SparkSession,
     index_dir: str,
@@ -317,8 +389,10 @@ def bm25_topk_wand(
     extra movement).
 
     The driver plans the batch from its whole vocabulary (one collect of
-    every query's tokens), so it holds O(batch) query terms; the index
-    side stays distributed."""
+    every query's tokens), so it holds O(batch) query terms. It scores
+    the batch itself only when the postings fit
+    ``DRIVER_MAX_SCORE_POSTINGS``; otherwise the index side stays
+    distributed."""
     # tombstones mask doc_id // doc_range_size ranges and terms prune to
     # hash % num_term_buckets directories: both come from the chain
     chain, cfg = mf.open_chain(index_dir, cfg, gen)
@@ -338,31 +412,42 @@ def bm25_topk_wand(
     terms = sorted(bucket_of)
     buckets = sorted(set(bucket_of.values()))
     n_tombs = mf.tombstone_count(chain)
-    tombs = df_map = None
+    tombstones = df_map = None
     if n_tombs == 0:
         # every posting is live, so df is the sum of the rows'
         # df_local: a pyarrow read of the pruned files
-        df_map = term_df(index_dir, gens, terms, buckets)
+        df_map, postings = term_df(index_dir, gens, terms, buckets)
     elif (small := _driver_plan(n_tombs, index_dir, gens, terms, buckets,
                                 cfg.doc_range_size)) is not None:
-        # small chain: tombstones and live df come from pyarrow reads,
-        # and the tombstones ship to the scorers as a local relation
-        (tomb_ids, tomb_gens), df_map = small
-        tombs = F.broadcast(tombstone_relation(
-            spark, tomb_ids, tomb_gens, cfg.doc_range_size))
-    else:
-        tombs = tombstones_per_range(spark, index_dir, gens, cfg.doc_range_size)
+        # small chain: tombstones and live df come from pyarrow reads
+        tombstones, df_map, postings = small
     if df_map is not None:
         # a query with no live indexed term is answered without a job
         terms = sorted(t for t, n in df_map.items() if n > 0)
     if not terms:
         return _empty_result(queries)
+
+    def scorer(df_map: dict):
+        return _make_scorer(df_map, n_docs, avgdl, cfg.k1, cfg.b,
+                            cfg.wand_min_postings, round_to=round_digits,
+                            n_terms_map=n_terms_map)
+
+    buckets = sorted({bucket_of[t] for t in terms})
+    if df_map is not None and postings <= DRIVER_MAX_SCORE_POSTINGS:
+        # a small batch: scoring it costs less than the jobs would
+        return driver_scored(spark, index_dir, gens, buckets, qrows, terms,
+                             tombstones, cfg.doc_range_size, scorer(df_map),
+                             round_digits)
     segs = read_segments(spark, index_dir, gens).filter(
-        F.col("bucket").isin(sorted({bucket_of[t] for t in terms}))
-        & F.col("term").isin(terms))
-    if tombs is not None:
-        # tombstones join per docID range, so the df pass and the
-        # scorers see exactly their range's tombstones
+        F.col("bucket").isin(buckets) & F.col("term").isin(terms))
+    # tombstones join per docID range, so the df pass and the scorers see
+    # exactly their range's tombstones: from the driver's arrays as a
+    # broadcast local relation below the gate, a group-by above it
+    if tombstones is not None:
+        segs = segs.join(F.broadcast(tombstone_relation(
+            spark, *tombstones, cfg.doc_range_size)), "range_id", "left")
+    elif n_tombs and (tombs := tombstones_per_range(
+            spark, index_dir, gens, cfg.doc_range_size)) is not None:
         segs = segs.join(tombs, "range_id", "left")
     if df_map is None:
         df_map = {r["term"]: int(r["df"]) for r in live_df(segs).collect()}
@@ -388,10 +473,8 @@ def bm25_topk_wand(
         segs.join(F.broadcast(qt), "term")
         .withColumn("_qshard", F.pmod(F.col("query_id"), F.lit(n_qshards)))
     )
-    scorer = _make_scorer(df_map, n_docs, avgdl, cfg.k1, cfg.b,
-                          cfg.wand_min_postings,
-                          round_to=round_digits, n_terms_map=n_terms_map)
-    local = joined.groupBy("range_id", "_qshard").applyInPandas(scorer, _LOCAL_SCHEMA)
+    local = joined.groupBy("range_id", "_qshard").applyInPandas(
+        scorer(df_map), _LOCAL_SCHEMA)
 
     # scores leave the scorer already rounded (the kernels select by the
     # rounded key); ranked's rounding is an identity re-statement there

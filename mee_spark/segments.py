@@ -358,13 +358,33 @@ def decode_live(rows: pd.DataFrame, tomb_ids: np.ndarray, tomb_gens: np.ndarray,
             None if dls is None else dls[keep], np.diff(kept[bounds]))
 
 
+def read_rows(index_dir: str, gens: list[int], buckets: list[int],
+              columns: list[str], where) -> pa.Table | None:
+    """The ``columns`` of the gens' ``bucket=<b>`` segment rows that pass
+    ``where``, plus a ``gen`` column, read on the driver with pyarrow — no
+    Spark job. A ``term`` predicate prunes row groups of the term-sorted
+    files. None when no gen has a file in those buckets."""
+    parts = []
+    for g in gens:
+        files = [f for b in buckets for f in sorted(glob.glob(os.path.join(
+            mf.segments_dir(index_dir, g), f"bucket={b}", "*.parquet")))]
+        if files:
+            t = ds.dataset(files, schema=SEGMENT_SCHEMA, format="parquet"
+                           ).to_table(columns=columns, filter=where)
+            parts.append(t.append_column("gen", pa.array(
+                np.full(t.num_rows, g, dtype=np.int64))))
+    return pa.concat_tables(parts) if parts else None
+
+
 def term_df(index_dir: str, gens: list[int], terms: list[str],
             buckets: list[int],
             tombstones: tuple[np.ndarray, np.ndarray] | None = None,
             range_size: int = 0,
-            max_decode: int | None = None) -> dict[str, int] | None:
-    """{term: live document frequency} over the gens' ``bucket=<b>``
-    files, read on the driver with pyarrow — no Spark job.
+            max_decode: int | None = None) -> tuple[dict[str, int], int] | None:
+    """({term: live document frequency}, postings) over the gens'
+    ``bucket=<b>`` files, read on the driver with pyarrow — no Spark job.
+    ``postings`` is the summed ``df_local`` of the term-filtered rows,
+    dead postings included: what scoring them would decode.
 
     The driver form of ``query_wand.live_df`` for the given terms: the
     ``term IN`` filter prunes row groups of the term-sorted files, and
@@ -378,26 +398,14 @@ def term_df(index_dir: str, gens: list[int], terms: list[str],
     more than ``max_decode`` postings, nothing is decoded and the result
     is None. A term whose postings are all dead maps to 0; terms with no
     row are absent."""
-
-    def read(columns: list[str], where) -> pa.Table | None:
-        parts = []
-        for g in gens:
-            files = [f for b in buckets for f in sorted(glob.glob(os.path.join(
-                mf.segments_dir(index_dir, g), f"bucket={b}", "*.parquet")))]
-            if files:
-                t = ds.dataset(files, schema=SEGMENT_SCHEMA, format="parquet"
-                               ).to_table(columns=columns, filter=where)
-                parts.append(t.append_column("gen", pa.array(
-                    np.full(t.num_rows, g, dtype=np.int64))))
-        return pa.concat_tables(parts) if parts else None
-
     if not terms:
-        return {}
+        return {}, 0
     in_terms = pc.field("term").isin(terms)
-    table = read(["term", "df_local"]
-                 + (["range_id"] if tombstones is not None else []), in_terms)
+    table = read_rows(index_dir, gens, buckets, ["term", "df_local"]
+                      + (["range_id"] if tombstones is not None else []), in_terms)
     if table is None:
-        return {}
+        return {}, 0
+    postings = int(table["df_local"].to_numpy().sum())
     if tombstones is not None:
         tomb_ids, tomb_gens = tombstones
         range_ids = table["range_id"].to_numpy()
@@ -406,8 +414,9 @@ def term_df(index_dir: str, gens: list[int], terms: list[str],
         if max_decode is not None and to_decode > max_decode:
             return None
         if hit.any():
-            blobs = read(["term", "doc_ids_blob"], in_terms & pc.field(
-                "range_id").isin(np.unique(range_ids[hit])))
+            blobs = read_rows(index_dir, gens, buckets, ["term", "doc_ids_blob"],
+                              in_terms & pc.field("range_id").isin(
+                                  np.unique(range_ids[hit])))
             live = decode_live(blobs.select(["gen", "doc_ids_blob"]).to_pandas(),
                                tomb_ids, tomb_gens, values=False)[3]
             rest = table.filter(pa.array(~hit))
@@ -416,4 +425,5 @@ def term_df(index_dir: str, gens: list[int], terms: list[str],
                                          rest["term"].type),
                 "df_local": np.concatenate([rest["df_local"].to_numpy(), live])})
     sums = table.group_by("term").aggregate([("df_local", "sum")])
-    return dict(zip(sums["term"].to_pylist(), sums["df_local_sum"].to_pylist()))
+    return (dict(zip(sums["term"].to_pylist(), sums["df_local_sum"].to_pylist())),
+            postings)

@@ -81,19 +81,29 @@ def test_cli_lifecycle(spark, corpus, tmp_path, capsys):
     assert sorted(removed) == [1, 2]
 
 
-def test_cli_query_jobs(spark, corpus, tmp_path, capsys):
-    """``query`` on a single-generation index runs no job beyond
-    ``bm25_topk_wand``'s scoring plan (at most four): the query frame is
-    a local relation, so the vocabulary probe runs none, and the result
-    rows are ranked on the driver."""
+def test_cli_query_jobs(spark, corpus, tmp_path, capsys, monkeypatch):
+    """``query`` on a single-generation index runs no job: the query frame
+    is a local relation, so the vocabulary probe runs none, and below the
+    driver scoring budget the batch is scored and ranked on the driver.
+    Above it (the budget forced to -1) it runs no job beyond
+    ``bm25_topk_wand``'s scoring plan (at most four)."""
+    from mee_spark import query_wand
+
     idx = str(tmp_path / "idxq")
     main(_args(["build", "--pages", corpus, "--gen", "1"], idx))
     capsys.readouterr()
-    _, jobs = _jobs(spark, lambda: main(_args(
-        ["query", "--query", "w000000 w000123 w000007", "--k", "5"], idx)))
-    lines = [json.loads(x) for x in capsys.readouterr().out.strip().splitlines()]
-    assert lines and [l["rank"] for l in lines] == list(range(1, len(lines) + 1))
-    assert len(jobs) <= 4, jobs
+
+    def query_jobs() -> list:
+        _, jobs = _jobs(spark, lambda: main(_args(
+            ["query", "--query", "w000000 w000123 w000007", "--k", "5"], idx)))
+        lines = [json.loads(x) for x in capsys.readouterr().out.strip().splitlines()]
+        assert lines and [l["rank"] for l in lines] == list(range(1, len(lines) + 1))
+        return jobs
+
+    assert query_jobs() == []
+    monkeypatch.setattr(query_wand, "DRIVER_MAX_SCORE_POSTINGS", -1)
+    jobs = query_jobs()
+    assert 0 < len(jobs) <= 4, jobs
 
 
 def test_cli_rebuild_writes_the_next_generation(spark, tmp_path, capsys):

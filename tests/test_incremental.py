@@ -264,7 +264,12 @@ def _driver_plan(monkeypatch, on: bool) -> None:
 def test_tombstone_chain_matches_oracle(spark, dead_chain, monkeypatch):
     """On a 4-generation chain WAND top-k equals ``OracleIndex`` over the
     live docs, on both sides of the driver-plan gate: the live df must
-    mask superseded and deleted postings alike."""
+    mask superseded and deleted postings alike. The batch takes the
+    distributed scoring plan (``test_driver_scoring_matches_spark`` holds
+    the driver scoring plan to it)."""
+    from mee_spark import query_wand
+
+    monkeypatch.setattr(query_wand, "DRIVER_MAX_SCORE_POSTINGS", -1)
     d, state = dead_chain
     segs = read_segments(spark, d, [1, 2, 3, 4])
     assert segs.filter(F.col("term").isin("ghostterm", "onlydead")).count() == 2
@@ -312,8 +317,8 @@ def test_driver_df_matches_live_df(spark, dead_chain):
     gens, buckets = [1, 2, 3, 4], list(range(CFG.num_term_buckets))
     terms = sorted(set(ds.dataset(_segment_files(d, gens), format="parquet")
                        .to_table(columns=["term"])["term"].to_pylist()))
-    driver = term_df(d, gens, terms, buckets, read_tombstone_arrays(d, gens),
-                     CFG.doc_range_size)
+    driver, postings = term_df(d, gens, terms, buckets,
+                               read_tombstone_arrays(d, gens), CFG.doc_range_size)
     segs = read_segments(spark, d, gens).join(
         tombstones_per_range(spark, d, gens, CFG.doc_range_size), "range_id", "left")
     spark_df = {r["term"]: r["df"] for r in live_df(segs).collect()}
@@ -321,6 +326,9 @@ def test_driver_df_matches_live_df(spark, dead_chain):
     assert driver["ghostterm"] == driver["onlydead"] == 0
     live = Counter(t for text in state.values() for t in set(py_tokenize(text)))
     assert {t: n for t, n in driver.items() if n} == dict(live)
+    # every term is queried: the postings are every row's, dead ones included
+    assert postings == sum(int(pq.read_table(f, columns=["df_local"])["df_local"]
+                               .to_numpy().sum()) for f in _segment_files(d, gens))
 
 
 def _segment_files(index_dir: str, gens: list[int]) -> list[str]:
@@ -357,10 +365,33 @@ def test_driver_plan_gate(dead_chain, monkeypatch):
         return query_wand._driver_plan(mf.tombstone_count(chain), d, gens,
                                        terms, buckets, CFG.doc_range_size)
 
-    (ids, _), df_map = plan(len(tomb_ids), to_decode)
+    (ids, _), df_map, postings = plan(len(tomb_ids), to_decode)
     assert len(ids) == len(tomb_ids) and df_map["ghostterm"] == 0
+    assert postings == int(rows["df_local"].to_numpy().sum())
     assert plan(len(tomb_ids) - 1, to_decode) is None
     assert plan(len(tomb_ids), to_decode - 1) is None
+
+
+@pytest.mark.parametrize("conjunctive", [False, True], ids=["or", "and"])
+def test_driver_scoring_matches_spark(spark, dead_chain, monkeypatch, conjunctive):
+    """On the 4-generation chain the driver scoring plan returns exactly
+    the distributed plan's rows (ids, ranks, scores) for the 100-query
+    pool plus queries of dead-only terms: it attaches each range's
+    tombstones as the distributed plan's join does."""
+    from test_index_e2e import scored_both_ways
+
+    d, _ = dead_chain
+    qpdf = gen_queries_pandas(100)
+    extra = ["ghostterm", "onlydead w000002", "edit3 w000001 w000000"]
+    qpdf = pd.concat([qpdf, pd.DataFrame(
+        {"query_id": range(100, 100 + len(extra)), "query_text": extra, "k": 10})],
+        ignore_index=True)
+    driver, distributed = scored_both_ways(
+        spark, monkeypatch, d, spark.createDataFrame(qpdf, QUERIES_SCHEMA), CFG,
+        conjunctive=conjunctive)
+    assert driver and driver == distributed
+    if not conjunctive:  # AND: "onlydead" has no live doc
+        assert {r[0] for r in driver} >= {101, 102}
 
 
 def test_identical_snapshot_is_an_empty_delta(spark, snaps, tmp_path_factory):

@@ -10,6 +10,7 @@ import pandas as pd
 import pytest
 
 from mee_spark import manifest as mf
+from mee_spark import query_wand
 from mee_spark.build import build_full_index, live_docmap
 from mee_spark.config import IndexConfig
 from mee_spark.fixtures import QUERIES_SCHEMA, gen_pages, gen_queries, gen_queries_pandas
@@ -81,8 +82,30 @@ def _jobs(spark, fn):
     return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_wand_matches_oracle(built, spark):
-    """Rank identity (docIDs AND scores) vs the pure-Python oracle."""
+def _distributed_scoring(monkeypatch) -> None:
+    """Send every batch to the distributed scoring plan (no batch fits the
+    driver scoring budget)."""
+    monkeypatch.setattr(query_wand, "DRIVER_MAX_SCORE_POSTINGS", -1)
+
+
+def scored_both_ways(spark, monkeypatch, index_dir, queries, cfg, **kw):
+    """(driver-scored rows, Spark-scored rows) of one ``bm25_topk_wand``
+    call, each sorted: the scoring budget forced past every batch, then
+    to -1."""
+    def rows(limit: int) -> list:
+        with monkeypatch.context() as m:
+            m.setattr(query_wand, "DRIVER_MAX_SCORE_POSTINGS", limit)
+            return sorted(tuple(r) for r in bm25_topk_wand(
+                spark, index_dir, queries, cfg, **kw).collect())
+
+    return rows(1 << 62), rows(-1)
+
+
+def test_wand_matches_oracle(built, spark, monkeypatch):
+    """Rank identity (docIDs AND scores) vs the pure-Python oracle, on the
+    distributed scoring plan (``test_driver_scoring_equals_spark`` holds
+    the driver plan to it)."""
+    _distributed_scoring(monkeypatch)
     oracle = _oracle(built, spark)
     res = collect_ranked(
         bm25_topk_wand(spark, built["index_dir"], built["queries"], CFG, round_digits=None)
@@ -95,8 +118,10 @@ def test_wand_matches_oracle(built, spark):
             assert s_have == pytest.approx(s_want, abs=1e-9)
 
 
-def test_wand_equals_exhaustive_spark(built, spark):
-    """Block-max pruning is loss-free vs the declarative DataFrame path."""
+def test_wand_equals_exhaustive_spark(built, spark, monkeypatch):
+    """Block-max pruning is loss-free vs the declarative DataFrame path,
+    on the distributed scoring plan."""
+    _distributed_scoring(monkeypatch)
     stats = built["stats"]
     exh = collect_ranked(bm25_topk_exhaustive(
         built["postings"], built["queries"], stats["N"], stats["avgdl"], round_digits=6))
@@ -216,23 +241,35 @@ def test_batch_past_2048_queries(built, spark):
         assert big.get(qid) == small.get(qid % len(pool)), qid
 
 
-def test_single_query_jobs_per_call(built, spark, tmp_path):
+def test_single_query_jobs_per_call(built, spark, tmp_path, monkeypatch):
     """On a fresh single-generation index the driver plans a query: the
     vocabulary probe of a pandas-created query frame, the df lookup and
-    building the plan submit no Spark job, and the collect submits at
-    most four (the scoring plan). An all-OOV or empty batch is answered
-    without any job. A small tombstone chain is planned on the driver
-    too, and its collect submits at most five."""
+    building the plan submit no Spark job. Below the scoring budget the
+    driver scores the batch too, so the collect submits none either;
+    above it (the budget forced to -1) it submits at most four (the
+    scoring plan). An all-OOV or empty batch is answered without any job.
+    A small tombstone chain is planned on the driver too: its collect
+    submits no job below the budget and at most five above it."""
     qpdf = gen_queries_pandas(100)
     one = qpdf[qpdf["query_text"].str.split().str.len() == 3].iloc[[0]]
     single = spark.createDataFrame(one, QUERIES_SCHEMA)
     rows, jobs = _jobs(spark, lambda: query_vocab(single, CFG.num_term_buckets))
     assert len(rows) == 1 and len(rows[0]["terms"]) == 3 and jobs == []
-    plan, jobs = _jobs(spark, lambda: bm25_topk_wand(
-        spark, built["index_dir"], single, CFG))
-    assert jobs == []
-    res, jobs = _jobs(spark, plan.collect)
-    assert res and len(jobs) <= 4, jobs
+
+    def call_jobs(index_dir: str) -> list:
+        """Jobs of one call's collect; building its plan submits none."""
+        plan, jobs = _jobs(spark, lambda: bm25_topk_wand(
+            spark, index_dir, single, CFG))
+        assert jobs == []
+        res, jobs = _jobs(spark, plan.collect)
+        assert res
+        return jobs
+
+    assert call_jobs(built["index_dir"]) == []
+    with monkeypatch.context() as mp:
+        _distributed_scoring(mp)
+        jobs = call_jobs(built["index_dir"])
+        assert 0 < len(jobs) <= 4, jobs
 
     oov = spark.createDataFrame(pd.DataFrame(
         {"query_id": [0, 1], "query_text": ["zzq1oov zzq2oov", "!!!"], "k": 10}),
@@ -243,8 +280,7 @@ def test_single_query_jobs_per_call(built, spark, tmp_path):
         assert res == [] and jobs == []
 
     # a two-generation tombstone chain below the driver-plan gate: reading
-    # the tombstones, the live df and building the plan submit no job, and
-    # the collect submits at most five
+    # the tombstones, the live df and building the plan submit no job
     from mee_spark.build import build_incremental
     from mee_spark.fixtures import PAGES_SCHEMA, gen_snapshots_pandas
 
@@ -253,7 +289,20 @@ def test_single_query_jobs_per_call(built, spark, tmp_path):
     build_full_index(spark, spark.createDataFrame(snaps[1], PAGES_SCHEMA), CFG, d, gen=1)
     m = build_incremental(spark, spark.createDataFrame(snaps[2], PAGES_SCHEMA), CFG, d, gen=2)
     assert m["metrics"]["docs_changed"] + m["metrics"]["docs_deleted"] > 0
-    plan, jobs = _jobs(spark, lambda: bm25_topk_wand(spark, d, single, CFG))
-    assert jobs == []
-    res, jobs = _jobs(spark, plan.collect)
-    assert res and len(jobs) <= 5, jobs
+    assert call_jobs(d) == []
+    with monkeypatch.context() as mp:
+        _distributed_scoring(mp)
+        jobs = call_jobs(d)
+        assert 0 < len(jobs) <= 5, jobs
+
+
+@pytest.mark.parametrize("conjunctive", [False, True], ids=["or", "and"])
+@pytest.mark.parametrize("round_digits", [6, None], ids=["round6", "unrounded"])
+def test_driver_scoring_equals_spark(built, spark, monkeypatch, conjunctive,
+                                     round_digits):
+    """The driver scoring plan returns exactly the distributed plan's rows
+    (ids, ranks and scores, bit for bit) for the 100-query pool."""
+    driver, distributed = scored_both_ways(
+        spark, monkeypatch, built["index_dir"], built["queries"], CFG,
+        round_digits=round_digits, conjunctive=conjunctive)
+    assert driver and driver == distributed

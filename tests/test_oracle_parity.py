@@ -68,3 +68,37 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert set(df.columns) == {"query_id", "rank", "doc_id", "score"}
+
+
+_TEMP_INDEX_SCRIPT = r"""
+import sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession
+import __spark_entry__ as entrymod
+
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.sql.shuffle.partitions", "4")
+         .config("spark.ui.enabled", "false").getOrCreate())
+spark.sparkContext.setLogLevel("OFF")
+rows = entrymod.q_fulltext_bm25_wand(spark, sys.argv[2]).collect()
+print(len(rows))
+"""
+
+
+def test_wand_queries_remove_their_index_at_exit(tmp_path):
+    """A WAND registered query builds its index in the system temp dir
+    (the frame it returns reads the index lazily); the index is removed
+    when the interpreter exits."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    out = subprocess.run(
+        [sys.executable, "-c", _TEMP_INDEX_SCRIPT, repo, SF_DIR],
+        env={**os.environ, "TMPDIR": str(tmp)}, capture_output=True,
+        text=True, timeout=600)
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert int(out.stdout.split()[-1]) > 0
+    assert not [p.name for p in tmp.iterdir() if p.name.startswith("mee_")]

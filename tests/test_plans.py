@@ -203,7 +203,8 @@ def _chain_query_plans(spark, tmp_path, monkeypatch) -> dict[bool, list[str]]:
     """{driver plan forced on/off: the executed plans of a one-query
     ``bm25_topk_wand`` call on a two-generation tombstone chain, as
     lines}: every frame the call collects while planning, then the frame
-    it returns."""
+    it returns. The driver scoring gate is forced off, so both calls
+    return the Spark scoring plan."""
     from mee_spark import query_wand
     from mee_spark.build import build_full_index, build_incremental
     from mee_spark.config import IndexConfig
@@ -234,6 +235,7 @@ def _chain_query_plans(spark, tmp_path, monkeypatch) -> dict[bool, list[str]]:
             limit = 1 << 62 if driver else -1
             m.setattr(query_wand, "DRIVER_MAX_TOMBSTONES", limit)
             m.setattr(query_wand, "DRIVER_MAX_DECODE_POSTINGS", limit)
+            m.setattr(query_wand, "DRIVER_MAX_SCORE_POSTINGS", -1)
             m.setattr(type(qdf), "collect", capture)
             plans.append(plan_of(query_wand.bm25_topk_wand(spark, d, qdf, cfg)))
         out[driver] = "\n".join(plans).splitlines()
