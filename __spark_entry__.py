@@ -89,13 +89,13 @@ def _queries_df(spark: SparkSession, queries: list = BM25_QUERIES) -> DataFrame:
         "k": pa.array(k, pa.int32())}), QUERIES_SCHEMA)
 
 
-def _temp_index(prefix: str) -> str:
-    """A fresh index directory in the system temp dir, removed when the
-    interpreter exits: the frames built on it read it lazily, so it must
-    outlive the call that builds it."""
-    index_dir = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, index_dir, ignore_errors=True)
-    return index_dir
+def _temp_dir(prefix: str) -> str:
+    """A fresh directory (an index, a stream's staged input) in the system
+    temp dir, removed when the interpreter exits: the frames built on it
+    read it lazily, so it must outlive the call that builds it."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 # ------------------------------------------------------------- fulltext
@@ -138,7 +138,7 @@ def q_fulltext_bm25_wand(spark, sf_dir):
     # so the engine's dense-rank docIDs coincide with the table's ids
     pages_like = _read(spark, sf_dir, "documents").select(
         F.format_string("%012d", F.col("doc_id")).alias("url"), "text")
-    index_dir = _temp_index("mee_wand_ix_")
+    index_dir = _temp_dir("mee_wand_ix_")
     build_full_index(spark, pages_like, cfg, index_dir, gen=1, use_html=False)
     res = bm25_topk_wand(spark, index_dir, _queries_df(spark), cfg, round_digits=6)
     docmap = live_docmap(spark, index_dir, [1]).select(
@@ -181,7 +181,7 @@ def _build_lifecycle_index(spark, sf_dir):
         F.concat(F.col("text"), F.lit(_LC_FRESH)).alias("text"))
     snap2 = edited.unionByName(added)
 
-    index_dir = _temp_index("mee_lifecycle_ix_")
+    index_dir = _temp_dir("mee_lifecycle_ix_")
     build_full_index(spark, snap1, cfg, index_dir, gen=1, use_html=False)
     build_incremental(spark, snap2, cfg, index_dir, gen=2, use_html=False)
     return index_dir, cfg
@@ -239,7 +239,7 @@ def q_fulltext_wand_conjunctive(spark, sf_dir):
                       doc_range_size=256, block_size=64)
     pages_like = _read(spark, sf_dir, "documents").select(
         F.format_string("%012d", F.col("doc_id")).alias("url"), "text")
-    index_dir = _temp_index("mee_wandc_ix_")
+    index_dir = _temp_dir("mee_wandc_ix_")
     build_full_index(spark, pages_like, cfg, index_dir, gen=1, use_html=False)
     res = bm25_topk_wand(spark, index_dir, _queries_df(spark), cfg,
                          round_digits=6, conjunctive=True)
@@ -1336,7 +1336,6 @@ def q_stream_windowed_counts(spark, sf_dir):
     """mee_spark.streaming.windowed_counts over a streamed events table:
     tumbling 1-hour event-time windows per event_type, complete-mode
     totals (equal to the batch aggregation of the same input)."""
-    import tempfile
     import uuid
 
     from mee_spark.streaming import windowed_counts
@@ -1346,7 +1345,7 @@ def q_stream_windowed_counts(spark, sf_dir):
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # the file stream source requires a DIRECTORY; stage the driver's
     # single parquet file into one
-    stage = tempfile.mkdtemp(prefix="stream_wc_src_")
+    stage = _temp_dir("stream_wc_src_")
     _read(spark, sf_dir, "events").write.mode("overwrite").parquet(stage)
     schema = ("event_id long, ts timestamp, user_id long, "
               "event_type string, value double, props string")
@@ -1369,14 +1368,13 @@ def q_stream_dedup_urls(spark, sf_dir):
     over a 4-micro-batch stream of duplicate-heavy synthetic urls built
     from the documents table; the emitted url SET is exactly-once across
     batches regardless of batch order — the oracle is DISTINCT."""
-    import tempfile
     import uuid
 
     from mee_spark.streaming import stateful_url_dedup
 
     # stage the single driver parquet into 4 files so maxFilesPerTrigger=1
     # yields 4 micro-batches — the cross-batch state path runs for real
-    stage = tempfile.mkdtemp(prefix="stream_dedup_src_")
+    stage = _temp_dir("stream_dedup_src_")
     _read(spark, sf_dir, "documents").repartition(4).write.mode(
         "overwrite").parquet(stage)
     schema = "doc_id long, text string, lang string, source string, n_chars long"

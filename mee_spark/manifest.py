@@ -55,7 +55,7 @@ def checkpoint_name(bucket: int, range_id: int) -> str:
 
 def write_manifest(index_dir: str, gen: int, *, parent: int | None,
                    n_docs_live: int, sum_dl_live: int, metrics: dict,
-                   lineage: dict, extra: dict | None = None) -> dict:
+                   lineage: dict, **extra) -> dict:
     m = {
         "generation": gen,
         "parent": parent,
@@ -64,9 +64,8 @@ def write_manifest(index_dir: str, gen: int, *, parent: int | None,
         "avgdl": (sum_dl_live / n_docs_live) if n_docs_live else 0.0,
         "metrics": metrics,
         "lineage": lineage,
+        **extra,
     }
-    if extra:
-        m.update(extra)
     os.makedirs(_manifest_dir(index_dir), exist_ok=True)
     tmp = manifest_path(index_dir, gen) + ".tmp"
     with open(tmp, "w") as f:
@@ -122,23 +121,16 @@ def tombstone_count(chain: list[dict]) -> int:
                for m in chain)
 
 
-def open_chain(index_dir: str, cfg: IndexConfig, gen: int | None = None,
-               new_gen: int | None = None) -> tuple[list[dict], IndexConfig]:
+def open_chain(index_dir: str, cfg: IndexConfig,
+               gen: int | None = None) -> tuple[list[dict], IndexConfig]:
     """-> (manifests root→``gen`` (default: published), ``cfg`` with the
     chain root's recorded layout). After the first full build the chain
     is the one source of the layout: tombstones mask
     ``doc_id // doc_range_size`` ranges and terms live in
-    ``hash % num_term_buckets`` directories. ``new_gen``, a generation
-    about to be written, must exceed every generation in the chain:
-    last-writer-wins masks compare generation numbers."""
+    ``hash % num_term_buckets`` directories."""
     chain = manifest_chain(index_dir, gen)
     if not chain:
         raise ValueError(f"no published index at {index_dir}")
-    max_gen = max(m["generation"] for m in chain)
-    if new_gen is not None and new_gen <= max_gen:
-        raise ValueError(
-            f"generation {new_gen} must exceed the chain's max ({max_gen}); "
-            "last-writer-wins is ordered by generation number")
     return chain, dataclasses.replace(cfg, **chain[0]["config"])
 
 
@@ -186,10 +178,8 @@ def reset_incomplete(index_dir: str, gen: int) -> None:
     if cur == gen:
         raise ValueError(f"gen {gen} is published; refusing to reset it")
     shutil.rmtree(gen_dir(index_dir, gen), ignore_errors=True)
-    try:
+    with contextlib.suppress(FileNotFoundError):
         os.remove(manifest_path(index_dir, gen))
-    except FileNotFoundError:
-        pass
 
 
 def gc_orphans(index_dir: str, ttl_sec: float = 0.0) -> list[int]:

@@ -16,11 +16,14 @@ hands the survivors to the writer core every build shares
 (``segments.write_segment``: atomic rename, ``.done`` checkpoints,
 resume skip). Only compressed blobs cross the shuffle, and postings never
 leave the task that decodes them.
+
+It commits through ``build.write_generation``, the one commit path of
+every generation. Every generation records ``next_doc_id``; ids are never
+recycled, compaction included: it keeps the chain tail's watermark.
 """
 
 from __future__ import annotations
 
-import os
 import time
 
 import numpy as np
@@ -30,12 +33,12 @@ from pyspark.sql import functions as F
 
 from mee_spark import manifest as mf
 from mee_spark.build import (
-    _concurrent,
-    _docmap_path,
+    Generation,
     live_docmap,
     read_tombstones,
+    write_generation,
 )
-from mee_spark.config import IndexConfig, layout_record
+from mee_spark.config import IndexConfig
 from mee_spark.query_wand import joined_tombstones, tombstones_per_range
 from mee_spark.segments import (
     METRICS_SCHEMA,
@@ -179,33 +182,30 @@ def compact(spark: SparkSession, index_dir: str, cfg: IndexConfig,
             new_gen: int, publish: bool = True,
             extra_metrics: dict | None = None) -> dict:
     """Rewrite the whole published chain as single generation ``new_gen``,
-    in the chain's layout (``cfg``'s layout fields are not read).
+    in the chain's layout (``cfg``'s layout fields are not read), through
+    the commit path every generation shares (``build.write_generation``).
 
     ``extra_metrics`` entries are merged into the manifest's metrics
     BEFORE it is persisted (callers like ``maybe_compact`` record their
     trigger decision in the audit trail this way)."""
-    t0 = time.monotonic()
-    chain, cfg = mf.open_chain(index_dir, cfg, new_gen=new_gen)
+    chain, cfg = mf.open_chain(index_dir, cfg)
     gens = [m["generation"] for m in chain]
-    os.makedirs(mf.gen_dir(index_dir, new_gen), exist_ok=True)
-    # consolidated docmap = live rows only, written while the segment
-    # merge runs (neither reads the other's output)
-    live = live_docmap(spark, index_dir, gens)
-    part_metrics = _concurrent(
-        lambda: live.write.mode("overwrite").parquet(
-            _docmap_path(index_dir, new_gen)),
-        lambda: compact_segments(spark, index_dir, gens, cfg, new_gen))
     tail = chain[-1]
-    wall = time.monotonic() - t0
-    m = mf.write_manifest(
-        index_dir, new_gen, parent=None,
-        n_docs_live=tail["n_docs_live"], sum_dl_live=tail["sum_dl_live"],
-        metrics={"kind": "compaction", "wall_sec": wall,
-                 "compacted_gens": gens, "partitions": part_metrics,
-                 **(extra_metrics or {})},
-        lineage={"compacted_from": gens},
-        extra={"config": layout_record(cfg)},
-    )
-    if publish:
-        mf.publish(index_dir, new_gen)
-    return m
+
+    def stage(gdir: str) -> Generation:
+        # consolidated docmap = live rows only, written while the segment
+        # merge runs (neither reads the other's output)
+        return Generation(
+            docmap=live_docmap(spark, index_dir, gens),
+            segments=lambda: compact_segments(spark, index_dir, gens, cfg,
+                                              new_gen),
+            n_docs=tail["n_docs_live"], n_docs_live=tail["n_docs_live"],
+            sum_dl_live=tail["sum_dl_live"],
+            # the tail's watermark: the ids of docs deleted along the chain
+            # stay retired, so compaction recycles none of them
+            next_doc_id=tail["next_doc_id"],
+            metrics={"compacted_gens": gens, **(extra_metrics or {})})
+
+    return write_generation(index_dir, cfg, new_gen, "compaction", chain,
+                            stage, lineage={"compacted_from": gens},
+                            publish=publish)

@@ -178,11 +178,12 @@ def test_deleted_docs_disappear_from_results(spark, snaps, tmp_path_factory):
 
 
 def test_docid_watermark_from_manifest(spark, snaps, tmp_path_factory):
-    """The manifest chain carries next_doc_id (the fresh-ID watermark) so
+    """Every manifest carries next_doc_id (the fresh-ID watermark), so
     build_incremental appends without a max(doc_id) scan of the live
-    docmap; IDs are monotone across the chain and never collide, and a
-    pre-watermark manifest (field absent) falls back to the scan."""
-    import json
+    docmap. IDs are monotone across the chain and never recycled, also
+    across a compaction: a compaction keeps the tail's watermark, so the
+    id of a deleted doc is never handed to a new url."""
+    from mee_spark.merge import compact
 
     d = str(tmp_path_factory.mktemp("wmark"))
     m1 = build_full_index(spark, snaps[1], CFG, d, gen=1)
@@ -198,25 +199,32 @@ def test_docid_watermark_from_manifest(spark, snaps, tmp_path_factory):
     fresh2 = dm2.filter(f"doc_id >= {n1}").count()
     assert fresh2 == added2
     assert dm2.agg({"doc_id": "max"}).collect()[0][0] == m2["next_doc_id"] - 1
-
-    # fallback: strip the field from the newest manifest -> the scan path
-    # must produce the same watermark-respecting assignment
-    mp = mf.manifest_path(d, 2)
-    rec = json.load(open(mp))
-    del rec["next_doc_id"]
-    json.dump(rec, open(mp, "w"))
-    m3 = build_incremental(spark, snaps[3], CFG, d, gen=3)
-    dm3_max = spark.read.parquet(f"{d}/gen=3/docmap.parquet").agg(
-        {"doc_id": "max"}).collect()[0][0]
-    assert m3["next_doc_id"] >= m2["next_doc_id"] - 1
-    if m3["metrics"]["docs_added"]:
-        assert dm3_max == m3["next_doc_id"] - 1
     # no duplicate ids anywhere in the chain's union of fresh assignments
     ids1 = {r[0] for r in spark.read.parquet(f"{d}/gen=1/docmap.parquet")
             .select("doc_id").collect()}
     fresh_ids2 = {r[0] for r in dm2.filter(f"doc_id >= {n1}")
                   .select("doc_id").collect()}
     assert not (ids1 & fresh_ids2)
+
+    # delete the highest-id doc, compact, then add one url: the new url
+    # gets an id at or above the watermark, not the deleted doc's id
+    top = dm2.orderBy(F.col("doc_id").desc()).first()
+    assert top["doc_id"] == m2["next_doc_id"] - 1
+    snap3 = snaps[2].filter(F.col("url") != top["url"])
+    m3 = build_incremental(spark, snap3, CFG, d, gen=3)
+    assert m3["metrics"]["docs_deleted"] == 1
+    m4 = compact(spark, d, CFG, new_gen=4)
+    fresh_url = "http://fresh.example/added-after-compaction"
+    m5 = build_incremental(spark, snap3.unionByName(
+        snaps[2].filter(F.col("url") == top["url"])
+        .withColumn("url", F.lit(fresh_url))), CFG, d, gen=5)
+    assert m5["metrics"]["docs_added"] == 1
+    new_id = spark.read.parquet(f"{d}/gen=5/docmap.parquet").filter(
+        F.col("url") == fresh_url).first()["doc_id"]
+    assert new_id > top["doc_id"], "a deleted doc's id was recycled"
+    assert m4["next_doc_id"] == m3["next_doc_id"] <= new_id
+    marks = [m["next_doc_id"] for m in (m1, m2, m3, m4, m5)]
+    assert marks == sorted(marks) and marks[-1] == new_id + 1
 
 
 def _text_snapshot(spark, state: dict[str, str]):
@@ -545,11 +553,33 @@ def test_resume_after_segment_failure_equals_clean_build():
     assert rec["leftover"] == []
 
 
-def test_concurrent_surfaces_side_error_after_inline_write():
+def test_side_writes_keep_the_callers_job_group(spark, snaps, tmp_path_factory):
+    """``_concurrent`` runs side writes on ``InheritableThread``s: with a
+    job group set, every job of ``build_incremental`` — the tombstone and
+    docmap side writes included — lands in that group, none outside it."""
+    d = str(tmp_path_factory.mktemp("jobgroup"))
+    build_full_index(spark, snaps[1], CFG, d, gen=1)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    group = f"incr-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "one incremental build")
+    try:
+        build_incremental(spark, snaps[2], CFG, d, gen=2)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+    assert tracker.getJobIdsForGroup(group)
+
+
+def test_concurrent_surfaces_side_error_after_inline_write(spark):
     """``_concurrent``: a failing side write raises its own exception,
     and only once the inline write has finished; an inline failure still
     waits for every side write (a same-gen retry must never overlap a
-    stale write of the same path)."""
+    stale write of the same path). Its threads copy the active
+    SparkContext's local properties when they start."""
     import threading
     import time
 
