@@ -123,31 +123,47 @@ def q_fulltext_doclen(spark, sf_dir):
     return _docs(spark, sf_dir).select("doc_id", "dl")
 
 
-def q_fulltext_bm25_wand(spark, sf_dir):
-    """The PRODUCTION path under the oracle gate: build compressed
-    segments from the documents table, answer with block-max WAND, map
-    docIDs back through the docmap. Same SQL oracle as the exhaustive
-    path — segments+codec+WAND must reproduce textbook BM25 exactly."""
-    from mee_spark.build import build_full_index, live_docmap
+def _wand_index(spark, sf_dir, prefix):
+    """Full build (gen 1) of the documents table into a fresh temp index
+    -> (index_dir, cfg). url = zero-padded doc_id: lexicographic url order
+    == doc_id order, so the engine's dense-rank docIDs coincide with the
+    table's ids."""
+    from mee_spark.build import build_full_index
     from mee_spark.config import IndexConfig
-    from mee_spark.query_wand import bm25_topk_wand
 
     cfg = IndexConfig(num_doc_partitions=8, num_term_buckets=8,
                       doc_range_size=256, block_size=64)
-    # url = zero-padded doc_id: lexicographic url order == doc_id order,
-    # so the engine's dense-rank docIDs coincide with the table's ids
     pages_like = _read(spark, sf_dir, "documents").select(
         F.format_string("%012d", F.col("doc_id")).alias("url"), "text")
-    index_dir = _temp_dir("mee_wand_ix_")
+    index_dir = _temp_dir(prefix)
     build_full_index(spark, pages_like, cfg, index_dir, gen=1, use_html=False)
-    res = bm25_topk_wand(spark, index_dir, _queries_df(spark), cfg, round_digits=6)
-    docmap = live_docmap(spark, index_dir, [1]).select(
+    return index_dir, cfg
+
+
+def _wand_query(spark, index_dir, cfg, gens, queries=BM25_QUERIES,
+                conjunctive=False):
+    """``bm25_topk_wand`` over the published index, its docIDs mapped back
+    to the table's through the live docmap of ``gens``."""
+    from mee_spark.build import live_docmap
+    from mee_spark.query_wand import bm25_topk_wand
+
+    res = bm25_topk_wand(spark, index_dir, _queries_df(spark, queries), cfg,
+                         round_digits=6, conjunctive=conjunctive)
+    docmap = live_docmap(spark, index_dir, gens).select(
         F.col("doc_id").alias("_engine_id"),
         F.col("url").cast("long").alias("orig_doc_id"))
     return (
         res.join(F.broadcast(docmap), res["doc_id"] == docmap["_engine_id"])
         .select("query_id", "rank", F.col("orig_doc_id").alias("doc_id"), "score")
     )
+
+
+def q_fulltext_bm25_wand(spark, sf_dir):
+    """The PRODUCTION path under the oracle gate: build compressed
+    segments from the documents table, answer with block-max WAND, map
+    docIDs back through the docmap. Same SQL oracle as the exhaustive
+    path — segments+codec+WAND must reproduce textbook BM25 exactly."""
+    return _wand_query(spark, *_wand_index(spark, sf_dir, "mee_wand_ix_"), [1])
 
 
 # deterministic snapshot-2 edit rules shared by the Spark lifecycle query
@@ -162,14 +178,10 @@ LIFECYCLE_QUERIES = BM25_QUERIES + [(8, "lifecycle marker fresh page", 10)]
 def _build_lifecycle_index(spark, sf_dir):
     """Full build of snapshot-1 + snapshot-diff incremental build of
     snapshot-2 (edit rules above) into a temp index; -> (index_dir, cfg)."""
-    from mee_spark.build import build_full_index, build_incremental
-    from mee_spark.config import IndexConfig
+    from mee_spark.build import build_incremental
 
-    cfg = IndexConfig(num_doc_partitions=8, num_term_buckets=8,
-                      doc_range_size=256, block_size=64)
     docs = _read(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("long").alias("doc_id"), "text")
-    snap1 = docs.select(F.format_string("%012d", F.col("doc_id")).alias("url"), "text")
     kept = docs.filter(F.col("doc_id") % _LC_DEL != 3)
     edited = kept.select(
         F.format_string("%012d", F.col("doc_id")).alias("url"),
@@ -181,25 +193,9 @@ def _build_lifecycle_index(spark, sf_dir):
         F.concat(F.col("text"), F.lit(_LC_FRESH)).alias("text"))
     snap2 = edited.unionByName(added)
 
-    index_dir = _temp_dir("mee_lifecycle_ix_")
-    build_full_index(spark, snap1, cfg, index_dir, gen=1, use_html=False)
+    index_dir, cfg = _wand_index(spark, sf_dir, "mee_lifecycle_ix_")
     build_incremental(spark, snap2, cfg, index_dir, gen=2, use_html=False)
     return index_dir, cfg
-
-
-def _lifecycle_query(spark, index_dir, cfg, gens):
-    from mee_spark.build import live_docmap
-    from mee_spark.query_wand import bm25_topk_wand
-
-    res = bm25_topk_wand(spark, index_dir, _queries_df(spark, LIFECYCLE_QUERIES),
-                         cfg, round_digits=6)
-    docmap = live_docmap(spark, index_dir, gens).select(
-        F.col("doc_id").alias("_engine_id"),
-        F.col("url").cast("long").alias("orig_doc_id"))
-    return (
-        res.join(F.broadcast(docmap), res["doc_id"] == docmap["_engine_id"])
-        .select("query_id", "rank", F.col("orig_doc_id").alias("doc_id"), "score")
-    )
 
 
 def q_fulltext_lifecycle(spark, sf_dir):
@@ -212,7 +208,7 @@ def q_fulltext_lifecycle(spark, sf_dir):
     BM25 directly on the edited corpus. (This queries the chain WITH
     tombstones on purpose; fulltext_compacted gates the compacted form.)"""
     index_dir, cfg = _build_lifecycle_index(spark, sf_dir)
-    return _lifecycle_query(spark, index_dir, cfg, [1, 2])
+    return _wand_query(spark, index_dir, cfg, [1, 2], LIFECYCLE_QUERIES)
 
 
 def q_fulltext_compacted(spark, sf_dir):
@@ -224,32 +220,15 @@ def q_fulltext_compacted(spark, sf_dir):
 
     index_dir, cfg = _build_lifecycle_index(spark, sf_dir)
     compact(spark, index_dir, cfg, new_gen=3)
-    return _lifecycle_query(spark, index_dir, cfg, [3])
+    return _wand_query(spark, index_dir, cfg, [3], LIFECYCLE_QUERIES)
 
 
 def q_fulltext_wand_conjunctive(spark, sf_dir):
     """AND semantics on the PRODUCTION (segment/WAND) path: build real
     segments, rank only docs containing every query term — the posting
     intersection evaluated per docID range inside the Arrow scorer."""
-    from mee_spark.build import build_full_index, live_docmap
-    from mee_spark.config import IndexConfig
-    from mee_spark.query_wand import bm25_topk_wand
-
-    cfg = IndexConfig(num_doc_partitions=8, num_term_buckets=8,
-                      doc_range_size=256, block_size=64)
-    pages_like = _read(spark, sf_dir, "documents").select(
-        F.format_string("%012d", F.col("doc_id")).alias("url"), "text")
-    index_dir = _temp_dir("mee_wandc_ix_")
-    build_full_index(spark, pages_like, cfg, index_dir, gen=1, use_html=False)
-    res = bm25_topk_wand(spark, index_dir, _queries_df(spark), cfg,
-                         round_digits=6, conjunctive=True)
-    docmap = live_docmap(spark, index_dir, [1]).select(
-        F.col("doc_id").alias("_engine_id"),
-        F.col("url").cast("long").alias("orig_doc_id"))
-    return (
-        res.join(F.broadcast(docmap), res["doc_id"] == docmap["_engine_id"])
-        .select("query_id", "rank", F.col("orig_doc_id").alias("doc_id"), "score")
-    )
+    return _wand_query(spark, *_wand_index(spark, sf_dir, "mee_wandc_ix_"), [1],
+                       conjunctive=True)
 
 
 def _postings_with_stats(docs):

@@ -45,6 +45,7 @@ import pyarrow.dataset as ds
 from pyspark import InheritableThread
 from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from mee_spark import manifest as mf
 from mee_spark.config import IndexConfig, layout_record
@@ -53,8 +54,8 @@ from mee_spark.segments import build_segments
 from mee_spark.textprep import extract_text, tokenize_col
 
 DOCMAP_SCHEMA = "url string, doc_id long, dl long, text_hash long"
-TOMBSTONES_SCHEMA = "doc_id long"
 TOMBSTONES_ARROW_SCHEMA = pa.schema([("doc_id", pa.int64())])
+TOMBSTONES_SCHEMA = from_arrow_schema(TOMBSTONES_ARROW_SCHEMA)
 DOCS_STAGING_SCHEMA = ("doc_id long, url string, tokens array<string>, "
                        "dl long, text_hash long")
 # kind: added | changed | deleted (unchanged urls are not staged);

@@ -121,14 +121,13 @@ def tombstone_count(chain: list[dict]) -> int:
                for m in chain)
 
 
-def open_chain(index_dir: str, cfg: IndexConfig,
-               gen: int | None = None) -> tuple[list[dict], IndexConfig]:
-    """-> (manifests root→``gen`` (default: published), ``cfg`` with the
-    chain root's recorded layout). After the first full build the chain
+def open_chain(index_dir: str, cfg: IndexConfig) -> tuple[list[dict], IndexConfig]:
+    """-> (the published generation's manifests, root first, ``cfg`` with
+    the chain root's recorded layout). After the first full build the chain
     is the one source of the layout: tombstones mask
     ``doc_id // doc_range_size`` ranges and terms live in
     ``hash % num_term_buckets`` directories."""
-    chain = manifest_chain(index_dir, gen)
+    chain = manifest_chain(index_dir)
     if not chain:
         raise ValueError(f"no published index at {index_dir}")
     return chain, dataclasses.replace(cfg, **chain[0]["config"])

@@ -27,8 +27,10 @@ designed for 10^12 docs / 1000 executors:
    dict in their closure.
 3. **Scoring** — matched segment rows join the query set, and the
    scorer (``_make_scorer``) runs once per docID range over a shard of
-   the batch, decoding each (term, gen) row once for every query of the
-   shard and running block-max WAND per query. Where it runs is one gate
+   the batch, decoding and scoring each (term, gen) row once for every
+   query of the shard, then selecting each query's top-k from the shared
+   rows (the vectorized kernel, or block-max WAND over a large (query,
+   range)). Where it runs is one gate
    (``DRIVER_MAX_SCORE_POSTINGS``), checked on the summed ``df_local`` of
    the term-filtered rows that step 2 read, before any blob is read:
    below it the driver reads those rows with pyarrow and scores every
@@ -69,6 +71,7 @@ postings are too many to decode in one process.
 
 from __future__ import annotations
 
+import copy
 from collections import Counter
 
 import numpy as np
@@ -88,6 +91,9 @@ from mee_spark.textprep import tokenize_col
 from mee_spark.wand import TermCursor, exhaustive_topk_vec, wand_topk
 
 _LOCAL_SCHEMA = "query_id int, k int, doc_id long, score double"
+# the scorer builds its _LOCAL_SCHEMA rows as these numpy records
+_LOCAL_RECORD = np.dtype([("query_id", np.int32), ("k", np.int32),
+                          ("doc_id", np.int64), ("score", np.float64)])
 _RESULT_SCHEMA = "query_id int, rank long, doc_id long, score double"
 # the segment columns the scorer reads
 _SCORE_COLUMNS = ["term", "range_id", "doc_ids_blob", "tfs_blob", "dls_blob",
@@ -267,72 +273,62 @@ def _make_scorer(df_map: dict, n_docs: int, avgdl: float,
 
     Grouping by range (not (query, range)) turns q·ranges tiny Arrow
     groups into `ranges` medium ones — far less per-group overhead — and
-    lets each (term, gen) posting row be DECODED ONCE and shared by every
-    query containing the term (head terms appear in many queries).
-    TermCursor traversal state is per-query, so cursors are rebuilt
-    cheaply from the shared decoded arrays.
+    lets each (term, gen) posting row be decoded once and scored once:
+    it becomes one ``TermCursor`` (its postings' BM25 contributions and
+    block bounds), shared by every query of the group that holds the term
+    (head terms appear in many queries). The vectorized kernel only reads
+    a cursor; block-max WAND moves its pointer, so it walks shallow
+    copies.
 
     Each term's df (``df_map``) and, in conjunctive (AND) mode, each
     query's term count (``n_terms_map``; None otherwise) are driver dicts
     that travel in the scorer's closure."""
 
     def score_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        # every (term, gen) row decoded in ONE batch, split back per row
+        # every (term, gen) row decoded in ONE batch, split back per row;
+        # a row with live postings becomes one cursor. Its term key embeds
+        # the gen: a changed doc's postings live in exactly one (term, gen)
+        # cursor; lexicographic sort keeps the scoring order deterministic
         rows = pdf.drop_duplicates(subset=["term", "gen"])
         docs, tfs, dls, counts = decode_live(rows, *joined_tombstones(rows))
         off = np.zeros(len(counts) + 1, dtype=np.int64)
         np.cumsum(counts, out=off[1:])
-        decoded: dict[tuple, tuple | None] = {}
+        cursors: dict[tuple, TermCursor] = {}
         for i, row in enumerate(rows.itertuples()):
             lo, hi = off[i], off[i + 1]
-            if lo == hi:
-                decoded[(row.term, int(row.gen))] = None
-                continue
-            idf = idf_np(float(df_map[row.term]), n_docs)
-            decoded[(row.term, int(row.gen))] = (
-                docs[lo:hi], tfs[lo:hi], dls[lo:hi], idf,
-                np.asarray(row.block_last_doc), np.asarray(row.block_max_tf),
-                np.asarray(row.block_min_dl),
-            )
-        # output accumulates as flat columns: one frame per group, not
-        # one per (query, range)
-        out_q, out_k, out_doc, out_score = [], [], [], []
-        qmeta = pdf[["query_id", "k", "term", "gen"]]
-        for qid, sub in qmeta.groupby("query_id", sort=True):
-            k = int(sub["k"].iloc[0])
-            cursors = []
-            for term, gen in zip(sub["term"], sub["gen"]):
-                payload = decoded[(term, int(gen))]
-                if payload is None:
-                    continue
-                docs, tfs, dls, idf, bl, btf, bdl = payload
-                # term key embeds the gen: a changed doc's postings live in
-                # exactly one (term, gen) cursor; lexicographic sort keeps
-                # the scoring order deterministic
-                cursors.append(TermCursor(f"{term}\x00{gen}", docs, tfs, dls,
-                                          idf, avgdl, bl, btf, bdl, k1, b))
+            if lo < hi:
+                cursors[row.term, int(row.gen)] = TermCursor(
+                    f"{row.term}\x00{int(row.gen)}", docs[lo:hi], tfs[lo:hi],
+                    dls[lo:hi], idf_np(float(df_map[row.term]), n_docs), avgdl,
+                    row.block_last_doc, row.block_max_tf, row.block_min_dl,
+                    k1, b)
+        # each query's k and cursors, from one pass over the joined rows
+        queries: dict[int, tuple[int, list]] = {}
+        for qid, k, term, gen in zip(pdf["query_id"], pdf["k"], pdf["term"],
+                                     pdf["gen"]):
+            shared = queries.setdefault(int(qid), (int(k), []))[1]
+            if (c := cursors.get((term, int(gen)))) is not None:
+                shared.append(c)
+        out = []  # _LOCAL_RECORD rows
+        for qid in sorted(queries):
+            k, shared = queries[qid]
             # hybrid: vectorized exhaustive for range-bounded small lists,
-            # block-max WAND where skipping wins (identical results; see
-            # wand.exhaustive_topk_vec docstring). Local selection uses the
-            # SAME rounded key as the global window rank — a doc dropped by
-            # an unrounded local heap could round-tie a kept doc and win
-            # the doc_id tie-break globally. AND mode always takes the
-            # vectorized kernel, which keeps only docs matched by all
-            # ``n_terms`` query terms.
-            n_terms = None if n_terms_map is None else n_terms_map[int(qid)]
-            if n_terms is not None or sum(c.n for c in cursors) < wand_min_postings:
-                top = exhaustive_topk_vec(cursors, k, round_to=round_to,
+            # block-max WAND at or above ``wand_min_postings`` (identical
+            # results; see wand.exhaustive_topk_vec docstring). Local
+            # selection uses the SAME rounded key as the global window
+            # rank — a doc dropped by an unrounded local heap could
+            # round-tie a kept doc and win the doc_id tie-break globally.
+            # AND mode always takes the vectorized kernel, which keeps only
+            # docs matched by all ``n_terms`` query terms.
+            n_terms = None if n_terms_map is None else n_terms_map[qid]
+            if n_terms is not None or sum(c.n for c in shared) < wand_min_postings:
+                top = exhaustive_topk_vec(shared, k, round_to=round_to,
                                           n_terms=n_terms)
             else:
-                top = wand_topk(cursors, k, round_to=round_to)
-            out_q += [qid] * len(top)
-            out_k += [k] * len(top)
-            out_doc += [d for d, _ in top]
-            out_score += [sc for _, sc in top]
-        return pd.DataFrame({"query_id": np.asarray(out_q, dtype=np.int32),
-                             "k": np.asarray(out_k, dtype=np.int32),
-                             "doc_id": np.asarray(out_doc, dtype=np.int64),
-                             "score": np.asarray(out_score, dtype=np.float64)})
+                top = wand_topk([copy.copy(c) for c in shared], k,
+                                round_to=round_to)
+            out += [(qid, k, doc, score) for doc, score in top]
+        return pd.DataFrame(np.array(out, dtype=_LOCAL_RECORD))
 
     return score_group
 
@@ -377,16 +373,14 @@ def bm25_topk_wand(
     index_dir: str,
     queries: DataFrame,
     cfg: IndexConfig,
-    gen: int | None = None,
     round_digits: int | None = 6,
     conjunctive: bool = False,
 ) -> DataFrame:
     """-> (query_id, rank, doc_id, score): per-query top-k over the
-    published index (or ``gen``'s chain). ``queries`` needs
-    (query_id, query_text, k). ``conjunctive``: AND semantics — only docs
-    containing every query term rank (docID-range partitioning co-locates
-    a doc's postings, so the intersection is evaluated per range with no
-    extra movement).
+    published index. ``queries`` needs (query_id, query_text, k).
+    ``conjunctive``: AND semantics — only docs containing every query term
+    rank (docID-range partitioning co-locates a doc's postings, so the
+    intersection is evaluated per range with no extra movement).
 
     The driver plans the batch from its whole vocabulary (one collect of
     every query's tokens), so it holds O(batch) query terms. It scores
@@ -395,7 +389,7 @@ def bm25_topk_wand(
     distributed."""
     # tombstones mask doc_id // doc_range_size ranges and terms prune to
     # hash % num_term_buckets directories: both come from the chain
-    chain, cfg = mf.open_chain(index_dir, cfg, gen)
+    chain, cfg = mf.open_chain(index_dir, cfg)
     gens = [m["generation"] for m in chain]
     n_docs = chain[-1]["n_docs_live"]
     avgdl = chain[-1]["avgdl"]

@@ -40,15 +40,8 @@ import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from mee_spark import manifest as mf
 from mee_spark.codec import decode_postings_batch, varbyte_encode_lens
@@ -68,6 +61,8 @@ SEGMENT_SCHEMA = pa.schema(
         ("block_min_dl", pa.list_(pa.int64())),
     ]
 )
+# the same row format as Spark reads it
+SEGMENT_READ_SCHEMA = from_arrow_schema(SEGMENT_SCHEMA)
 
 METRICS_SCHEMA = StructType(
     [
@@ -77,21 +72,6 @@ METRICS_SCHEMA = StructType(
         StructField("n_postings", LongType()),
         StructField("wall_sec", DoubleType()),
         StructField("bytes_written", LongType()),
-    ]
-)
-
-SEGMENT_READ_SCHEMA = StructType(
-    [
-        StructField("term", StringType()),
-        StructField("range_id", LongType()),
-        StructField("df_local", LongType()),
-        StructField("n_postings", LongType()),
-        StructField("doc_ids_blob", BinaryType()),
-        StructField("tfs_blob", BinaryType()),
-        StructField("dls_blob", BinaryType()),
-        StructField("block_last_doc", ArrayType(LongType())),
-        StructField("block_max_tf", ArrayType(LongType())),
-        StructField("block_min_dl", ArrayType(LongType())),
     ]
 )
 

@@ -3,6 +3,7 @@ resume-from-checkpoint; incremental ≡ full (SURVEY.md §5.2 items 3-6)."""
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import uuid
 
@@ -305,4 +306,65 @@ def test_driver_scoring_equals_spark(built, spark, monkeypatch, conjunctive,
     driver, distributed = scored_both_ways(
         spark, monkeypatch, built["index_dir"], built["queries"], CFG,
         round_digits=round_digits, conjunctive=conjunctive)
+    assert driver and driver == distributed
+
+
+@pytest.mark.parametrize("wand_min_postings", [CFG.wand_min_postings, 0],
+                         ids=["default", "wand"])
+def test_score_group_shares_one_cursor_per_row(built, spark, monkeypatch,
+                                               wand_min_postings):
+    """One ``score_group`` call builds exactly one ``TermCursor`` per
+    (term, gen) segment row with live postings (every row of a
+    single-generation index), however many of the batch's queries hold
+    the term, and leaves each at its first posting: with block-max WAND
+    forced too, which walks copies."""
+    built_cursors = []
+
+    class CountedCursor(query_wand.TermCursor):
+        def __init__(self, *args, **kwargs):
+            super().__init__(*args, **kwargs)
+            built_cursors.append(self)
+
+    calls = []
+    make_scorer = query_wand._make_scorer
+
+    def counting_scorer(*args, **kwargs):
+        score_group = make_scorer(*args, **kwargs)
+
+        def counted(key, pdf):
+            before = len(built_cursors)
+            out = score_group(key, pdf)
+            calls.append((pdf, built_cursors[before:]))
+            return out
+        return counted
+
+    monkeypatch.setattr(query_wand, "TermCursor", CountedCursor)
+    monkeypatch.setattr(query_wand, "_make_scorer", counting_scorer)
+    cfg = dataclasses.replace(CFG, wand_min_postings=wand_min_postings)
+    assert bm25_topk_wand(spark, built["index_dir"], built["queries"], cfg).collect()
+    assert calls
+    # the batch's queries share terms within a range
+    assert any(pdf.duplicated(["term", "gen"]).any() for pdf, _ in calls)
+    for pdf, cursors in calls:
+        assert len(cursors) == len(pdf.drop_duplicates(["term", "gen"]))
+        assert all(c.ptr == 0 for c in cursors)
+
+
+@pytest.mark.parametrize("conjunctive", [False, True], ids=["or", "and"])
+def test_driver_wand_equals_spark(built, spark, monkeypatch, conjunctive):
+    """Block-max WAND forced on every (query, range) of the driver scoring
+    plan (``wand_min_postings=0``; AND mode keeps the vectorized kernel)
+    returns the Spark plan's rows for the 100-query pool: queries sharing
+    a term walk copies of its one cursor, so none sees another's
+    position."""
+    cfg_wand = dataclasses.replace(CFG, wand_min_postings=0)
+    with monkeypatch.context() as m:
+        m.setattr(query_wand, "DRIVER_MAX_SCORE_POSTINGS", 1 << 62)
+        driver = collect_ranked(bm25_topk_wand(
+            spark, built["index_dir"], built["queries"], cfg_wand,
+            conjunctive=conjunctive))
+    _distributed_scoring(monkeypatch)
+    distributed = collect_ranked(bm25_topk_wand(
+        spark, built["index_dir"], built["queries"], CFG,
+        conjunctive=conjunctive))
     assert driver and driver == distributed
