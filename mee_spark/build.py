@@ -42,6 +42,7 @@ from typing import Callable, NamedTuple
 import numpy as np
 import pyarrow as pa
 import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark import InheritableThread
 from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession, Window
 from pyspark.sql import functions as F
@@ -50,10 +51,12 @@ from pyspark.sql.pandas.types import from_arrow_schema
 from mee_spark import manifest as mf
 from mee_spark.config import IndexConfig, layout_record
 from mee_spark.docmap import assign_doc_ids
-from mee_spark.segments import build_segments
+from mee_spark.segments import build_segments, live_mask
 from mee_spark.textprep import extract_text, tokenize_col
 
-DOCMAP_SCHEMA = "url string, doc_id long, dl long, text_hash long"
+DOCMAP_ARROW_SCHEMA = pa.schema([("url", pa.string()), ("doc_id", pa.int64()),
+                                 ("dl", pa.int64()), ("text_hash", pa.int64())])
+DOCMAP_SCHEMA = from_arrow_schema(DOCMAP_ARROW_SCHEMA)
 TOMBSTONES_ARROW_SCHEMA = pa.schema([("doc_id", pa.int64())])
 TOMBSTONES_SCHEMA = from_arrow_schema(TOMBSTONES_ARROW_SCHEMA)
 DOCS_STAGING_SCHEMA = ("doc_id long, url string, tokens array<string>, "
@@ -159,13 +162,31 @@ def _concurrent(*writes):
 class Generation(NamedTuple):
     """A generation as its writer stages it, for ``write_generation``."""
 
-    docmap: DataFrame  # its docmap rows; other columns are dropped
+    # its docmap rows (other columns are dropped): a DataFrame, or an Arrow
+    # table a writer built on the driver
+    docmap: DataFrame | pa.Table
     segments: Callable[[], list[dict]]  # its segment write -> group metrics
     n_docs: int  # docs written into it (``docs_per_sec``)
     n_docs_live: int
     sum_dl_live: int
     next_doc_id: int  # the fresh-docID watermark after it
     metrics: dict  # the writer's own manifest metrics
+
+
+def _write_docmap(docmap: DataFrame | pa.Table, path: str) -> None:
+    """Write a generation's docmap rows, replacing any earlier attempt's.
+    An Arrow table is written on the driver, with no Spark job, as one
+    snappy file in the directory layout Spark's writer leaves, so Spark
+    and pyarrow read both forms alike."""
+    columns = DOCMAP_ARROW_SCHEMA.names
+    if isinstance(docmap, DataFrame):
+        docmap.select(*columns).write.mode("overwrite").parquet(path)
+        return
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    pq.write_table(docmap.select(columns),
+                   os.path.join(path, "part-00000.parquet"),
+                   compression="snappy")
 
 
 def write_generation(index_dir: str, cfg: IndexConfig, gen: int, kind: str,
@@ -193,8 +214,8 @@ def write_generation(index_dir: str, cfg: IndexConfig, gen: int, kind: str,
     os.makedirs(gdir, exist_ok=True)
     g = stage(gdir)
     partitions = _concurrent(
-        lambda: g.docmap.select("url", "doc_id", "dl", "text_hash").write.mode(
-            "overwrite").parquet(_docmap_path(index_dir, gen)), g.segments)
+        lambda: _write_docmap(g.docmap, _docmap_path(index_dir, gen)),
+        g.segments)
     for p in glob.glob(os.path.join(gdir, "_*_staging.parquet")):
         shutil.rmtree(p, ignore_errors=True)
     wall = time.monotonic() - t0
@@ -362,6 +383,24 @@ def live_docmap(spark: SparkSession, index_dir: str, gens: list[int]) -> DataFra
             F.col("tomb_gen").isNull() | (F.col("gen") >= F.col("tomb_gen"))
         ).drop("tomb_gen")
     return latest.drop("gen")
+
+
+def live_docmap_table(index_dir: str, gens: list[int]) -> pa.Table:
+    """``live_docmap``'s rows computed on the driver with pyarrow — no
+    Spark job: newest gen wins per url, and a row is dropped when a
+    tombstone at a later gen kills its doc id. For chains whose docmaps
+    and tombstones fit in driver memory."""
+    parts = [ds.dataset(_docmap_path(index_dir, g), schema=DOCMAP_ARROW_SCHEMA,
+                        format="parquet").to_table() for g in gens]
+    dm = pa.concat_tables([t.append_column("gen", pa.array(
+        np.full(t.num_rows, g, np.int64))) for g, t in zip(gens, parts)])
+    # a gen holds a url at most once, so (url, newest gen) names one row
+    newest = dm.group_by("url").aggregate([("gen", "max")])
+    dm = dm.join(newest, ["url", "gen"], right_keys=["url", "gen_max"],
+                 join_type="inner")
+    keep = live_mask(dm["doc_id"].to_numpy(), dm["gen"].to_numpy(),
+                     *read_tombstone_arrays(index_dir, gens))
+    return dm.filter(pa.array(keep)).drop_columns("gen").sort_by("doc_id")
 
 
 def _tombstone_dirs(index_dir: str, gens: list[int]) -> dict[int, str]:

@@ -17,6 +17,18 @@ hands the survivors to the writer core every build shares
 resume skip). Only compressed blobs cross the shuffle, and postings never
 leave the task that decodes them.
 
+A small chain is compacted on the driver instead, with no Spark job: a
+Spark compaction's fixed cost (its jobs, stages and Python workers) is
+most of a small chain's. The gate is read from the manifests before any
+read (``_fits_driver``): the chain's recorded postings and tombstones
+must fit the query path's driver budgets
+(``query_wand.DRIVER_MAX_DECODE_POSTINGS``, ``DRIVER_MAX_TOMBSTONES``).
+Below it pyarrow reads the segment rows and tombstones, each (bucket,
+range) goes through the same compactor and ``write_groups`` checkpoints
+as a Spark task's, and the live docmap is computed and written with
+pyarrow (``build.live_docmap_table``). The manifest records the plan
+taken, ``metrics.plan`` = "driver" or "spark".
+
 It commits through ``build.write_generation``, the one commit path of
 every generation. Every generation records ``next_doc_id``; ids are never
 recycled, compaction included: it keeps the chain tail's watermark.
@@ -24,6 +36,7 @@ recycled, compaction included: it keeps the chain tail's watermark.
 
 from __future__ import annotations
 
+import functools
 import time
 
 import numpy as np
@@ -32,9 +45,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mee_spark import manifest as mf
+from mee_spark import query_wand
 from mee_spark.build import (
     Generation,
     live_docmap,
+    live_docmap_table,
+    read_tombstone_arrays,
     read_tombstones,
     write_generation,
 )
@@ -43,11 +59,17 @@ from mee_spark.query_wand import joined_tombstones, tombstones_per_range
 from mee_spark.segments import (
     METRICS_SCHEMA,
     decode_live,
+    read_rows,
     read_segments,
     sorted_term_codes,
     write_groups,
     write_segment,
 )
+
+# the segment columns a compactor reads, with its (bucket, range) key
+_COMPACT_COLUMNS = ["bucket", "range_id", "gen", "term",
+                    "doc_ids_blob", "tfs_blob", "dls_blob"]
+
 
 def decoded_postings(spark: SparkSession, index_dir: str, gens: list[int],
                      range_size: int):
@@ -73,8 +95,9 @@ def decoded_postings(spark: SparkSession, index_dir: str, gens: list[int],
 
 
 def _make_compactor(seg_root: str, ckpt_root: str, block_size: int):
-    """Cogroup fn: one (bucket, range)'s segment rows from every generation
-    plus the range's tombstones → that group's compacted file."""
+    """Group fn (a Spark cogroup's, or the driver loop's): one (bucket,
+    range)'s segment rows from every generation plus the range's
+    tombstones → that group's compacted file."""
 
     def compact_group(key: tuple, segs: pd.DataFrame,
                       tombs: pd.DataFrame) -> pd.DataFrame:
@@ -107,9 +130,7 @@ def compact_segments(spark: SparkSession, index_dir: str, gens: list[int],
                      cfg: IndexConfig, new_gen: int) -> list[dict]:
     """Merge the chain's segment rows into ``new_gen``'s segment files,
     one task per (bucket, range); returns per-group metrics."""
-    segs = read_segments(spark, index_dir, gens).select(
-        "bucket", "range_id", "gen", "term",
-        "doc_ids_blob", "tfs_blob", "dls_blob")
+    segs = read_segments(spark, index_dir, gens).select(*_COMPACT_COLUMNS)
     tombs = read_tombstones(spark, index_dir, gens)
     if tombs is None:
         tombs = spark.createDataFrame([], "doc_id long, tomb_gen long")
@@ -127,6 +148,54 @@ def compact_segments(spark: SparkSession, index_dir: str, gens: list[int],
             compactor, METRICS_SCHEMA)
 
     return write_groups(segs, index_dir, new_gen, resume=True, run=run)
+
+
+def compact_segments_on_driver(index_dir: str, gens: list[int],
+                               cfg: IndexConfig, new_gen: int) -> list[dict]:
+    """``compact_segments`` on the driver, with no Spark job: the chain's
+    segment rows and tombstones are read with pyarrow, and each (bucket,
+    range)'s rows and tombstones go through the same compactor, checkpoint
+    and resume skip (``write_groups``) as the cogroup plan's groups."""
+    # read_rows adds the gen column itself
+    rows = read_rows(index_dir, gens, list(range(cfg.num_term_buckets)),
+                     [c for c in _COMPACT_COLUMNS if c != "gen"], None)
+    segs = (pd.DataFrame(columns=_COMPACT_COLUMNS) if rows is None
+            else rows.to_pandas())
+    tomb_ids, tomb_gens = read_tombstone_arrays(index_dir, gens)
+    # each range's tombstones are one slice of the range-sorted arrays
+    tomb_ranges = tomb_ids // cfg.doc_range_size
+    order = np.argsort(tomb_ranges, kind="stable")
+    tomb_ids, tomb_gens, tomb_ranges = (
+        tomb_ids[order], tomb_gens[order], tomb_ranges[order])
+
+    def run(keyed: pd.DataFrame, seg_root: str, ckpt_root: str) -> pd.DataFrame:
+        compactor = _make_compactor(seg_root, ckpt_root, cfg.block_size)
+        out = []
+        for key, group in keyed.groupby(["bucket", "range_id"]):
+            lo, hi = np.searchsorted(tomb_ranges, [key[1], key[1] + 1])
+            written = compactor(key, group, pd.DataFrame(
+                {"doc_id": tomb_ids[lo:hi], "tomb_gen": tomb_gens[lo:hi]}))
+            if len(written):
+                out.append(written)
+        return (pd.concat(out, ignore_index=True) if out
+                else pd.DataFrame(columns=METRICS_SCHEMA.fieldNames()))
+
+    return write_groups(segs, index_dir, new_gen, resume=True, run=run)
+
+
+def _fits_driver(chain: list[dict]) -> bool:
+    """Whether ``chain`` compacts on the driver, decided from its
+    manifests alone, before any read: the postings its segment groups
+    recorded and the tombstones it wrote must fit the query path's driver
+    budgets (``query_wand.DRIVER_MAX_DECODE_POSTINGS`` and
+    ``DRIVER_MAX_TOMBSTONES``). A manifest that records no groups counts
+    as above them."""
+    groups = [m.get("metrics", {}).get("partitions") for m in chain]
+    if any(g is None for g in groups):
+        return False
+    postings = sum(int(p["n_postings"]) for g in groups for p in g)
+    return (postings <= query_wand.DRIVER_MAX_DECODE_POSTINGS
+            and mf.tombstone_count(chain) <= query_wand.DRIVER_MAX_TOMBSTONES)
 
 
 def compaction_due(index_dir: str, *, max_chain_len: int = 8,
@@ -183,7 +252,9 @@ def compact(spark: SparkSession, index_dir: str, cfg: IndexConfig,
             extra_metrics: dict | None = None) -> dict:
     """Rewrite the whole published chain as single generation ``new_gen``,
     in the chain's layout (``cfg``'s layout fields are not read), through
-    the commit path every generation shares (``build.write_generation``).
+    the commit path every generation shares (``build.write_generation``):
+    on the driver when the chain fits its budgets (``_fits_driver``), in a
+    Spark cogroup otherwise.
 
     ``extra_metrics`` entries are merged into the manifest's metrics
     BEFORE it is persisted (callers like ``maybe_compact`` record their
@@ -191,20 +262,28 @@ def compact(spark: SparkSession, index_dir: str, cfg: IndexConfig,
     chain, cfg = mf.open_chain(index_dir, cfg)
     gens = [m["generation"] for m in chain]
     tail = chain[-1]
+    on_driver = _fits_driver(chain)
 
     def stage(gdir: str) -> Generation:
         # consolidated docmap = live rows only, written while the segment
         # merge runs (neither reads the other's output)
+        if on_driver:
+            docmap = live_docmap_table(index_dir, gens)
+            segments = functools.partial(compact_segments_on_driver,
+                                         index_dir, gens, cfg, new_gen)
+        else:
+            docmap = live_docmap(spark, index_dir, gens)
+            segments = functools.partial(compact_segments, spark, index_dir,
+                                         gens, cfg, new_gen)
         return Generation(
-            docmap=live_docmap(spark, index_dir, gens),
-            segments=lambda: compact_segments(spark, index_dir, gens, cfg,
-                                              new_gen),
+            docmap=docmap, segments=segments,
             n_docs=tail["n_docs_live"], n_docs_live=tail["n_docs_live"],
             sum_dl_live=tail["sum_dl_live"],
             # the tail's watermark: the ids of docs deleted along the chain
             # stay retired, so compaction recycles none of them
             next_doc_id=tail["next_doc_id"],
-            metrics={"compacted_gens": gens, **(extra_metrics or {})})
+            metrics={"plan": "driver" if on_driver else "spark",
+                     "compacted_gens": gens, **(extra_metrics or {})})
 
     return write_generation(index_dir, cfg, new_gen, "compaction", chain,
                             stage, lineage={"compacted_from": gens},

@@ -131,19 +131,21 @@ DRIVER_MAX_SCORE_POSTINGS = 1 << 22
 
 def query_vocab(queries: DataFrame, num_term_buckets: int) -> list:
     """Driver rows of (query_id, k, terms, buckets): each query's tokens
-    and their term buckets.
+    and their term buckets; a query with a null text has no row.
 
     Tokens and buckets come from the build's own JVM expressions
     (``tokenize_col``, ``pmod(xxhash64(term), num_term_buckets)``), so they
     match the index by construction. On a local query relation (a frame
     created from pandas with Arrow on) Spark folds the projection into the
-    relation and answers the collect with no job."""
-    return (queries.select("query_id", "k",
-                           tokenize_col(F.col("query_text")).alias("terms"))
-            .where(F.col("terms").isNotNull())  # a null text has no terms
-            .withColumn("buckets", F.transform("terms", lambda t: F.pmod(
-                F.xxhash64(t), F.lit(num_term_buckets)).cast("long")))
-            .collect())
+    relation and answers the collect with no job. The buckets are a SQL
+    lambda, parsed in the JVM: a Python-built one costs py4j round trips
+    on every call."""
+    rows = queries.select(
+        "query_id", "k", tokenize_col(F.col("query_text")).alias("terms")
+    ).selectExpr("query_id", "k", "terms", "transform(terms, t -> CAST(pmod("
+                 f"xxhash64(t), {int(num_term_buckets)}) AS BIGINT)) AS buckets"
+                 ).collect()
+    return [r for r in rows if r["terms"] is not None]
 
 
 def _empty_result(queries: DataFrame) -> DataFrame:

@@ -63,6 +63,8 @@ SEGMENT_SCHEMA = pa.schema(
 )
 # the same row format as Spark reads it
 SEGMENT_READ_SCHEMA = from_arrow_schema(SEGMENT_SCHEMA)
+# the rows as ``read_rows`` reads them, the ``bucket=<b>`` directory included
+_ROWS_SCHEMA = SEGMENT_SCHEMA.append(pa.field("bucket", pa.int64()))
 
 METRICS_SCHEMA = StructType(
     [
@@ -226,12 +228,13 @@ def _make_writer(seg_root: str, ckpt_root: str, block_size: int):
     return write_group
 
 
-def write_groups(keyed: DataFrame, index_dir: str, gen: int, resume: bool,
-                 run) -> list[dict]:
+def write_groups(keyed: DataFrame | pd.DataFrame, index_dir: str, gen: int,
+                 resume: bool, run) -> list[dict]:
     """The checkpointed group skeleton shared by every segment build.
 
-    ``keyed`` carries (bucket, range_id); ``run(keyed, seg_root,
-    ckpt_root)`` turns it into the METRICS_SCHEMA frame of the groups it
+    ``keyed`` carries (bucket, range_id): a DataFrame, or a pandas frame
+    for a build on the driver; ``run(keyed, seg_root, ckpt_root)`` turns it
+    into the METRICS_SCHEMA frame (of the same kind) of the groups it
     writes. Resume: already-checkpointed (bucket, range) groups are
     filtered out pre-shuffle, and their recorded metrics are appended, so
     the result is the full per-group picture either way."""
@@ -240,11 +243,17 @@ def write_groups(keyed: DataFrame, index_dir: str, gen: int, resume: bool,
     # a deletion-only delta has zero postings; the dir must still exist
     os.makedirs(seg_root, exist_ok=True)
     done = mf.completed_checkpoints(index_dir, gen) if resume else set()
-    if done:
+    on_driver = isinstance(keyed, pd.DataFrame)
+    if done and on_driver:
+        keyed = keyed[~pd.MultiIndex.from_frame(
+            keyed[["bucket", "range_id"]]).isin(sorted(done))]
+    elif done:
         done_df = F.broadcast(keyed.sparkSession.createDataFrame(
             sorted(done), "bucket long, range_id long"))
         keyed = keyed.join(done_df, ["bucket", "range_id"], "left_anti")
-    fresh = [r.asDict() for r in run(keyed, seg_root, ckpt_root).collect()]
+    out = run(keyed, seg_root, ckpt_root)
+    fresh = (out.to_dict("records") if on_driver
+             else [r.asDict() for r in out.collect()])
     for b, r in sorted(done):
         with open(os.path.join(ckpt_root, mf.checkpoint_name(b, r))) as f:
             fresh.append(json.load(f))
@@ -341,15 +350,19 @@ def decode_live(rows: pd.DataFrame, tomb_ids: np.ndarray, tomb_gens: np.ndarray,
 def read_rows(index_dir: str, gens: list[int], buckets: list[int],
               columns: list[str], where) -> pa.Table | None:
     """The ``columns`` of the gens' ``bucket=<b>`` segment rows that pass
-    ``where``, plus a ``gen`` column, read on the driver with pyarrow — no
-    Spark job. A ``term`` predicate prunes row groups of the term-sorted
-    files. None when no gen has a file in those buckets."""
+    ``where`` (None: every row), plus a ``gen`` column, read on the driver
+    with pyarrow — no Spark job. ``bucket`` is a column too, read from the
+    directory name as Spark's partition discovery does. A ``term``
+    predicate prunes row groups of the term-sorted files. None when no gen
+    has a file in those buckets."""
     parts = []
     for g in gens:
+        root = mf.segments_dir(index_dir, g)
         files = [f for b in buckets for f in sorted(glob.glob(os.path.join(
-            mf.segments_dir(index_dir, g), f"bucket={b}", "*.parquet")))]
+            root, f"bucket={b}", "*.parquet")))]
         if files:
-            t = ds.dataset(files, schema=SEGMENT_SCHEMA, format="parquet"
+            t = ds.dataset(files, schema=_ROWS_SCHEMA, format="parquet",
+                           partitioning="hive", partition_base_dir=root
                            ).to_table(columns=columns, filter=where)
             parts.append(t.append_column("gen", pa.array(
                 np.full(t.num_rows, g, dtype=np.int64))))

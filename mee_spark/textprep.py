@@ -68,13 +68,15 @@ def py_tokenize(text: str) -> list[str]:
 
 
 def tokenize_col(col: Column) -> Column:
-    """JVM-side tokenizer expression returning array<string>.
+    """JVM-side tokenizer expression returning array<string>: the one
+    tokenizer of the build and the query path.
 
     Stays inside whole-stage codegen — the fast path for ASCII corpora
     (NFC is a no-op). Matches ``py_tokenize`` output exactly for ASCII.
+    ``array_remove`` drops the empty strings ``split`` leaves, with no
+    Python lambda for PySpark to build over py4j on every query call.
     """
-    toks = F.split(F.lower(col), TOKEN_SPLIT_PATTERN)
-    return F.filter(toks, lambda t: t != F.lit(""))
+    return F.array_remove(F.split(F.lower(col), TOKEN_SPLIT_PATTERN), "")
 
 
 @pandas_udf(ArrayType(StringType()))

@@ -1,29 +1,36 @@
 """Segment-row compaction ≡ the exploded decode → build_segments path.
 
 ``compact`` merges each (bucket, range)'s compressed segment rows in one
-task. These tests pin that its output is table-identical, file by file,
-to re-encoding the chain's decoded live postings through
+group, on the driver below its gate and in a Spark cogroup above it.
+These tests pin, on both paths, that its output is table-identical, file
+by file, to re-encoding the chain's decoded live postings through
 ``build_segments``, on a chain with changed docs, deleted docs, a
 deletion-only generation, a term whose postings in a range are all dead
-and a docID range with no live doc left; that a resumed or task-retried
-compaction writes the same tables; and that the grouped-map kernels carry
-type hints PySpark can infer from.
+and a docID range with no live doc left; that a resumed, failed or
+task-retried compaction writes the same tables; which path the gate
+picks at its edges, and how many Spark jobs each runs; and that the
+grouped-map kernels carry type hints PySpark can infer from.
 """
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import json
 import os
+import shutil
 import subprocess
 import sys
 import types
+import uuid
 import warnings
 
 import numpy as np
 import pyarrow.parquet as pq
 import pytest
 
+import mee_spark.merge as merge
+import mee_spark.query_wand as qw
 import mee_spark.segments as seg
 from mee_spark import manifest as mf
 from mee_spark.build import _docmap_path, build_full_index, build_incremental, live_docmap
@@ -38,7 +45,34 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 CFG = IndexConfig(num_doc_partitions=4, num_term_buckets=4,
                   doc_range_size=64, block_size=16)
-COMPACT_GEN, REFERENCE_GEN = 10, 20
+REFERENCE_GEN = 20
+# the compacted generation of each plan
+PLAN_GENS = {"driver": 10, "spark": 11}
+# the limits of compact's driver gate
+GATE_LIMITS = ("DRIVER_MAX_DECODE_POSTINGS", "DRIVER_MAX_TOMBSTONES")
+
+
+@contextlib.contextmanager
+def _forced(plan: str):
+    """Force ``compact``'s plan: "driver" lifts both gate limits, "spark"
+    sets them to -1."""
+    with pytest.MonkeyPatch.context() as mp:
+        for name in GATE_LIMITS:
+            mp.setattr(qw, name, 1 << 62 if plan == "driver" else -1)
+        yield
+
+
+def _with_job_count(spark, fn):
+    """-> (``fn()``, the Spark jobs it ran), counted in a job group that
+    side-write threads inherit."""
+    sc = spark.sparkContext
+    group = f"compact-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "compaction")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _segment_files(index_dir: str, gen: int) -> list[str]:
@@ -87,24 +121,49 @@ def _build_chain(spark, index_dir: str) -> dict:
 
 
 @pytest.fixture(scope="module")
-def chain(spark, tmp_path_factory):
+def built(spark, tmp_path_factory):
+    """The chain, and its exploded rebuild as generation REFERENCE_GEN."""
     d = str(tmp_path_factory.mktemp("segmerge"))
     facts = _build_chain(spark, d)
-    compact(spark, d, CFG, new_gen=COMPACT_GEN, publish=False)
     build_segments(decoded_postings(spark, d, facts["gens"], CFG.doc_range_size),
                    CFG, d, REFERENCE_GEN)
     return d, facts
 
 
+@pytest.fixture(scope="module", params=list(PLAN_GENS))
+def chain(request, spark, built):
+    """The chain compacted by one plan, forced through the gate."""
+    d, facts = built
+    plan = request.param
+    with _forced(plan):
+        m, jobs = _with_job_count(spark, lambda: compact(
+            spark, d, CFG, new_gen=PLAN_GENS[plan], publish=False))
+    return d, {**facts, "plan": plan, "gen": PLAN_GENS[plan], "manifest": m,
+               "jobs": jobs}
+
+
 def test_compact_matches_exploded_rebuild(spark, chain):
     d, facts = chain
-    _assert_same_segments(d, COMPACT_GEN, REFERENCE_GEN)
-    got = spark.read.parquet(_docmap_path(d, COMPACT_GEN)).toPandas()
+    _assert_same_segments(d, facts["gen"], REFERENCE_GEN)
     want = live_docmap(spark, d, facts["gens"]).toPandas()
     cols = sorted(want.columns)
-    assert (got[cols].sort_values("url").reset_index(drop=True)
-            .equals(want[cols].sort_values("url").reset_index(drop=True)))
-    assert not set(got["url"]) & facts["range1"]
+    want = want[cols].sort_values("url").reset_index(drop=True)
+    # Spark and pyarrow read the docmap alike, whichever wrote it
+    for got in (spark.read.parquet(_docmap_path(d, facts["gen"])).toPandas(),
+                pq.read_table(_docmap_path(d, facts["gen"])).to_pandas()):
+        assert got[cols].sort_values("url").reset_index(drop=True).equals(want)
+        assert not set(got["url"]) & facts["range1"]
+
+
+def test_compaction_records_its_plan_and_jobs(chain):
+    d, facts = chain
+    assert facts["manifest"]["metrics"]["plan"] == facts["plan"]
+    assert mf.read_manifest(d, facts["gen"])["metrics"]["plan"] == facts["plan"]
+    # the driver plan runs no Spark job; the cogroup plan runs some
+    if facts["plan"] == "driver":
+        assert facts["jobs"] == 0
+    else:
+        assert facts["jobs"] > 0
 
 
 def _postings_by_url(spark, index_dir: str, gen: int) -> set[tuple]:
@@ -127,17 +186,17 @@ def test_compacted_postings_match_full_rebuild(spark, chain, tmp_path):
     build_full_index(spark, spark.createDataFrame(
         sorted(facts["state"].items()), "url string, text string"),
         CFG, full, gen=1, use_html=False)
-    assert (_postings_by_url(spark, d, COMPACT_GEN)
+    assert (_postings_by_url(spark, d, facts["gen"])
             == _postings_by_url(spark, full, 1))
 
 
 def test_compact_drops_dead_terms_and_empty_ranges(chain):
-    d, _ = chain
+    d, facts = chain
 
     def table(gen):
         return pq.read_table(mf.segments_dir(d, gen)).to_pandas()
 
-    old, new = table(1), table(COMPACT_GEN)
+    old, new = table(1), table(facts["gen"])
     # the range whose docs all died had files and now has none
     assert (old["range_id"] == 1).any() and not (new["range_id"] == 1).any()
     # a term dead in its range leaves that range's term list
@@ -145,18 +204,97 @@ def test_compact_drops_dead_terms_and_empty_ranges(chain):
 
 
 def test_resumed_compaction_rewrites_only_missing_groups(spark, chain):
-    d, _ = chain
-    ckpt = mf.checkpoints_dir(d, COMPACT_GEN)
-    done = sorted(mf.completed_checkpoints(d, COMPACT_GEN))
+    d, facts = chain
+    gen = facts["gen"]
+    ckpt = mf.checkpoints_dir(d, gen)
+    done = sorted(mf.completed_checkpoints(d, gen))
     dropped = done[::2]
     for b, r in dropped:
         os.remove(os.path.join(ckpt, mf.checkpoint_name(b, r)))
-        os.remove(os.path.join(mf.segments_dir(d, COMPACT_GEN), f"bucket={b}",
+        os.remove(os.path.join(mf.segments_dir(d, gen), f"bucket={b}",
                                f"range_{r}.parquet"))
-    m = compact(spark, d, CFG, new_gen=COMPACT_GEN, publish=False)
-    assert sorted(mf.completed_checkpoints(d, COMPACT_GEN)) == done
+    with _forced(facts["plan"]):
+        m = compact(spark, d, CFG, new_gen=gen, publish=False)
+    assert m["metrics"]["plan"] == facts["plan"]
+    assert sorted(mf.completed_checkpoints(d, gen)) == done
     assert len(m["metrics"]["partitions"]) == len(done)
-    _assert_same_segments(d, COMPACT_GEN, REFERENCE_GEN)
+    _assert_same_segments(d, gen, REFERENCE_GEN)
+
+
+def test_failed_driver_compaction_reruns_only_missing_groups(spark, built,
+                                                             monkeypatch):
+    """A driver compaction whose compactor raises after some groups leaves
+    their files and checkpoints; the rerun compacts only the other groups
+    and is table-identical to a clean run."""
+    d, _ = built
+    gen, orig = 40, merge._make_compactor
+    calls: list[tuple] = []
+
+    def counting(fail_after: int | None):
+        def make(seg_root, ckpt_root, block_size):
+            inner = orig(seg_root, ckpt_root, block_size)
+
+            def compact_group(key, segs, tombs):
+                if len(calls) == fail_after:
+                    raise RuntimeError("injected compactor failure")
+                calls.append((int(key[0]), int(key[1])))
+                return inner(key, segs, tombs)
+            return compact_group
+        return make
+
+    monkeypatch.setattr(merge, "_make_compactor", counting(fail_after=5))
+    with _forced("driver"), pytest.raises(RuntimeError, match="injected"):
+        compact(spark, d, CFG, new_gen=gen, publish=False)
+    survived = mf.completed_checkpoints(d, gen)
+    assert 0 < len(survived) <= 5 and not os.path.exists(mf.manifest_path(d, gen))
+    calls.clear()
+    monkeypatch.setattr(merge, "_make_compactor", counting(fail_after=None))
+    with _forced("driver"):
+        m = compact(spark, d, CFG, new_gen=gen, publish=False)
+    assert m["metrics"]["plan"] == "driver"
+    assert calls and not set(calls) & survived
+    assert len(m["metrics"]["partitions"]) == len(mf.completed_checkpoints(d, gen))
+    _assert_same_segments(d, gen, REFERENCE_GEN)
+
+
+def _chain_counts(index_dir: str) -> tuple[int, int]:
+    """(postings, tombstones) of the published chain, from its manifests."""
+    chain = mf.manifest_chain(index_dir)
+    return (sum(p["n_postings"] for m in chain for p in m["metrics"]["partitions"]),
+            mf.tombstone_count(chain))
+
+
+@pytest.mark.parametrize("limit", GATE_LIMITS)
+def test_gate_edges_pick_the_plan(spark, built, limit, monkeypatch):
+    """One below the chain's count, the limit sends the chain to Spark; at
+    the exact count it stays on the driver."""
+    d, _ = built
+    count = dict(zip(GATE_LIMITS, _chain_counts(d)))[limit]
+    assert count > 0
+    gen = 50 + 2 * GATE_LIMITS.index(limit)
+    for other in GATE_LIMITS:
+        monkeypatch.setattr(qw, other, 1 << 62)
+    for value, plan in ((count - 1, "spark"), (count, "driver")):
+        monkeypatch.setattr(qw, limit, value)
+        m, jobs = _with_job_count(spark, lambda: compact(
+            spark, d, CFG, new_gen=gen, publish=False))
+        assert (m["metrics"]["plan"], jobs > 0) == (plan, plan == "spark")
+        gen += 1
+
+
+def test_chain_without_recorded_groups_compacts_in_spark(spark, built, tmp_path):
+    """A manifest that records no ``partitions`` (hand-written, as in
+    ``test_chain_soak::test_compaction_due_metadata_only``) counts as above
+    the gate, however small the chain."""
+    d = str(tmp_path / "ix")
+    shutil.copytree(built[0], d)
+    m2 = mf.read_manifest(d, 2)
+    del m2["metrics"]["partitions"]
+    with open(mf.manifest_path(d, 2), "w") as f:
+        json.dump(m2, f)
+    m = compact(spark, d, CFG, new_gen=60, publish=False)
+    assert m["metrics"]["plan"] == "spark"
+    _assert_same_segments(d, 60, REFERENCE_GEN)
 
 
 def test_group_kernels_infer_eval_type_without_warning(spark, tmp_path):
@@ -171,7 +309,9 @@ def test_group_kernels_infer_eval_type_without_warning(spark, tmp_path):
         build_full_index(spark, snap, CFG, d, gen=1, use_html=False)
         build_incremental(spark, snap.limit(30), CFG, d, gen=2, use_html=False)
         bm25_topk_wand(spark, d, gen_queries(spark, 3), CFG).collect()
-        compact(spark, d, CFG, new_gen=3)
+        # the cogroup kernel runs only on the Spark plan
+        with _forced("spark"):
+            compact(spark, d, CFG, new_gen=3)
     msgs = [str(w.message) for w in caught]
     assert not [m for m in msgs if "Cannot infer the eval type" in m], msgs
 
@@ -182,12 +322,15 @@ sys.path.insert(0, sys.argv[1])
 import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 import mee_spark.merge as merge
+import mee_spark.query_wand as qw
 import mee_spark.segments as seg
 from mee_spark import manifest as mf
 from mee_spark.build import build_full_index, build_incremental
 from mee_spark.config import IndexConfig
 from mee_spark.fixtures import gen_pages_for_indices
 
+# task retries happen only on the Spark plan: force it for every compaction
+qw.DRIVER_MAX_DECODE_POSTINGS = qw.DRIVER_MAX_TOMBSTONES = -1
 marker_dir = tempfile.mkdtemp(prefix="compact_fault_markers_")
 orig = merge._make_compactor
 _groups_seen = {}

@@ -19,6 +19,7 @@ from mee_spark.oracle import OracleIndex
 from mee_spark.postings import build_postings
 from mee_spark.query import bm25_topk_exhaustive
 from mee_spark.query_wand import bm25_topk_wand, query_vocab
+from mee_spark.segments import with_partition_keys
 from mee_spark.textprep import extract_text_bytes, py_tokenize
 from reference_helpers import build_docs, corpus_stats
 
@@ -224,6 +225,28 @@ def test_wand_matches_oracle_with_edge_queries(built, spark):
         assert results["wand", False][qpdf.query_id[qpdf.query_text == text].iloc[0]]
     for qid in (n_pool + 3, n_pool + 4):
         assert all(qid not in res for res in results.values())
+
+
+def test_query_vocab_of_edge_texts(built, spark):
+    """The vocabulary probe: a null text has no row, a text that tokenizes
+    to nothing an empty one, and tokens and buckets are the build's
+    (``py_tokenize``'s tokens, ``with_partition_keys``' buckets). A call
+    with null and out-of-vocabulary texts ranks only the other queries."""
+    texts = [None, EDGE_QUERIES[3], EDGE_QUERIES[2], EDGE_QUERIES[4],
+             "w000001 w000002"]
+    qdf = spark.createDataFrame(
+        [(i, t, 5) for i, t in enumerate(texts)],
+        "query_id int, query_text string, k int")
+    rows = {r["query_id"]: r for r in query_vocab(qdf, CFG.num_term_buckets)}
+    assert sorted(rows) == [1, 2, 3, 4]
+    assert rows[1]["terms"] == rows[1]["buckets"] == []
+    for qid in (2, 3, 4):
+        assert rows[qid]["terms"] == py_tokenize(texts[qid]) and rows[qid]["k"] == 5
+        keyed = with_partition_keys(spark.createDataFrame(
+            [(t, 0) for t in rows[qid]["terms"]], "term string, doc_id long"), CFG)
+        assert rows[qid]["buckets"] == [r["bucket"] for r in keyed.collect()]
+    ranked = collect_ranked(bm25_topk_wand(spark, built["index_dir"], qdf, CFG))
+    assert 4 in ranked and not {0, 1, 3} & set(ranked)
 
 
 def test_batch_past_2048_queries(built, spark):
