@@ -1124,9 +1124,7 @@ def q_ann_bruteforce(spark, sf_dir):
 
 def q_ann_ivf(spark, sf_dir):
     """IVF ANN with the fixed (seeded, data-oblivious) coarse quantizer —
-    fully oracle-checked (centroids inlined as SQL constants). The
-    k-means-trained variant keeps the same plan shape and is recall-gated
-    in tests/test_dedup_similarity.py."""
+    fully oracle-checked (centroids inlined as SQL constants)."""
     from mee_spark.similarity import ann_ivf_topk_fixed
 
     return ann_ivf_topk_fixed(_read(spark, sf_dir, "embeddings"), ANN_PROBES,
@@ -1456,7 +1454,7 @@ def q_media_pixel_stats(spark, sf_dir):
         return (p, None)
 
     media = _media_table(_media_ids(spark, sf_dir), "image", make)
-    return image_features(media, fake=False)
+    return image_features(media)
 
 
 def q_media_audio_rms(spark, sf_dir):
@@ -1470,7 +1468,7 @@ def q_media_audio_rms(spark, sf_dir):
         return (make_wav_payload(mid, dur), dur)
 
     media = _media_table(_media_ids(spark, sf_dir), "audio", make)
-    return audio_frames(media, frame_ms=100, fake=False)
+    return audio_frames(media, frame_ms=100)
 
 
 def q_media_video_luma(spark, sf_dir):
@@ -1486,7 +1484,7 @@ def q_media_video_luma(spark, sf_dir):
                 None)
 
     media = _media_table(_media_ids(spark, sf_dir), "video", make)
-    return video_frame_sample(media, stride=2, fake=False)
+    return video_frame_sample(media, stride=2)
 
 
 def _media_join_sql(values: list[str], cols: str, select: str) -> str:

@@ -124,12 +124,16 @@ def cmd_compact(args) -> None:
 
 
 def cmd_reset(args) -> None:
-    mf.reset_incomplete(args.index, args.gen)
+    with mf.writer_lock(args.index):
+        mf.reset_incomplete(args.index, args.gen)
     print(json.dumps({"reset": args.gen}))
 
 
 def cmd_clean(args) -> None:
-    print(json.dumps({"removed": mf.gc_orphans(args.index, ttl_sec=args.ttl)}))
+    # under the lock: an unpublished generation may be a build in flight
+    with mf.writer_lock(args.index):
+        removed = mf.gc_orphans(args.index, ttl_sec=args.ttl)
+    print(json.dumps({"removed": removed}))
 
 
 def cmd_package(args) -> None:

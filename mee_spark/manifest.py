@@ -172,10 +172,16 @@ def completed_checkpoints(index_dir: str, gen: int) -> set[tuple[int, int]]:
 
 def reset_incomplete(index_dir: str, gen: int) -> None:
     """mee `reset` (`updateservice.py:82-98`): drop an unpublished gen;
-    `_CURRENT` (the old alias) is untouched."""
-    cur = current_gen(index_dir)
-    if cur == gen:
-        raise ValueError(f"gen {gen} is published; refusing to reset it")
+    `_CURRENT` (the old alias) is untouched. Every generation of the
+    published chain is refused: readers resolve the tip through its
+    parents' manifests and read their segments."""
+    if gen in {m["generation"] for m in manifest_chain(index_dir)}:
+        raise ValueError(f"gen {gen} is in the published chain; "
+                         "refusing to reset it")
+    _remove_gen(index_dir, gen)
+
+
+def _remove_gen(index_dir: str, gen: int) -> None:
     shutil.rmtree(gen_dir(index_dir, gen), ignore_errors=True)
     with contextlib.suppress(FileNotFoundError):
         os.remove(manifest_path(index_dir, gen))
@@ -183,7 +189,8 @@ def reset_incomplete(index_dir: str, gen: int) -> None:
 
 def gc_orphans(index_dir: str, ttl_sec: float = 0.0) -> list[int]:
     """mee `clean` (`updateservice.py:100-114,346-366`): delete gen dirs not
-    reachable from `_CURRENT`'s parent chain and older than ttl."""
+    reachable from `_CURRENT`'s parent chain and older than ttl, each with
+    its manifest."""
     live = {m["generation"] for m in manifest_chain(index_dir)}
     removed = []
     now = time.time()
@@ -195,6 +202,6 @@ def gc_orphans(index_dir: str, ttl_sec: float = 0.0) -> list[int]:
             continue
         path = os.path.join(index_dir, name)
         if now - os.path.getmtime(path) >= ttl_sec:
-            shutil.rmtree(path, ignore_errors=True)
+            _remove_gen(index_dir, g)
             removed.append(g)
     return removed

@@ -1,47 +1,43 @@
-"""Multimodal (image/audio/video) column plumbing for training pipelines.
+"""Multimodal (image/audio/video) decode operators for training pipelines.
 
-Media payloads are opaque ``binary`` columns + typed metadata structs;
-all Spark-side machinery — schema, partitioning, Arrow batch shape,
-mapInPandas signatures, size accounting — is real and tested.
+Media payloads are opaque ``binary`` columns; each operator filters one
+``kind``, decodes the payloads inside ``mapInPandas`` Arrow batches and
+emits narrow feature rows.
 
 Decode policy, honestly tiered:
   * **PPM (P6) images — REAL decode**, pure numpy (header parse + raw RGB
-    reshape), plus a real nearest-neighbor ``resize_image``. No external
-    libraries needed, so the decode→feature→resize path executes genuine
-    pixel work end to end.
+    reshape). No external libraries needed, so the decode→feature path
+    executes genuine pixel work end to end.
   * **PNG (8-bit gray/RGB/RGBA, non-interlaced) — REAL decode**, stdlib
     ``zlib`` + numpy: chunk walk with CRC verification, inflate, and
     genuine per-row un-filtering (None/Sub/Up/Average/Paeth per the PNG
-    spec §9); a matching real encoder (``encode_png``) exists for
-    round-trip provenance tests. Adam7 interlace and 16-bit depth raise
-    honestly.
+    spec §9); a matching real encoder (``encode_png``) builds the
+    payloads of the driver-checked media queries. Adam7 interlace and
+    16-bit depth raise honestly.
   * **RIFF/WAVE (PCM16) audio — REAL decode**, stdlib ``wave``: genuine
-    sample extraction, per-frame RMS, and a pure-numpy linear resampler
-    (``decode_wav`` / ``audio_frames`` / ``resample_audio``).
-  * **Baseline JPEG (JFIF) — REAL decode** (round-5), pure numpy +
-    stdlib in ``mee_spark.jpeg``: marker parse, Huffman entropy decode
-    with restart markers, dequantize, 8x8 IDCT, chroma upsampling,
-    YCbCr→RGB; a minimal real encoder exists for round-trip tests.
+    sample extraction and per-frame RMS (``decode_wav`` /
+    ``audio_frames``).
+  * **Baseline JPEG (JFIF) — REAL decode**, pure numpy + stdlib in
+    ``mee_spark.jpeg``: marker parse, Huffman entropy decode with
+    restart markers, dequantize, 8x8 IDCT, chroma upsampling, YCbCr→RGB.
     Progressive/arithmetic/12-bit raise honestly.
-  * **YUV4MPEG2 (Y4M) video — REAL decode** (round-5), pure numpy:
-    header token parse, FRAME walk, planar C420/C444 YUV -> RGB
-    (``decode_y4m`` / ``video_frame_sample``). Y4M is the public
-    uncompressed interchange format, so genuine per-pixel video work
-    runs without codec libraries.
-  * **mp3 / codec video (mp4, webm, ...) — STUBBED**: these genuinely
-    need codec libraries (ffmpeg/mad) absent from this container; the
-    decoders raise NotImplementedError for them unless the
-    deterministic fake is selected. The fake parses our synthetic
-    header format so pipeline shape tests stay runnable anywhere.
+  * **YUV4MPEG2 (Y4M) video — REAL decode**, pure numpy: header token
+    parse, FRAME walk, planar C420/C444 YUV -> RGB (``decode_y4m`` /
+    ``video_frame_sample``). Y4M is the public uncompressed interchange
+    format, so genuine per-pixel video work runs without codec
+    libraries.
+  * **mp3 / codec video (mp4, webm, ...) — not decoded**: these need
+    codec libraries (ffmpeg/mad) absent from this container; the
+    operators raise NotImplementedError for them.
 
 Design notes for 100 TB of media:
   * binary columns ride in Parquet row groups; ``maxPartitionBytes``
-    governs scan parallelism — metadata-only queries never touch the
-    bytes thanks to Parquet column pruning (tested via ReadSchema).
+    governs scan parallelism, and Parquet column pruning keeps
+    metadata-only queries off the payload bytes.
   * decode/extract runs in ``mapInPandas`` (Arrow batches of binary),
     with ``spark.sql.execution.arrow.maxRecordsPerBatch`` sized so a
     batch of decoded frames fits executor memory.
-  * derived features (embeddings, thumbnails) are written as separate
+  * derived features (embeddings, sampled frames) are written as separate
     narrow tables keyed by content hash — never widen the media table.
 """
 
@@ -54,43 +50,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-MEDIA_SCHEMA = StructType([
-    StructField("media_id", LongType(), False),
-    StructField("kind", StringType(), False),        # image | audio | video
-    StructField("mime", StringType(), False),
-    StructField("payload", BinaryType(), False),     # opaque bytes
-    StructField("width", IntegerType(), True),       # typed metadata
-    StructField("height", IntegerType(), True),
-    StructField("duration_ms", IntegerType(), True),
-])
-
-_MAGIC = b"MEEFAKE1"
-
-
-def make_fake_payload(media_id: int, kind: str, w: int = 0, h: int = 0,
-                      duration_ms: int = 0) -> bytes:
-    """Deterministic synthetic payload: header + seeded noise bytes."""
-    rng = np.random.default_rng(media_id * 7919 + 17)
-    body = rng.integers(0, 256, 256, dtype=np.uint8).tobytes()
-    head = _MAGIC + struct.pack("<qiii", media_id, w, h, duration_ms) + kind.encode().ljust(8)
-    return head + body
-
-
-def _parse_fake(payload: bytes) -> tuple[int, int, int, int, str]:
-    if not payload.startswith(_MAGIC):
-        raise ValueError("not a MEEFAKE payload")
-    mid, w, h, dur = struct.unpack("<qiii", payload[8:28])
-    kind = payload[28:36].rstrip(b" ").decode()
-    return mid, w, h, dur, kind
 
 
 def make_ppm_payload(media_id: int, w: int, h: int) -> bytes:
@@ -282,37 +241,13 @@ def decode_png(payload: bytes) -> np.ndarray:
     return np.ascontiguousarray(img[:, :, :3])
 
 
-def resize_image(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
-    """REAL nearest-neighbor resize via numpy index arrays (no libs)."""
-    h, w = img.shape[:2]
-    ys = (np.arange(out_h) * (h / out_h)).astype(np.int64).clip(0, h - 1)
-    xs = (np.arange(out_w) * (w / out_w)).astype(np.int64).clip(0, w - 1)
-    return img[ys][:, xs]
-
-
-def make_jpeg_payload(media_id: int, w: int, h: int) -> bytes:
-    """Deterministic real baseline-JPEG payload (seeded smooth content —
-    gradients survive lossy coding, so tests can bound pixel error)."""
-    from mee_spark.jpeg import encode_jpeg
-
-    rng = np.random.default_rng(media_id)
-    yy = np.linspace(0, 255, h)[:, None]
-    xx = np.linspace(0, 255, w)[None, :]
-    phase = rng.uniform(0, 2 * np.pi, 3)
-    img = np.stack([
-        np.clip(128 + 100 * np.sin(yy / 40 + xx / 60 + p), 0, 255)
-        for p in phase], axis=2).astype(np.uint8)
-    return encode_jpeg(img, quality=92)
-
-
-def decode_image(payload: bytes, fake: bool = False) -> np.ndarray:
+def decode_image(payload: bytes) -> np.ndarray:
     """payload -> HxWx3 uint8 array.
 
     Dispatch: P6 PPM, PNG, and baseline JPEG decode FOR REAL (numpy /
     stdlib zlib; JPEG via mee_spark.jpeg — Huffman + dequant + IDCT +
-    YCbCr, round-5); the MEEFAKE synthetic format decodes when ``fake``
-    is selected; progressive/arithmetic JPEG raise inside decode_jpeg,
-    and anything unrecognized raises here."""
+    YCbCr); progressive/arithmetic JPEG raise inside decode_jpeg, and
+    anything unrecognized raises here."""
     if payload.startswith(b"P6"):
         return decode_ppm(payload)
     if payload.startswith(_PNG_SIG):
@@ -321,20 +256,12 @@ def decode_image(payload: bytes, fake: bool = False) -> np.ndarray:
         from mee_spark.jpeg import decode_jpeg
 
         return decode_jpeg(payload)
-    if payload.startswith(_MAGIC):
-        if not fake:
-            raise NotImplementedError(
-                "MEEFAKE payloads decode only with fake=True (test mode)")
-        mid, w, h, _, _ = _parse_fake(payload)
-        rng = np.random.default_rng(mid)
-        return rng.integers(0, 256, (max(h, 1), max(w, 1), 3), dtype=np.uint8)
     raise NotImplementedError(
         "unrecognized image payload (PPM/PNG/baseline JPEG decode "
         "natively; mp3/video codecs require libs absent here)")
 
 
-def image_features(media: DataFrame, fake: bool = True,
-                   batch_hint: int = 64) -> DataFrame:
+def image_features(media: DataFrame) -> DataFrame:
     """(media_id, width, height, mean_r, mean_g, mean_b, phash) via
     mapInPandas over Arrow batches of binary payloads — the real
     decode/feature-extract execution shape."""
@@ -343,7 +270,7 @@ def image_features(media: DataFrame, fake: bool = True,
         for pdf in batches:
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                img = decode_image(bytes(payload), fake=fake)
+                img = decode_image(bytes(payload))
                 means = img.reshape(-1, 3).mean(axis=0)
                 phash = int(np.abs(img.astype(np.int64)).sum() % (1 << 60))
                 rows.append((int(mid), img.shape[1], img.shape[0],
@@ -356,28 +283,6 @@ def image_features(media: DataFrame, fake: bool = True,
         "media_id long, width int, height int, mean_r double, mean_g double, "
         "mean_b double, phash long",
     )
-
-
-def image_thumbnails(media: DataFrame, out_w: int = 8, out_h: int = 8,
-                     fake: bool = True) -> DataFrame:
-    """(media_id, width, height, thumb) — REAL decode → nearest-neighbor
-    resize → re-encode as P6 PPM, all inside mapInPandas Arrow batches.
-    For PPM payloads every byte of pixel work is genuine; MEEFAKE
-    payloads exercise the identical plan shape."""
-
-    def thumbs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                img = decode_image(bytes(payload), fake=fake)
-                small = resize_image(img, out_w, out_h)
-                thumb = (f"P6\n{out_w} {out_h}\n255\n".encode()
-                         + np.ascontiguousarray(small).tobytes())
-                rows.append((int(mid), img.shape[1], img.shape[0], thumb))
-            yield pd.DataFrame(rows, columns=["media_id", "width", "height", "thumb"])
-
-    return media.filter(F.col("kind") == "image").select("media_id", "payload").mapInPandas(
-        thumbs, "media_id long, width int, height int, thumb binary")
 
 
 def make_wav_payload(media_id: int, duration_ms: int,
@@ -416,62 +321,36 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int, int]:
     return np.frombuffer(raw, dtype=np.int16).reshape(-1, ch), rate, ch
 
 
-def resample_audio(samples: np.ndarray, src_rate: int, dst_rate: int) -> np.ndarray:
-    """REAL linear-interpolation resampler (pure numpy), mono int16 in/out."""
-    x = samples.astype(np.float64).ravel()
-    n_out = max(1, int(round(len(x) * dst_rate / src_rate)))
-    pos = np.linspace(0, len(x) - 1, n_out)
-    return np.interp(pos, np.arange(len(x)), x).astype(np.int16)
-
-
-def audio_frames(media: DataFrame, frame_ms: int = 1000, fake: bool = True) -> DataFrame:
+def audio_frames(media: DataFrame, frame_ms: int = 1000) -> DataFrame:
     """(media_id, frame_idx, rms) — per-frame RMS over fixed-size frames.
 
     RIFF/WAVE (PCM16) payloads decode FOR REAL via the stdlib ``wave``
     module — genuine sample math end to end (rms normalized to [0, 1]
-    full scale). MEEFAKE payloads keep the deterministic pipeline-shape
-    fake when ``fake`` is selected; codec formats (mp3/flac/...) need
-    external libs, absent here, and raise."""
+    full scale); codec formats (mp3/flac/...) need external libs, absent
+    here, and raise."""
 
     def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for mid, payload, dur in zip(pdf["media_id"], pdf["payload"], pdf["duration_ms"]):
+            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 payload = bytes(payload)
-                if payload.startswith(b"RIFF"):
-                    samples, rate, _ = decode_wav(payload)
-                    mono = samples.astype(np.float64).mean(axis=1) / 32768.0
-                    per = max(1, int(rate * frame_ms / 1000))
-                    n_frames = max(1, -(-len(mono) // per))
-                    for i in range(n_frames):
-                        fr = mono[i * per:(i + 1) * per]
-                        rms = float(np.sqrt((fr * fr).mean())) if len(fr) else 0.0
-                        rows.append((int(mid), i, float(np.round(rms, 6))))
-                    continue
-                if not fake:
+                if not payload.startswith(b"RIFF"):
                     raise NotImplementedError(
                         "codec audio (mp3/flac/...) needs external libs; "
                         "RIFF/WAVE PCM decodes natively")
-                mid_, _, _, dur_, _ = _parse_fake(payload)
-                n_frames = max(1, int(dur or dur_) // frame_ms)
-                rng = np.random.default_rng(mid_ * 31 + 7)
+                samples, rate, _ = decode_wav(payload)
+                mono = samples.astype(np.float64).mean(axis=1) / 32768.0
+                per = max(1, int(rate * frame_ms / 1000))
+                n_frames = max(1, -(-len(mono) // per))
                 for i in range(n_frames):
-                    rows.append((int(mid), i, float(np.round(rng.random(), 6))))
+                    fr = mono[i * per:(i + 1) * per]
+                    rms = float(np.sqrt((fr * fr).mean())) if len(fr) else 0.0
+                    rows.append((int(mid), i, float(np.round(rms, 6))))
             yield pd.DataFrame(rows, columns=["media_id", "frame_idx", "rms"])
 
     return media.filter(F.col("kind") == "audio").select(
-        "media_id", "payload", "duration_ms"
+        "media_id", "payload"
     ).mapInPandas(sample, "media_id long, frame_idx int, rms double")
-
-
-def media_stats(media: DataFrame) -> DataFrame:
-    """Metadata-only aggregate — must NOT read payload bytes (column
-    pruning; asserted in tests via the scan's ReadSchema)."""
-    return media.groupBy("kind").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum(F.length("mime")).cast("long").alias("mime_bytes"),
-        F.max("width").alias("max_width"),
-    )
 
 
 # ------------------------------------------------------------------- video
@@ -565,64 +444,45 @@ def decode_y4m(payload: bytes) -> tuple[np.ndarray, float]:
     return np.stack(frames), fps
 
 
-def video_frame_sample(media: DataFrame, stride: int = 2,
-                       fake: bool = True) -> DataFrame:
+def video_frame_sample(media: DataFrame, stride: int = 2) -> DataFrame:
     """(media_id, frame_idx, t_ms, width, height, mean_luma) — sample
     every ``stride``-th frame of each video. The pretraining
     frame-extraction step (feed sampled frames to a vision encoder):
     Y4M payloads decode FOR REAL (pure-numpy plane math end to end,
-    mean_luma from the genuine Y plane); MEEFAKE payloads keep the
-    deterministic pipeline-shape fake when ``fake`` is selected; codec
-    containers (mp4/webm/...) need ffmpeg-class libs absent here and
-    raise honestly.
+    mean_luma from the genuine Y plane); codec containers (mp4/webm/...)
+    need ffmpeg-class libs absent here and raise honestly.
 
     Scale shape: mapInPandas over Arrow batches of binary — each task
     decodes only its partition's payloads (size scan parallelism with
     ``maxPartitionBytes``); emitted rows are narrow (no pixels), so the
-    frame fan-out never widens the media table. Pixel-bearing variants
-    should write thumbnails via ``resize_image`` to a separate table
-    keyed by content hash, as with images."""
+    frame fan-out never widens the media table."""
     if stride < 1:
         raise ValueError("stride must be >= 1")
 
     def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for mid, payload, dur in zip(pdf["media_id"], pdf["payload"],
-                                         pdf["duration_ms"]):
+            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 payload = bytes(payload)
-                if payload.startswith(b"YUV4MPEG2"):
-                    frames, fps = decode_y4m(payload)
-                    # mean_luma from the true Y plane: invert the RGB
-                    # round-trip-free path by recomputing BT.601 luma
-                    for i in range(0, len(frames), stride):
-                        fr = frames[i].astype(np.float64)
-                        luma = (0.299 * fr[..., 0] + 0.587 * fr[..., 1]
-                                + 0.114 * fr[..., 2])
-                        rows.append((int(mid), i, int(round(i * 1000 / fps)),
-                                     fr.shape[1], fr.shape[0],
-                                     float(np.round(luma.mean(), 6))))
-                    continue
-                if not fake:
+                if not payload.startswith(b"YUV4MPEG2"):
                     raise NotImplementedError(
                         "codec video (mp4/webm/...) needs external libs; "
                         "YUV4MPEG2 decodes natively")
-                mid_, w_, h_, dur_, _ = _parse_fake(payload)
-                # a NULL duration_ms arrives in pandas as NaN, which is
-                # truthy — `dur or dur_` would pass NaN to int() and
-                # raise; fall back to the payload-parsed duration
-                dur_eff = dur_ if (dur is None or pd.isna(dur)) else dur
-                n_frames = max(1, int(dur_eff) // 40)  # ~25 fps
-                rng = np.random.default_rng(mid_ * 73 + 11)
-                lumas = rng.random(n_frames)
-                for i in range(0, n_frames, stride):
-                    rows.append((int(mid), i, i * 40, int(w_), int(h_),
-                                 float(np.round(lumas[i] * 255, 6))))
+                frames, fps = decode_y4m(payload)
+                # mean_luma from the true Y plane: invert the RGB
+                # round-trip-free path by recomputing BT.601 luma
+                for i in range(0, len(frames), stride):
+                    fr = frames[i].astype(np.float64)
+                    luma = (0.299 * fr[..., 0] + 0.587 * fr[..., 1]
+                            + 0.114 * fr[..., 2])
+                    rows.append((int(mid), i, int(round(i * 1000 / fps)),
+                                 fr.shape[1], fr.shape[0],
+                                 float(np.round(luma.mean(), 6))))
             yield pd.DataFrame(rows, columns=[
                 "media_id", "frame_idx", "t_ms", "width", "height",
                 "mean_luma"])
 
     return media.filter(F.col("kind") == "video").select(
-        "media_id", "payload", "duration_ms"
+        "media_id", "payload"
     ).mapInPandas(sample, "media_id long, frame_idx int, t_ms int, "
                           "width int, height int, mean_luma double")

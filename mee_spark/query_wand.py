@@ -266,11 +266,9 @@ def live_df(segs: DataFrame) -> DataFrame:
             .groupBy("term").agg(F.sum("live").alias("df")))
 
 
-def _make_scorer(df_map: dict, n_docs: int, avgdl: float,
-                 k1: float, b: float,
-                 wand_min_postings: int = 1 << 16,
-                 round_to: int | None = None,
-                 n_terms_map: dict | None = None):
+def _make_scorer(df_map: dict, n_docs: int, avgdl: float, k1: float,
+                 b: float, wand_min_postings: int, round_to: int | None,
+                 n_terms_map: dict | None):
     """Scorer for one docID range, ALL queries at once.
 
     Grouping by range (not (query, range)) turns q·ranges tiny Arrow

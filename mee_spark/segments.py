@@ -194,9 +194,8 @@ def write_segment(seg_root: str, ckpt_root: str, block_size: int,
 def _make_writer(seg_root: str, ckpt_root: str, block_size: int):
     """Group fn for applyInPandas: one (bucket, range) group → one file.
 
-    Accepts EITHER pre-aggregated postings (term, doc_id, tf, dl) or raw
-    token instances (term, doc_id, dl — one row per token occurrence;
-    round 7): for raw input tf is the run length of equal (term, doc_id)
+    Input rows are raw token instances (term, doc_id, dl — one row per
+    token occurrence); tf is the run length of equal (term, doc_id)
     after the sort, computed vectorized. Letting the writer aggregate
     removes a whole posting-sized exchange from the build (explode →
     groupBy(term,doc_id).count → SECOND shuffle by (bucket,range)
@@ -212,16 +211,12 @@ def _make_writer(seg_root: str, ckpt_root: str, block_size: int):
         codes, uniq_terms = sorted_term_codes(pdf["term"])
         order = np.lexsort((doc, codes))
         codes, doc, dl = codes[order], doc[order], dl[order]
-        if "tf" in pdf.columns:
-            tf = pdf["tf"].to_numpy(np.int64)[order]
-        else:
-            # raw token instances: tf = run length of equal (term, doc)
-            newrun = np.empty(len(doc), dtype=bool)
-            newrun[0] = True
-            newrun[1:] = (codes[1:] != codes[:-1]) | (doc[1:] != doc[:-1])
-            rstarts = np.flatnonzero(newrun)
-            tf = np.diff(np.concatenate((rstarts, [len(doc)])))
-            codes, doc, dl = codes[rstarts], doc[rstarts], dl[rstarts]
+        newrun = np.empty(len(doc), dtype=bool)
+        newrun[0] = True
+        newrun[1:] = (codes[1:] != codes[:-1]) | (doc[1:] != doc[:-1])
+        rstarts = np.flatnonzero(newrun)
+        tf = np.diff(np.concatenate((rstarts, [len(doc)])))
+        codes, doc, dl = codes[rstarts], doc[rstarts], dl[rstarts]
         return write_segment(seg_root, ckpt_root, block_size, bucket, range_id,
                              uniq_terms, codes, doc, tf, dl, t0)
 
@@ -266,8 +261,8 @@ def build_segments(
 ) -> list[dict]:
     """Write compressed segments for gen; returns per-partition metrics.
 
-    ``postings`` carries (term, doc_id, tf, dl) or raw token instances
-    (term, doc_id, dl); see ``_make_writer``.
+    ``postings`` carries raw token instances (term, doc_id, dl); see
+    ``_make_writer``.
     """
     def run(keyed: DataFrame, seg_root: str, ckpt_root: str) -> DataFrame:
         writer = _make_writer(seg_root, ckpt_root, cfg.block_size)

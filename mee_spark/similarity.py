@@ -8,21 +8,21 @@ vec_id bigint, embedding array<float>, label int).
 * ``ann_bruteforce_topk`` — exact top-k: broadcast the (tiny) probe set
   against the corpus; shuffle only (probe × corpus-partition) local
   top-k candidates. The correctness baseline.
-* ``ann_lsh_topk`` — the scale path: random-hyperplane LSH (deterministic
+* ``ann_lsh_topk`` — a scale path: random-hyperplane LSH (deterministic
   hyperplanes from a seeded RNG, broadcast), candidates restricted to
   matching buckets (+ optional multi-probe), exact cosine re-rank within
   the bucket. Recall vs brute force is a tested property, not a hope.
-* ``embedding_dup_pairs`` — near-dup by cosine >= threshold, LSH-blocked.
+* ``ann_ivf_topk_fixed`` — the other scale path: IVF over fixed seeded
+  centroids, exact cosine re-rank within the probed cells.
+* ``embedding_dup_pairs`` — exact near-dup by cosine >= threshold;
+  ``embedding_dup_pairs_lsh`` is its LSH-blocked scale form.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import IntegerType, LongType
 
 
 def cosine_col(a: Column, b: Column) -> Column:
@@ -80,19 +80,13 @@ def _to_i64(m: int) -> int:
     return m - (1 << 64) if m >= (1 << 63) else m
 
 
-# Past this many hyperplanes the plan-literal fold's expression tree
-# (O(planes x dim) literals) stops being the right form — Catalyst
-# analysis/codegen cost grows with the tree while an Arrow matmul stays
-# one batch op. Oracle-checked instances (8/16 planes) stay on the fold.
-LSH_PLAN_LITERAL_MAX_PLANES = 32
-
-
 def lsh_bucket_col(vec: Column, planes: np.ndarray) -> Column:
     """Sign-bit bucket id from the hyperplane projections (JVM arithmetic).
 
-    The <=32-plane form: left-to-right folds are bit-reproducible across
-    engines (the DuckDB oracle evaluates the same order), at the price of
-    an expression tree that grows O(planes x dim)."""
+    Left-to-right folds are bit-reproducible across engines (the DuckDB
+    oracle evaluates the same order), at the price of an expression tree
+    that grows O(planes x dim). Bucket ids fold into int64, so at most 64
+    planes."""
     bucket = F.lit(0).cast("long")
     for j, plane in enumerate(planes):
         proj = F.aggregate(
@@ -102,49 +96,6 @@ def lsh_bucket_col(vec: Column, planes: np.ndarray) -> Column:
         bucket = bucket + F.when(
             proj > 0, F.lit(_to_i64(1 << j)).cast("long")).otherwise(F.lit(0))
     return bucket
-
-
-def lsh_bucket_udf_col(vec: Column, planes: np.ndarray) -> Column:
-    """Arrow-vectorized sign-bit bucket — the wide-plane form (one float64
-    matmul per batch; plan carries a single ArrowEvalPython node instead
-    of O(planes x dim) literals). Matmul reassociates float adds, so a
-    projection within float slop of 0 may land on the other side of the
-    sign than the fold form would put it — acceptable for the scale path,
-    whose candidates are re-verified with exact cosine anyway; keep
-    ``lsh_bucket_col`` for oracle-checked instances. Supports up to 64
-    planes (bucket ids fold into int64 two's-complement)."""
-    n_planes = planes.shape[0]
-    if n_planes > 64:
-        raise ValueError(f"{n_planes} planes > 64: bucket id exceeds int64")
-    P = planes.astype(np.float64)
-    weights = (np.uint64(1) << np.arange(n_planes, dtype=np.uint64))
-
-    @pandas_udf(LongType())
-    def bucket(col: pd.Series) -> pd.Series:
-        # degenerate-input parity with the fold form: an empty Arrow batch
-        # yields an empty series (np.stack([]) would raise ValueError) and
-        # null embeddings bucket to 0 (the fold's when/otherwise null
-        # behavior) instead of TypeError-ing the whole batch
-        if len(col) == 0:
-            return pd.Series(np.empty(0, dtype=np.int64))
-        isnull = col.isna().to_numpy()
-        out = np.zeros(len(col), dtype=np.int64)
-        if not isnull.all():
-            m = np.stack(col[~isnull].to_numpy()).astype(np.float64)
-            bits = (m @ P.T) > 0
-            ids = (bits.astype(np.uint64) * weights).sum(axis=1, dtype=np.uint64)
-            out[~isnull] = ids.view(np.int64)
-        return pd.Series(out)
-
-    return bucket(vec)
-
-
-def lsh_bucket_auto_col(vec: Column, planes: np.ndarray) -> Column:
-    """Dispatch on plane count: plan-literal fold (reproducible, small
-    configs) vs Arrow matmul (wide configs)."""
-    if planes.shape[0] > LSH_PLAN_LITERAL_MAX_PLANES:
-        return lsh_bucket_udf_col(vec, planes)
-    return lsh_bucket_col(vec, planes)
 
 
 def ann_lsh_topk(emb: DataFrame, probe_ids: list[int], k: int = 10,
@@ -159,7 +110,7 @@ def ann_lsh_topk(emb: DataFrame, probe_ids: list[int], k: int = 10,
     that straddle one hyperplane are recovered at (planes+1)x candidate
     cost — the standard recall lever without more tables."""
     planes = hyperplanes(dim, n_planes, seed)
-    bucketed = emb.withColumn("bkt", lsh_bucket_auto_col(F.col("embedding"), planes))
+    bucketed = emb.withColumn("bkt", lsh_bucket_col(F.col("embedding"), planes))
     probes = bucketed.filter(F.col("vec_id").isin([int(p) for p in probe_ids])).select(
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("pvec"),
         F.col("bkt").alias("pbkt"))
@@ -187,8 +138,7 @@ def fixed_centroids(dim: int, n_centroids: int, seed: int = 29) -> np.ndarray:
     The oracle-reproducible coarse quantizer: pure constants, so the whole
     IVF plan (assignment, probe cells, re-rank) can be verified bit-exactly
     against an external SQL engine with the centroids inlined. Recall is
-    below a k-means quantizer's (cells are not data-adaptive) — use
-    ``kmeans_centroids`` when a fixture-stable quantizer isn't required."""
+    below a k-means quantizer's (cells are not data-adaptive)."""
     rng = np.random.default_rng(seed)
     c = rng.standard_normal((n_centroids, dim))
     return c / np.linalg.norm(c, axis=1, keepdims=True)
@@ -226,100 +176,19 @@ def ivf_probe_cells_col(vec: Column, centroids: np.ndarray, nprobe: int) -> Colu
     return F.transform(F.slice(ranked, 1, nprobe), lambda s: s["cid"])
 
 
-def kmeans_centroids(sample: np.ndarray, n_centroids: int, iters: int = 8,
-                     seed: int = 29) -> np.ndarray:
-    """Deterministic spherical k-means (numpy Lloyd) on a driver-side
-    sample — trains the IVF coarse quantizer. At 10^12 vectors you train
-    on the same kind of fixed-size sample; only assignment is distributed."""
-    rng = np.random.default_rng(seed)
-    x = sample.astype(np.float64)
-    x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-    cent = x[rng.choice(len(x), size=n_centroids, replace=False)]
-    for _ in range(iters):
-        sims = x @ cent.T
-        assign = sims.argmax(axis=1)
-        for c in range(n_centroids):
-            members = x[assign == c]
-            if len(members):
-                v = members.sum(axis=0)
-                cent[c] = v / max(np.linalg.norm(v), 1e-12)
-    return cent
-
-
-def ivf_assign_col(vec, centroids: np.ndarray):
-    """pandas_udf: nearest-centroid id per vector (Arrow-vectorized —
-    64-dim×n_centroids argmax is one matmul per batch)."""
-    cent = centroids
-
-    @pandas_udf(IntegerType())
-    def assign(col: pd.Series) -> pd.Series:
-        m = np.stack(col.to_numpy())
-        m = m.astype(np.float64)
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        return pd.Series((m @ cent.T).argmax(axis=1).astype("int32"))
-
-    return assign(vec)
-
-
-def ann_ivf_topk(emb: DataFrame, probe_ids: list[int], k: int = 10,
-                 n_centroids: int = 16, nprobe: int = 4, seed: int = 29,
-                 train_sample: int = 2048) -> DataFrame:
-    """IVF ANN: coarse-quantize the corpus into centroid cells; each probe
-    searches only its ``nprobe`` nearest cells with exact cosine re-rank.
-
-    Scale path #2 next to hyperplane LSH: cost per probe drops from O(N)
-    to O(N·nprobe/n_centroids). Cells are data-adaptive (k-means), so
-    recall beats data-oblivious hyperplanes at equal candidate budgets.
-    Training is a driver-side numpy Lloyd on a fixed-size sample;
-    assignment is a vectorized Arrow UDF (one matmul per batch)."""
-    sample_pd = emb.select("embedding").limit(train_sample).toPandas()
-    cent = kmeans_centroids(np.stack(sample_pd["embedding"].to_numpy()),
-                            n_centroids, seed=seed)
-    assigned = emb.withColumn("cell", ivf_assign_col(F.col("embedding"), cent))
-    probes_pd = (
-        assigned.filter(F.col("vec_id").isin([int(p) for p in probe_ids]))
-        .select("vec_id", "embedding").toPandas()
-    )
-    pm = np.stack(probes_pd["embedding"].to_numpy()).astype(np.float64)
-    pm = pm / np.maximum(np.linalg.norm(pm, axis=1, keepdims=True), 1e-12)
-    near = np.argsort(-(pm @ cent.T), axis=1)[:, :nprobe]
-    probe_cells = [(int(v), [int(c) for c in cells])
-                   for v, cells in zip(probes_pd["vec_id"], near)]
-    spark = emb.sparkSession
-    pc = F.broadcast(spark.createDataFrame(
-        [(v, c) for v, cells in probe_cells for c in cells],
-        "probe_id long, cell int"))
-    pvec = F.broadcast(
-        emb.filter(F.col("vec_id").isin([int(p) for p in probe_ids]))
-        .select(F.col("vec_id").alias("probe_id"), F.col("embedding").alias("pvec")))
-    scored = (
-        assigned.join(pc, "cell")
-        .join(pvec, "probe_id")
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .select("probe_id", "vec_id",
-                F.round(cosine_col(F.col("pvec"), F.col("embedding")), 6).alias("cos"))
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(F.col("probe_id").cast("long"), "rank", F.col("vec_id").cast("long"), "cos")
-    )
-
-
 def ann_ivf_topk_fixed(emb: DataFrame, probe_ids: list[int], k: int = 10,
                        n_centroids: int = 16, nprobe: int = 4,
                        seed: int = 29, dim: int = 64) -> DataFrame:
-    """IVF ANN with the FIXED (data-oblivious, seeded) coarse quantizer —
-    the oracle-checked variant of ``ann_ivf_topk``.
+    """IVF ANN with a FIXED (data-oblivious, seeded) coarse quantizer:
+    coarse-quantize the corpus into centroid cells; each probe searches
+    only its ``nprobe`` nearest cells with exact cosine re-rank, so the
+    cost per probe drops from O(N) to O(N·nprobe/n_centroids).
 
-    Same plan shape as the trained form: assign each corpus vector to one
-    cell (all-JVM fold expressions, no Python), explode each probe into its
-    nprobe nearest cells, broadcast the tiny probe set, exact-cosine
-    re-rank inside the probed cells. Every step is reproducible from the
-    seed alone, so a SQL engine given the same centroid constants produces
-    the identical result set — this closes the trained variant's
-    ``no_oracle`` gap without changing the scale shape."""
+    Assign each corpus vector to one cell (all-JVM fold expressions, no
+    Python), explode each probe into its nprobe nearest cells, broadcast
+    the tiny probe set, exact-cosine re-rank inside the probed cells.
+    Every step is reproducible from the seed alone, so a SQL engine given
+    the same centroid constants produces the identical result set."""
     from mee_spark.dedup import spread
 
     cent = fixed_centroids(dim, n_centroids, seed)
@@ -407,7 +276,7 @@ def embedding_dup_pairs_lsh(
     bucketed = spread(emb).select(
         "vec_id", F.col("embedding"),
         norm_col(F.col("embedding")).alias("nrm"),
-        lsh_bucket_auto_col(F.col("embedding"), planes).alias("bkt"))
+        lsh_bucket_col(F.col("embedding"), planes).alias("bkt"))
     # materialize ONCE before the self-join: both join branches would
     # otherwise inline the O(planes x dim) plan-literal bucket fold
     # (~1024 expression nodes at the 16x64 default), doubling both the

@@ -9,8 +9,9 @@ each micro-batch runs the SAME incremental builder as the batch path via
 at-least-once application; a replayed batch re-diffs against the live
 docmap and produces an empty delta).
 
-Also provided: a watermarked event-time aggregation (pages per language
-per window) — the streaming-stats operator the reference lacks entirely.
+Also provided: a watermarked event-time aggregation (``windowed_counts``,
+rows per key per window) — the streaming-stats operator the reference
+lacks entirely.
 """
 
 from __future__ import annotations
@@ -259,10 +260,3 @@ def windowed_counts(stream: DataFrame, ts_col: str, key_col: str,
         .agg(F.count("*").alias(count_alias))
         .select(F.col("w.start").alias("window_start"), key_col, count_alias)
     )
-
-
-def windowed_lang_counts(pages_stream: DataFrame, window: str = "1 minute",
-                         watermark: str = "2 minutes") -> DataFrame:
-    """Pages-per-language instance of ``windowed_counts``."""
-    return windowed_counts(pages_stream, "warc_ts", "lang", window,
-                           watermark, count_alias="n_pages")

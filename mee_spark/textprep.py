@@ -37,7 +37,6 @@ _TOKEN_RE = re.compile(TOKEN_SPLIT_PATTERN)
 # Fixture html shape (FIXTURES.md §1): the body text lives in the single
 # <p>...</p> element. DOTALL because text may contain no newlines but be safe.
 _BODY_RE = re.compile(rb"<p>(.*?)</p>", re.DOTALL)
-_TITLE_RE = re.compile(rb"<title>(.*?)</title>", re.DOTALL)
 
 
 def extract_text_bytes(html: bytes) -> str:

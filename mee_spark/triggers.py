@@ -23,10 +23,6 @@ from pyspark.sql import functions as F
 
 OPS: tuple[str, ...] = ("INSERT", "UPDATE", "DELETE")
 
-#: the reference's DEFAULT_TRIGGER = INSERT | UPDATE (fire on writes,
-#: not deletes)
-DEFAULT_TRIGGER: tuple[str, ...] = ("INSERT", "UPDATE")
-
 _ALL_RE = re.compile(r"^\s*ALL\s*$", re.I)
 _NOT_RE = re.compile(r"^\s*~\s*(INSERT|UPDATE|DELETE)\s*$", re.I)
 _OR_RE = re.compile(

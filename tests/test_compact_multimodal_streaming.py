@@ -6,21 +6,25 @@ import os
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from mee_spark import manifest as mf
 from mee_spark.build import build_full_index, build_incremental
 from mee_spark.config import IndexConfig
-from mee_spark.fixtures import PAGES_SCHEMA, gen_queries, gen_snapshots_pandas
+from mee_spark.fixtures import PAGES_SCHEMA, gen_queries
 from mee_spark.merge import compact
 from mee_spark.multimodal import (
-    MEDIA_SCHEMA,
     audio_frames,
     decode_image,
     image_features,
-    make_fake_payload,
-    media_stats,
+    make_png_payload,
+    make_ppm_payload,
+    make_wav_payload,
+    make_y4m_payload,
 )
 from mee_spark.query_wand import bm25_topk_wand
+from media_fixtures import MEDIA_SCHEMA
+from snapshots import gen_snapshots_pandas
 
 CFG = IndexConfig(num_doc_partitions=4, num_term_buckets=8,
                   doc_range_size=64, block_size=16)
@@ -55,10 +59,19 @@ def test_compaction_preserves_results(spark, tmp_path_factory):
     # GC removes the superseded generations
     removed = mf.gc_orphans(d)
     assert sorted(removed) == [1, 2, 3]
+    assert not any(os.path.exists(mf.manifest_path(d, g)) for g in removed)
     assert _ranked(spark, d, queries) == before
 
 
 # ----------------------------------------------------------- multimodal
+
+def _payload(i: int, kind: str, w: int, h: int, dur: int) -> bytes:
+    if kind == "image":
+        return (make_ppm_payload if i % 2 == 0 else make_png_payload)(i, w, h)
+    if kind == "audio":
+        return make_wav_payload(i, dur)
+    return make_y4m_payload(i, 16, 8, n_frames=dur // 500)
+
 
 @pytest.fixture(scope="module")
 def media(spark):
@@ -66,21 +79,21 @@ def media(spark):
     for i in range(40):
         kind = ["image", "audio", "video"][i % 3]
         w, h, dur = (32 + i, 16 + i, 0) if kind == "image" else (0, 0, 3000 + i * 500)
-        rows.append((i, kind, f"x/{kind}", make_fake_payload(i, kind, w, h, dur),
+        rows.append((i, kind, f"x/{kind}", _payload(i, kind, w, h, dur),
                      w or None, h or None, dur or None))
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
 def test_codec_decode_is_stubbed_honestly():
-    # MEEFAKE without fake mode, and unknown formats, both refuse loudly
+    # formats without a native decoder refuse loudly
     with pytest.raises(NotImplementedError):
-        decode_image(make_fake_payload(1, "image", 8, 8), fake=False)
+        decode_image(b"ID3\x03mp3-ish-data")
     with pytest.raises(NotImplementedError):
-        decode_image(b"ID3\x03mp3-ish-data", fake=True)
-    # JPEG now dispatches to the REAL decoder (round-5); a corrupt JPEG
-    # is a malformed-input ValueError, not a stub
+        decode_image(make_wav_payload(1, 100))
+    # JPEG dispatches to the REAL decoder; a corrupt JPEG is a
+    # malformed-input ValueError, not a stub
     with pytest.raises(ValueError):
-        decode_image(b"\xff\xd8\xff\xe0jpegdata", fake=True)
+        decode_image(b"\xff\xd8\xff\xe0jpegdata")
 
 
 def test_ppm_decode_is_real():
@@ -88,67 +101,48 @@ def test_ppm_decode_is_real():
     including header comments per the netpbm spec."""
     import numpy as np
 
-    from mee_spark.multimodal import decode_ppm, make_ppm_payload, resize_image
+    from mee_spark.multimodal import decode_ppm
 
     payload = make_ppm_payload(7, w=6, h=4)
-    img = decode_image(payload, fake=False)  # real path: no fake needed
+    img = decode_image(payload)
     assert img.shape == (4, 6, 3) and img.dtype == np.uint8
     rng = np.random.default_rng(7)
     assert (img == rng.integers(0, 256, (4, 6, 3), dtype=np.uint8)).all()
     # tolerant header parse: comments between fields
     commented = b"P6\n# a comment\n6 4\n# another\n255\n" + payload.split(b"255\n", 1)[1]
     assert (decode_ppm(commented) == img).all()
-    # real nearest-neighbor resize: exact pixel provenance
-    small = resize_image(img, 3, 2)
-    assert small.shape == (2, 3, 3)
-    assert (small[0, 0] == img[0, 0]).all() and (small[1, 2] == img[2, 4]).all()
-
-
-def test_image_thumbnails_distributed_real_pixels(spark):
-    """The thumbnail operator does real decode→resize→re-encode inside
-    Arrow batches; outputs re-decode to the expected downsampled pixels."""
-    import numpy as np
-
-    from mee_spark.multimodal import decode_ppm, image_thumbnails, make_ppm_payload
-
-    rows = [(i, "image", "image/x-portable-pixmap", make_ppm_payload(i, 16, 12),
-             16, 12, None) for i in range(12)]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = {r["media_id"]: r for r in image_thumbnails(media, 4, 4, fake=False).collect()}
-    assert len(out) == 12
-    for mid, r in out.items():
-        assert (r["width"], r["height"]) == (16, 12)
-        thumb = decode_ppm(bytes(r["thumb"]))
-        assert thumb.shape == (4, 4, 3)
-        rng = np.random.default_rng(mid)
-        full = rng.integers(0, 256, (12, 16, 3), dtype=np.uint8)
-        ys = (np.arange(4) * 3).clip(0, 11)
-        xs = (np.arange(4) * 4).clip(0, 15)
-        assert (thumb == full[ys][:, xs]).all()
 
 
 def test_image_features_shape_and_determinism(spark, media):
-    feats = image_features(media, fake=True).collect()
+    feats = image_features(media).collect()
     assert len(feats) == 14  # ids 0,3,6,...,39
     by_id = {r["media_id"]: r for r in feats}
     assert by_id[0]["width"] == 32 and by_id[0]["height"] == 16
-    feats2 = {r["media_id"]: r for r in image_features(media, fake=True).collect()}
+    # PPM (even ids) and PNG (odd ids) decode to the generated pixels
+    for mid in (0, 3):
+        w, h = 32 + mid, 16 + mid
+        pixels = np.random.default_rng(mid).integers(0, 256, (h, w, 3), dtype=np.uint8)
+        assert by_id[mid]["mean_g"] == pytest.approx(pixels[..., 1].mean())
+    feats2 = {r["media_id"]: r for r in image_features(media).collect()}
     assert {k: tuple(v) for k, v in by_id.items()} == {k: tuple(v) for k, v in feats2.items()}
 
 
 def test_audio_frame_sampling(spark, media):
-    frames = audio_frames(media, frame_ms=1000, fake=True).collect()
+    frames = audio_frames(media, frame_ms=1000).collect()
     by_id = {}
     for r in frames:
         by_id.setdefault(r["media_id"], []).append(r["frame_idx"])
-    # media_id=1 (audio): duration 3500ms -> 3 frames
-    assert sorted(by_id[1]) == [0, 1, 2]
+    # media_id=1 (audio): 3500 ms of samples -> 4 frames, the last partial
+    assert sorted(by_id[1]) == [0, 1, 2, 3]
 
 
 def test_metadata_query_prunes_payload(spark, media, tmp_path):
+    """The media table keeps payloads in their own Parquet column, so a
+    metadata-only aggregate never reads the payload bytes."""
     path = str(tmp_path / "media.parquet")
     media.write.parquet(path)
-    stats = media_stats(spark.read.parquet(path))
+    stats = spark.read.parquet(path).groupBy("kind").agg(
+        F.count("*").alias("n"), F.max("width").alias("max_width"))
     plan = stats._jdf.queryExecution().executedPlan().toString()
     assert "payload" not in plan  # column pruned from the scan
     assert {r["kind"] for r in stats.collect()} == {"image", "audio", "video"}
@@ -188,13 +182,14 @@ def test_streaming_incremental_index(spark, tmp_path_factory):
 
 def test_streaming_windowed_counts(spark, tmp_path_factory):
     from mee_spark.fixtures import gen_pages
-    from mee_spark.streaming import read_page_stream, windowed_lang_counts
+    from mee_spark.streaming import read_page_stream, windowed_counts
 
     src = str(tmp_path_factory.mktemp("wsrc"))
     gen_pages(spark, 200, num_partitions=2).write.mode("overwrite").parquet(src)
     stream = read_page_stream(spark, src)
     assert stream.isStreaming
-    agg = windowed_lang_counts(stream, window="1 minute", watermark="2 minutes")
+    agg = windowed_counts(stream, "warc_ts", "lang", window="1 minute",
+                          watermark="2 minutes", count_alias="n_pages")
     q = (agg.writeStream.format("memory").queryName("langcounts")
          .outputMode("append").trigger(availableNow=True).start())
     q.awaitTermination(120)
@@ -205,10 +200,10 @@ def test_streaming_windowed_counts(spark, tmp_path_factory):
 
 def test_wav_roundtrip_and_rms_pure():
     """REAL audio: stdlib-wave round-trip; RMS of a full-scale-0.5 sine
-    is 0.5/sqrt(2); resampler halves the sample count."""
+    is 0.5/sqrt(2)."""
     import numpy as np
 
-    from mee_spark.multimodal import decode_wav, make_wav_payload, resample_audio
+    from mee_spark.multimodal import decode_wav
 
     wav = make_wav_payload(3, duration_ms=2000, sample_rate=8000, amplitude=0.5)
     assert wav.startswith(b"RIFF")
@@ -216,11 +211,6 @@ def test_wav_roundtrip_and_rms_pure():
     assert (rate, ch) == (8000, 1) and len(samples) == 16000
     mono = samples.astype(np.float64).ravel() / 32768.0
     assert np.sqrt((mono * mono).mean()) == pytest.approx(0.5 / np.sqrt(2), rel=1e-3)
-    half = resample_audio(samples, 8000, 4000)
-    assert len(half) == 8000
-    # resampled energy is preserved (linear interp of a 440Hz tone at 4kHz)
-    hm = half.astype(np.float64) / 32768.0
-    assert np.sqrt((hm * hm).mean()) == pytest.approx(0.5 / np.sqrt(2), rel=2e-2)
 
 
 def test_audio_frames_real_wav(spark):
@@ -228,14 +218,12 @@ def test_audio_frames_real_wav(spark):
     duration, and every frame's RMS equals the sine's 0.35/sqrt(2)."""
     import numpy as np
 
-    from mee_spark.multimodal import MEDIA_SCHEMA, audio_frames, make_wav_payload
-
     rows = [(i, "audio", "audio/wav",
              make_wav_payload(i, duration_ms=3000, sample_rate=8000,
                               amplitude=0.35),
              None, None, 3000) for i in range(6)]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = audio_frames(media, frame_ms=500, fake=False).collect()
+    out = audio_frames(media, frame_ms=500).collect()
     by_id = {}
     for r in out:
         by_id.setdefault(r["media_id"], []).append((r["frame_idx"], r["rms"]))
@@ -254,7 +242,7 @@ def test_png_roundtrip_all_filters():
     signature."""
     import numpy as np
 
-    from mee_spark.multimodal import decode_png, encode_png, make_png_payload
+    from mee_spark.multimodal import decode_png, encode_png
 
     rng = np.random.default_rng(42)
     img = rng.integers(0, 256, (7, 5, 3), dtype=np.uint8)
@@ -263,7 +251,7 @@ def test_png_roundtrip_all_filters():
         assert (decode_png(payload) == img).all(), f"filter {f}"
     # mixed filters (the corpus generator cycles them) + dispatch
     payload = make_png_payload(9, w=6, h=11)
-    got = decode_image(payload, fake=False)
+    got = decode_image(payload)
     want = np.random.default_rng(9).integers(0, 256, (11, 6, 3), dtype=np.uint8)
     assert (got == want).all()
 
@@ -340,33 +328,14 @@ def test_png_gray_rgba_and_honest_failures():
             decode_png(p)
 
 
-def test_png_thumbnails_distributed(spark):
-    """PNG payloads flow through the same Arrow-batched decode→resize
-    plan as PPM, with exact pixel provenance."""
-    import numpy as np
-
-    from mee_spark.multimodal import decode_ppm, image_thumbnails, make_png_payload
-
-    rows = [(i, "image", "image/png", make_png_payload(i, 16, 12), 16, 12, None)
-            for i in range(8)]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = {r["media_id"]: r for r in image_thumbnails(media, 4, 4, fake=False).collect()}
-    assert len(out) == 8
-    for mid, r in out.items():
-        thumb = decode_ppm(bytes(r["thumb"]))
-        full = np.random.default_rng(mid).integers(0, 256, (12, 16, 3), dtype=np.uint8)
-        ys = (np.arange(4) * 3).clip(0, 11)
-        xs = (np.arange(4) * 4).clip(0, 15)
-        assert (thumb == full[ys][:, xs]).all()
-
-
 # ----------------------------------------------------------- baseline JPEG
 
 def test_jpeg_flat_roundtrip_exact():
     """A uniform image is DC-only — lossy JPEG must reproduce it exactly."""
     import numpy as np
 
-    from mee_spark.jpeg import decode_jpeg, encode_jpeg
+    from mee_spark.jpeg import decode_jpeg
+    from media_fixtures import encode_jpeg
 
     img = np.full((16, 24, 3), 128, dtype=np.uint8)
     assert (decode_jpeg(encode_jpeg(img, quality=90)) == img).all()
@@ -378,7 +347,8 @@ def test_jpeg_flat_roundtrip_exact():
 def test_jpeg_roundtrip_bounded_error_and_subsampling():
     import numpy as np
 
-    from mee_spark.jpeg import decode_jpeg, encode_jpeg
+    from mee_spark.jpeg import decode_jpeg
+    from media_fixtures import encode_jpeg
 
     # photo-like content: detailed luma, SMOOTH chroma (4:2:0 halves
     # chroma bandwidth by design, so fast-oscillating per-channel phases
@@ -404,7 +374,8 @@ def test_jpeg_roundtrip_bounded_error_and_subsampling():
 def test_jpeg_restart_markers():
     import numpy as np
 
-    from mee_spark.jpeg import decode_jpeg, encode_jpeg
+    from mee_spark.jpeg import decode_jpeg
+    from media_fixtures import encode_jpeg
 
     yy = np.linspace(0, 255, 32)[:, None]
     img = np.repeat(np.clip(yy + np.arange(48)[None, :], 0, 255)
@@ -451,8 +422,8 @@ def test_jpeg_honest_failures_and_dispatch():
     import numpy as np
     import pytest
 
-    from mee_spark.jpeg import decode_jpeg, encode_jpeg
-    from mee_spark.multimodal import decode_image, make_jpeg_payload
+    from mee_spark.jpeg import decode_jpeg
+    from media_fixtures import encode_jpeg, make_jpeg_payload
 
     good = encode_jpeg(np.full((8, 8, 3), 50, dtype=np.uint8))
     # progressive (SOF2) raises NotImplementedError, not garbage
@@ -481,7 +452,8 @@ def test_jpeg_fill_bytes_and_standalone_markers():
     both."""
     import numpy as np
 
-    from mee_spark.jpeg import decode_jpeg, encode_jpeg
+    from mee_spark.jpeg import decode_jpeg
+    from media_fixtures import encode_jpeg
 
     good = encode_jpeg(np.full((8, 8, 3), 77, dtype=np.uint8))
     idx = good.find(b"\xFF\xDB")
@@ -496,7 +468,8 @@ def test_jpeg_bad_segment_length_rejected():
     cleanly instead of re-parsing bytes inside the segment (ADVICE r6)."""
     import numpy as np
 
-    from mee_spark.jpeg import decode_jpeg, encode_jpeg
+    from mee_spark.jpeg import decode_jpeg
+    from media_fixtures import encode_jpeg
 
     good = encode_jpeg(np.full((8, 8, 3), 77, dtype=np.uint8))
     idx = good.find(b"\xFF\xDB")
@@ -536,7 +509,8 @@ def test_jpeg_short_sos_rejected():
 
     import numpy as np
 
-    from mee_spark.jpeg import decode_jpeg, encode_jpeg
+    from mee_spark.jpeg import decode_jpeg
+    from media_fixtures import encode_jpeg
 
     good = encode_jpeg(np.full((8, 8, 3), 77, dtype=np.uint8))
     idx = good.find(b"\xFF\xDA")
@@ -546,17 +520,17 @@ def test_jpeg_short_sos_rejected():
             decode_jpeg(good[:idx] + sos)
 
 
-def test_video_frame_sample_fake_null_duration(spark):
-    """A NULL duration_ms arrives in pandas as NaN (truthy!) — the fake
-    path must fall back to the payload-parsed duration instead of
-    raising on int(NaN) (ADVICE r5)."""
-    from mee_spark.multimodal import make_fake_payload, video_frame_sample
+def test_video_frame_sample_null_duration(spark):
+    """A NULL duration_ms arrives in pandas as NaN; frame sampling reads
+    the frame count and timing from the Y4M container alone, so a NULL
+    duration changes nothing."""
+    from mee_spark.multimodal import video_frame_sample
 
-    rows = [(1, "video", "x/video", make_fake_payload(1, "video", 0, 0, 2000),
+    rows = [(1, "video", "video/x-y4m", make_y4m_payload(1, 8, 4, n_frames=50),
              None, None, None)]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = video_frame_sample(media, stride=10, fake=True).collect()
-    # 2000 ms / 40 ms per frame = 50 frames, stride 10 -> 5 samples
+    got = video_frame_sample(media, stride=10).collect()
+    # 50 frames, stride 10 -> 5 samples
     assert len(got) == 5 and all(r["frame_idx"] % 10 == 0 for r in got)
 
 
@@ -619,14 +593,13 @@ def test_video_frame_sample_real_y4m(spark):
     """Distributed frame sampling over REAL Y4M payloads: stride, frame
     timing from the container fps, and mean_luma traced to the actual
     Y planes."""
-    from mee_spark.multimodal import (decode_y4m, make_y4m_payload,
-                                      video_frame_sample)
+    from mee_spark.multimodal import decode_y4m, video_frame_sample
 
     rows = [(i, "video", "video/x-y4m",
              make_y4m_payload(i, 16, 8, n_frames=6, fps=20), 16, 8, 300)
             for i in range(4)]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = video_frame_sample(media, stride=2, fake=False).collect()
+    got = video_frame_sample(media, stride=2).collect()
     assert len(got) == 4 * 3  # frames 0, 2, 4 of 6
     by_key = {(r["media_id"], r["frame_idx"]): r for r in got}
     for mid in range(4):
@@ -641,11 +614,14 @@ def test_video_frame_sample_real_y4m(spark):
             assert r["mean_luma"] == pytest.approx(luma.mean(), abs=1e-4)
 
 
-def test_video_frame_sample_fake_and_honest_failure(spark, media):
+def test_video_frame_sample_honest_failure(spark, media):
     from mee_spark.multimodal import video_frame_sample
 
-    got = video_frame_sample(media, stride=3, fake=True).collect()
+    got = video_frame_sample(media, stride=3).collect()
     assert got and all(r["frame_idx"] % 3 == 0 for r in got)
-    # same media without fake mode: MEEFAKE is a codec stand-in -> raise
+    # a codec container (mp4 here) has no native decoder -> raise
+    mp4 = spark.createDataFrame(
+        [(1, "video", "video/mp4", b"\x00\x00\x00\x18ftypmp42", None, None, 2000)],
+        MEDIA_SCHEMA)
     with pytest.raises(Exception, match="codec video"):
-        video_frame_sample(media, stride=3, fake=False).collect()
+        video_frame_sample(mp4, stride=3).collect()

@@ -28,6 +28,7 @@ import warnings
 import numpy as np
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 import mee_spark.merge as merge
 import mee_spark.query_wand as qw
@@ -122,11 +123,15 @@ def _build_chain(spark, index_dir: str) -> dict:
 
 @pytest.fixture(scope="module")
 def built(spark, tmp_path_factory):
-    """The chain, and its exploded rebuild as generation REFERENCE_GEN."""
+    """The chain, and its exploded rebuild as generation REFERENCE_GEN:
+    the live postings, expanded back to one row per token instance (the
+    segment writer's input), written by ``build_segments``."""
     d = str(tmp_path_factory.mktemp("segmerge"))
     facts = _build_chain(spark, d)
-    build_segments(decoded_postings(spark, d, facts["gens"], CFG.doc_range_size),
-                   CFG, d, REFERENCE_GEN)
+    tokens = (decoded_postings(spark, d, facts["gens"], CFG.doc_range_size)
+              .withColumn("_", F.explode(F.array_repeat(F.lit(0), F.col("tf").cast("int"))))
+              .select("term", "doc_id", "dl"))
+    build_segments(tokens, CFG, d, REFERENCE_GEN)
     return d, facts
 
 

@@ -31,11 +31,11 @@ from mee_spark.fixtures import (
     gen_pages_for_indices,
     gen_queries,
     gen_queries_pandas,
-    gen_snapshots_pandas,
 )
 from mee_spark.oracle import OracleIndex
 from mee_spark.query_wand import bm25_topk_wand
 from mee_spark.segments import read_segments
+from snapshots import gen_snapshots_pandas
 
 CFG = IndexConfig(num_doc_partitions=4, num_term_buckets=8,
                   doc_range_size=64, block_size=16)
@@ -460,13 +460,14 @@ def test_chain_reads_submit_no_spark_job(spark, snaps, tmp_path_factory):
 
 _RESUME_SCRIPT = r"""
 import glob, json, os, sys, tempfile
-sys.path.insert(0, sys.argv[1])
+sys.path[:0] = [sys.argv[1], os.path.join(sys.argv[1], "tests")]
 import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 import mee_spark.segments as seg
 from mee_spark.build import build_full_index, build_incremental
 from mee_spark.config import IndexConfig
-from mee_spark.fixtures import PAGES_SCHEMA, gen_snapshots_pandas
+from mee_spark.fixtures import PAGES_SCHEMA
+from snapshots import gen_snapshots_pandas
 
 orig = seg._make_writer
 

@@ -306,7 +306,8 @@ def test_single_query_jobs_per_call(built, spark, tmp_path, monkeypatch):
     # a two-generation tombstone chain below the driver-plan gate: reading
     # the tombstones, the live df and building the plan submit no job
     from mee_spark.build import build_incremental
-    from mee_spark.fixtures import PAGES_SCHEMA, gen_snapshots_pandas
+    from mee_spark.fixtures import PAGES_SCHEMA
+    from snapshots import gen_snapshots_pandas
 
     snaps = gen_snapshots_pandas(100)
     d = str(tmp_path / "ix")

@@ -139,7 +139,8 @@ def test_incremental_build_extracts_text_once(spark, tmp_path, monkeypatch):
 
     from mee_spark.build import build_full_index, build_incremental
     from mee_spark.config import IndexConfig
-    from mee_spark.fixtures import PAGES_SCHEMA, gen_snapshots_pandas
+    from mee_spark.fixtures import PAGES_SCHEMA
+    from snapshots import gen_snapshots_pandas
 
     cfg = IndexConfig(num_doc_partitions=4, num_term_buckets=8,
                       doc_range_size=64, block_size=16)
@@ -170,7 +171,8 @@ def test_live_df_pass_repartitions_by_range(spark, tmp_path):
     so the scan never reads the tf/dl blobs or the block metadata."""
     from mee_spark.build import build_full_index, build_incremental
     from mee_spark.config import IndexConfig
-    from mee_spark.fixtures import PAGES_SCHEMA, gen_snapshots_pandas
+    from mee_spark.fixtures import PAGES_SCHEMA
+    from snapshots import gen_snapshots_pandas
     from mee_spark.query_wand import live_df, tombstones_per_range
     from mee_spark.segments import read_segments
 
@@ -212,8 +214,8 @@ def _chain_query_plans(spark, tmp_path, monkeypatch) -> dict[bool, list[str]]:
         PAGES_SCHEMA,
         QUERIES_SCHEMA,
         gen_queries_pandas,
-        gen_snapshots_pandas,
     )
+    from snapshots import gen_snapshots_pandas
 
     cfg = IndexConfig(num_doc_partitions=4, num_term_buckets=8,
                       doc_range_size=64, block_size=16)
@@ -273,8 +275,8 @@ def test_add_only_chain_plans_no_tombstones(spark, tmp_path):
         PAGES_SCHEMA,
         QUERIES_SCHEMA,
         gen_queries_pandas,
-        gen_snapshots_pandas,
     )
+    from snapshots import gen_snapshots_pandas
     from mee_spark.query_wand import bm25_topk_wand
 
     cfg = IndexConfig(num_doc_partitions=4, num_term_buckets=8,

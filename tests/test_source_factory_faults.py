@@ -25,7 +25,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mee_spark.fixtures import gen_pages, gen_pages_for_indices
-from mee_spark.streaming import page_stream_source, windowed_lang_counts
+from mee_spark.streaming import page_stream_source, windowed_counts
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -65,7 +65,7 @@ def test_rate_backend_rows_byte_identical(spark, tmp_path):
 
 
 def test_same_pipeline_over_file_and_rate_backends(spark, tmp_path):
-    """windowed_lang_counts runs UNCHANGED over two different backends —
+    """windowed_counts runs UNCHANGED over two different backends —
     the operator never sees which source produced its input."""
     src_dir = str(tmp_path / "drop")
     os.makedirs(src_dir)
@@ -78,7 +78,8 @@ def test_same_pipeline_over_file_and_rate_backends(spark, tmp_path):
         ("rate", {"rows_per_second": 500}, 1),
     ):
         stream = page_stream_source(spark, kind, **kwargs)
-        agg = windowed_lang_counts(stream, window="10 minutes", watermark="0 seconds")
+        agg = windowed_counts(stream, "warc_ts", "lang", window="10 minutes",
+                              watermark="0 seconds", count_alias="n_pages")
         name = f"langcounts_{kind}"
         q = (agg.writeStream.format("memory").queryName(name)
              .outputMode("complete").start())
