@@ -16,12 +16,14 @@ guard, the docmap ∥ segments write, staging cleanup, one manifest and
 the publish. Every generation records ``next_doc_id``; ids are never
 recycled, compaction included.
 
-The snapshot is diffed ONCE: one job extracts and hashes its text,
-full-outer-joins it against the live docmap and stages only the added,
-changed and deleted rows (``_diff_staging.parquet``). Every later write
-— tombstones, docID assignment, the tokenized delta, docmap, segments —
-reads that small file, so the extraction UDF crosses the Python
-boundary once per refresh whatever the plan shape downstream.
+The snapshot is diffed ONCE: one job extracts, hashes and tokenizes its
+text (with each token's term bucket), joins it against the live docmap
+and stages the rows (``_diff_staging.parquet``), so the extraction UDF
+crosses the Python boundary once per refresh. A small delta on a small
+chain (``fits_driver``, then the observed token count) is then built on
+the driver with pyarrow and numpy — tombstones, docIDs, docmap and
+segments, no further Spark job; a larger one continues in Spark from the
+same staged diff. The manifest records ``metrics.plan``.
 
 Everything the query engine needs later is durable per gen:
 ``docmap.parquet`` (url, doc_id, dl, text_hash), segment files,
@@ -40,7 +42,9 @@ import time
 from typing import Callable, NamedTuple
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark import InheritableThread
@@ -51,7 +55,7 @@ from pyspark.sql.pandas.types import from_arrow_schema
 from mee_spark import manifest as mf
 from mee_spark.config import IndexConfig, layout_record
 from mee_spark.docmap import assign_doc_ids
-from mee_spark.segments import build_segments, live_mask
+from mee_spark.segments import build_segments, live_mask, term_buckets
 from mee_spark.textprep import extract_text, tokenize_col
 
 DOCMAP_ARROW_SCHEMA = pa.schema([("url", pa.string()), ("doc_id", pa.int64()),
@@ -61,10 +65,12 @@ TOMBSTONES_ARROW_SCHEMA = pa.schema([("doc_id", pa.int64())])
 TOMBSTONES_SCHEMA = from_arrow_schema(TOMBSTONES_ARROW_SCHEMA)
 DOCS_STAGING_SCHEMA = ("doc_id long, url string, tokens array<string>, "
                        "dl long, text_hash long")
-# kind: added | changed | deleted (unchanged urls are not staged);
-# deleted rows have null _text/text_hash, added rows null old_*
+# kind: added | changed | deleted | unchanged; upserts (added, changed)
+# carry their tokens, dl and term buckets, added rows null old_*, the
+# others only url, kind and old_*
 DIFF_SCHEMA = ("url string, kind string, old_doc_id long, old_dl long, "
-               "_text string, text_hash long")
+               "text_hash long, dl long, tokens array<string>, "
+               "buckets array<bigint>")
 
 
 def _docmap_path(index_dir: str, gen: int) -> str:
@@ -173,20 +179,26 @@ class Generation(NamedTuple):
     metrics: dict  # the writer's own manifest metrics
 
 
+def _write_table(table: pa.Table, path: str) -> None:
+    """Write ``table`` on the driver, with no Spark job, replacing any
+    earlier attempt's: one snappy file in the directory layout Spark's
+    writer leaves, so Spark and pyarrow read both forms alike. Columns
+    are plain-encoded: a docmap's urls and ids are all distinct, so a
+    dictionary only adds a page."""
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    pq.write_table(table, os.path.join(path, "part-00000.parquet"),
+                   compression="snappy", use_dictionary=False)
+
+
 def _write_docmap(docmap: DataFrame | pa.Table, path: str) -> None:
     """Write a generation's docmap rows, replacing any earlier attempt's.
-    An Arrow table is written on the driver, with no Spark job, as one
-    snappy file in the directory layout Spark's writer leaves, so Spark
-    and pyarrow read both forms alike."""
+    An Arrow table is written on the driver, in docID order."""
     columns = DOCMAP_ARROW_SCHEMA.names
     if isinstance(docmap, DataFrame):
         docmap.select(*columns).write.mode("overwrite").parquet(path)
-        return
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path)
-    pq.write_table(docmap.select(columns),
-                   os.path.join(path, "part-00000.parquet"),
-                   compression="snappy")
+    else:
+        _write_table(docmap.select(columns).sort_by("doc_id"), path)
 
 
 def write_generation(index_dir: str, cfg: IndexConfig, gen: int, kind: str,
@@ -267,6 +279,144 @@ def build_full_index(
                             lineage=lineage or {}, publish=publish)
 
 
+def fits_driver(chain: list[dict], *, decode: bool) -> bool:
+    """Whether a driver plan over ``chain`` fits in driver memory, decided
+    from its manifests alone, before any read: the docmap rows
+    (``mf.docmap_rows``) and tombstones its generations wrote must fit
+    the driver budgets (``query_wand.DRIVER_MAX_DOCMAP_ROWS``,
+    ``DRIVER_MAX_TOMBSTONES``). With ``decode`` (a compaction decodes
+    every posting) so must the postings its segment groups recorded
+    (``DRIVER_MAX_DECODE_POSTINGS``); a manifest that records no groups
+    then counts as above it."""
+    from mee_spark import query_wand  # it imports this module
+
+    if (mf.docmap_rows(chain) > query_wand.DRIVER_MAX_DOCMAP_ROWS
+            or mf.tombstone_count(chain) > query_wand.DRIVER_MAX_TOMBSTONES):
+        return False
+    if not decode:
+        return True
+    groups = [m.get("metrics", {}).get("partitions") for m in chain]
+    return all(g is not None for g in groups) and sum(
+        int(p["n_postings"]) for g in groups for p in g
+    ) <= query_wand.DRIVER_MAX_DECODE_POSTINGS
+
+
+def _stage_diff(snapshot: DataFrame, use_html: bool, cfg: IndexConfig,
+                old: DataFrame, driver_docmap: bool, partial: bool,
+                gdir: str) -> tuple[DataFrame, Row]:
+    """The one job that reads the snapshot: extract + hash + tokenize its
+    text, join it against the live docmap ``old``, label each url and
+    stage the rows (``_diff_staging.parquet``) -> (staged diff, observed
+    upserts ``n``, their token instances ``s``, removed docs ``nr``
+    and their Σdl ``sr``, changed docs ``nc``).
+
+    ``old`` is a broadcast local relation when ``driver_docmap``: a left
+    join then, and the unchanged urls are staged too, for the driver to
+    find the deletions among. Otherwise a full outer join labels the
+    deletions and unchanged rows are not staged. Tokens and buckets come
+    from the JVM expressions every build and query uses (``tokenize_col``,
+    ``term_buckets``), so the driver tail matches the index by
+    construction."""
+    kind = (F.when(F.col("old_doc_id").isNull(), "added")
+            .when(F.col("text_hash").isNull(), "deleted")
+            .when(F.col("text_hash") != F.col("old_hash"), "changed")
+            .otherwise("unchanged"))
+    dropped = ((["deleted"] if partial else [])
+               + (["unchanged"] if partial or not driver_docmap else []))
+    upsert = F.col("kind").isin("added", "changed")
+    removed = F.col("kind").isin("changed", "deleted")
+    diff = _hashed_text(snapshot, use_html, cfg.lang_filter).join(
+        old.select("url", F.col("doc_id").alias("old_doc_id"),
+                   F.col("dl").alias("old_dl"),
+                   F.col("text_hash").alias("old_hash")),
+        "url", "left" if driver_docmap else "full_outer").withColumn(
+        "kind", kind)
+    if dropped:
+        diff = diff.filter(~F.col("kind").isin(*dropped))
+    diff = diff.select(
+        "url", "kind", "old_doc_id", "old_dl", "text_hash",
+        F.when(upsert, tokenize_col(F.col("_text"))).alias("tokens")
+    ).select("*", F.when(upsert, F.size("tokens").cast("long")).alias("dl"),
+             term_buckets("tokens", cfg.num_term_buckets).alias("buckets"))
+    return _stage(diff, gdir, "diff", DIFF_SCHEMA,
+                  F.count_if(upsert).alias("n"),
+                  F.sum(F.when(upsert, F.col("dl"))).alias("s"),
+                  F.count_if(removed).alias("nr"),
+                  F.sum(F.when(removed, F.col("old_dl"))).alias("sr"),
+                  F.count_if(F.col("kind") == "changed").alias("nc"))
+
+
+def _delta_in_spark(staged: DataFrame, gone: pa.Table | None, start_id: int,
+                    cfg: IndexConfig, index_dir: str, gen: int, gdir: str,
+                    resume: bool) -> tuple[DataFrame, Callable, int]:
+    """The Spark tail of a delta: tombstones ∥ docID assignment + the
+    docs staging, from the staged diff and the deletions the driver found
+    (``gone``) -> (docmap frame, segment write, next_doc_id)."""
+    kind = F.col("kind")
+    tombs = staged.filter(kind.isin("changed", "deleted")).select(
+        F.col("old_doc_id").alias("doc_id"))
+    if gone is not None:
+        tombs = tombs.unionByName(staged.sparkSession.createDataFrame(
+            gone.select(["doc_id"]), TOMBSTONES_SCHEMA))
+    upserts = staged.filter(kind.isin("added", "changed"))
+    added_ids = assign_doc_ids(upserts.filter(kind == "added"),
+                               cfg.num_doc_partitions, start_id=start_id)
+    # changed urls keep their docID: no match in added_ids
+    delta = upserts.join(added_ids, "url", "left").select(
+        F.coalesce("doc_id", "old_doc_id").alias("doc_id"), "url", "tokens",
+        "dl", "text_hash")
+    docs, raw, s = _concurrent(
+        lambda: tombs.write.mode("overwrite").parquet(
+            _tombstones_path(index_dir, gen)),
+        lambda: _stage_docs(delta, gdir))
+    return (docs, functools.partial(build_segments, raw, cfg, index_dir, gen,
+                                    resume=resume),
+            # a delta that allocates nothing keeps the watermark
+            max(start_id, int(s["m"]) + 1 if s["m"] is not None else 0))
+
+
+def _delta_on_driver(diff: pa.Table, gone: pa.Table | None, start_id: int,
+                     cfg: IndexConfig, index_dir: str, gen: int,
+                     resume: bool) -> tuple[pa.Table, Callable, int]:
+    """``_delta_in_spark`` on the driver, with no Spark job: the staged
+    diff is read with pyarrow, the tombstones are written sorted, and an
+    added url gets ``start_id`` + its dense rank among the added urls
+    (``assign_doc_ids``' contract, a url staged twice included). The
+    token instances feed ``build_segments`` as a pandas frame."""
+    kind = diff["kind"]
+    _write_table(pa.table({"doc_id": np.sort(np.concatenate(
+        [diff["old_doc_id"].filter(pc.is_in(kind, pa.array(
+            ["changed", "deleted"]))).to_numpy()]
+        + ([] if gone is None else [gone["doc_id"].to_numpy()])))}),
+        _tombstones_path(index_dir, gen))
+    added = pc.equal(kind, "added")
+    fresh, rank = np.unique(diff["url"].filter(added).to_numpy(),
+                            return_inverse=True)
+    doc_id = np.array(pc.fill_null(diff["old_doc_id"], -1).to_numpy())
+    doc_id[added.to_numpy()] = start_id + rank
+    # only upserts have tokens: no other row reaches the postings
+    lens = pc.fill_null(pc.list_value_length(diff["tokens"]), 0).to_numpy()
+    docs = np.repeat(doc_id, lens)
+    bucket = pc.list_flatten(diff["buckets"]).to_numpy()
+    range_id = docs // cfg.doc_range_size
+    # in (bucket, range) order, so the driver's group loop slices the
+    # frame instead of sorting a copy of it
+    order = np.lexsort((range_id, bucket))
+    postings = pd.DataFrame({
+        # Arrow-backed: a Python str per token would outweigh the rest
+        "term": pc.list_flatten(diff["tokens"]).take(order).to_pandas(
+            types_mapper=pd.ArrowDtype),
+        "doc_id": docs[order],
+        "dl": np.repeat(pc.fill_null(diff["dl"], 0).to_numpy(), lens)[order],
+        "bucket": bucket[order], "range_id": range_id[order]})
+    docmap = pa.table({"url": diff["url"], "doc_id": doc_id, "dl": diff["dl"],
+                       "text_hash": diff["text_hash"]}).filter(
+        pc.is_in(kind, pa.array(["added", "changed"])))
+    return (docmap, functools.partial(build_segments, postings, cfg,
+                                      index_dir, gen, resume=resume),
+            start_id + len(fresh))
+
+
 def build_incremental(
     spark: SparkSession,
     new_snapshot: DataFrame,
@@ -291,72 +441,58 @@ def build_incremental(
     full snapshot: urls absent from it are NOT deletions (mee's event
     semantics — a DELETE is an explicit event, `commonhandler.py:
     860-938`; silence says nothing). Used by the streaming path.
+
+    One Spark job diffs the snapshot (``_stage_diff``). A small delta on
+    a small chain is then built on the driver, with no further job
+    (``_delta_on_driver``); the manifest records the plan taken,
+    ``metrics.plan`` = "driver" or "spark".
     """
+    from mee_spark import query_wand  # it imports this module
+
     # the layout (range size, term buckets) is the chain's, not the caller's
     chain, cfg = mf.open_chain(index_dir, cfg)
-    prev = live_docmap(spark, index_dir, [m["generation"] for m in chain])
+    gens = [m["generation"] for m in chain]
     tail = chain[-1]
+    # the first gate, from the manifests: the live docmap fits the driver
+    driver_docmap = fits_driver(chain, decode=False)
 
     def stage(gdir: str) -> Generation:
-        # Five writes in three phases, the snapshot read by the first only:
-        #   diff:    extract + hash + full-outer-join against the live
-        #            docmap, label each url, stage the non-unchanged rows;
-        #   phase 1: tombstones ∥ tokenized delta staging (both read it);
-        #   phase 2: docmap ∥ segment build (``write_generation``).
-        # Corpus stats delta (exact): N' = N + added − deleted; Σdl'
-        # likewise, replacing changed docs' old dl with the new one. The
-        # removed-docs aggregate (changed ∪ deleted = the tombstone rows)
-        # rides the diff write, the delta's rides the staging write.
-        kind = (F.when(F.col("old_doc_id").isNull(), "added")
-                .when(F.col("text_hash").isNull(), "deleted")
-                .when(F.col("text_hash") != F.col("old_hash"), "changed"))
-        diff = _hashed_text(new_snapshot, use_html, cfg.lang_filter).join(
-            prev.select("url", F.col("doc_id").alias("old_doc_id"),
-                        F.col("dl").alias("old_dl"),
-                        F.col("text_hash").alias("old_hash")),
-            "url", "full_outer").select(
-            "url", kind.alias("kind"), "old_doc_id", "old_dl", "_text",
-            "text_hash").filter(F.col("kind").isNotNull())
-        if partial:
-            diff = diff.filter(F.col("kind") != "deleted")
-        removed = F.col("kind") != "added"
-        staged_diff, rem = _stage(
-            diff, gdir, "diff", DIFF_SCHEMA, F.count_if(removed).alias("n"),
-            F.sum(F.when(removed, F.col("old_dl"))).alias("s"),
-            F.count_if(F.col("kind") == "changed").alias("nc"))
-        n_removed, n_changed = int(rem["n"]), int(rem["nc"])
-
-        # fresh docIDs start at the chain tail's watermark, no max(doc_id)
-        # job: ids are never recycled, even after mass deletions and
-        # compactions, and a gap in the id space costs nothing
+        # The snapshot is read by the diff job only; both tails read its
+        # staging. Corpus stats delta (exact): N' = N + added − removed;
+        # Σdl' likewise, replacing changed docs' old dl with the new one.
+        live = live_docmap_table(index_dir, gens) if driver_docmap else None
+        old = (live_docmap(spark, index_dir, gens) if live is None else
+               F.broadcast(spark.createDataFrame(live, DOCMAP_SCHEMA)))
+        staged, d = _stage_diff(new_snapshot, use_html, cfg, old,
+                                live is not None, partial, gdir)
+        n_delta, n_changed = int(d["n"]), int(d["nc"])
+        n_removed, dl_removed = int(d["nr"]), int(d["sr"] or 0)
+        # the second gate: the delta's token instances fit the driver
+        on_driver = (live is not None and int(d["s"] or 0)
+                     <= query_wand.DRIVER_MAX_DELTA_TOKENS)
+        path = os.path.join(gdir, "_diff_staging.parquet")
+        diff = pq.read_table(path) if on_driver else None
+        gone = None  # live docs the driver finds missing from the snapshot
+        if live is not None and not partial:
+            urls = (diff if on_driver else pq.read_table(path, columns=["url"]))
+            gone = live.filter(pc.invert(pc.is_in(live["url"],
+                                                  value_set=urls["url"])))
+            n_removed += gone.num_rows
+            dl_removed += int(pc.sum(gone["dl"]).as_py() or 0)
         start_id = int(tail["next_doc_id"])
-        upserts = staged_diff.filter(F.col("kind") != "deleted")
-        added_ids = assign_doc_ids(upserts.filter(F.col("kind") == "added"),
-                                   cfg.num_doc_partitions, start_id=start_id)
-        # changed urls keep their docID: no match in added_ids
-        delta_plan = _with_tokens(upserts.join(added_ids, "url", "left")
-                                  .select(F.coalesce("doc_id", "old_doc_id")
-                                          .alias("doc_id"),
-                                          "url", "_text", "text_hash"))
-        delta_docs, raw, delta = _concurrent(
-            lambda: staged_diff.filter(removed).select(
-                F.col("old_doc_id").alias("doc_id")).write.mode(
-                "overwrite").parquet(_tombstones_path(index_dir, gen)),
-            lambda: _stage_docs(delta_plan, gdir))
-        n_delta = int(delta["n"])
+        docmap, segments, next_doc_id = (
+            _delta_on_driver(diff, gone, start_id, cfg, index_dir, gen, resume)
+            if on_driver else
+            _delta_in_spark(staged, gone, start_id, cfg, index_dir, gen, gdir,
+                            resume))
         return Generation(
-            docmap=delta_docs, segments=functools.partial(
-                build_segments, raw, cfg, index_dir, gen, resume=resume),
-            n_docs=n_delta,
-            # changed docs: removed old (in rem) and re-added (in delta)
-            # -> net N includes them once
+            docmap=docmap, segments=segments, n_docs=n_delta,
+            # changed docs: removed old and re-added -> net N counts them once
             n_docs_live=tail["n_docs_live"] + n_delta - n_removed,
-            sum_dl_live=(tail["sum_dl_live"] + int(delta["s"] or 0)
-                         - int(rem["s"] or 0)),
-            # a delta that allocates nothing keeps the watermark
-            next_doc_id=max(start_id, int(delta["m"]) + 1
-                            if delta["m"] is not None else 0),
-            metrics={"docs_added": n_delta - n_changed,
+            sum_dl_live=tail["sum_dl_live"] + int(d["s"] or 0) - dl_removed,
+            next_doc_id=next_doc_id,
+            metrics={"plan": "driver" if on_driver else "spark",
+                     "docs_added": n_delta - n_changed,
                      "docs_changed": n_changed,
                      "docs_deleted": n_removed - n_changed})
 
@@ -390,14 +526,21 @@ def live_docmap_table(index_dir: str, gens: list[int]) -> pa.Table:
     Spark job: newest gen wins per url, and a row is dropped when a
     tombstone at a later gen kills its doc id. For chains whose docmaps
     and tombstones fit in driver memory."""
-    parts = [ds.dataset(_docmap_path(index_dir, g), schema=DOCMAP_ARROW_SCHEMA,
-                        format="parquet").to_table() for g in gens]
-    dm = pa.concat_tables([t.append_column("gen", pa.array(
-        np.full(t.num_rows, g, np.int64))) for g, t in zip(gens, parts)])
-    # a gen holds a url at most once, so (url, newest gen) names one row
-    newest = dm.group_by("url").aggregate([("gen", "max")])
-    dm = dm.join(newest, ["url", "gen"], right_keys=["url", "gen_max"],
-                 join_type="inner")
+    # newest gen first: a gen's rows lose the urls a newer gen holds (a
+    # probe of the newer gens' urls, usually a few deltas', not a join of
+    # the whole chain on url)
+    parts, newer = [], []
+    for g in reversed(gens):
+        t = ds.dataset(_docmap_path(index_dir, g), schema=DOCMAP_ARROW_SCHEMA,
+                       format="parquet").to_table()
+        urls = t["url"].chunks
+        if newer:
+            t = t.filter(pc.invert(pc.is_in(
+                t["url"], value_set=pa.concat_arrays(newer))))
+        parts.append(t.append_column("gen", pa.array(
+            np.full(t.num_rows, g, np.int64))))
+        newer += urls
+    dm = pa.concat_tables(parts)
     keep = live_mask(dm["doc_id"].to_numpy(), dm["gen"].to_numpy(),
                      *read_tombstone_arrays(index_dir, gens))
     return dm.filter(pa.array(keep)).drop_columns("gen").sort_by("doc_id")

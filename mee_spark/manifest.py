@@ -121,6 +121,16 @@ def tombstone_count(chain: list[dict]) -> int:
                for m in chain)
 
 
+def docmap_rows(chain: list[dict]) -> int:
+    """Docmap rows the chain's generations wrote: its root's, one per
+    live doc (a full build or a compaction), plus each later generation's
+    added and changed docs."""
+    return sum(int(m["n_docs_live"]) if m["parent"] is None else
+               int(m.get("metrics", {}).get("docs_added", 0))
+               + int(m.get("metrics", {}).get("docs_changed", 0))
+               for m in chain)
+
+
 def open_chain(index_dir: str, cfg: IndexConfig) -> tuple[list[dict], IndexConfig]:
     """-> (the published generation's manifests, root first, ``cfg`` with
     the chain root's recorded layout). After the first full build the chain

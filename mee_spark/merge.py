@@ -20,9 +20,10 @@ leave the task that decodes them.
 A small chain is compacted on the driver instead, with no Spark job: a
 Spark compaction's fixed cost (its jobs, stages and Python workers) is
 most of a small chain's. The gate is read from the manifests before any
-read (``_fits_driver``): the chain's recorded postings and tombstones
-must fit the query path's driver budgets
-(``query_wand.DRIVER_MAX_DECODE_POSTINGS``, ``DRIVER_MAX_TOMBSTONES``).
+read (``build.fits_driver``): the chain's docmap rows, recorded postings
+and tombstones must fit the driver budgets
+(``query_wand.DRIVER_MAX_DOCMAP_ROWS``, ``DRIVER_MAX_DECODE_POSTINGS``,
+``DRIVER_MAX_TOMBSTONES``).
 Below it pyarrow reads the segment rows and tombstones, each (bucket,
 range) goes through the same compactor and ``write_groups`` checkpoints
 as a Spark task's, and the live docmap is computed and written with
@@ -48,6 +49,7 @@ from mee_spark import manifest as mf
 from mee_spark import query_wand
 from mee_spark.build import (
     Generation,
+    fits_driver,
     live_docmap,
     live_docmap_table,
     read_tombstone_arrays,
@@ -59,6 +61,7 @@ from mee_spark.query_wand import joined_tombstones, tombstones_per_range
 from mee_spark.segments import (
     METRICS_SCHEMA,
     decode_live,
+    groups_on_driver,
     read_rows,
     read_segments,
     sorted_term_codes,
@@ -170,32 +173,15 @@ def compact_segments_on_driver(index_dir: str, gens: list[int],
 
     def run(keyed: pd.DataFrame, seg_root: str, ckpt_root: str) -> pd.DataFrame:
         compactor = _make_compactor(seg_root, ckpt_root, cfg.block_size)
-        out = []
-        for key, group in keyed.groupby(["bucket", "range_id"]):
+
+        def compact_group(key: tuple, group: pd.DataFrame) -> pd.DataFrame:
             lo, hi = np.searchsorted(tomb_ranges, [key[1], key[1] + 1])
-            written = compactor(key, group, pd.DataFrame(
+            return compactor(key, group, pd.DataFrame(
                 {"doc_id": tomb_ids[lo:hi], "tomb_gen": tomb_gens[lo:hi]}))
-            if len(written):
-                out.append(written)
-        return (pd.concat(out, ignore_index=True) if out
-                else pd.DataFrame(columns=METRICS_SCHEMA.fieldNames()))
+
+        return groups_on_driver(keyed, compact_group)
 
     return write_groups(segs, index_dir, new_gen, resume=True, run=run)
-
-
-def _fits_driver(chain: list[dict]) -> bool:
-    """Whether ``chain`` compacts on the driver, decided from its
-    manifests alone, before any read: the postings its segment groups
-    recorded and the tombstones it wrote must fit the query path's driver
-    budgets (``query_wand.DRIVER_MAX_DECODE_POSTINGS`` and
-    ``DRIVER_MAX_TOMBSTONES``). A manifest that records no groups counts
-    as above them."""
-    groups = [m.get("metrics", {}).get("partitions") for m in chain]
-    if any(g is None for g in groups):
-        return False
-    postings = sum(int(p["n_postings"]) for g in groups for p in g)
-    return (postings <= query_wand.DRIVER_MAX_DECODE_POSTINGS
-            and mf.tombstone_count(chain) <= query_wand.DRIVER_MAX_TOMBSTONES)
 
 
 def compaction_due(index_dir: str, *, max_chain_len: int = 8,
@@ -253,8 +239,8 @@ def compact(spark: SparkSession, index_dir: str, cfg: IndexConfig,
     """Rewrite the whole published chain as single generation ``new_gen``,
     in the chain's layout (``cfg``'s layout fields are not read), through
     the commit path every generation shares (``build.write_generation``):
-    on the driver when the chain fits its budgets (``_fits_driver``), in a
-    Spark cogroup otherwise.
+    on the driver when the chain fits its budgets (``build.fits_driver``),
+    in a Spark cogroup otherwise.
 
     ``extra_metrics`` entries are merged into the manifest's metrics
     BEFORE it is persisted (callers like ``maybe_compact`` record their
@@ -262,7 +248,7 @@ def compact(spark: SparkSession, index_dir: str, cfg: IndexConfig,
     chain, cfg = mf.open_chain(index_dir, cfg)
     gens = [m["generation"] for m in chain]
     tail = chain[-1]
-    on_driver = _fits_driver(chain)
+    on_driver = fits_driver(chain, decode=True)
 
     def stage(gdir: str) -> Generation:
         # consolidated docmap = live rows only, written while the segment

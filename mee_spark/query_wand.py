@@ -86,7 +86,13 @@ from mee_spark import manifest as mf
 from mee_spark.bm25 import idf_np, ranked, ranked_np
 from mee_spark.build import read_tombstone_arrays, read_tombstones
 from mee_spark.config import IndexConfig
-from mee_spark.segments import decode_live, read_rows, read_segments, term_df
+from mee_spark.segments import (
+    decode_live,
+    read_rows,
+    read_segments,
+    term_buckets,
+    term_df,
+)
 from mee_spark.textprep import tokenize_col
 from mee_spark.wand import TermCursor, exhaustive_topk_vec, wand_topk
 
@@ -114,6 +120,20 @@ DRIVER_MAX_TOMBSTONES = 1 << 20
 # blobs, decoded ids, the live mask) and took about 1.4 CPU-us: 2^22 keep
 # the decode near 0.2 GB and 6 CPU-s, on top of the tombstone-free df read.
 DRIVER_MAX_DECODE_POSTINGS = 1 << 22
+# The gate of the driver plans of an incremental build and a compaction
+# (``build.fits_driver``): the docmap rows the chain's manifests record.
+# Each live docmap row raised the driver's peak by about 350 bytes in an
+# incremental build (the chain's docmaps read and deduplicated, the staged
+# diff's urls, the deletion probe; 131k-524k-row chains, local[4]): 2^19
+# keep it near 0.18 GB. At 524k rows the driver plan still took less CPU
+# (31 vs 39 CPU-s) and wall (17.5 vs 22.3 s) than the Spark plan.
+DRIVER_MAX_DOCMAP_ROWS = 1 << 19
+# The second gate of an incremental build (``build.build_incremental``),
+# checked on the token instances its diff job observed: each raised the
+# driver's peak by about 134 bytes (the staged tokens and buckets, the
+# sorted token frame; 1M-2M tokens, local[4]), more than a decoded
+# posting, as a token carries its term: 2^20 keep it near 0.14 GB.
+DRIVER_MAX_DELTA_TOKENS = 1 << 20
 # The gate of the driver scoring plan (see ``driver_scored``): a batch whose
 # term-filtered rows hold at most this many postings (dead ones included,
 # summed over every gen) is scored on the driver. Each path forced in turn
@@ -134,17 +154,14 @@ def query_vocab(queries: DataFrame, num_term_buckets: int) -> list:
     and their term buckets; a query with a null text has no row.
 
     Tokens and buckets come from the build's own JVM expressions
-    (``tokenize_col``, ``pmod(xxhash64(term), num_term_buckets)``), so they
-    match the index by construction. On a local query relation (a frame
-    created from pandas with Arrow on) Spark folds the projection into the
-    relation and answers the collect with no job. The buckets are a SQL
-    lambda, parsed in the JVM: a Python-built one costs py4j round trips
-    on every call."""
+    (``tokenize_col``, ``segments.term_buckets``), so they match the index
+    by construction. On a local query relation (a frame created from
+    pandas with Arrow on) Spark folds the projection into the relation and
+    answers the collect with no job."""
     rows = queries.select(
         "query_id", "k", tokenize_col(F.col("query_text")).alias("terms")
-    ).selectExpr("query_id", "k", "terms", "transform(terms, t -> CAST(pmod("
-                 f"xxhash64(t), {int(num_term_buckets)}) AS BIGINT)) AS buckets"
-                 ).collect()
+    ).select("query_id", "k", "terms", term_buckets(
+        "terms", num_term_buckets).alias("buckets")).collect()
     return [r for r in rows if r["terms"] is not None]
 
 

@@ -38,7 +38,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
@@ -85,6 +85,14 @@ def with_partition_keys(postings: DataFrame, cfg: IndexConfig) -> DataFrame:
     ).withColumn(
         "bucket", F.pmod(F.xxhash64(F.col("term")), F.lit(cfg.num_term_buckets)).cast("long")
     )
+
+
+def term_buckets(tokens: str, num_term_buckets: int) -> Column:
+    """The term bucket of each token of the array column ``tokens``, the
+    expression ``with_partition_keys`` applies to one term. A SQL lambda,
+    parsed in the JVM: a Python-built one costs py4j round trips."""
+    return F.expr(f"transform({tokens}, t -> CAST(pmod(xxhash64(t), "
+                  f"{int(num_term_buckets)}) AS BIGINT))")
 
 
 def sorted_term_codes(terms: pd.Series) -> tuple[np.ndarray, np.ndarray]:
@@ -255,22 +263,52 @@ def write_groups(keyed: DataFrame | pd.DataFrame, index_dir: str, gen: int,
     return fresh
 
 
+def groups_on_driver(keyed: pd.DataFrame, write_group) -> pd.DataFrame:
+    """``write_group(key, rows)`` over each (bucket, range) group of
+    ``keyed`` on the driver, as ``applyInPandas`` calls a group fn, in key
+    order; -> the METRICS_SCHEMA frame of the groups written. One stable
+    sort by key, then each group is a slice: no per-group copy."""
+    bucket = keyed["bucket"].to_numpy(np.int64)
+    range_id = keyed["range_id"].to_numpy(np.int64)
+    key = bucket * (int(range_id.max(initial=0)) + 1) + range_id
+    if (key[1:] < key[:-1]).any():
+        order = np.argsort(key, kind="stable")
+        keyed, bucket, range_id, key = (keyed.take(order), bucket[order],
+                                        range_id[order], key[order])
+    starts = np.flatnonzero(np.diff(key, prepend=-1))
+    out = [w for lo, hi in zip(starts, np.append(starts[1:], len(key)))
+           if len(w := write_group((bucket[lo], range_id[lo]),
+                                   keyed.iloc[lo:hi]))]
+    return (pd.concat(out, ignore_index=True) if out
+            else pd.DataFrame(columns=METRICS_SCHEMA.fieldNames()))
+
+
 def build_segments(
-    postings: DataFrame, cfg: IndexConfig, index_dir: str, gen: int,
-    resume: bool = True,
+    postings: DataFrame | pd.DataFrame, cfg: IndexConfig, index_dir: str,
+    gen: int, resume: bool = True,
 ) -> list[dict]:
     """Write compressed segments for gen; returns per-partition metrics.
 
     ``postings`` carries raw token instances (term, doc_id, dl); see
-    ``_make_writer``.
+    ``_make_writer``. A pandas frame (a delta built on the driver) carries
+    each token's (bucket, range_id) keys too, its bucket computed in the
+    JVM (``term_buckets``), and its groups are written on the driver with
+    no Spark job.
     """
-    def run(keyed: DataFrame, seg_root: str, ckpt_root: str) -> DataFrame:
-        writer = _make_writer(seg_root, ckpt_root, cfg.block_size)
-        return keyed.groupBy("bucket", "range_id").applyInPandas(
-            writer, METRICS_SCHEMA)
+    if isinstance(postings, pd.DataFrame):
+        def run(keyed, seg_root: str, ckpt_root: str):
+            return groups_on_driver(keyed, _make_writer(
+                seg_root, ckpt_root, cfg.block_size))
 
-    return write_groups(with_partition_keys(postings, cfg), index_dir, gen,
-                        resume, run)
+        keyed = postings
+    else:
+        def run(keyed, seg_root: str, ckpt_root: str):
+            writer = _make_writer(seg_root, ckpt_root, cfg.block_size)
+            return keyed.groupBy("bucket", "range_id").applyInPandas(
+                writer, METRICS_SCHEMA)
+
+        keyed = with_partition_keys(postings, cfg)
+    return write_groups(keyed, index_dir, gen, resume, run)
 
 
 def read_segments(spark, index_dir: str, gens: list[int]) -> DataFrame:
