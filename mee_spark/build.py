@@ -53,9 +53,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from mee_spark import manifest as mf
+from mee_spark import segments
 from mee_spark.config import IndexConfig, layout_record
 from mee_spark.docmap import assign_doc_ids
-from mee_spark.segments import build_segments, live_mask, term_buckets
+from mee_spark.segments import (
+    build_segments,
+    groups_on_driver,
+    live_mask,
+    term_buckets,
+    write_groups,
+)
 from mee_spark.textprep import extract_text, tokenize_col
 
 DOCMAP_ARROW_SCHEMA = pa.schema([("url", pa.string()), ("doc_id", pa.int64()),
@@ -71,6 +78,21 @@ DOCS_STAGING_SCHEMA = ("doc_id long, url string, tokens array<string>, "
 DIFF_SCHEMA = ("url string, kind string, old_doc_id long, old_dl long, "
                "text_hash long, dl long, tokens array<string>, "
                "buckets array<bigint>")
+# The gate of the driver plans of an incremental build and a compaction
+# (``fits_driver``): the docmap rows the chain's manifests record. Each
+# live docmap row raised the driver's peak by about 350 bytes in an
+# incremental build (the chain's docmaps read and deduplicated, a deletion
+# probe over the staged diff's urls; 131k-524k-row chains, local[4]): 2^19
+# keep it near 0.18 GB. The probe now reads matched doc ids, which weigh
+# less than urls. At 524k rows the driver plan still took less
+# CPU (31 vs 39 CPU-s) and wall (17.5 vs 22.3 s) than the Spark plan.
+DRIVER_MAX_DOCMAP_ROWS = 1 << 19
+# The second gate of an incremental build, checked on the token instances
+# its diff job observed: each raised the driver's peak by about 134 bytes
+# (the staged tokens and buckets, the sorted token frame; 1M-2M tokens,
+# local[4]), more than a decoded posting, as a token carries its term:
+# 2^20 keep it near 0.14 GB.
+DRIVER_MAX_DELTA_TOKENS = 1 << 20
 
 
 def _docmap_path(index_dir: str, gen: int) -> str:
@@ -283,14 +305,14 @@ def fits_driver(chain: list[dict], *, decode: bool) -> bool:
     """Whether a driver plan over ``chain`` fits in driver memory, decided
     from its manifests alone, before any read: the docmap rows
     (``mf.docmap_rows``) and tombstones its generations wrote must fit
-    the driver budgets (``query_wand.DRIVER_MAX_DOCMAP_ROWS``,
-    ``DRIVER_MAX_TOMBSTONES``). With ``decode`` (a compaction decodes
+    the driver budgets (``DRIVER_MAX_DOCMAP_ROWS``,
+    ``query_wand.DRIVER_MAX_TOMBSTONES``). With ``decode`` (a compaction decodes
     every posting) so must the postings its segment groups recorded
-    (``DRIVER_MAX_DECODE_POSTINGS``); a manifest that records no groups
-    then counts as above it."""
+    (``query_wand.DRIVER_MAX_DECODE_POSTINGS``); a manifest that records
+    no groups then counts as above it."""
     from mee_spark import query_wand  # it imports this module
 
-    if (mf.docmap_rows(chain) > query_wand.DRIVER_MAX_DOCMAP_ROWS
+    if (mf.docmap_rows(chain) > DRIVER_MAX_DOCMAP_ROWS
             or mf.tombstone_count(chain) > query_wand.DRIVER_MAX_TOMBSTONES):
         return False
     if not decode:
@@ -311,8 +333,11 @@ def _stage_diff(snapshot: DataFrame, use_html: bool, cfg: IndexConfig,
     and their Σdl ``sr``, changed docs ``nc``).
 
     ``old`` is a broadcast local relation when ``driver_docmap``: a left
-    join then, and the unchanged urls are staged too, for the driver to
-    find the deletions among. Otherwise a full outer join labels the
+    join then, and the unchanged urls are staged too, so that the live
+    docs no staged row matched are the deletions. A full outer join
+    against the same local relation labels them in the job itself but
+    costs a shuffle, which with adaptive execution is a job of its own:
+    3 jobs instead of 2, for the same CPU, on a 2k-doc chain. Otherwise a full outer join labels the
     deletions and unchanged rows are not staged. Tokens and buckets come
     from the JVM expressions every build and query uses (``tokenize_col``,
     ``term_buckets``), so the driver tail matches the index by
@@ -378,11 +403,12 @@ def _delta_in_spark(staged: DataFrame, gone: pa.Table | None, start_id: int,
 def _delta_on_driver(diff: pa.Table, gone: pa.Table | None, start_id: int,
                      cfg: IndexConfig, index_dir: str, gen: int,
                      resume: bool) -> tuple[pa.Table, Callable, int]:
-    """``_delta_in_spark`` on the driver, with no Spark job: the staged
-    diff is read with pyarrow, the tombstones are written sorted, and an
-    added url gets ``start_id`` + its dense rank among the added urls
-    (``assign_doc_ids``' contract, a url staged twice included). The
-    token instances feed ``build_segments`` as a pandas frame."""
+    """``_delta_in_spark`` on the driver, with no Spark job, from the
+    staged diff's added, changed and deleted rows: the tombstones are
+    written sorted, and an added url gets ``start_id`` + its dense rank
+    among the added urls (``assign_doc_ids``' contract, a url staged twice
+    included). The token instances go through ``write_groups`` as a pandas
+    frame, each group through the Spark plan's ``_make_writer``."""
     kind = diff["kind"]
     _write_table(pa.table({"doc_id": np.sort(np.concatenate(
         [diff["old_doc_id"].filter(pc.is_in(kind, pa.array(
@@ -412,8 +438,13 @@ def _delta_on_driver(diff: pa.Table, gone: pa.Table | None, start_id: int,
     docmap = pa.table({"url": diff["url"], "doc_id": doc_id, "dl": diff["dl"],
                        "text_hash": diff["text_hash"]}).filter(
         pc.is_in(kind, pa.array(["added", "changed"])))
-    return (docmap, functools.partial(build_segments, postings, cfg,
-                                      index_dir, gen, resume=resume),
+
+    def run(keyed: pd.DataFrame, seg_root: str, ckpt_root: str) -> pd.DataFrame:
+        return groups_on_driver(keyed, segments._make_writer(
+            seg_root, ckpt_root, cfg.block_size))
+
+    return (docmap, functools.partial(write_groups, postings, index_dir, gen,
+                                      resume, run),
             start_id + len(fresh))
 
 
@@ -447,8 +478,6 @@ def build_incremental(
     (``_delta_on_driver``); the manifest records the plan taken,
     ``metrics.plan`` = "driver" or "spark".
     """
-    from mee_spark import query_wand  # it imports this module
-
     # the layout (range size, term buckets) is the chain's, not the caller's
     chain, cfg = mf.open_chain(index_dir, cfg)
     gens = [m["generation"] for m in chain]
@@ -468,25 +497,30 @@ def build_incremental(
         n_delta, n_changed = int(d["n"]), int(d["nc"])
         n_removed, dl_removed = int(d["nr"]), int(d["sr"] or 0)
         # the second gate: the delta's token instances fit the driver
-        on_driver = (live is not None and int(d["s"] or 0)
-                     <= query_wand.DRIVER_MAX_DELTA_TOKENS)
-        path = os.path.join(gdir, "_diff_staging.parquet")
-        diff = pq.read_table(path) if on_driver else None
-        gone = None  # live docs the driver finds missing from the snapshot
+        on_driver = (live is not None
+                     and int(d["s"] or 0) <= DRIVER_MAX_DELTA_TOKENS)
+        staging = ds.dataset(os.path.join(gdir, "_diff_staging.parquet"),
+                             format="parquet")
+        gone = None  # live docs the snapshot no longer holds
         if live is not None and not partial:
-            urls = (diff if on_driver else pq.read_table(path, columns=["url"]))
-            gone = live.filter(pc.invert(pc.is_in(live["url"],
-                                                  value_set=urls["url"])))
+            # a staged row with an old doc id matched a live doc, so the
+            # probe holds at most the live docs however large the snapshot
+            matched = staging.to_table(columns=["old_doc_id"],
+                                       filter=pc.field("old_doc_id").is_valid())
+            gone = live.filter(pc.invert(pc.is_in(
+                live["doc_id"], value_set=matched["old_doc_id"])))
             n_removed += gone.num_rows
             dl_removed += int(pc.sum(gone["dl"]).as_py() or 0)
         start_id = int(tail["next_doc_id"])
-        docmap, segments, next_doc_id = (
-            _delta_on_driver(diff, gone, start_id, cfg, index_dir, gen, resume)
+        docmap, write_segments, next_doc_id = (
+            _delta_on_driver(staging.to_table(
+                filter=pc.field("kind") != "unchanged"), gone, start_id, cfg,
+                index_dir, gen, resume)
             if on_driver else
             _delta_in_spark(staged, gone, start_id, cfg, index_dir, gen, gdir,
                             resume))
         return Generation(
-            docmap=docmap, segments=segments, n_docs=n_delta,
+            docmap=docmap, segments=write_segments, n_docs=n_delta,
             # changed docs: removed old and re-added -> net N counts them once
             n_docs_live=tail["n_docs_live"] + n_delta - n_removed,
             sum_dl_live=tail["sum_dl_live"] + int(d["s"] or 0) - dl_removed,

@@ -58,6 +58,8 @@ def cmd_build(args) -> None:
     cfg = IndexConfig(num_doc_partitions=args.partitions,
                       num_term_buckets=args.buckets,
                       doc_range_size=args.range_size, lang_filter=args.lang)
+    # the one command that may start an index
+    os.makedirs(args.index, exist_ok=True)
     with mf.writer_lock(args.index):
         # never the published generation: readers hold its files, and
         # its .done checkpoints would keep the old corpus's segments
@@ -214,7 +216,7 @@ def main(argv: list[str] | None = None) -> None:
     args = build_parser().parse_args(argv)
     try:
         args.fn(args)
-    except mf.LockHeld as e:
+    except (mf.LockHeld, mf.NoIndex) as e:
         sys.exit(str(e))
 
 

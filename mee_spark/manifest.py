@@ -147,12 +147,19 @@ class LockHeld(RuntimeError):
     """Another writer holds the index's ``_LOCK``."""
 
 
+class NoIndex(FileNotFoundError):
+    """A writer named an index directory that does not exist."""
+
+
 @contextlib.contextmanager
 def writer_lock(index_dir: str):
     """Single-writer guard for the block (mee's Redlock,
     `utils/redisclient.py:19-41`): an O_EXCL-created ``_LOCK`` file.
-    Raises ``LockHeld`` at once, without waiting, if it exists."""
-    os.makedirs(index_dir, exist_ok=True)
+    Raises ``LockHeld`` at once, without waiting, if it exists, and
+    ``NoIndex`` if ``index_dir`` does not: only a first build starts an
+    index, and it creates the directory itself."""
+    if not os.path.isdir(index_dir):
+        raise NoIndex(f"no index at {index_dir}")
     lock = os.path.join(index_dir, "_LOCK")
     try:
         fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)

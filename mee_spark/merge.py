@@ -22,8 +22,8 @@ Spark compaction's fixed cost (its jobs, stages and Python workers) is
 most of a small chain's. The gate is read from the manifests before any
 read (``build.fits_driver``): the chain's docmap rows, recorded postings
 and tombstones must fit the driver budgets
-(``query_wand.DRIVER_MAX_DOCMAP_ROWS``, ``DRIVER_MAX_DECODE_POSTINGS``,
-``DRIVER_MAX_TOMBSTONES``).
+(``build.DRIVER_MAX_DOCMAP_ROWS``,
+``query_wand.DRIVER_MAX_DECODE_POSTINGS``, ``DRIVER_MAX_TOMBSTONES``).
 Below it pyarrow reads the segment rows and tombstones, each (bucket,
 range) goes through the same compactor and ``write_groups`` checkpoints
 as a Spark task's, and the live docmap is computed and written with

@@ -120,20 +120,6 @@ DRIVER_MAX_TOMBSTONES = 1 << 20
 # blobs, decoded ids, the live mask) and took about 1.4 CPU-us: 2^22 keep
 # the decode near 0.2 GB and 6 CPU-s, on top of the tombstone-free df read.
 DRIVER_MAX_DECODE_POSTINGS = 1 << 22
-# The gate of the driver plans of an incremental build and a compaction
-# (``build.fits_driver``): the docmap rows the chain's manifests record.
-# Each live docmap row raised the driver's peak by about 350 bytes in an
-# incremental build (the chain's docmaps read and deduplicated, the staged
-# diff's urls, the deletion probe; 131k-524k-row chains, local[4]): 2^19
-# keep it near 0.18 GB. At 524k rows the driver plan still took less CPU
-# (31 vs 39 CPU-s) and wall (17.5 vs 22.3 s) than the Spark plan.
-DRIVER_MAX_DOCMAP_ROWS = 1 << 19
-# The second gate of an incremental build (``build.build_incremental``),
-# checked on the token instances its diff job observed: each raised the
-# driver's peak by about 134 bytes (the staged tokens and buckets, the
-# sorted token frame; 1M-2M tokens, local[4]), more than a decoded
-# posting, as a token carries its term: 2^20 keep it near 0.14 GB.
-DRIVER_MAX_DELTA_TOKENS = 1 << 20
 # The gate of the driver scoring plan (see ``driver_scored``): a batch whose
 # term-filtered rows hold at most this many postings (dead ones included,
 # summed over every gen) is scored on the driver. Each path forced in turn

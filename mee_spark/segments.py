@@ -284,31 +284,21 @@ def groups_on_driver(keyed: pd.DataFrame, write_group) -> pd.DataFrame:
 
 
 def build_segments(
-    postings: DataFrame | pd.DataFrame, cfg: IndexConfig, index_dir: str,
-    gen: int, resume: bool = True,
+    postings: DataFrame, cfg: IndexConfig, index_dir: str, gen: int,
+    resume: bool = True,
 ) -> list[dict]:
     """Write compressed segments for gen; returns per-partition metrics.
 
     ``postings`` carries raw token instances (term, doc_id, dl); see
-    ``_make_writer``. A pandas frame (a delta built on the driver) carries
-    each token's (bucket, range_id) keys too, its bucket computed in the
-    JVM (``term_buckets``), and its groups are written on the driver with
-    no Spark job.
+    ``_make_writer``.
     """
-    if isinstance(postings, pd.DataFrame):
-        def run(keyed, seg_root: str, ckpt_root: str):
-            return groups_on_driver(keyed, _make_writer(
-                seg_root, ckpt_root, cfg.block_size))
+    def run(keyed: DataFrame, seg_root: str, ckpt_root: str) -> DataFrame:
+        writer = _make_writer(seg_root, ckpt_root, cfg.block_size)
+        return keyed.groupBy("bucket", "range_id").applyInPandas(
+            writer, METRICS_SCHEMA)
 
-        keyed = postings
-    else:
-        def run(keyed, seg_root: str, ckpt_root: str):
-            writer = _make_writer(seg_root, ckpt_root, cfg.block_size)
-            return keyed.groupBy("bucket", "range_id").applyInPandas(
-                writer, METRICS_SCHEMA)
-
-        keyed = with_partition_keys(postings, cfg)
-    return write_groups(keyed, index_dir, gen, resume, run)
+    return write_groups(with_partition_keys(postings, cfg), index_dir, gen,
+                        resume, run)
 
 
 def read_segments(spark, index_dir: str, gens: list[int]) -> DataFrame:

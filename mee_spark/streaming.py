@@ -16,6 +16,8 @@ lacks entirely.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -122,7 +124,9 @@ def incremental_index_stream(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        # a concurrent writer would pick the same next generation
+        # the first batch starts the index; a concurrent writer would
+        # pick the same next generation
+        os.makedirs(index_dir, exist_ok=True)
         with mf.writer_lock(index_dir):
             cur = mf.current_gen(index_dir)
             if cur is not None:

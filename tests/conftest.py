@@ -26,3 +26,34 @@ def spark():
     )
     yield s
     s.stop()
+
+
+# The plans of ``build_incremental``, forced through its gate limits: the
+# whole delta on the driver; the live docmap on the driver but the delta
+# in Spark (the token gate alone fails); everything in Spark (the
+# manifest gate fails). No perfbench workload reaches the Spark tails.
+INCREMENTAL_PLANS = {
+    "driver": {"DRIVER_MAX_DOCMAP_ROWS": 1 << 40,
+               "DRIVER_MAX_DELTA_TOKENS": 1 << 40},
+    "spark_tail": {"DRIVER_MAX_DOCMAP_ROWS": 1 << 40,
+                   "DRIVER_MAX_DELTA_TOKENS": -1},
+    "spark": {"DRIVER_MAX_DOCMAP_ROWS": -1},
+}
+
+
+def _forced(m: pytest.MonkeyPatch, plan: str) -> None:
+    from mee_spark import build
+
+    for name, limit in INCREMENTAL_PLANS[plan].items():
+        m.setattr(build, name, limit)
+
+
+@pytest.fixture(params=sorted(INCREMENTAL_PLANS))
+def incr_plan(request):
+    """Runs a test once per plan of ``build_incremental`` -> the plan's
+    name, whose first word is the ``metrics.plan`` its manifests record.
+    Its own MonkeyPatch, so a test's ``monkeypatch.undo()`` keeps it."""
+    with pytest.MonkeyPatch.context() as m:
+        _forced(m, request.param)
+        yield request.param
+

@@ -127,6 +127,7 @@ def test_cli_rebuild_writes_the_next_generation(spark, tmp_path, capsys):
 
 def test_cli_lock_guard(spark, corpus, tmp_path, capsys):
     idx = str(tmp_path / "idx2")
+    os.makedirs(idx)  # an index in the making: only a build creates one
     with mf.writer_lock(idx):
         with pytest.raises(SystemExit, match="another writer holds"):
             main(_args(["build", "--pages", corpus, "--gen", "1"], idx))
@@ -173,9 +174,16 @@ def test_cli_build_rejects_snapshot_options_for_parquet(spark, corpus, tmp_path,
     idx = str(tmp_path / "idx4")
     with pytest.raises(ValueError, match="Iceberg"):
         main(_args(["build", "--pages", corpus, opt, "7"], idx))
-    assert mf.current_gen(idx) is None
-    with mf.writer_lock(idx):  # the lock was never taken
-        pass
+    assert not os.path.exists(idx)  # nor the index started
+
+
+def test_cli_compact_refuses_a_missing_index(spark, tmp_path):
+    """``compact`` on a path with no index exits with "no index at" and
+    leaves no directory behind."""
+    idx = str(tmp_path / "typo")
+    with pytest.raises(SystemExit, match="no index at"):
+        main(_args(["compact"], idx))
+    assert not os.path.exists(idx)
 
 
 def test_cli_append_range_is_an_upsert_batch(spark, corpus, tmp_path,

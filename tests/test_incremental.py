@@ -13,6 +13,7 @@ import uuid
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -63,7 +64,11 @@ def ranked_by_url(spark, index_dir, queries, gens):
     return out
 
 
-def test_incremental_equals_full(spark, snaps, tmp_path_factory):
+def _plan_of(m: dict) -> str:
+    return m["metrics"]["plan"]
+
+
+def test_incremental_equals_full(spark, snaps, tmp_path_factory, incr_plan):
     inc_dir = str(tmp_path_factory.mktemp("inc_index"))
     full_dir = str(tmp_path_factory.mktemp("full_index"))
     queries = gen_queries(spark, N_QUERIES)
@@ -72,6 +77,7 @@ def test_incremental_equals_full(spark, snaps, tmp_path_factory):
     m2 = build_incremental(spark, snaps[2], CFG, inc_dir, gen=2)
     m3 = build_incremental(spark, snaps[3], CFG, inc_dir, gen=3)
     assert mf.current_gen(inc_dir) == 3
+    assert {_plan_of(m2), _plan_of(m3)} == {incr_plan.split("_")[0]}
     assert m2["metrics"]["docs_added"] > 0 and m2["metrics"]["docs_changed"] > 0
     assert m3["metrics"]["docs_deleted"] > 0
 
@@ -177,7 +183,8 @@ def test_deleted_docs_disappear_from_results(spark, snaps, tmp_path_factory):
         assert id_to_url[r["doc_id"]] not in gone
 
 
-def test_docid_watermark_from_manifest(spark, snaps, tmp_path_factory):
+def test_docid_watermark_from_manifest(spark, snaps, tmp_path_factory,
+                                      incr_plan):
     """Every manifest carries next_doc_id (the fresh-ID watermark), so
     build_incremental appends without a max(doc_id) scan of the live
     docmap. IDs are monotone across the chain and never recycled, also
@@ -218,6 +225,7 @@ def test_docid_watermark_from_manifest(spark, snaps, tmp_path_factory):
     m5 = build_incremental(spark, snap3.unionByName(
         snaps[2].filter(F.col("url") == top["url"])
         .withColumn("url", F.lit(fresh_url))), CFG, d, gen=5)
+    assert {_plan_of(m) for m in (m2, m3, m5)} == {incr_plan.split("_")[0]}
     assert m5["metrics"]["docs_added"] == 1
     new_id = spark.read.parquet(f"{d}/gen=5/docmap.parquet").filter(
         F.col("url") == fresh_url).first()["doc_id"]
@@ -402,13 +410,15 @@ def test_driver_scoring_matches_spark(spark, dead_chain, monkeypatch, conjunctiv
         assert {r[0] for r in driver} >= {101, 102}
 
 
-def test_identical_snapshot_is_an_empty_delta(spark, snaps, tmp_path_factory):
+def test_identical_snapshot_is_an_empty_delta(spark, snaps, tmp_path_factory,
+                                              incr_plan):
     """Re-submitting the published snapshot changes nothing: the delta
     generation has no added, changed or deleted docs, and the live
     corpus stats and docID watermark stay where they were."""
     d = str(tmp_path_factory.mktemp("same"))
     m1 = build_full_index(spark, snaps[1], CFG, d, gen=1)
     m2 = build_incremental(spark, snaps[1], CFG, d, gen=2)
+    assert _plan_of(m2) == incr_plan.split("_")[0]
     assert (m2["metrics"]["docs_added"], m2["metrics"]["docs_changed"],
             m2["metrics"]["docs_deleted"]) == (0, 0, 0)
     assert m2["n_docs_live"] == m1["n_docs_live"]
@@ -418,13 +428,15 @@ def test_identical_snapshot_is_an_empty_delta(spark, snaps, tmp_path_factory):
     assert live_docmap(spark, d, [1, 2]).count() == m1["n_docs_live"]
 
 
-def test_partial_batch_tombstones_only_changed(spark, snaps, tmp_path_factory):
+def test_partial_batch_tombstones_only_changed(spark, snaps, tmp_path_factory,
+                                               incr_plan):
     """``partial=True`` (an upsert batch, not a snapshot): urls missing
     from the batch are not tombstoned, only changed docs are, and no
     transient staging file outlives a successful build."""
     d = str(tmp_path_factory.mktemp("partial"))
     build_full_index(spark, snaps[2], CFG, d, gen=1)
     m2 = build_incremental(spark, snaps[3], CFG, d, gen=2, partial=True)
+    assert _plan_of(m2) == incr_plan.split("_")[0]
     assert m2["metrics"]["docs_deleted"] == 0
     tombs = spark.read.parquet(f"{d}/gen=2/tombstones.parquet").count()
     assert tombs == m2["metrics"]["docs_changed"]
@@ -461,14 +473,19 @@ def test_chain_reads_submit_no_spark_job(spark, snaps, tmp_path_factory):
 _RESUME_SCRIPT = r"""
 import glob, json, os, sys, tempfile
 sys.path[:0] = [sys.argv[1], os.path.join(sys.argv[1], "tests")]
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
+import mee_spark.build as build
 import mee_spark.segments as seg
 from mee_spark.build import build_full_index, build_incremental
 from mee_spark.config import IndexConfig
 from mee_spark.fixtures import PAGES_SCHEMA
 from snapshots import gen_snapshots_pandas
 
+# the plan's gate limits, as the test session forced them
+for name, limit in json.loads(sys.argv[2]).items():
+    setattr(build, name, limit)
 orig = seg._make_writer
 
 def failing(seg_root, ckpt_root, block_size):
@@ -528,19 +545,25 @@ print(json.dumps({
     "files": sorted(a),
     "equal": sorted(a) == sorted(b) and all(a[k].equals(b[k]) for k in a),
     "counts": [counts(m_fail), counts(m_clean)],
+    "plans": [m_fail["metrics"]["plan"], m_clean["metrics"]["plan"]],
     "leftover": sorted(glob.glob(os.path.join(d_fail, "gen=2", "_*staging*")))}))
 spark.stop()
 """
 
 
-def test_resume_after_segment_failure_equals_clean_build():
+def test_resume_after_segment_failure_equals_clean_build(incr_plan):
     """A delta build whose segment writer fails, rerun with
     ``resume=True`` into the same generation, leaves the docmap,
     tombstones, segment files and manifest counts of a clean build: the
     rerun overwrites the leftover diff and staging files and keeps the
-    checkpointed groups."""
+    checkpointed groups. The writer fails on the driver plan too: its
+    groups go through the same ``_make_writer``."""
+    from mee_spark import build
+
+    limits = {k: getattr(build, k) for k in ("DRIVER_MAX_DOCMAP_ROWS",
+                                             "DRIVER_MAX_DELTA_TOKENS")}
     out = subprocess.run(
-        [sys.executable, "-c", _RESUME_SCRIPT, REPO],
+        [sys.executable, "-c", _RESUME_SCRIPT, REPO, json.dumps(limits)],
         capture_output=True, text=True, timeout=600,
         env=os.environ | {"PYTHONPATH": REPO})
     assert out.returncode == 0, out.stderr[-3000:]
@@ -551,13 +574,16 @@ def test_resume_after_segment_failure_equals_clean_build():
     assert len(rec["files"]) > 2, "no segment files written"
     assert rec["equal"]
     assert rec["counts"][0] == rec["counts"][1]
+    assert rec["plans"] == [incr_plan.split("_")[0]] * 2
     assert rec["leftover"] == []
 
 
-def test_side_writes_keep_the_callers_job_group(spark, snaps, tmp_path_factory):
+def test_side_writes_keep_the_callers_job_group(spark, snaps, tmp_path_factory,
+                                                incr_plan):
     """``_concurrent`` runs side writes on ``InheritableThread``s: with a
     job group set, every job of ``build_incremental`` — the tombstone and
-    docmap side writes included — lands in that group, none outside it."""
+    docmap side writes of the Spark plans included — lands in that group,
+    none outside it."""
     d = str(tmp_path_factory.mktemp("jobgroup"))
     build_full_index(spark, snaps[1], CFG, d, gen=1)
     sc = spark.sparkContext
@@ -566,11 +592,12 @@ def test_side_writes_keep_the_callers_job_group(spark, snaps, tmp_path_factory):
     group = f"incr-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "one incremental build")
     try:
-        build_incremental(spark, snaps[2], CFG, d, gen=2)
+        m = build_incremental(spark, snaps[2], CFG, d, gen=2)
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description",
                     "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
+    assert _plan_of(m) == incr_plan.split("_")[0]
     assert set(tracker.getJobIdsForGroup(None)) == ungrouped
     assert tracker.getJobIdsForGroup(group)
 
@@ -616,3 +643,137 @@ def test_concurrent_surfaces_side_error_after_inline_write(spark):
         _concurrent(side_slow, inline_fails)
     assert side_done.is_set()
     assert _concurrent(lambda: None, lambda: 7) == 7
+
+
+def _plan_chain(spark, d: str) -> list[dict]:
+    """Builds a seven-generation chain -> the manifests of its six deltas: adds + changes, deletes, a partial batch, a text-only
+    snapshot, an add-only snapshot and one holding urls twice."""
+    def frame(pdf):
+        return spark.createDataFrame(pdf.reset_index(drop=True), PAGES_SCHEMA)
+
+    def edited(pdf, rows, tail):
+        pdf = pdf.copy()
+        for i in rows:
+            pdf.loc[i, "text"] += tail
+            pdf.loc[i, "html"] = bytes(pdf.loc[i, "html"]).replace(
+                b"</p></body>", tail.encode() + b"</p></body>")
+        return pdf
+
+    snaps = gen_snapshots_pandas(N_BASE)
+    build_full_index(spark, frame(snaps[1]), CFG, d, gen=1)
+    out = [build_incremental(spark, frame(snaps[2]), CFG, d, gen=2),
+           build_incremental(spark, frame(snaps[3]), CFG, d, gen=3)]
+    live = snaps[3]
+    extra = gen_pages_for_indices(range(1000, 1012))
+    batch = pd.concat([edited(live.iloc[:4], range(4), " w000003 batchtail"),
+                       extra.iloc[:2]], ignore_index=True)
+    out.append(build_incremental(spark, frame(batch), CFG, d, gen=4,
+                                 partial=True))
+    live = pd.concat([live[~live["url"].isin(batch["url"])], batch],
+                     ignore_index=True)
+    # text only: the html column is not read, so only the text edits count
+    text = edited(live, range(5, 7), " w000004 texttail").drop(index=[9, 10])
+    text = pd.concat([text, extra.iloc[2:4]], ignore_index=True)
+    out.append(build_incremental(spark, frame(text), CFG, d, gen=5,
+                                 use_html=False))
+    adds = pd.concat([text, extra.iloc[4:7]], ignore_index=True)
+    out.append(build_incremental(spark, frame(adds), CFG, d, gen=6,
+                                 use_html=False))
+    # an unchanged url, a changed url and a new url, each held twice
+    changed = edited(adds.iloc[[1]], [1], " w000005 dup")
+    twice = pd.concat([adds.drop(index=1), adds.iloc[[0]], changed, changed,
+                       extra.iloc[[7]], extra.iloc[[7]]])
+    out.append(build_incremental(spark, frame(twice), CFG, d, gen=7,
+                                 use_html=False))
+    return out
+
+
+_COUNTS = ("n_docs_live", "sum_dl_live", "next_doc_id")
+_DELTA = ("docs_added", "docs_changed", "docs_deleted")
+
+
+def test_plans_write_identical_generations(spark, tmp_path_factory):
+    """The driver plan and both Spark plans write the same docmap rows,
+    tombstones and segment files, and the same manifest counts, for
+    every kind of delta: adds, changes, deletes, a partial batch, a
+    text-only snapshot, an add-only snapshot (no tombstone) and a
+    snapshot holding urls twice."""
+    from conftest import _forced
+
+    got = {}
+    for plan in ("driver", "spark_tail", "spark"):
+        d = str(tmp_path_factory.mktemp(f"same_{plan}"))
+        with pytest.MonkeyPatch.context() as m:
+            _forced(m, plan)
+            ms = _plan_chain(spark, d)
+        assert {_plan_of(m) for m in ms} == {plan.split("_")[0]}
+        got[plan] = [([m[k] for k in _COUNTS] + [m["metrics"][k] for k in _DELTA],
+                      _gen_tables(d, m["generation"])) for m in ms]
+    want = got.pop("driver")
+    # (added, changed, deleted) per delta; a partial batch deletes nothing,
+    # and a url held twice counts twice
+    assert [tuple(c[-3:]) for c, _ in want] == [
+        (10, 4, 0), (0, 0, 2), (2, 4, 0), (2, 2, 2), (3, 0, 0), (2, 2, 0)]
+    assert want[4][1]["tombstones"].num_rows == 0
+    for plan, gens in got.items():
+        for g, ((c, t), (wc, wt)) in enumerate(zip(gens, want), start=2):
+            assert c == wc, (plan, g)
+            assert sorted(t) == sorted(wt), (plan, g)
+            for k in wt:
+                assert t[k].equals(wt[k]), (plan, g, k)
+
+
+def _jobs_of(spark, build) -> tuple[dict, int]:
+    """-> (``build()``'s manifest, the Spark jobs it ran: a job-group
+    diff of the status tracker)."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "one incremental build")
+    try:
+        m = build()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return m, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_incremental_jobs_per_plan(spark, snaps, tmp_path_factory, incr_plan):
+    """Below the gates the snapshot diff is the build's only Spark work,
+    at most 2 jobs; the Spark tails' counts are pinned too."""
+    d = str(tmp_path_factory.mktemp("jobs"))
+    build_full_index(spark, snaps[1], CFG, d, gen=1)
+    m, jobs = _jobs_of(spark, lambda: build_incremental(
+        spark, snaps[2], CFG, d, gen=2))
+    assert _plan_of(m) == incr_plan.split("_")[0]
+    assert jobs <= 2 if incr_plan == "driver" else jobs == {
+        "spark_tail": 13, "spark": 14}[incr_plan], jobs
+
+
+def test_incremental_gate_edges(spark, snaps, tmp_path_factory, monkeypatch):
+    """Each gate admits its limit: a chain whose manifests record exactly
+    ``DRIVER_MAX_DOCMAP_ROWS`` docmap rows, with a delta of exactly
+    ``DRIVER_MAX_DELTA_TOKENS`` token instances, is built on the driver;
+    one below either limit, in Spark."""
+    from mee_spark import build
+
+    d = str(tmp_path_factory.mktemp("edges"))
+    build_full_index(spark, snaps[1], CFG, d, gen=1)
+    rows = mf.docmap_rows(mf.manifest_chain(d))
+    gens = iter(range(2, 10))
+
+    def plan(max_rows: int, max_tokens: int) -> tuple[str, int]:
+        # unpublished: every build diffs the same one-generation chain
+        monkeypatch.setattr(build, "DRIVER_MAX_DOCMAP_ROWS", max_rows)
+        monkeypatch.setattr(build, "DRIVER_MAX_DELTA_TOKENS", max_tokens)
+        g = next(gens)
+        m = build_incremental(spark, snaps[2], CFG, d, gen=g, publish=False)
+        # the delta's token instances: the dl of its docmap rows
+        dl = pq.read_table(os.path.join(mf.gen_dir(d, g), "docmap.parquet"))
+        return _plan_of(m), int(pc.sum(dl["dl"]).as_py())
+
+    _, tokens = plan(1 << 40, 1 << 40)
+    assert plan(rows, tokens) == ("driver", tokens)
+    assert plan(rows, tokens - 1) == ("spark", tokens)
+    assert plan(rows - 1, tokens) == ("spark", tokens)
+    assert mf.current_gen(d) == 1

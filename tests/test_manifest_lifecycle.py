@@ -68,3 +68,17 @@ def test_cli_reset_and_clean_wait_for_no_writer(tmp_path, capsys, cmd):
     assert out == ({"removed": [2]} if cmd[0] == "clean" else {"reset": 2})
     assert not os.path.exists(mf.gen_dir(d, 2))
     assert not os.path.exists(os.path.join(d, "_LOCK"))
+
+
+@pytest.mark.parametrize("cmd", [["clean"], ["reset", "--gen", "2"]])
+def test_locked_commands_refuse_a_missing_index(tmp_path, cmd):
+    """A locked command on a path with no index exits with "no index at"
+    and leaves no directory behind; only a build starts an index."""
+    d = str(tmp_path / "typo")
+    with pytest.raises(SystemExit, match="no index at"):
+        main([cmd[0], "--index", d, *cmd[1:]])
+    assert not os.path.exists(d)
+    with pytest.raises(mf.NoIndex):
+        with mf.writer_lock(d):
+            pass
+    assert not os.path.exists(d)

@@ -63,6 +63,23 @@ def test_query_matches_oracle(spark, name):
     )
 
 
+@pytest.mark.parametrize("arrow", ["false", "true"])
+@pytest.mark.parametrize("name", ["fulltext_bm25_wand",
+                                  "fulltext_wand_conjunctive",
+                                  "fulltext_lifecycle", "fulltext_compacted"])
+def test_index_queries_match_oracle_with_arrow_off_and_on(spark, name, arrow):
+    """The queries that build and read a segment index (its incremental
+    and compacted generations, from driver-built Arrow tables) give the
+    oracle's rows whether PySpark converts frames through Arrow or not."""
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, arrow)
+    try:
+        test_query_matches_oracle(spark, name)
+    finally:
+        spark.conf.set(key, before)
+
+
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     rows = df.collect()

@@ -130,11 +130,14 @@ def test_winnow_fingerprints_shuffle_free(spark):
         "spark.sql.subexpressionElimination.enabled", "true") == "true"
 
 
-def test_incremental_build_extracts_text_once(spark, tmp_path, monkeypatch):
+def test_incremental_build_extracts_text_once(spark, tmp_path, monkeypatch,
+                                              incr_plan):
     """The snapshot diff is staged once: across every parquet write of
     one ``build_incremental(use_html=True)`` the extraction UDF appears in
     exactly one plan, once (the diff write). Every later write reads the
-    staged diff, so none of them re-extracts the snapshot's html."""
+    staged diff, so none of them re-extracts the snapshot's html: on the
+    Spark plans the tombstone, docs and docmap writes; the driver plan
+    writes with pyarrow."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     from mee_spark.build import build_full_index, build_incremental
@@ -157,10 +160,13 @@ def test_incremental_build_extracts_text_once(spark, tmp_path, monkeypatch):
         return write_parquet(self, path, *args, **kwargs)
 
     monkeypatch.setattr(DataFrameWriter, "parquet", capture)
-    build_incremental(spark, snaps[2], cfg, d, gen=2, use_html=True)
+    m = build_incremental(spark, snaps[2], cfg, d, gen=2, use_html=True)
     monkeypatch.undo()
     per_write = [p.count("ArrowEvalPython") for p in plans]
     assert sum(per_write) == 1, per_write
+    assert m["metrics"]["plan"] == incr_plan.split("_")[0]
+    # the diff; then in Spark the tombstones, the docs staging, the docmap
+    assert len(plans) == (1 if incr_plan == "driver" else 4), len(plans)
 
 
 def test_live_df_pass_repartitions_by_range(spark, tmp_path):
