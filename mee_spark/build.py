@@ -206,11 +206,14 @@ def _write_table(table: pa.Table, path: str) -> None:
     earlier attempt's: one snappy file in the directory layout Spark's
     writer leaves, so Spark and pyarrow read both forms alike. Columns
     are plain-encoded: a docmap's urls and ids are all distinct, so a
-    dictionary only adds a page."""
+    dictionary only adds a page. No Arrow schema in the footer: every
+    reader passes the file's schema (``*_ARROW_SCHEMA``, ``*_SCHEMA``),
+    and it weighs 200-400 bytes a file."""
     shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path)
     pq.write_table(table, os.path.join(path, "part-00000.parquet"),
-                   compression="snappy", use_dictionary=False)
+                   compression="snappy", use_dictionary=False,
+                   store_schema=False)
 
 
 def _write_docmap(docmap: DataFrame | pa.Table, path: str) -> None:
@@ -334,10 +337,11 @@ def _stage_diff(snapshot: DataFrame, use_html: bool, cfg: IndexConfig,
 
     ``old`` is a broadcast local relation when ``driver_docmap``: a left
     join then, and the unchanged urls are staged too, so that the live
-    docs no staged row matched are the deletions. A full outer join
-    against the same local relation labels them in the job itself but
-    costs a shuffle, which with adaptive execution is a job of its own:
-    3 jobs instead of 2, for the same CPU, on a 2k-doc chain. Otherwise a full outer join labels the
+    docs no staged row matched are the deletions. (A full outer join
+    against the same relation labels them in the job itself but costs a
+    shuffle, which adaptive execution runs as a job of its own: 3 jobs
+    instead of 2 for the same CPU on a 2k-doc chain, local[4].)
+    Otherwise a full outer join against the live docmap frame labels the
     deletions and unchanged rows are not staged. Tokens and buckets come
     from the JVM expressions every build and query uses (``tokenize_col``,
     ``term_buckets``), so the driver tail matches the index by
@@ -511,6 +515,8 @@ def build_incremental(
                 live["doc_id"], value_set=matched["old_doc_id"])))
             n_removed += gone.num_rows
             dl_removed += int(pc.sum(gone["dl"]).as_py() or 0)
+        # fresh docIDs start at the chain tail's watermark: ids are never
+        # recycled, even after mass deletions and compactions
         start_id = int(tail["next_doc_id"])
         docmap, write_segments, next_doc_id = (
             _delta_on_driver(staging.to_table(

@@ -48,12 +48,16 @@ def _forced(m: pytest.MonkeyPatch, plan: str) -> None:
         m.setattr(build, name, limit)
 
 
-@pytest.fixture(params=sorted(INCREMENTAL_PLANS))
-def incr_plan(request):
-    """Runs a test once per plan of ``build_incremental`` -> the plan's
-    name, whose first word is the ``metrics.plan`` its manifests record.
-    Its own MonkeyPatch, so a test's ``monkeypatch.undo()`` keeps it."""
-    with pytest.MonkeyPatch.context() as m:
-        _forced(m, request.param)
-        yield request.param
+@pytest.fixture
+def each_plan():
+    """-> ``plans()``, which forces each plan of ``build_incremental`` in
+    turn and yields its name, whose first word is the ``metrics.plan``
+    its manifests record. A loop in one test, so the test keeps its id;
+    its own MonkeyPatch, so a test's ``monkeypatch.undo()`` keeps it."""
+    def plans():
+        for plan in INCREMENTAL_PLANS:
+            with pytest.MonkeyPatch.context() as m:
+                _forced(m, plan)
+                yield plan
 
+    return plans

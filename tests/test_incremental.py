@@ -68,42 +68,43 @@ def _plan_of(m: dict) -> str:
     return m["metrics"]["plan"]
 
 
-def test_incremental_equals_full(spark, snaps, tmp_path_factory, incr_plan):
-    inc_dir = str(tmp_path_factory.mktemp("inc_index"))
-    full_dir = str(tmp_path_factory.mktemp("full_index"))
+def test_incremental_equals_full(spark, snaps, tmp_path_factory, each_plan):
     queries = gen_queries(spark, N_QUERIES)
+    for incr_plan in each_plan():
+        inc_dir = str(tmp_path_factory.mktemp("inc_index"))
+        full_dir = str(tmp_path_factory.mktemp("full_index"))
 
-    m1 = build_full_index(spark, snaps[1], CFG, inc_dir, gen=1)
-    m2 = build_incremental(spark, snaps[2], CFG, inc_dir, gen=2)
-    m3 = build_incremental(spark, snaps[3], CFG, inc_dir, gen=3)
-    assert mf.current_gen(inc_dir) == 3
-    assert {_plan_of(m2), _plan_of(m3)} == {incr_plan.split("_")[0]}
-    assert m2["metrics"]["docs_added"] > 0 and m2["metrics"]["docs_changed"] > 0
-    assert m3["metrics"]["docs_deleted"] > 0
+        m1 = build_full_index(spark, snaps[1], CFG, inc_dir, gen=1)
+        m2 = build_incremental(spark, snaps[2], CFG, inc_dir, gen=2)
+        m3 = build_incremental(spark, snaps[3], CFG, inc_dir, gen=3)
+        assert mf.current_gen(inc_dir) == 3
+        assert {_plan_of(m2), _plan_of(m3)} == {incr_plan.split("_")[0]}
+        assert m2["metrics"]["docs_added"] > 0 and m2["metrics"]["docs_changed"] > 0
+        assert m3["metrics"]["docs_deleted"] > 0
 
-    mf_full = build_full_index(spark, snaps[3], CFG, full_dir, gen=1)
+        mf_full = build_full_index(spark, snaps[3], CFG, full_dir, gen=1)
 
-    # live corpus stats agree exactly
-    assert m3["n_docs_live"] == mf_full["n_docs_live"]
-    assert m3["sum_dl_live"] == mf_full["sum_dl_live"]
+        # live corpus stats agree exactly
+        assert m3["n_docs_live"] == mf_full["n_docs_live"]
+        assert m3["sum_dl_live"] == mf_full["sum_dl_live"]
 
-    inc = ranked_by_url(spark, inc_dir, queries, [1, 2, 3])
-    full = ranked_by_url(spark, full_dir, queries, [1])
-    assert set(inc) == set(full)
-    for qid in full:
-        inc_l, full_l = inc[qid], full[qid]
-        # scores must match rank-for-rank; urls must match except within
-        # exact-score tie groups (docID order differs between chains)
-        assert [s for _, _, s in inc_l] == [s for _, _, s in full_l], f"q{qid} scores"
-        by_score_inc: dict[float, set] = {}
-        by_score_full: dict[float, set] = {}
-        for (_, u, s) in inc_l:
-            by_score_inc.setdefault(s, set()).add(u)
-        for (_, u, s) in full_l:
-            by_score_full.setdefault(s, set()).add(u)
-        for s in by_score_full:
-            if len(by_score_full[s]) == len(by_score_inc.get(s, set())):
-                assert by_score_full[s] == by_score_inc[s], f"q{qid} tie group {s}"
+        inc = ranked_by_url(spark, inc_dir, queries, [1, 2, 3])
+        full = ranked_by_url(spark, full_dir, queries, [1])
+        assert set(inc) == set(full)
+        for qid in full:
+            inc_l, full_l = inc[qid], full[qid]
+            # scores must match rank-for-rank; urls must match except within
+            # exact-score tie groups (docID order differs between chains)
+            assert [s for _, _, s in inc_l] == [s for _, _, s in full_l], f"q{qid} scores"
+            by_score_inc: dict[float, set] = {}
+            by_score_full: dict[float, set] = {}
+            for (_, u, s) in inc_l:
+                by_score_inc.setdefault(s, set()).add(u)
+            for (_, u, s) in full_l:
+                by_score_full.setdefault(s, set()).add(u)
+            for s in by_score_full:
+                if len(by_score_full[s]) == len(by_score_inc.get(s, set())):
+                    assert by_score_full[s] == by_score_inc[s], f"q{qid} tie group {s}"
 
 
 def _gen_tables(d, gen):
@@ -184,7 +185,7 @@ def test_deleted_docs_disappear_from_results(spark, snaps, tmp_path_factory):
 
 
 def test_docid_watermark_from_manifest(spark, snaps, tmp_path_factory,
-                                      incr_plan):
+                                      each_plan):
     """Every manifest carries next_doc_id (the fresh-ID watermark), so
     build_incremental appends without a max(doc_id) scan of the live
     docmap. IDs are monotone across the chain and never recycled, also
@@ -192,47 +193,48 @@ def test_docid_watermark_from_manifest(spark, snaps, tmp_path_factory,
     id of a deleted doc is never handed to a new url."""
     from mee_spark.merge import compact
 
-    d = str(tmp_path_factory.mktemp("wmark"))
-    m1 = build_full_index(spark, snaps[1], CFG, d, gen=1)
-    # full build: watermark = number of assigned docs (ids are 0..n-1)
-    n1 = spark.read.parquet(f"{d}/gen=1/docmap.parquet").count()
-    assert m1["next_doc_id"] == n1
+    for incr_plan in each_plan():
+        d = str(tmp_path_factory.mktemp("wmark"))
+        m1 = build_full_index(spark, snaps[1], CFG, d, gen=1)
+        # full build: watermark = number of assigned docs (ids are 0..n-1)
+        n1 = spark.read.parquet(f"{d}/gen=1/docmap.parquet").count()
+        assert m1["next_doc_id"] == n1
 
-    m2 = build_incremental(spark, snaps[2], CFG, d, gen=2)
-    added2 = m2["metrics"]["docs_added"]
-    assert m2["next_doc_id"] == n1 + added2
-    # every freshly assigned id in gen 2 sits at/above gen 1's watermark
-    dm2 = spark.read.parquet(f"{d}/gen=2/docmap.parquet")
-    fresh2 = dm2.filter(f"doc_id >= {n1}").count()
-    assert fresh2 == added2
-    assert dm2.agg({"doc_id": "max"}).collect()[0][0] == m2["next_doc_id"] - 1
-    # no duplicate ids anywhere in the chain's union of fresh assignments
-    ids1 = {r[0] for r in spark.read.parquet(f"{d}/gen=1/docmap.parquet")
-            .select("doc_id").collect()}
-    fresh_ids2 = {r[0] for r in dm2.filter(f"doc_id >= {n1}")
-                  .select("doc_id").collect()}
-    assert not (ids1 & fresh_ids2)
+        m2 = build_incremental(spark, snaps[2], CFG, d, gen=2)
+        added2 = m2["metrics"]["docs_added"]
+        assert m2["next_doc_id"] == n1 + added2
+        # every freshly assigned id in gen 2 sits at/above gen 1's watermark
+        dm2 = spark.read.parquet(f"{d}/gen=2/docmap.parquet")
+        fresh2 = dm2.filter(f"doc_id >= {n1}").count()
+        assert fresh2 == added2
+        assert dm2.agg({"doc_id": "max"}).collect()[0][0] == m2["next_doc_id"] - 1
+        # no duplicate ids anywhere in the chain's union of fresh assignments
+        ids1 = {r[0] for r in spark.read.parquet(f"{d}/gen=1/docmap.parquet")
+                .select("doc_id").collect()}
+        fresh_ids2 = {r[0] for r in dm2.filter(f"doc_id >= {n1}")
+                      .select("doc_id").collect()}
+        assert not (ids1 & fresh_ids2)
 
-    # delete the highest-id doc, compact, then add one url: the new url
-    # gets an id at or above the watermark, not the deleted doc's id
-    top = dm2.orderBy(F.col("doc_id").desc()).first()
-    assert top["doc_id"] == m2["next_doc_id"] - 1
-    snap3 = snaps[2].filter(F.col("url") != top["url"])
-    m3 = build_incremental(spark, snap3, CFG, d, gen=3)
-    assert m3["metrics"]["docs_deleted"] == 1
-    m4 = compact(spark, d, CFG, new_gen=4)
-    fresh_url = "http://fresh.example/added-after-compaction"
-    m5 = build_incremental(spark, snap3.unionByName(
-        snaps[2].filter(F.col("url") == top["url"])
-        .withColumn("url", F.lit(fresh_url))), CFG, d, gen=5)
-    assert {_plan_of(m) for m in (m2, m3, m5)} == {incr_plan.split("_")[0]}
-    assert m5["metrics"]["docs_added"] == 1
-    new_id = spark.read.parquet(f"{d}/gen=5/docmap.parquet").filter(
-        F.col("url") == fresh_url).first()["doc_id"]
-    assert new_id > top["doc_id"], "a deleted doc's id was recycled"
-    assert m4["next_doc_id"] == m3["next_doc_id"] <= new_id
-    marks = [m["next_doc_id"] for m in (m1, m2, m3, m4, m5)]
-    assert marks == sorted(marks) and marks[-1] == new_id + 1
+        # delete the highest-id doc, compact, then add one url: the new url
+        # gets an id at or above the watermark, not the deleted doc's id
+        top = dm2.orderBy(F.col("doc_id").desc()).first()
+        assert top["doc_id"] == m2["next_doc_id"] - 1
+        snap3 = snaps[2].filter(F.col("url") != top["url"])
+        m3 = build_incremental(spark, snap3, CFG, d, gen=3)
+        assert m3["metrics"]["docs_deleted"] == 1
+        m4 = compact(spark, d, CFG, new_gen=4)
+        fresh_url = "http://fresh.example/added-after-compaction"
+        m5 = build_incremental(spark, snap3.unionByName(
+            snaps[2].filter(F.col("url") == top["url"])
+            .withColumn("url", F.lit(fresh_url))), CFG, d, gen=5)
+        assert {_plan_of(m) for m in (m2, m3, m5)} == {incr_plan.split("_")[0]}
+        assert m5["metrics"]["docs_added"] == 1
+        new_id = spark.read.parquet(f"{d}/gen=5/docmap.parquet").filter(
+            F.col("url") == fresh_url).first()["doc_id"]
+        assert new_id > top["doc_id"], "a deleted doc's id was recycled"
+        assert m4["next_doc_id"] == m3["next_doc_id"] <= new_id
+        marks = [m["next_doc_id"] for m in (m1, m2, m3, m4, m5)]
+        assert marks == sorted(marks) and marks[-1] == new_id + 1
 
 
 def _text_snapshot(spark, state: dict[str, str]):
@@ -411,42 +413,44 @@ def test_driver_scoring_matches_spark(spark, dead_chain, monkeypatch, conjunctiv
 
 
 def test_identical_snapshot_is_an_empty_delta(spark, snaps, tmp_path_factory,
-                                              incr_plan):
+                                              each_plan):
     """Re-submitting the published snapshot changes nothing: the delta
     generation has no added, changed or deleted docs, and the live
     corpus stats and docID watermark stay where they were."""
-    d = str(tmp_path_factory.mktemp("same"))
-    m1 = build_full_index(spark, snaps[1], CFG, d, gen=1)
-    m2 = build_incremental(spark, snaps[1], CFG, d, gen=2)
-    assert _plan_of(m2) == incr_plan.split("_")[0]
-    assert (m2["metrics"]["docs_added"], m2["metrics"]["docs_changed"],
-            m2["metrics"]["docs_deleted"]) == (0, 0, 0)
-    assert m2["n_docs_live"] == m1["n_docs_live"]
-    assert m2["sum_dl_live"] == m1["sum_dl_live"]
-    assert m2["next_doc_id"] == m1["next_doc_id"]
-    assert spark.read.parquet(f"{d}/gen=2/tombstones.parquet").count() == 0
-    assert live_docmap(spark, d, [1, 2]).count() == m1["n_docs_live"]
+    for incr_plan in each_plan():
+        d = str(tmp_path_factory.mktemp("same"))
+        m1 = build_full_index(spark, snaps[1], CFG, d, gen=1)
+        m2 = build_incremental(spark, snaps[1], CFG, d, gen=2)
+        assert _plan_of(m2) == incr_plan.split("_")[0]
+        assert (m2["metrics"]["docs_added"], m2["metrics"]["docs_changed"],
+                m2["metrics"]["docs_deleted"]) == (0, 0, 0)
+        assert m2["n_docs_live"] == m1["n_docs_live"]
+        assert m2["sum_dl_live"] == m1["sum_dl_live"]
+        assert m2["next_doc_id"] == m1["next_doc_id"]
+        assert spark.read.parquet(f"{d}/gen=2/tombstones.parquet").count() == 0
+        assert live_docmap(spark, d, [1, 2]).count() == m1["n_docs_live"]
 
 
 def test_partial_batch_tombstones_only_changed(spark, snaps, tmp_path_factory,
-                                               incr_plan):
+                                               each_plan):
     """``partial=True`` (an upsert batch, not a snapshot): urls missing
     from the batch are not tombstoned, only changed docs are, and no
     transient staging file outlives a successful build."""
-    d = str(tmp_path_factory.mktemp("partial"))
-    build_full_index(spark, snaps[2], CFG, d, gen=1)
-    m2 = build_incremental(spark, snaps[3], CFG, d, gen=2, partial=True)
-    assert _plan_of(m2) == incr_plan.split("_")[0]
-    assert m2["metrics"]["docs_deleted"] == 0
-    tombs = spark.read.parquet(f"{d}/gen=2/tombstones.parquet").count()
-    assert tombs == m2["metrics"]["docs_changed"]
-    missing = set(snaps[2].select("url").toPandas()["url"]) - set(
-        snaps[3].select("url").toPandas()["url"])
-    live = {r["url"] for r in live_docmap(spark, d, [1, 2]).collect()}
-    assert missing and missing <= live
-    for g in (1, 2):
-        left = set(os.listdir(mf.gen_dir(d, g)))
-        assert not left & {"_diff_staging.parquet", "_docs_staging.parquet"}
+    for incr_plan in each_plan():
+        d = str(tmp_path_factory.mktemp("partial"))
+        build_full_index(spark, snaps[2], CFG, d, gen=1)
+        m2 = build_incremental(spark, snaps[3], CFG, d, gen=2, partial=True)
+        assert _plan_of(m2) == incr_plan.split("_")[0]
+        assert m2["metrics"]["docs_deleted"] == 0
+        tombs = spark.read.parquet(f"{d}/gen=2/tombstones.parquet").count()
+        assert tombs == m2["metrics"]["docs_changed"]
+        missing = set(snaps[2].select("url").toPandas()["url"]) - set(
+            snaps[3].select("url").toPandas()["url"])
+        live = {r["url"] for r in live_docmap(spark, d, [1, 2]).collect()}
+        assert missing and missing <= live
+        for g in (1, 2):
+            left = set(os.listdir(mf.gen_dir(d, g)))
+            assert not left & {"_diff_staging.parquet", "_docs_staging.parquet"}
 
 
 def test_chain_reads_submit_no_spark_job(spark, snaps, tmp_path_factory):
@@ -551,7 +555,7 @@ spark.stop()
 """
 
 
-def test_resume_after_segment_failure_equals_clean_build(incr_plan):
+def test_resume_after_segment_failure_equals_clean_build(each_plan):
     """A delta build whose segment writer fails, rerun with
     ``resume=True`` into the same generation, leaves the docmap,
     tombstones, segment files and manifest counts of a clean build: the
@@ -560,46 +564,41 @@ def test_resume_after_segment_failure_equals_clean_build(incr_plan):
     groups go through the same ``_make_writer``."""
     from mee_spark import build
 
-    limits = {k: getattr(build, k) for k in ("DRIVER_MAX_DOCMAP_ROWS",
-                                             "DRIVER_MAX_DELTA_TOKENS")}
-    out = subprocess.run(
-        [sys.executable, "-c", _RESUME_SCRIPT, REPO, json.dumps(limits)],
-        capture_output=True, text=True, timeout=600,
-        env=os.environ | {"PYTHONPATH": REPO})
-    assert out.returncode == 0, out.stderr[-3000:]
-    rec = json.loads([ln for ln in out.stdout.splitlines()
-                      if ln.startswith("{")][-1])
-    assert rec["failed_first"], "the injected failure did not fail the build"
-    assert {"docmap", "tombstones"} < set(rec["files"])
-    assert len(rec["files"]) > 2, "no segment files written"
-    assert rec["equal"]
-    assert rec["counts"][0] == rec["counts"][1]
-    assert rec["plans"] == [incr_plan.split("_")[0]] * 2
-    assert rec["leftover"] == []
+    for incr_plan in each_plan():
+        limits = {k: getattr(build, k) for k in ("DRIVER_MAX_DOCMAP_ROWS",
+                                                 "DRIVER_MAX_DELTA_TOKENS")}
+        out = subprocess.run(
+            [sys.executable, "-c", _RESUME_SCRIPT, REPO, json.dumps(limits)],
+            capture_output=True, text=True, timeout=600,
+            env=os.environ | {"PYTHONPATH": REPO})
+        assert out.returncode == 0, out.stderr[-3000:]
+        rec = json.loads([ln for ln in out.stdout.splitlines()
+                          if ln.startswith("{")][-1])
+        assert rec["failed_first"], "the injected failure did not fail the build"
+        assert {"docmap", "tombstones"} < set(rec["files"])
+        assert len(rec["files"]) > 2, "no segment files written"
+        assert rec["equal"]
+        assert rec["counts"][0] == rec["counts"][1]
+        assert rec["plans"] == [incr_plan.split("_")[0]] * 2
+        assert rec["leftover"] == []
 
 
 def test_side_writes_keep_the_callers_job_group(spark, snaps, tmp_path_factory,
-                                                incr_plan):
+                                                each_plan):
     """``_concurrent`` runs side writes on ``InheritableThread``s: with a
     job group set, every job of ``build_incremental`` — the tombstone and
     docmap side writes of the Spark plans included — lands in that group,
     none outside it."""
-    d = str(tmp_path_factory.mktemp("jobgroup"))
-    build_full_index(spark, snaps[1], CFG, d, gen=1)
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    ungrouped = set(tracker.getJobIdsForGroup(None))
-    group = f"incr-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "one incremental build")
-    try:
-        m = build_incremental(spark, snaps[2], CFG, d, gen=2)
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description",
-                    "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
-    assert _plan_of(m) == incr_plan.split("_")[0]
-    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
-    assert tracker.getJobIdsForGroup(group)
+    for incr_plan in each_plan():
+        d = str(tmp_path_factory.mktemp("jobgroup"))
+        build_full_index(spark, snaps[1], CFG, d, gen=1)
+        tracker = spark.sparkContext.statusTracker()
+        ungrouped = set(tracker.getJobIdsForGroup(None))
+        m, jobs = _jobs_of(spark, lambda: build_incremental(
+            spark, snaps[2], CFG, d, gen=2))
+        assert _plan_of(m) == incr_plan.split("_")[0]
+        assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+        assert jobs
 
 
 def test_concurrent_surfaces_side_error_after_inline_write(spark):
@@ -692,20 +691,16 @@ _COUNTS = ("n_docs_live", "sum_dl_live", "next_doc_id")
 _DELTA = ("docs_added", "docs_changed", "docs_deleted")
 
 
-def test_plans_write_identical_generations(spark, tmp_path_factory):
+def test_plans_write_identical_generations(spark, tmp_path_factory, each_plan):
     """The driver plan and both Spark plans write the same docmap rows,
     tombstones and segment files, and the same manifest counts, for
     every kind of delta: adds, changes, deletes, a partial batch, a
     text-only snapshot, an add-only snapshot (no tombstone) and a
     snapshot holding urls twice."""
-    from conftest import _forced
-
     got = {}
-    for plan in ("driver", "spark_tail", "spark"):
+    for plan in each_plan():
         d = str(tmp_path_factory.mktemp(f"same_{plan}"))
-        with pytest.MonkeyPatch.context() as m:
-            _forced(m, plan)
-            ms = _plan_chain(spark, d)
+        ms = _plan_chain(spark, d)
         assert {_plan_of(m) for m in ms} == {plan.split("_")[0]}
         got[plan] = [([m[k] for k in _COUNTS] + [m["metrics"][k] for k in _DELTA],
                       _gen_tables(d, m["generation"])) for m in ms]
@@ -738,16 +733,17 @@ def _jobs_of(spark, build) -> tuple[dict, int]:
     return m, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_incremental_jobs_per_plan(spark, snaps, tmp_path_factory, incr_plan):
+def test_incremental_jobs_per_plan(spark, snaps, tmp_path_factory, each_plan):
     """Below the gates the snapshot diff is the build's only Spark work,
     at most 2 jobs; the Spark tails' counts are pinned too."""
-    d = str(tmp_path_factory.mktemp("jobs"))
-    build_full_index(spark, snaps[1], CFG, d, gen=1)
-    m, jobs = _jobs_of(spark, lambda: build_incremental(
-        spark, snaps[2], CFG, d, gen=2))
-    assert _plan_of(m) == incr_plan.split("_")[0]
-    assert jobs <= 2 if incr_plan == "driver" else jobs == {
-        "spark_tail": 13, "spark": 14}[incr_plan], jobs
+    for incr_plan in each_plan():
+        d = str(tmp_path_factory.mktemp("jobs"))
+        build_full_index(spark, snaps[1], CFG, d, gen=1)
+        m, jobs = _jobs_of(spark, lambda: build_incremental(
+            spark, snaps[2], CFG, d, gen=2))
+        assert _plan_of(m) == incr_plan.split("_")[0]
+        assert jobs <= 2 if incr_plan == "driver" else jobs == {
+            "spark_tail": 13, "spark": 14}[incr_plan], jobs
 
 
 def test_incremental_gate_edges(spark, snaps, tmp_path_factory, monkeypatch):

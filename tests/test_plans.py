@@ -131,7 +131,7 @@ def test_winnow_fingerprints_shuffle_free(spark):
 
 
 def test_incremental_build_extracts_text_once(spark, tmp_path, monkeypatch,
-                                              incr_plan):
+                                              each_plan):
     """The snapshot diff is staged once: across every parquet write of
     one ``build_incremental(use_html=True)`` the extraction UDF appears in
     exactly one plan, once (the diff write). Every later write reads the
@@ -149,24 +149,24 @@ def test_incremental_build_extracts_text_once(spark, tmp_path, monkeypatch,
                       doc_range_size=64, block_size=16)
     snaps = {g: spark.createDataFrame(pdf, PAGES_SCHEMA)
              for g, pdf in gen_snapshots_pandas(100).items()}
-    d = str(tmp_path / "ix")
-    build_full_index(spark, snaps[1], cfg, d, gen=1)
-
-    plans: list[str] = []
     write_parquet = DataFrameWriter.parquet
+    for incr_plan in each_plan():
+        d = str(tmp_path / incr_plan)
+        build_full_index(spark, snaps[1], cfg, d, gen=1)
+        plans: list[str] = []
 
-    def capture(self, path, *args, **kwargs):
-        plans.append(plan_of(self._df))
-        return write_parquet(self, path, *args, **kwargs)
+        def capture(self, path, *args, **kwargs):
+            plans.append(plan_of(self._df))
+            return write_parquet(self, path, *args, **kwargs)
 
-    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
-    m = build_incremental(spark, snaps[2], cfg, d, gen=2, use_html=True)
-    monkeypatch.undo()
-    per_write = [p.count("ArrowEvalPython") for p in plans]
-    assert sum(per_write) == 1, per_write
-    assert m["metrics"]["plan"] == incr_plan.split("_")[0]
-    # the diff; then in Spark the tombstones, the docs staging, the docmap
-    assert len(plans) == (1 if incr_plan == "driver" else 4), len(plans)
+        monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+        m = build_incremental(spark, snaps[2], cfg, d, gen=2, use_html=True)
+        monkeypatch.undo()
+        per_write = [p.count("ArrowEvalPython") for p in plans]
+        assert sum(per_write) == 1, (incr_plan, per_write)
+        assert m["metrics"]["plan"] == incr_plan.split("_")[0]
+        # the diff; then in Spark the tombstones, the docs staging, the docmap
+        assert len(plans) == (1 if incr_plan == "driver" else 4), len(plans)
 
 
 def test_live_df_pass_repartitions_by_range(spark, tmp_path):
