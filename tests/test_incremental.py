@@ -487,7 +487,7 @@ from mee_spark.config import IndexConfig
 from mee_spark.fixtures import PAGES_SCHEMA
 from snapshots import gen_snapshots_pandas
 
-# the plan's gate limits, as the test session forced them
+# the plan's gate limits, as the calling test forced them
 for name, limit in json.loads(sys.argv[2]).items():
     setattr(build, name, limit)
 orig = seg._make_writer
